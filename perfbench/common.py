@@ -27,7 +27,7 @@ STATE = os.path.join(ROOT, ".perfbench")  # caches, run records, spans, scratch
 # smoke test. n_docs sizes the one corpus every workload reads (built in
 # build_ingest, prepared once for serve_*); delta_docs is the append.
 SCALES = {
-    "full": {"n_docs": 4000, "delta_docs": 400, "pool": 256, "batch": 100, "check_generated": 25},
+    "full": {"n_docs": 2000, "delta_docs": 200, "pool": 256, "batch": 100, "check_generated": 25},
     "tiny": {"n_docs": 300, "delta_docs": 40, "pool": 48, "batch": 30, "check_generated": 5},
 }
 CORPUS_SEED = 13  # the corpus is seed-independent so one prepared index serves every run
@@ -37,8 +37,28 @@ LRU_RUNS = 4096  # LocalSearcher's default postings cache capacity (term entries
 K = 10
 DUP_SHARE = 0.01  # share of delta docs that copy a base document's content
 ZIPF_S = 1.0  # query popularity exponent for serve_hot
-ZIPF_BLOCK = 1000  # serve_hot draws per block with exact zipf shares (about one run)
-STREAM_LEN = 20_000  # pre-drawn query stream; a run stops by time, not by length
+# The serve loops run whole blocks and stop at the first block boundary
+# after --seconds, so every run measures the same query mix: a serve_hot
+# block holds each pool query its zipf share of ZIPF_BLOCK times, a
+# serve_cold block COLD_BLOCK fresh queries of a fixed shape.
+ZIPF_BLOCK = 200
+COLD_BLOCK = 300
+MAX_BLOCKS = 1000
+
+# Host-speed probe (HostSpeed), used by the serve workloads. The nominal
+# figures are the probe's median wall and process CPU time on a 4-vCPU
+# Intel Xeon VM; serve times are scaled to the host speed at which the
+# probe takes exactly that long.
+PROBE_NOMINAL_S = 0.008
+PROBE_NOMINAL_CPU_S = 0.013
+PROBE_NOMINAL_P95_S = 0.010  # the probe's p95 over a serve loop (serve_cold's tail)
+PROBE_KEYS = 2048  # distinct keys in the probe's table, PROBE_ROWS_PER_KEY rows each
+PROBE_ROWS_PER_KEY = 4
+PROBE_SEED = 20253
+PROBE_WINDOW = 15  # serve loops: probe calls either side of a query that set its factor
+# build_ingest's Spark probe (spark_probe): its mean wall time on the same VM
+# lay between 0.3 s and 0.6 s as the host's load changed.
+SPARK_PROBE_NOMINAL_S = 0.4
 
 
 def ncores() -> int:
@@ -194,6 +214,95 @@ def percentile(xs: list[float], p: int) -> float:
     return statistics.quantiles(xs, n=100, method="inclusive")[p - 1]
 
 
+class HostSpeed:
+    """Times a fixed probe between the measured operations of a run, so
+    the run can report its times as they would read on a host of nominal
+    speed (the factor is PROBE_NOMINAL_S / the median of the probe calls
+    around an operation). The benchmark's host shares its cores, caches
+    and memory with other machines, and the same work takes up to 1.7x as
+    long from one minute to the next.
+
+    The probe never calls the package under test. It uses the libraries
+    the serving path leans on, on the benchmark's own table: a pyarrow
+    dataset scan with a pushed-down key filter, pandas groupby and concat,
+    numpy over the fetched bytes and an interpreter loop. Every call does
+    the same amount of work."""
+
+    def __init__(self, data_dir: str):
+        import pyarrow.dataset as pads
+
+        self._pads = pads
+        self._ds = pads.dataset(data_dir)
+        self._rng = np.random.RandomState(PROBE_SEED)
+        self.samples: list[float] = []  # wall seconds per call
+        self.cpu_samples: list[float] = []  # process CPU seconds per call
+
+    def _once(self) -> int:
+        import pandas as pd
+
+        want = self._rng.choice(PROBE_KEYS, size=3, replace=False).tolist()
+        tab = self._ds.to_table(filter=self._pads.field("key").isin(want))
+        groups = [g.reset_index(drop=True) for _, g in tab.to_pandas().groupby("key")]
+        blob = b"".join(pd.concat(groups, ignore_index=True)["blob"])
+        vals = np.frombuffer(blob, dtype=np.uint8).astype(np.int64)
+        acc: dict[int, int] = {}
+        for i, v in enumerate(vals[:1500].tolist()):
+            acc[v & 63] = acc.get(v & 63, 0) + i
+        return int(np.cumsum(vals)[-1]) + len(acc)
+
+    def probe(self, n: int = 1) -> None:
+        for _ in range(n):
+            c0, t0 = time.process_time(), time.perf_counter()
+            self._once()
+            self.samples.append(time.perf_counter() - t0)
+            self.cpu_samples.append(time.process_time() - c0)
+
+    def factor(self, lo: int = 0, hi: int | None = None, cpu: bool = False) -> float:
+        """Multiply a wall time (or, with cpu, a CPU time) by this, or
+        divide a rate by it, to scale it to the nominal host speed; from
+        the median of probe calls lo:hi."""
+        if cpu:
+            return PROBE_NOMINAL_CPU_S / statistics.median(self.cpu_samples[lo:hi])
+        return PROBE_NOMINAL_S / statistics.median(self.samples[lo:hi])
+
+    def local_factors(self, start: int, n: int, cpu: bool = False) -> list[float]:
+        """Factors for n operations, each followed by one probe call from
+        call `start` on: each from the probes within PROBE_WINDOW calls
+        of it, so a change of host speed within the run is followed."""
+        return [self.factor(start + max(0, i - PROBE_WINDOW), start + min(n, i + PROBE_WINDOW + 1),
+                            cpu)
+                for i in range(n)]
+
+
+def spark_probe(spark) -> float:
+    """Wall seconds of a fixed small Spark job through the pandas-UDF path
+    (mapInPandas and an aggregate) that the index build and the query
+    batches lean on. It runs no ivory_spark code."""
+
+    def double(batches):
+        for df in batches:
+            yield df.assign(id=df["id"] * 2)
+
+    t0 = time.perf_counter()
+    spark.range(0, 20000, 1, ncores()).mapInPandas(double, "id long").groupBy().sum("id").collect()
+    return time.perf_counter() - t0
+
+
+def write_probe_data(out_dir: str) -> None:
+    """The probe's table: PROBE_KEYS keys with PROBE_ROWS_PER_KEY rows of
+    256 random bytes each, sorted by key, in four parquet files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(PROBE_SEED)
+    os.makedirs(out_dir, exist_ok=True)
+    keys = np.repeat(np.arange(PROBE_KEYS, dtype=np.int64), PROBE_ROWS_PER_KEY)
+    blobs = [rng.bytes(256) for _ in range(len(keys))]
+    for i, part in enumerate(np.array_split(np.arange(len(keys)), 4)):
+        pq.write_table(pa.table({"key": keys[part], "blob": [blobs[j] for j in part]}),
+                       os.path.join(out_dir, f"part{i}.parquet"), row_group_size=1024)
+
+
 def dir_bytes(path: str) -> int:
     total = 0
     for d, _, files in os.walk(path):
@@ -208,8 +317,8 @@ def vocab_bands(n_docs: int) -> dict[str, list[str]]:
     """Query-term bands taken from the corpus generator's own
     vocabularies (not from the index): its keyword preambles (high df,
     salted runs), the head and the tail of its zipf identifier vocabulary,
-    and every term the generator can emit (identifiers, keywords and the
-    integer literals it writes) for serve_cold."""
+    and, for serve_cold, the whole identifier vocabulary in rank order and
+    the integer literals the generator writes."""
     from ivory_spark import corpus
 
     vocab_size = max(500, min(50_000, n_docs * 3))  # generate_corpus's default
@@ -219,8 +328,12 @@ def vocab_bands(n_docs: int) -> dict[str, list[str]]:
         "keyword": keywords,
         "head": vocab[: max(20, vocab_size // 100)],
         "tail": vocab[vocab_size // 2 :],
-        "all": vocab + keywords + [str(i) for i in range(4096)],
+        "vocab": vocab,
+        "literal": [str(i) for i in range(4096)],
     }
+
+
+COLD_BANDS = ("vocab", "keyword", "literal")  # every term the generator can emit
 
 
 def gen_query(rng: np.random.RandomState, bands: dict) -> str:
@@ -244,10 +357,25 @@ def gen_query(rng: np.random.RandomState, bands: dict) -> str:
     return " ".join(toks)
 
 
-def gen_cold_query(rng: np.random.RandomState, bands: dict) -> str:
-    """1-5 terms drawn uniformly over everything the generator can emit."""
-    band = bands["all"]
-    return " ".join(band[rng.randint(len(band))] for _ in range(int(rng.randint(1, 6))))
+def gen_cold_block(rng: np.random.RandomState, bands: dict, n: int) -> list[str]:
+    """n fresh queries over everything the generator can emit, with a
+    shape that does not depend on the seed: n/5 queries of each length
+    1-5, terms from each band in proportion to its size, and within a
+    band one term from each of equal slices of its rank order (so the
+    block's df profile is fixed; only which terms it holds varies)."""
+    lengths = rng.permutation(np.repeat(np.arange(1, 6), n // 5))
+    n_terms = int(lengths.sum())
+    sizes = np.array([len(bands[b]) for b in COLD_BANDS], dtype=np.float64)
+    share = n_terms * sizes / sizes.sum()
+    quota = np.floor(share).astype(np.int64)
+    quota[np.argsort(-(share - quota), kind="stable")[: n_terms - int(quota.sum())]] += 1
+    terms = []
+    for band, c in zip(COLD_BANDS, quota):
+        words, edges = bands[band], np.linspace(0, len(bands[band]), int(c) + 1).astype(np.int64)
+        terms += [words[rng.randint(lo, max(lo + 1, hi))] for lo, hi in zip(edges[:-1], edges[1:])]
+    terms = [terms[i] for i in rng.permutation(len(terms))]
+    cuts = np.cumsum(lengths)[:-1]
+    return [" ".join(q) for q in np.split(np.array(terms, dtype=object), cuts)]
 
 
 def check_sample(bands: dict, n_generated: int) -> list[dict]:

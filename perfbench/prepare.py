@@ -6,7 +6,8 @@ JVM, so the serve timing process never does):
   workloads search and build_ingest rebuilds;
 - the goldens: exact-path (query.exact.bm25_topk) top-10 rows of the
   fixed check sample, as (rank, docno, docid, float32 score bits);
-- the query-term bands of the corpus generator.
+- the query-term bands of the corpus generator;
+- the table of the host-speed probe (common.HostSpeed).
 
 Usage: python3 perfbench/prepare.py --scale full --out <dir>
 run.py calls this when a checkout has no inputs for its sources yet.
@@ -49,10 +50,12 @@ def prepare(scale: str, out: str) -> None:
         json.dump(golden, f)
     with open(os.path.join(out, "bands.json"), "w") as f:
         json.dump(bands, f)
+    common.write_probe_data(os.path.join(out, "probe"))
     ready = {
         "scale": scale,
         "corpus": os.path.relpath(corpus, out),
         "index": "index",
+        "probe": "probe",
         "corpus_rows": cfg["n_docs"],
         "props": {k: props[k] for k in ("n_docs", "n_terms", "collection_length")},
     }

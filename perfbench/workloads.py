@@ -1,16 +1,23 @@
 """The benchmark's workloads.
 
 build_ingest  one process at local[nproc]: get_spark, then build_index over
-              the corpus, a 100-query WAND batch (twice), append_delta of a
-              seeded delta, the same batch while bounds are stale (exact
-              path), refresh_bounds, and the batch through WAND (twice).
-serve_hot     LocalSearcher.search(k=10) in a process without Spark; zipf(1)
-              draws from a 256-query pool sent once as warm-up, so every term
-              run is served from the postings LRU.
-serve_cold    the same searcher; every query drawn fresh over the corpus
-              generator's whole vocabulary, so most term runs miss the LRU.
+              the corpus, a 100-query WAND batch, append_delta of a seeded
+              delta, the same batch while bounds are stale (exact path),
+              refresh_bounds, and the batch through WAND (twice).
+serve_hot     LocalSearcher.search(k=10) in a process without Spark; whole
+              blocks of zipf(1) draws from a 256-query pool, after a warm-up
+              that sends each query a block holds once, so every term run
+              is served from the postings LRU.
+serve_cold    the same searcher; whole blocks of fresh queries over the
+              corpus generator's whole vocabulary, so most term runs miss
+              the LRU.
 
-Each workload returns a Result; run.py prints it.
+Every workload reports its times scaled to a nominal host speed, and
+prints the unscaled figures as a note. The serve workloads run the
+host-speed probe (common.HostSpeed) after every query; build_ingest runs
+a small fixed Spark job (common.spark_probe) before each timed section,
+because the single-threaded probe does not follow how Spark's work on
+every core slows. Each workload returns a Result; run.py prints it.
 """
 
 from __future__ import annotations
@@ -19,8 +26,6 @@ import json
 import os
 import resource
 import statistics
-import subprocess
-import sys
 import time
 from dataclasses import dataclass, field
 
@@ -31,8 +36,8 @@ from perfbench.common import K, Section
 from perfbench.trace import Patches, Tracer, instrument_serve, instrument_spark
 
 
-WAND_REPEATS = 2  # each WAND batch runs twice, for steadier latency medians
-COLD_STARTS = 3  # serving processes started per run; setup_s is their median
+WAND_AFTER_REFRESH = 2  # WAND batches on the refreshed index, for a steadier latency median
+OPEN_EVERY = 10  # serve loops: one LocalSearcher construction after every 10th query
 
 
 @dataclass
@@ -61,11 +66,18 @@ def _rss_mb() -> float:
     return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
 
 
-def _latency_metrics(lat_s: list[float]) -> dict[str, float]:
+def _latency(lat_s: list[float]) -> dict[str, float]:
     return {
         "query_p50_ms": statistics.median(lat_s) * 1000.0,
         "query_p95_ms": common.percentile(lat_s, 95) * 1000.0,
     }
+
+
+def _speed_note(raw: dict[str, float], speed: common.HostSpeed) -> str:
+    return (f"host speed: probe median {statistics.median(speed.samples) * 1000:.3f} ms over "
+            f"{len(speed.samples)} calls (nominal {common.PROBE_NOMINAL_S * 1000:g} ms), "
+            f"run factor {speed.factor():.4f}; unscaled "
+            + ", ".join(f"{k} {v:.4g}" for k, v in raw.items()))
 
 
 def _term_ids(index_root: str) -> tuple[dict[str, int], object]:
@@ -160,46 +172,48 @@ def build_ingest(ctx: Context) -> Result:
         with tracer.span("session.get_spark"), Section() as setup:
             spark = common.start_spark("perfbench-build-ingest")
         try:
-            cycles = []
+            cycles, sprobes = [], []
             t_start = time.perf_counter()
             while not cycles or time.perf_counter() - t_start < ctx.seconds:
                 root = os.path.join(ctx.run_dir, f"index{len(cycles)}")
                 c = {"root": root, "wand": [], "stale": []}
 
+                def timed(key, fn):
+                    sprobes.append(common.spark_probe(spark))
+                    with Section() as sec:
+                        fn()
+                    c[key] = sec
+
                 def batch(kind, run):
                     """One timed batch, from an Index opened as a new client would."""
                     index = open_index(spark, root)
+                    sprobes.append(common.spark_probe(spark))
                     with tracer.span(f"{kind}.batch"), Section() as sec:
                         rows = run(index).collect()
                     c["wand" if kind == "wand" else "stale"].append(sec)
                     return index, common.by_qid(rows, qids)
 
-                # -- timed: build, WAND batches, append, stale batch, refresh, WAND batches
-                with Section() as c["build"]:
-                    build.build_index(spark, corpus, root, cfg)
-                built = [batch("wand", lambda ix: wand.bm25_topk_wand(spark, ix, queries, k=K))
-                         for _ in range(WAND_REPEATS)]
+                # -- timed: build, WAND batch, append, stale batch, refresh, WAND batches
+                timed("build", lambda: build.build_index(spark, corpus, root, cfg))
+                built = batch("wand", lambda ix: wand.bm25_topk_wand(spark, ix, queries, k=K))
                 if ctx.trace:
                     c["groups1"], _ = batch_shape(root, queries)
                     c["manifests"] = {
                         s: load_manifest(root, s)
                         for s in ("docmap", "tdf", "dictionary", "doclens", "properties", "postings")
                     }
-                with Section() as c["append"]:
-                    compact.append_delta(spark, root, delta)
+                timed("append", lambda: compact.append_delta(spark, root, delta))
                 stale, gs = batch("exact", lambda ix: qbatch.run_batch(spark, ix, queries))
-                with Section() as c["refresh"]:
-                    compact.refresh_bounds(spark, root)
+                timed("refresh", lambda: compact.refresh_bounds(spark, root))
                 refreshed = [batch("wand", lambda ix: qbatch.run_batch(spark, ix, queries))
-                             for _ in range(WAND_REPEATS)]
+                             for _ in range(WAND_AFTER_REFRESH)]
                 # -- untimed: correctness gate
-                res.attempted += (2 * WAND_REPEATS + 1) * len(queries) + 4
+                res.attempted += (2 + WAND_AFTER_REFRESH) * len(queries) + 4
                 for q in qids:
                     want = prep["golden"].get(q)
-                    for _, g in built:
-                        if (want is not None and g[q] != want) or not common.well_formed(g[q]):
-                            res.failed += 1
-                            res.notes.append(f"mismatch: build WAND batch {q} vs golden")
+                    if (want is not None and built[1][q] != want) or not common.well_formed(built[1][q]):
+                        res.failed += 1
+                        res.notes.append(f"mismatch: build WAND batch {q} vs golden")
                     if not common.well_formed(gs[q]):
                         res.failed += 1
                         res.notes.append(f"mismatch: stale exact batch {q} malformed")
@@ -208,7 +222,7 @@ def build_ingest(ctx: Context) -> Result:
                             res.failed += 1
                             res.notes.append(f"mismatch: refreshed WAND batch {q} vs exact path")
                 want_props = prep["props"]
-                got = {k: built[0][0].properties[k] for k in want_props}
+                got = {k: built[0].properties[k] for k in want_props}
                 if got != want_props:
                     res.failed += 1
                     res.notes.append(f"mismatch: built index {got} vs prepared {want_props}")
@@ -236,16 +250,31 @@ def build_ingest(ctx: Context) -> Result:
     load1, steal = common.loadavg(), common.steal_s() - steal0
 
     docs = scale["n_docs"] + delta_rows
-    write = [(c["build"], c["append"], c["refresh"]) for c in cycles]
-    # a query in a Spark batch waits for its whole batch
-    lat = [sec.wall for c in cycles for sec in c["wand"] + c["stale"] for _ in queries]
-    res.e2e = {
-        "setup_s": setup.wall,
-        "throughput_per_s": statistics.median(docs / sum(s.wall for s in w) for w in write),
-        "cpu_ms_per_item": statistics.median(1000.0 * sum(s.cpu for s in w) / docs for w in write),
-        **_latency_metrics(lat),
-        "peak_rss_mb": _rss_mb(),
-    }
+    # One factor for the run, from the mean probe after the first (which
+    # still pays the probe's own warm-up). get_spark runs before any probe
+    # can and takes the same factor: the host's slow and fast spells last
+    # longer than a run.
+    factor = common.SPARK_PROBE_NOMINAL_S / statistics.mean(sprobes[1:])
+
+    def e2e(f: float) -> dict[str, float]:
+        write = [(c["build"], c["append"], c["refresh"]) for c in cycles]
+        # a query in a Spark batch waits for its whole batch
+        lat = [s.wall * f for c in cycles for s in c["wand"] + c["stale"] for _ in queries]
+        return {
+            "setup_s": setup.wall * f,
+            "throughput_per_s": statistics.median(docs / sum(s.wall * f for s in w) for w in write),
+            "cpu_ms_per_item": statistics.median(1000.0 * sum(s.cpu * f for s in w) / docs
+                                                 for w in write),
+            **_latency(lat),
+            "peak_rss_mb": _rss_mb(),
+        }
+
+    raw = e2e(1.0)
+    res.e2e = e2e(factor)
+    res.notes.append(
+        "host speed: Spark probe " + " ".join(f"{w:.3f}" for w in sprobes) + " s (nominal mean "
+        f"{common.SPARK_PROBE_NOMINAL_S:g} s), factor {factor:.4f}; unscaled "
+        + ", ".join(f"{k} {v:.4g}" for k, v in raw.items()))
     last = cycles[-1]
     added = last["added"]
     res.notes.append(
@@ -264,7 +293,9 @@ def build_ingest(ctx: Context) -> Result:
                     for k, v in sections[-1].items())
     )
     res.record["host"] = {"loadavg_before": load0, "loadavg_after": load1, "steal_s": steal,
-                          "setup_cpu_s": setup.cpu, "sections": sections}
+                          "setup_cpu_s": setup.cpu, "sections": sections,
+                          "sprobes": sprobes,
+                          "factor": factor, "raw": raw}
     if ctx.trace:
         res.layers = _build_ingest_layers(tracer, last, delta, corpus)
     return res
@@ -304,26 +335,22 @@ def _build_ingest_layers(tracer, c, delta, corpus) -> dict[str, float]:
 # ---------------------------------------------------------------- serve
 
 
-def zipf_stream(weights: np.ndarray, rng: np.random.RandomState) -> np.ndarray:
-    """Pool indices in blocks of ZIPF_BLOCK draws. Each block holds every
-    query its zipf share of times (largest remainder), in seeded order, so
-    runs differ in order but not in how often each query is sent."""
+def zipf_quota(weights: np.ndarray) -> np.ndarray:
+    """How often each pool query appears in a block of ZIPF_BLOCK draws:
+    its zipf share, rounded by largest remainder."""
     share = common.ZIPF_BLOCK * weights / weights.sum()
     quota = np.floor(share).astype(np.int64)
     short = common.ZIPF_BLOCK - int(quota.sum())
     quota[np.argsort(-(share - quota), kind="stable")[:short]] += 1
-    block = np.repeat(np.arange(len(weights)), quota)
-    n_blocks = -(-common.STREAM_LEN // common.ZIPF_BLOCK)
-    return np.concatenate([rng.permutation(block) for _ in range(n_blocks)])
+    return quota
 
 
-def _cold_start_s(index_root: str) -> float:
-    """Wall time of a fresh serving process: interpreter start, imports
-    and one LocalSearcher construction, i.e. a replica's time to ready."""
-    code = "import sys; from ivory_spark.query.serve import LocalSearcher; LocalSearcher(sys.argv[1])"
-    t0 = time.perf_counter()
-    subprocess.run([sys.executable, "-c", code, index_root], check=True, cwd=common.ROOT)
-    return time.perf_counter() - t0
+def zipf_blocks(quota: np.ndarray, rng: np.random.RandomState):
+    """Blocks of pool indices, each holding every query its quota of
+    times in seeded order: blocks differ in order, not in mix."""
+    block = np.repeat(np.arange(len(quota)), quota)
+    for _ in range(common.MAX_BLOCKS):
+        yield rng.permutation(block)
 
 
 def serve(ctx: Context, hot: bool) -> Result:
@@ -340,13 +367,18 @@ def serve(ctx: Context, hot: bool) -> Result:
         pool_rng = np.random.RandomState(common.POOL_SEED)
         pool = common.extend_queries(check, scale["pool"], pool_rng, bands, "p")
         weights = 1.0 / (pool_rng.permutation(len(pool)) + 1.0) ** common.ZIPF_S
-        stream = [pool[i] for i in zipf_stream(weights, rng)]
-        warm = pool
+        quota = zipf_quota(weights)
+        blocks = ([pool[i] for i in b] for b in zipf_blocks(quota, rng))
+        warm = [pool[i] for i in np.flatnonzero(quota)]  # every query a block sends
     else:
-        stream = [{"qid": f"s{i:05d}", "query": common.gen_cold_query(rng, bands)}
-                  for i in range(common.STREAM_LEN)]
+        blocks = (
+            [{"qid": f"s{n:03d}.{i:03d}", "query": text}
+             for i, text in enumerate(common.gen_cold_block(rng, bands, common.COLD_BLOCK))]
+            for n in range(common.MAX_BLOCKS)
+        )
         warm = check
     ids, tok = _term_ids(index_root)
+    speed = common.HostSpeed(os.path.join(prep["dir"], prep["probe"]))
     res = Result(e2e={})
     load0, steal0 = common.loadavg(), common.steal_s()
 
@@ -354,8 +386,16 @@ def serve(ctx: Context, hot: bool) -> Result:
     if ctx.trace:
         instrument_serve(tracer, patches)
     try:
-        starts = [_cold_start_s(index_root) for _ in range(COLD_STARTS)]
-        searcher = serve_mod.LocalSearcher(index_root)
+        def open_searcher():
+            t0 = time.perf_counter()
+            searcher = serve_mod.LocalSearcher(index_root)
+            opens.append((time.perf_counter() - t0, len(speed.samples)))
+            return searcher
+
+        # setup_s: the median construction, spread through the run so that
+        # a short slow spell of the host does not set it
+        opens = []  # (wall, probe calls made before it)
+        searcher = open_searcher()
         n_open_spans = len(tracer.spans)
 
         def run_checked(queries) -> dict[str, list]:
@@ -374,24 +414,31 @@ def serve(ctx: Context, hot: bool) -> Result:
         del tracer.spans[n_open_spans:]
         tracer.counts.clear()
 
-        # -- timed: one client, closed loop
-        lat, sent, results = [], [], []
-        with Section(cpu=time.process_time) as loop:
-            t_end = time.perf_counter() + ctx.seconds
-            for q in stream:
-                if time.perf_counter() >= t_end:
-                    break
+        # -- timed: one client, closed loop, whole blocks; the probe runs
+        # after each query, outside its timing
+        lat, cpu, sent, results = [], [], [], []
+        loop0 = len(speed.samples)
+        t_start = time.perf_counter()
+        for block in blocks:
+            for q in block:
                 tracer.qid = q["qid"]
-                t0 = time.perf_counter()
+                c0, t0 = time.process_time(), time.perf_counter()
                 try:
                     rows = searcher.search(q["query"], k=K)
                 except Exception as e:  # a failed request counts; the loop goes on
                     rows = None
                     res.notes.append(f"failed: {q['qid']}: {e!r}")
                 lat.append(time.perf_counter() - t0)
+                cpu.append(time.process_time() - c0)
+                tracer.qid = None
                 sent.append(q)
                 results.append(rows)
-        tracer.qid = None
+                speed.probe()
+                if len(sent) % OPEN_EVERY == 0:
+                    open_searcher()
+            if time.perf_counter() - t_start >= ctx.seconds:
+                break
+        loop_wall = time.perf_counter() - t_start
         n_loop_spans = len(tracer.spans)
         loop_counts = dict(tracer.counts)
 
@@ -412,28 +459,50 @@ def serve(ctx: Context, hot: bool) -> Result:
     load1, steal = common.loadavg(), common.steal_s() - steal0
 
     n = len(sent)
-    res.e2e = {
-        "setup_s": statistics.median(starts),
-        "throughput_per_s": n / loop.wall,
-        "cpu_ms_per_item": 1000.0 * loop.cpu / n,
-        **_latency_metrics(lat),
-        "peak_rss_mb": _rss_mb(),
-    }
-    if n == len(stream):
-        res.notes.append(f"note: query stream of {n} exhausted before {ctx.seconds}s")
+    f_q = speed.local_factors(loop0, n)  # wall times scale by the probe's wall time,
+    c_q = speed.local_factors(loop0, n, cpu=True)  # CPU times by its CPU time
+    # a construction in the loop takes the factor of the query before it;
+    # the first, before any probe, that of the first query
+    f_open = [f_q[max(0, k - loop0 - 1)] for _, k in opens]
+
+    # Every serve_cold query does about the same work, so its tail is the
+    # host's jitter, which the probe's median does not see: its p95 is
+    # scaled by the probe's own p95 over the loop. serve_hot's tail is its
+    # heaviest queries and is scaled like the rest.
+    tail_factor = common.PROBE_NOMINAL_P95_S / common.percentile(speed.samples[loop0:], 95)
+
+    def e2e(scaled: bool) -> dict[str, float]:
+        fs, cs = (f_q, c_q) if scaled else ([1.0] * n, [1.0] * n)
+        s_lat = [t * f for t, f in zip(lat, fs)]
+        out = {
+            "setup_s": statistics.median(w * (f if scaled else 1.0)
+                                         for (w, _), f in zip(opens, f_open)),
+            "throughput_per_s": n / sum(s_lat),
+            "cpu_ms_per_item": 1000.0 * sum(t * f for t, f in zip(cpu, cs)) / n,
+            **_latency(s_lat),
+            "peak_rss_mb": _rss_mb(),
+        }
+        if scaled and not hot:
+            out["query_p95_ms"] = common.percentile(lat, 95) * 1000.0 * tail_factor
+        return out
+
+    raw = e2e(scaled=False)
+    res.e2e = e2e(scaled=True)
+    res.notes.append(_speed_note(raw, speed))
 
     def termids(q):
         return {ids[t] for t in tok(q["query"]) if t in ids}
 
     if hot:
-        distinct = len(set().union(*(termids(q) for q in pool)))
+        distinct = len(set().union(*(termids(q) for q in warm)))
         res.notes.append(
-            f"premise serve_hot: distinct term runs in pool {distinct} < LRU {common.LRU_RUNS}, "
+            f"premise serve_hot: distinct term runs of the {len(warm)} queries a block sends "
+            f"{distinct} < LRU {common.LRU_RUNS}, "
             f"so every timed lookup hits (hit ratio 1.0): "
             f"{'holds' if distinct < common.LRU_RUNS else 'FAILS'}"
         )
     else:
-        drawable = len({ids[t] for t in bands["all"] if t in ids})
+        drawable = len({ids[t] for b in common.COLD_BANDS for t in bands[b] if t in ids})
         seen = set().union(*(termids(q) for q in warm))
         requested = first = 0
         for q in sent:
@@ -447,35 +516,42 @@ def serve(ctx: Context, hot: bool) -> Result:
             f"{first}/{requested} timed term lookups are first requests (must miss)"
         )
     res.notes.append(
-        f"host: loadavg {load0:.2f} -> {load1:.2f}; steal {steal:.2f}s; loop {n} queries, "
-        f"wall {loop.wall:.2f}s, cpu {loop.cpu:.2f}s"
+        f"host: loadavg {load0:.2f} -> {load1:.2f}; steal {steal:.2f}s; loop {n} queries "
+        f"in {n // len(block)} blocks, wall {loop_wall:.2f}s (searches {sum(lat):.2f}s), "
+        f"cpu {sum(cpu):.2f}s"
     )
     res.record["host"] = {"loadavg_before": load0, "loadavg_after": load1, "steal_s": steal,
-                          "loop_wall_s": loop.wall, "loop_cpu_s": loop.cpu, "queries": n}
+                          "loop_wall_s": loop_wall, "search_wall_s": sum(lat),
+                          "search_cpu_s": sum(cpu), "queries": n,
+                          "probe_s": speed.samples, "probe_cpu_s": speed.cpu_samples,
+                          "loop0": loop0, "factor": speed.factor(), "raw": raw}
     res.record["latency_ms"] = [round(x * 1000.0, 3) for x in lat]
+    res.record["cpu_ms"] = [round(x * 1000.0, 3) for x in cpu]
+    res.record["factors"] = [round(f, 4) for f in f_q]
     if ctx.trace:
         del tracer.spans[n_loop_spans:]
-        res.layers = _serve_layers(tracer, loop, loop_counts, n_open_spans)
-        shares = {name: tracer.self_time(name) / loop.wall
+        search_s = sum(lat)
+        res.layers = _serve_layers(tracer, search_s, loop_counts)
+        shares = {name: tracer.self_time(name) / search_s
                   for name in ("serve.search", "serve.runs_for", "serve.docids",
                                "wand.score", "codec.decode_block")}
         top = max(shares, key=shares.get)
         res.notes.append(
-            "self-time share of loop: "
+            "self-time share of search time: "
             + ", ".join(f"{k} {v:.1%}" for k, v in shares.items())
             + f"; largest {top}; wand.score + serve.docids (with decode) = "
-            f"{(res.layers['wand.score_s'] + res.layers['codec.decode_block_s'] + res.layers['serve.docids_s']) / loop.wall:.1%}"
+            f"{(res.layers['wand.score_s'] + res.layers['codec.decode_block_s'] + res.layers['serve.docids_s']) / search_s:.1%}"
         )
     return res
 
 
-def _serve_layers(tracer, loop, counts, n_open) -> dict[str, float]:
-    opens = [s[2] - s[1] for s in tracer.spans[:n_open] if s[0] == "serve.open"]
+def _serve_layers(tracer, search_s, counts) -> dict[str, float]:
+    opens = tracer.durations("serve.open")
     requested = counts.get("serve.terms_requested", 0)
     total_segments = counts.get("wand.segments_total", 0)
     return {
         "serve.open_s": statistics.median(opens),
-        "serve.loop_s": loop.wall,
+        "serve.loop_s": search_s,
         "serve.runs_for_s": tracer.self_time("serve.runs_for"),
         "serve.cache_hit_ratio": counts.get("serve.terms_hit", 0) / requested if requested else 0.0,
         "serve.runs_fetched": counts.get("serve.runs_fetched", 0),
