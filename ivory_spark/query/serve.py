@@ -3,13 +3,23 @@
 Spark batch retrieval amortizes the plan+schedule floor (~2 s on this
 host) across a query batch; an ad-hoc single query pays it in full
 (BENCH r01: p50 2.2 s vs 249 ms amortized). This module is the serving
-tier: a long-lived process loads the dictionary once, reads only the
-candidate postings runs per query through pyarrow (the same termid
-row-group pruning the Spark scan gets), keeps a postings LRU, and runs
-the SAME kernels in-process — block-max WAND (query/wand._score_group)
-for BM25, build_cliques + score_docs_batch (query/mrf) for SD/FD — so
-served scores are bit-identical to the Spark exact path, WAND path,
-MRF path and numpy oracle.
+tier: a long-lived process loads the dictionary and the docid of every
+docno once, reads the postings runs of the query terms that miss its
+LRU through pyarrow (one read per query, with the same termid row-group
+pruning the Spark scan gets), and keeps each term's postings in the LRU
+decoded into columnar arrays.
+
+BM25 (`search`) scores every decoded posting of the query terms in one
+vectorized pass: the contribution qtf * (idf * tf_part) of the exact
+path and the WAND kernel, with idf from the dictionary's df, folded by
+the canonical group_sum_f32 and cut to top-k with Ivory's tie-break. So
+served scores are bit-identical to the Spark exact path, the WAND path
+and the numpy oracle. It reads no block-max bounds and never the
+postings rows' df (append_delta leaves both stale), so an appended
+index serves before refresh_bounds. SD/FD (`search_sd`) and structured
+queries (`search_sqe`) run the MRF and sqe kernels (build_cliques +
+score_docs_batch; the sqe tree evaluator) over the same decoded entries
+with positions, bit-identical to their Spark paths.
 
 This is the analogue of Ivory's long-lived broker + retrieval-server
 deployment (docs/clue.html:164-180 — partition servers hold the index
@@ -28,59 +38,84 @@ from collections import Counter, OrderedDict
 import numpy as np
 import pandas as pd
 
+from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part, group_sum_f32
 from ivory_spark.functions.tokenizer import get_tokenizer
-from ivory_spark.query.wand import _score_group
+from ivory_spark.index import codec
+
+# Not called here: perfbench/trace.py patches query.serve._score_group by
+# name to time the WAND kernel, so the name must keep resolving.
+from ivory_spark.query.wand import _score_group  # noqa: F401
+
+# what _runs_for returns when every term hit the LRU, built once: a
+# DataFrame costs about a third of a cached BM25 query to build (read-only)
+_NO_RUNS = pd.DataFrame({"termid": np.empty(0, dtype=np.int64), "blob": []})
 
 
 class LocalSearcher:
     """Serve top-k queries from an index_root without a SparkSession."""
 
     def __init__(self, index_root: str, cache_runs: int = 4096):
+        import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
         with open(os.path.join(index_root, "properties.json")) as f:
             self.props = json.load(f)
-        from ivory_spark.index import codec as _codec
-
-        if self.props.get("format_version") != _codec.FORMAT_VERSION:
+        if self.props.get("format_version") != codec.FORMAT_VERSION:
             raise ValueError(
                 f"index format_version={self.props.get('format_version')} "
-                f"!= codec {_codec.FORMAT_VERSION}; rebuild the index"
-            )
-        if self.props.get("bounds_stale"):
-            raise ValueError(
-                "index has stale WAND bounds after append_delta; run "
-                "compact.refresh_bounds before serving (the WAND kernel "
-                "prunes on stored block-max bounds)"
+                f"!= codec {codec.FORMAT_VERSION}; rebuild the index"
             )
         self._tokenize = get_tokenizer(
             self.props.get("tokenizer", "code_v1")
         ).tokenize_py
-        # in-RAM dictionary: term -> (termid, df, cf) — Ivory keeps exactly
-        # this resident (RetrievalEnvironment.java:66-67)
+        # in-RAM dictionary, as Ivory keeps it resident
+        # (RetrievalEnvironment.java:66-67): term -> row of the termid,
+        # df and cf columns
         dtab = pads.dataset(os.path.join(index_root, "dictionary")).to_table(
             columns=["term", "termid", "df", "cf"]
         )
-        self._dict = dict(
-            zip(
-                dtab["term"].to_pylist(),
-                zip(
-                    dtab["termid"].to_pylist(),
-                    dtab["df"].to_pylist(),
-                    dtab["cf"].to_pylist(),
-                ),
+        self._term_row = dict(
+            zip(dtab["term"].to_numpy(zero_copy_only=False).tolist(), range(dtab.num_rows))
+        )
+        self._termid, self._df, self._cf = (
+            dtab[c].to_numpy() for c in ("termid", "df", "cf")
+        )
+        # docid of docno d at row d-1: docnos must be dense 1..n_docs
+        # (validate_index enforces it; a crashed append leaves rows beyond)
+        dm = pads.dataset(os.path.join(index_root, "docmap")).to_table(
+            columns=["docno", "repo", "path", "commit"]
+        )
+        docnos = dm["docno"].to_numpy()
+        order = np.argsort(docnos)
+        if not np.array_equal(docnos[order], np.arange(1, self.props["n_docs"] + 1)):
+            raise ValueError(
+                f"docmap docnos are not 1..n_docs={self.props['n_docs']}; "
+                "run compact.repair_partial_append"
             )
+        # 'repo/path@commit', nulls skipped as the Spark docid_expr does
+        self._docid = (
+            pc.binary_join_element_wise(
+                dm["repo"], "/", dm["path"], "@", dm["commit"], "", null_handling="skip"
+            )
+            .take(order)
+            .to_numpy(zero_copy_only=False)
+            .tolist()
         )
         self._postings = pads.dataset(os.path.join(index_root, "postings"))
-        self._docmap = pads.dataset(os.path.join(index_root, "docmap"))
-        # two LRUs: BM25 queries cache (termid, df, blob) only; SD/FD
-        # queries cache blob + pos_blob (the largest column) separately,
-        # so plain BM25 serving never reads or pins position bytes
-        self._run_cache: OrderedDict[int, pd.DataFrame] = OrderedDict()
-        self._run_cache_pos: OrderedDict[int, pd.DataFrame] = OrderedDict()
+        # two LRUs of decoded postings, keyed by termid. BM25 entries are
+        # (docnos, tfs, dls) over all of a term's runs, so plain BM25
+        # serving never reads or pins position bytes (the largest
+        # column); SD/FD and sqe entries are per-run lists of
+        # (docnos, tfs, dls, flat positions, indptr)
+        self._run_cache: OrderedDict[int, tuple] = OrderedDict()
+        self._run_cache_pos: OrderedDict[int, list] = OrderedDict()
         self._cache_runs = cache_runs
 
     def _runs_for(self, termids: list[int], positions: bool = False) -> pd.DataFrame:
+        """Put every termid's decoded postings in the LRU, with one
+        pyarrow read for the terms that miss. Returns the runs read, as a
+        (termid, blob[, pos_blob]) frame that is empty when every term
+        hit; callers take the decoded entries from the cache."""
         import pyarrow.dataset as pads
 
         cache = self._run_cache_pos if positions else self._run_cache
@@ -90,39 +125,78 @@ class LocalSearcher:
             if t in cache:
                 cache.move_to_end(t)
         missing = [t for t in termids if t not in cache]
-        if missing:
-            cols = ["termid", "df", "blob"] + (["pos_blob"] if positions else [])
-            tab = self._postings.to_table(
-                columns=cols,
-                filter=pads.field("termid").isin(missing),
-            )
-            pdf = tab.to_pandas()
-            for tid, grp in pdf.groupby("termid"):
-                cache[int(tid)] = grp.reset_index(drop=True)
-                cache.move_to_end(int(tid))
-            cap = max(self._cache_runs, len(termids))
-            while len(cache) > cap:
-                cache.popitem(last=False)
-        parts = [cache[t] for t in termids if t in cache]
-        return (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"termid": [], "df": [], "blob": []})
+        if not missing:
+            return _NO_RUNS
+        read_pos = positions and bool(self.props.get("positional"))
+        tab = self._postings.to_table(
+            columns=["termid", "blob"] + (["pos_blob"] if read_pos else []),
+            filter=pads.field("termid").isin(missing),
         )
+        cols = {c: tab[c].to_pylist() for c in tab.column_names}
+        pos_blobs = cols.get("pos_blob", [None] * tab.num_rows)
+        rows_of: dict[int, list[int]] = {}
+        for i, t in enumerate(cols["termid"]):
+            rows_of.setdefault(t, []).append(i)
+        for t, rows in rows_of.items():
+            runs = [codec.decode_run(cols["blob"][i]) for i in rows]
+            if positions:
+                cache[t] = [
+                    (d.astype(np.int64), tf.astype(np.int64), dl.astype(np.int64),
+                     *codec.decode_positions_flat(pos_blobs[i] or b"", tf))
+                    for (d, tf, dl), i in zip(runs, rows)
+                ]
+            else:
+                d, tf, dl = (np.concatenate(c) for c in zip(*runs))
+                cache[t] = (d.astype(np.int64), tf, dl)
+        cap = max(self._cache_runs, len(termids))
+        while len(cache) > cap:
+            cache.popitem(last=False)
+        return pd.DataFrame(cols)
 
     def docids(self, docnos: list[int]) -> dict[int, str]:
-        import pyarrow.dataset as pads
+        """docno -> 'repo/path@commit', from the in-memory docid array."""
+        return {d: self._docid[d - 1] for d in map(int, docnos)}
 
-        if not docnos:
-            return {}
-        tab = self._docmap.to_table(
-            columns=["docno", "repo", "path", "commit"],
-            filter=pads.field("docno").isin([int(d) for d in docnos]),
-        ).to_pandas()
-        return {
-            int(r.docno): f"{r.repo}/{r.path}@{r.commit}"
-            for r in tab.itertuples(index=False)
-        }
+    def _term_data(self, terms):
+        """Positional entries of the query terms in the dictionary,
+        assembled over their candidate docs as the MRF and sqe Spark
+        kernels assemble them: (cand, term_data, dl_vec, stats) with
+        stats term -> (df, cf), or None when no term has postings."""
+        from ivory_spark.query.mrf import assemble_term_data
+
+        rows = {t: self._term_row[t] for t in terms if t in self._term_row}
+        term_by_id = {int(self._termid[r]): t for t, r in rows.items()}
+        self._runs_for(sorted(term_by_id), positions=True)
+        decoded = [
+            (term_by_id[tid], *run)
+            for tid in sorted(term_by_id)
+            for run in self._run_cache_pos.get(tid, ())
+        ]
+        if not decoded:
+            return None
+        cand = np.unique(np.concatenate([e[1] for e in decoded]))
+        stats = {t: (int(self._df[r]), int(self._cf[r])) for t, r in rows.items()}
+        return (cand, *assemble_term_data(decoded, cand), stats)
+
+    def _ranked(self, docnos, scores, k: int, with_docid: bool) -> list[dict]:
+        """Top-k rows, score desc then docno desc (Accumulator.java:38-53)."""
+        neg = -scores.astype(np.float64)
+        if 0 < k < len(neg):
+            # only docs scoring at least the kth best can rank; partition
+            # and lexsort both order NaN last, so NaN scores stay ranked
+            # as a full lexsort ranks them
+            keep = np.flatnonzero(~(neg > np.partition(neg, k - 1)[k - 1]))
+            docnos, scores, neg = docnos[keep], scores[keep], neg[keep]
+        sel = np.lexsort((-docnos, neg))[:k]
+        top = docnos[sel].tolist()
+        ids = self.docids(top) if with_docid else {}
+        out = []
+        for rank, (d, s) in enumerate(zip(top, scores[sel]), start=1):
+            row = {"rank": rank, "docno": d, "score": np.float32(s)}
+            if with_docid:
+                row["docid"] = ids[d]
+            out.append(row)
+        return out
 
     def search_sd(
         self, query: str, k: int = 10, with_docid: bool = True, model=None
@@ -130,15 +204,9 @@ class LocalSearcher:
         """Warm SD/FD MRF serving over a positional index — the same
         clique construction and batched scoring kernel as mrf_topk
         (build_cliques + score_docs_batch), run in-process over the
-        pyarrow-read candidate runs; scores are float32 bit-identical to
+        decoded candidate runs; scores are float32 bit-identical to
         the Spark MRF path and the numpy oracle."""
-        from ivory_spark.index import codec
-        from ivory_spark.query.mrf import (
-            MrfModel,
-            assemble_term_data,
-            build_cliques,
-            score_docs_batch,
-        )
+        from ivory_spark.query.mrf import MrfModel, build_cliques, score_docs_batch
 
         p = self.props
         if not p.get("positional"):
@@ -146,55 +214,24 @@ class LocalSearcher:
         model = model or MrfModel()
         tokens = self._tokenize(query)
         cliques = build_cliques(tokens, model)
-        stats = {}
-        termid_of = {}
-        for t in set(tokens):
-            meta = self._dict.get(t)
-            if meta is not None:
-                termid_of[t] = int(meta[0])
-                stats[t] = (int(meta[1]), int(meta[2]))
-        if not termid_of:
+        assembled = self._term_data(set(tokens))
+        if assembled is None:
             return []
-        term_by_id = {tid: t for t, tid in termid_of.items()}
-        runs = self._runs_for(sorted(term_by_id), positions=True)
-        decoded = []  # (term, docnos, tfs, dls, flat_pos, indptr)
-        for row in runs.itertuples(index=False):
-            term = term_by_id.get(int(row.termid))
-            if term is None:
-                continue
-            d, tf, dl = codec.decode_run(bytes(row.blob))
-            flat, iptr = codec.decode_positions_flat(
-                bytes(row.pos_blob) if row.pos_blob is not None else b"", tf
-            )
-            decoded.append((term, d.astype(np.int64), tf.astype(np.int64),
-                            dl.astype(np.int64), flat, iptr))
-        if not decoded:
-            return []
-        cand = np.unique(np.concatenate([e[1] for e in decoded]))
-        term_data, dl_vec = assemble_term_data(decoded, cand)
+        cand, term_data, dl_vec, stats = assembled
         scores = score_docs_batch(
             cliques, term_data, dl_vec, stats,
             p["n_docs"], p["avgdl"], p["collection_length"],
         )
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        ids = self.docids([int(cand[i]) for i in sel]) if with_docid else {}
-        out = []
-        for rank, i in enumerate(sel, start=1):
-            row = {"rank": rank, "docno": int(cand[i]), "score": np.float32(scores[i])}
-            if with_docid:
-                row["docid"] = ids.get(int(cand[i]), "")
-            out.append(row)
-        return out
+        return self._ranked(cand, scores, k, with_docid)
 
     def search_sqe(
         self, query, k: int = 10, with_docid: bool = True
     ) -> list[dict]:
         """Warm structured-query (sqe) serving: the same tree evaluator
         as sqe_topk (parse -> candidate mask -> float32 child-ordered
-        folds, TfDf blending) over pyarrow-read runs — bit-identical to
+        folds, TfDf blending) over the decoded runs — bit-identical to
         the Spark path. `query` is a JSON operator tree (text or dict);
         phrase leaves need a positional index."""
-        from ivory_spark.index import codec
         from ivory_spark.query.sqe import (
             _candidate_mask,
             _eval_node,
@@ -209,37 +246,10 @@ class LocalSearcher:
         needs_positions = any(n.op == "phrase" for n in _walk(tree))
         if needs_positions and not p.get("positional"):
             raise ValueError("phrase leaves require a positional index")
-        stats = {}
-        termid_of = {}
-        for t in query_terms(tree):
-            meta = self._dict.get(t)
-            if meta is not None:
-                termid_of[t] = int(meta[0])
-                stats[t] = (int(meta[1]), int(meta[2]))
-        if not termid_of:
+        assembled = self._term_data(query_terms(tree))
+        if assembled is None:
             return []
-        term_by_id = {tid: t for t, tid in termid_of.items()}
-        runs = self._runs_for(
-            sorted(term_by_id), positions=bool(p.get("positional"))
-        )
-        decoded = []
-        for row in runs.itertuples(index=False):
-            term = term_by_id.get(int(row.termid))
-            if term is None:
-                continue
-            d, tf, dl = codec.decode_run(bytes(row.blob))
-            pos_blob = getattr(row, "pos_blob", None)
-            flat, iptr = codec.decode_positions_flat(
-                bytes(pos_blob) if pos_blob is not None else b"", tf
-            )
-            decoded.append((term, d.astype(np.int64), tf.astype(np.int64),
-                            dl.astype(np.int64), flat, iptr))
-        if not decoded:
-            return []
-        from ivory_spark.query.mrf import assemble_term_data
-
-        cand = np.unique(np.concatenate([e[1] for e in decoded]))
-        term_data, dl_vec = assemble_term_data(decoded, cand)
+        cand, term_data, dl_vec, stats = assembled
         max_pos = 0
         for td in term_data.values():
             if td.flat_pos.size:
@@ -251,50 +261,36 @@ class LocalSearcher:
             return []
         res = _eval_node(tree, term_data, dl_vec, stats, n_docs, avgdl_int, max_pos)
         scores = _score_of(res, dl_vec, n_docs, avgdl_int)
-        cand, scores = cand[mask], scores[mask]
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        ids = self.docids([int(cand[i]) for i in sel]) if with_docid else {}
-        out = []
-        for rank, i in enumerate(sel, start=1):
-            row = {"rank": rank, "docno": int(cand[i]), "score": np.float32(scores[i])}
-            if with_docid:
-                row["docid"] = ids.get(int(cand[i]), "")
-            out.append(row)
-        return out
+        return self._ranked(cand[mask], scores[mask], k, with_docid)
 
     def search(self, query: str, k: int = 10, with_docid: bool = True) -> list[dict]:
         """-> [{rank, docno[, docid], score}] — Ivory tie-break, scores
         bit-identical to bm25_topk / bm25_topk_wand."""
         p = self.props
-        counts = sorted(Counter(self._tokenize(query)).items())
-        rows = []
-        for term, qtf in counts:
-            meta = self._dict.get(term)
-            if meta is not None:
-                rows.append((int(meta[0]), int(qtf), int(meta[1])))
+        rows, qtfs = [], []
+        for term, qtf in Counter(self._tokenize(query)).items():
+            r = self._term_row.get(term)
+            if r is not None:
+                rows.append(r)
+                qtfs.append(qtf)
         if not rows:
             return []
-        termids = sorted({r[0] for r in rows})
-        runs = self._runs_for(termids)
-        qmeta = {tid: (qtf, df) for tid, qtf, df in rows}
-        runs = runs[runs["termid"].isin(termids)].copy()
-        runs["qtf"] = runs["termid"].map(lambda t: qmeta[int(t)][0])
-        d, s = _score_group(
-            runs,
-            p["n_docs"],
-            p["avgdl"],
-            p["k1"],
-            p["b"],
-            p["idf_mode"],
-            lo=1,
-            hi=p["n_docs"],
-            k=k,
+        termids = self._termid[rows]
+        self._runs_for(sorted(termids.tolist()))
+        entries = [self._run_cache[t] for t in termids.tolist()]
+        lens = [len(e[0]) for e in entries]
+        # one vectorized pass over every posting: the same float32
+        # contribution as query/wand.py, qtf * (idf * tf_part)
+        idf = bm25_idf(p["n_docs"], self._df[rows], mode=p["idf_mode"])
+        tf_part = bm25_tf_part(
+            np.concatenate([e[1] for e in entries]),
+            np.concatenate([e[2] for e in entries]),
+            p["avgdl"], p["k1"], p["b"],
         )
-        ids = self.docids([int(x) for x in d]) if with_docid else {}
-        out = []
-        for i in range(len(d)):
-            row = {"rank": i + 1, "docno": int(d[i]), "score": np.float32(s[i])}
-            if with_docid:
-                row["docid"] = ids.get(int(d[i]), "")
-            out.append(row)
-        return out
+        contrib = np.repeat(np.array(qtfs, dtype=np.float32), lens) * (
+            np.repeat(idf, lens) * tf_part
+        )
+        d, s = group_sum_f32(
+            np.concatenate([e[0] for e in entries]), np.repeat(termids, lens), contrib
+        )
+        return self._ranked(d, s, k, with_docid)

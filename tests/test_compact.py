@@ -1,8 +1,10 @@
 """Incremental delta append + bounds refresh (index/compact.py): an
 index grown by append_delta must hold the same logical content as a full
 rebuild over base+delta (stats, doclens, per-term postings), exact BM25
-must agree with the full rebuild, WAND must refuse stale bounds until
-refresh_bounds, and then be bit-identical to the exact path."""
+must agree with the full rebuild, the warm LocalSearcher must serve the
+appended index bit-identically to the exact path before any refresh,
+WAND must refuse stale bounds until refresh_bounds, and then be
+bit-identical to the exact path."""
 
 import os
 
@@ -16,6 +18,7 @@ from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.compact import append_delta, refresh_bounds
 from ivory_spark.index.reader import open_index
 from ivory_spark.query.exact import bm25_topk
+from ivory_spark.query.serve import LocalSearcher
 from ivory_spark.query.wand import bm25_topk_wand
 
 N_BASE, N_DELTA = 120, 80
@@ -113,6 +116,28 @@ def test_append_exact_bm25_matches_rebuild(spark, roots):
         assert np.isclose(ga[key], gr[key], rtol=1e-5), key
 
 
+def test_serve_appended_index_matches_exact_before_refresh(spark, roots):
+    """LocalSearcher reads no block-max bounds and takes df from the
+    dictionary (append_delta leaves the postings rows' df stale), so it
+    serves the appended index bit-identically to the exact path while
+    bounds are still stale. Must run before the refresh test below,
+    which refreshes the index in place."""
+    appended_root, _, _ = roots
+    a = open_index(spark, appended_root)
+    assert a.properties["bounds_stale"] is True
+
+    def bits(r):
+        return r["docno"], r["docid"], np.float32(r["score"]).view(np.uint32).item()
+
+    exact: dict = {q["qid"]: [] for q in QUERY_SET}
+    for x in bm25_topk(spark, a, QUERY_SET, k=10).orderBy("qid", "rank").collect():
+        exact[x["qid"]].append(bits(x))
+    searcher = LocalSearcher(appended_root)
+    for q in QUERY_SET:
+        got = [bits(r) for r in searcher.search(q["query"], k=10)]
+        assert got == exact[q["qid"]], q["qid"]
+
+
 def test_wand_refuses_stale_bounds_then_matches_after_refresh(spark, roots):
     appended_root, _, _ = roots
     a = open_index(spark, appended_root)
@@ -176,6 +201,8 @@ def test_partial_append_detected_and_repaired(spark, tmp_path_factory):
 
     with pytest.raises(IndexValidationError):
         validate_index(spark, open_index(spark, root))
+    with pytest.raises(ValueError, match="1..n_docs"):
+        LocalSearcher(root)  # docmap is no longer 1..n_docs
 
     repair_partial_append(spark, root)
     repaired = open_index(spark, root)
@@ -183,6 +210,10 @@ def test_partial_append_detected_and_repaired(spark, tmp_path_factory):
     after = {(r["qid"], r["docno"]) for r in
              bm25_topk(spark, repaired, QUERY_SET[:2], k=5, with_docid=False).collect()}
     assert after == before
+    searcher = LocalSearcher(root)
+    served = {(q["qid"], r["docno"]) for q in QUERY_SET[:2]
+              for r in searcher.search(q["query"], k=5)}
+    assert served == before
 
 
 def test_stream_to_index_integration(spark, tiny_corpus, tmp_path):

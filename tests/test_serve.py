@@ -52,21 +52,46 @@ def test_serve_warm_latency(served):
     assert per_query_ms < 200, per_query_ms
 
 
-def test_serve_lru_never_evicts_current_query_terms(spark, tiny_corpus_path, tmp_path_factory):
-    """Regression: with a cache smaller than the working set, a query
-    mixing cached and uncached terms must not lose a cached term to
-    eviction mid-lookup (scores would silently lose that term)."""
-    from ivory_spark.index.build import IndexConfig, build_index
+def test_serve_matches_exact_path_with_lru_churn(spark, tiny_corpus_path, tmp_path_factory):
+    """Differential test against the exact Spark path on a salted
+    multi-run index, with a 2-entry LRU so the cache churns between
+    queries: docno, docid and float32 score bits agree for OOV tokens,
+    duplicated tokens (qtf=2) and a term with df > N/2 (negative okapi
+    idf). The inputs include a query mixing a cached term with uncached
+    ones that overflow the cache: eviction must never drop a term the
+    query needs."""
+    import pyarrow.dataset as pads
 
-    root = str(tmp_path_factory.mktemp("idx_serve_lru") / "idx")
-    build_index(spark, tiny_corpus_path, root, IndexConfig())
-    tiny = LocalSearcher(root, cache_runs=2)
-    big = LocalSearcher(root)
-    q = QUERY_SET[0]["query"]
-    tiny.search("import", k=3)        # seed cache with a term q also uses
-    a = tiny.search(q, k=5)           # mixes cached + uncached, overflows cache
-    b = big.search(q, k=5)
-    assert [(r["docno"], r["score"]) for r in a] == [(r["docno"], r["score"]) for r in b]
+    from ivory_spark.index.reader import open_index
+    from ivory_spark.query.exact import bm25_topk
+
+    root = str(tmp_path_factory.mktemp("idx_serve_salted") / "idx")
+    build_index(spark, tiny_corpus_path, root, IndexConfig(salt_threshold=8, n_shards=5))
+    idx = open_index(spark, root)
+    n_docs = idx.properties["n_docs"]
+    dic = pads.dataset(f"{root}/dictionary").to_table().to_pandas()
+    top = dic.sort_values(["df", "term"], ascending=False).iloc[0]
+    assert top["df"] > n_docs / 2, top  # okapi idf < 0
+    runs = pads.dataset(f"{root}/postings").to_table(columns=["termid"]).to_pandas()
+    assert runs["termid"].value_counts()[top["termid"]] > 1  # salted: several runs
+
+    hi = top["term"]
+    texts = ["import", QUERY_SET[0]["query"]]  # cached "import" + uncached terms
+    texts += [q["query"] for q in QUERY_SET]  # OOV (q005), "def def return" (q004)
+    texts += [hi, f"{hi} {hi} zzq_oov_token class", f"{hi} import import"]
+    queries = [{"qid": f"d{i:02d}", "query": t} for i, t in enumerate(texts)]
+
+    def bits(rows):
+        return [(r["rank"], r["docno"], r["docid"],
+                 np.float32(r["score"]).view(np.uint32).item()) for r in rows]
+
+    want: dict = {q["qid"]: [] for q in queries}
+    for r in bm25_topk(spark, idx, queries, k=K).orderBy("qid", "rank").collect():
+        want[r["qid"]].append(r)
+    searcher = LocalSearcher(root, cache_runs=2)
+    for q in queries:
+        assert bits(searcher.search(q["query"], k=K)) == bits(want[q["qid"]]), q
+    assert any(any(r["score"] < 0 for r in rows) for rows in want.values())
 
 
 def test_parse_model_xml_string_params():
