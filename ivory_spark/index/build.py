@@ -23,7 +23,9 @@ Scale notes (100 TB / 10^12 rows):
 - the dictionary join is left to AQE (broadcast when small, shuffle
   otherwise); the salt count adapts per term (ceil(df / target_run));
 - postings rows are written range-clustered by termid so Parquet
-  row-group min/max stats give termid predicate pushdown at query time;
+  row-group min/max stats give termid predicate pushdown to the Spark
+  query paths (the LocalSearcher serving tier reads the termid and blob
+  columns whole, once, and slices them in memory);
 - every stage writes an artifact + manifest and is skipped when valid
   (checkpoint-resume; BuildTermDocVectors.java:346-350 made auditable).
 """
@@ -41,6 +43,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part
 from ivory_spark.index import codec
 from ivory_spark.plans.manifest import StageRun, stage_is_valid
+
+# byte budget of a forced broadcast (the docmap re-attach and the
+# vocabulary-sized termid joins); past it they fall back to a
+# shuffled-hash join
+BROADCAST_BUDGET_BYTES = 256 * 1024 * 1024
+# per-row JVM overhead headroom of a broadcast hash relation
+_BROADCAST_ROW_OVERHEAD = 48
 
 
 @dataclass
@@ -170,13 +179,27 @@ def build_docmap(
                 or 0.0
             )
             # 64 hex sha + 8B docno + per-row java overhead headroom
-            broadcast_ok = total * (avg_w + 72 + 48) <= 256 * 1024 * 1024
+            broadcast_ok = (
+                total * (avg_w + 72 + _BROADCAST_ROW_OVERHEAD) <= BROADCAST_BUDGET_BYTES
+            )
     if broadcast_ok:
         docmap = hashed.join(F.broadcast(slim), join_key)
     else:
         docmap = hashed.join(slim.hint("shuffle_hash"), join_key)
     docmap = docmap.select(*corpus.columns, "sha256", "docno")
     return docmap, total, pinned
+
+
+def join_on_termid(
+    runs: DataFrame, stats: DataFrame, n_terms: int, row_bytes: int
+) -> DataFrame:
+    """runs.join(stats, "termid") for a vocabulary-sized `stats` frame of
+    n_terms rows, each about row_bytes wide: a broadcast while it fits
+    BROADCAST_BUDGET_BYTES, else a shuffled-hash join on termid (a
+    10^8-term vocabulary would pass Spark's 8 GB broadcast limit)."""
+    if n_terms * (row_bytes + _BROADCAST_ROW_OVERHEAD) <= BROADCAST_BUDGET_BYTES:
+        return runs.join(F.broadcast(stats), "termid")
+    return runs.join(stats.hint("shuffle_hash"), "termid")
 
 
 def _postings_schema(positional: bool = False) -> str:
@@ -356,8 +379,9 @@ def build_index(
             postings = encode_postings(
                 joined, cfg, props["n_docs"], props["avgdl"], partitions
             ).drop("cf")
-            postings = postings.join(
-                F.broadcast(dictionary.select("termid", "cf")), "termid"
+            postings = join_on_termid(
+                postings, dictionary.select("termid", "cf"), props["n_terms"],
+                row_bytes=16,  # termid, cf
             )
             cols = [f.split()[0] for f in _postings_schema(cfg.positional).split(", ")]
             # cluster by termid for parquet row-group pruning at query time

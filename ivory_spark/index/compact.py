@@ -49,7 +49,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part
 from ivory_spark.index import codec
-from ivory_spark.index.build import IndexConfig, assign_sequential_ids, encode_postings
+from ivory_spark.index.build import (
+    IndexConfig,
+    assign_sequential_ids,
+    encode_postings,
+    join_on_termid,
+)
 
 
 def append_delta(
@@ -311,7 +316,7 @@ def refresh_bounds(spark: SparkSession, index_root: str) -> dict:
     cur = spark.read.parquet(os.path.join(index_root, "dictionary")).select(
         "termid", F.col("df").alias("df_now"), F.col("cf").alias("cf_now")
     )
-    joined = posts.join(F.broadcast(cur), "termid")
+    joined = join_on_termid(posts, cur, props["n_terms"], row_bytes=20)  # termid, df, cf
 
     cols = (
         "termid long, salt int, df int, cf long, n int, first_docno long, "

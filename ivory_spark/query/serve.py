@@ -4,10 +4,23 @@ Spark batch retrieval amortizes the plan+schedule floor (~2 s on this
 host) across a query batch; an ad-hoc single query pays it in full
 (BENCH r01: p50 2.2 s vs 249 ms amortized). This module is the serving
 tier: a long-lived process loads the dictionary and the docid of every
-docno once, reads the postings runs of the query terms that miss its
-LRU through pyarrow (one read per query, with the same termid row-group
-pruning the Spark scan gets), and keeps each term's postings in the LRU
-decoded into columnar arrays.
+docno once, and serves every query from memory.
+
+Memory model of a serving replica:
+- the dictionary (term -> termid, df, cf) and the docid of every docno;
+- the compressed postings column: every run's termid and blob, read
+  whole at the first LRU miss and held sorted by termid (a stable sort,
+  since an appended index's delta runs are not termid-clustered). A miss
+  is a searchsorted slice of it, not a parquet scan, as Ivory reaches a
+  term's postings with one seek through its forward index
+  (IntPostingsForwardIndex.java:68-110). Position blobs join it, in the
+  same order, at the first positional miss, so plain BM25 serving never
+  reads or pins position bytes;
+- decoded postings of recently used terms in a termid-keyed LRU
+  (`cache_runs` term entries).
+Construction reads no postings column: it pins the postings file list
+next to the dictionary and docmap it reads, so a later append is not
+seen.
 
 BM25 (`search`) scores every decoded posting of the query terms in one
 vectorized pass: the contribution qtf * (idf * tf_part) of the exact
@@ -24,9 +37,9 @@ with positions, bit-identical to their Spark paths.
 This is the analogue of Ivory's long-lived broker + retrieval-server
 deployment (docs/clue.html:164-180 — partition servers hold the index
 hot, the broker fans out and merges): at 100 TB the index stays in the
-lake, N serving replicas each memory-map the dictionary and cache hot
-postings, and Spark remains the batch/analytics tier over the same
-artifacts.
+lake, N serving replicas each hold the dictionary and their partition's
+compressed postings, and Spark remains the batch/analytics tier over the
+same artifacts.
 """
 
 from __future__ import annotations
@@ -101,7 +114,11 @@ class LocalSearcher:
             .to_numpy(zero_copy_only=False)
             .tolist()
         )
+        # the postings file list, pinned here; its columns are read at
+        # the first miss (_resident, _resident_pos)
         self._postings = pads.dataset(os.path.join(index_root, "postings"))
+        self._rows = None  # (sorted termids, blobs in that order, row order)
+        self._pos_blobs = None
         # two LRUs of decoded postings, keyed by termid. BM25 entries are
         # (docnos, tfs, dls) over all of a term's runs, so plain BM25
         # serving never reads or pins position bytes (the largest
@@ -111,13 +128,32 @@ class LocalSearcher:
         self._run_cache_pos: OrderedDict[int, list] = OrderedDict()
         self._cache_runs = cache_runs
 
-    def _runs_for(self, termids: list[int], positions: bool = False) -> pd.DataFrame:
-        """Put every termid's decoded postings in the LRU, with one
-        pyarrow read for the terms that miss. Returns the runs read, as a
-        (termid, blob[, pos_blob]) frame that is empty when every term
-        hit; callers take the decoded entries from the cache."""
-        import pyarrow.dataset as pads
+    def _resident(self) -> tuple:
+        """The postings termid and blob columns, read whole on first use
+        and sorted by termid; a stable sort keeps each term's runs in
+        file order."""
+        if self._rows is None:
+            tab = self._postings.to_table(columns=["termid", "blob"])
+            termid = tab["termid"].to_numpy()
+            order = np.argsort(termid, kind="stable")
+            self._rows = (termid[order], tab["blob"].take(order), order)
+        return self._rows
 
+    def _resident_pos(self):
+        """The pos_blob column in the resident rows' order, read whole on
+        the first positional miss. The pinned file list is scanned in the
+        same fragment order as the termid read, so the rows align."""
+        if self._pos_blobs is None:
+            order = self._resident()[2]
+            tab = self._postings.to_table(columns=["pos_blob"])
+            self._pos_blobs = tab["pos_blob"].take(order)
+        return self._pos_blobs
+
+    def _runs_for(self, termids: list[int], positions: bool = False) -> pd.DataFrame:
+        """Put every termid's decoded postings in the LRU, decoding the
+        resident runs of the terms that miss. Returns the runs decoded,
+        as a (termid, blob) frame that is empty when every term hit;
+        callers take the decoded entries from the cache."""
         cache = self._run_cache_pos if positions else self._run_cache
         # touch cached hits FIRST so eviction below can never drop a term
         # the current query needs (would silently corrupt scores)
@@ -127,23 +163,25 @@ class LocalSearcher:
         missing = [t for t in termids if t not in cache]
         if not missing:
             return _NO_RUNS
-        read_pos = positions and bool(self.props.get("positional"))
-        tab = self._postings.to_table(
-            columns=["termid", "blob"] + (["pos_blob"] if read_pos else []),
-            filter=pads.field("termid").isin(missing),
-        )
-        cols = {c: tab[c].to_pylist() for c in tab.column_names}
-        pos_blobs = cols.get("pos_blob", [None] * tab.num_rows)
-        rows_of: dict[int, list[int]] = {}
-        for i, t in enumerate(cols["termid"]):
-            rows_of.setdefault(t, []).append(i)
-        for t, rows in rows_of.items():
-            runs = [codec.decode_run(cols["blob"][i]) for i in rows]
+        rterm, rblob, _ = self._resident()
+        lo = np.searchsorted(rterm, missing, side="left")
+        hi = np.searchsorted(rterm, missing, side="right")
+        idx = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)])
+        blobs = rblob.take(idx).to_pylist()
+        if positions and self.props.get("positional"):
+            pos_blobs = self._resident_pos().take(idx).to_pylist()
+        else:
+            pos_blobs = [b""] * len(idx)
+        bounds = np.concatenate(([0], np.cumsum(hi - lo)))
+        for t, a, b in zip(missing, bounds[:-1], bounds[1:]):
+            if a == b:
+                continue
+            runs = [codec.decode_run(blob) for blob in blobs[a:b]]
             if positions:
                 cache[t] = [
                     (d.astype(np.int64), tf.astype(np.int64), dl.astype(np.int64),
-                     *codec.decode_positions_flat(pos_blobs[i] or b"", tf))
-                    for (d, tf, dl), i in zip(runs, rows)
+                     *codec.decode_positions_flat(pos or b"", tf))
+                    for (d, tf, dl), pos in zip(runs, pos_blobs[a:b])
                 ]
             else:
                 d, tf, dl = (np.concatenate(c) for c in zip(*runs))
@@ -151,7 +189,7 @@ class LocalSearcher:
         cap = max(self._cache_runs, len(termids))
         while len(cache) > cap:
             cache.popitem(last=False)
-        return pd.DataFrame(cols)
+        return pd.DataFrame({"termid": rterm[idx], "blob": blobs})
 
     def docids(self, docnos: list[int]) -> dict[int, str]:
         """docno -> 'repo/path@commit', from the in-memory docid array."""

@@ -25,8 +25,9 @@ N_BASE, N_DELTA = 120, 80
 
 
 @pytest.fixture(scope="module")
-def roots(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("compact")
+def corpora(tmp_path_factory):
+    """base, delta and full (base + delta) corpus paths."""
+    d = tmp_path_factory.mktemp("compact_corpora")
     full = generate_corpus(N_BASE + N_DELTA, seed=29)
     base_pdf, delta_pdf = full.iloc[:N_BASE], full.iloc[N_DELTA:]  # overlap
     # the overlap region [N_DELTA, N_BASE) duplicates base content —
@@ -36,6 +37,13 @@ def roots(spark, tmp_path_factory):
         p = str(d / f"{name}.parquet")
         pdf.drop(columns=["sha256"], errors="ignore").to_parquet(p, index=False)
         paths[name] = p
+    return paths
+
+
+@pytest.fixture(scope="module")
+def roots(spark, corpora, tmp_path_factory):
+    d = tmp_path_factory.mktemp("compact")
+    paths = corpora
     appended_root = str(d / "appended")
     rebuilt_root = str(d / "rebuilt")
     cfg = IndexConfig(salt_threshold=40, n_shards=5)
@@ -136,6 +144,68 @@ def test_serve_appended_index_matches_exact_before_refresh(spark, roots):
     for q in QUERY_SET:
         got = [bits(r) for r in searcher.search(q["query"], k=10)]
         assert got == exact[q["qid"]], q["qid"]
+
+
+def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path):
+    """On an appended, still-stale positional multi-run index, one
+    searcher with a 2-entry LRU serves interleaved BM25, SD and sqe
+    queries, so both LRUs and the resident postings rows are shared
+    across paths; each result equals its Spark path (bm25_topk, mrf_topk,
+    sqe_topk) bit for bit, for OOV tokens, qtf=2 and a df > N/2 term."""
+    import pyarrow.dataset as pads
+
+    from ivory_spark.query.mrf import MrfModel, mrf_topk
+    from ivory_spark.query.sqe import sqe_topk
+
+    root = str(tmp_path / "appended_pos")
+    cfg = IndexConfig(positional=True, salt_threshold=40, n_shards=5)
+    build_index(spark, corpora["base"], root, cfg)
+    append_delta(spark, root, corpora["delta"])
+    idx = open_index(spark, root)
+    assert idx.properties["bounds_stale"] is True
+    dic = pads.dataset(f"{root}/dictionary").to_table().to_pandas()
+    hi = dic.sort_values(["df", "term"], ascending=False).iloc[0]
+    assert hi["df"] > idx.properties["n_docs"] / 2, hi  # okapi idf < 0
+    runs = pads.dataset(f"{root}/postings").to_table(columns=["termid"]).to_pandas()
+    assert runs["termid"].value_counts()[hi["termid"]] > 1  # several runs
+    hi = hi["term"]
+
+    texts = [q["query"] for q in QUERY_SET[:8]]  # OOV (q005), qtf=2 (q004)
+    texts += [hi, f"{hi} {hi} zzq_oov_token class", f"{hi} import import"]
+    plain = [{"qid": f"b{i:02d}", "query": t} for i, t in enumerate(texts)]
+    sd = [{"qid": f"m{i:02d}", "query": t} for i, t in enumerate(texts)]
+    trees = [
+        '{"#combine": [{"#weight": [0.7, "import", 0.3, "class"]}, "return"]}',
+        '{"#combine": ["public class", "import"]}',  # phrase leaf
+        '{"#weight": [0.8, "import", 0.2, "zzq_oov_token"]}',  # OOV blend
+        f'{{"#combine": ["{hi}", "{hi} import", "return"]}}',
+        f'{{"#weight": [0.5, "{hi}", 0.5, "{hi}"]}}',
+    ]
+    sqe = [{"qid": f"s{i:02d}", "query": t} for i, t in enumerate(trees)]
+
+    def bits(r):
+        return r["docno"], r["docid"], np.float32(r["score"]).view(np.uint32).item()
+
+    def by_qid(df, queries):
+        out: dict = {q["qid"]: [] for q in queries}
+        for x in df.orderBy("qid", "rank").collect():
+            out[x["qid"]].append(bits(x))
+        return out
+
+    want = {
+        **by_qid(bm25_topk(spark, idx, plain, k=10), plain),
+        **by_qid(mrf_topk(spark, idx, sd, MrfModel(dependence="sd")), sd),
+        **by_qid(sqe_topk(spark, idx, sqe, k=10), sqe),
+    }
+    assert any(want[q["qid"]] for q in sqe)
+    searcher = LocalSearcher(root, cache_runs=2)
+    for i in range(len(texts)):
+        calls = [(plain[i], searcher.search), (sd[i], searcher.search_sd)]
+        if i < len(sqe):
+            calls.append((sqe[i], searcher.search_sqe))
+        for q, serve in calls:
+            got = [bits(r) for r in serve(q["query"], k=10)]
+            assert got == want[q["qid"]], q
 
 
 def test_wand_refuses_stale_bounds_then_matches_after_refresh(spark, roots):

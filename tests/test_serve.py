@@ -2,6 +2,7 @@
 Spark paths and the numpy oracle, and fast enough for ad-hoc queries
 (the Spark plan/schedule floor is the thing it exists to avoid)."""
 
+import os
 import time
 
 import numpy as np
@@ -52,7 +53,32 @@ def test_serve_warm_latency(served):
     assert per_query_ms < 200, per_query_ms
 
 
-def test_serve_matches_exact_path_with_lru_churn(spark, tiny_corpus_path, tmp_path_factory):
+def _bits(rows):
+    return [(r["rank"], r["docno"], r["docid"],
+             np.float32(r["score"]).view(np.uint32).item()) for r in rows]
+
+
+def _exact(spark, idx, queries) -> dict:
+    """qid -> the exact Spark path's top-K rows, in rank order."""
+    from ivory_spark.query.exact import bm25_topk
+
+    want: dict = {q["qid"]: [] for q in queries}
+    for r in bm25_topk(spark, idx, queries, k=K).orderBy("qid", "rank").collect():
+        want[r["qid"]].append(r)
+    return want
+
+
+@pytest.fixture(scope="module")
+def salted(spark, tiny_corpus_path, tmp_path_factory):
+    """A salted multi-run index (salt_threshold 8) and its Index handle."""
+    from ivory_spark.index.reader import open_index
+
+    root = str(tmp_path_factory.mktemp("idx_serve_salted") / "idx")
+    build_index(spark, tiny_corpus_path, root, IndexConfig(salt_threshold=8, n_shards=5))
+    return root, open_index(spark, root)
+
+
+def test_serve_matches_exact_path_with_lru_churn(spark, salted):
     """Differential test against the exact Spark path on a salted
     multi-run index, with a 2-entry LRU so the cache churns between
     queries: docno, docid and float32 score bits agree for OOV tokens,
@@ -62,12 +88,7 @@ def test_serve_matches_exact_path_with_lru_churn(spark, tiny_corpus_path, tmp_pa
     query needs."""
     import pyarrow.dataset as pads
 
-    from ivory_spark.index.reader import open_index
-    from ivory_spark.query.exact import bm25_topk
-
-    root = str(tmp_path_factory.mktemp("idx_serve_salted") / "idx")
-    build_index(spark, tiny_corpus_path, root, IndexConfig(salt_threshold=8, n_shards=5))
-    idx = open_index(spark, root)
+    root, idx = salted
     n_docs = idx.properties["n_docs"]
     dic = pads.dataset(f"{root}/dictionary").to_table().to_pandas()
     top = dic.sort_values(["df", "term"], ascending=False).iloc[0]
@@ -81,17 +102,47 @@ def test_serve_matches_exact_path_with_lru_churn(spark, tiny_corpus_path, tmp_pa
     texts += [hi, f"{hi} {hi} zzq_oov_token class", f"{hi} import import"]
     queries = [{"qid": f"d{i:02d}", "query": t} for i, t in enumerate(texts)]
 
-    def bits(rows):
-        return [(r["rank"], r["docno"], r["docid"],
-                 np.float32(r["score"]).view(np.uint32).item()) for r in rows]
-
-    want: dict = {q["qid"]: [] for q in queries}
-    for r in bm25_topk(spark, idx, queries, k=K).orderBy("qid", "rank").collect():
-        want[r["qid"]].append(r)
+    want = _exact(spark, idx, queries)
     searcher = LocalSearcher(root, cache_runs=2)
     for q in queries:
-        assert bits(searcher.search(q["query"], k=K)) == bits(want[q["qid"]]), q
+        assert _bits(searcher.search(q["query"], k=K)) == _bits(want[q["qid"]]), q
     assert any(any(r["score"] < 0 for r in rows) for rows in want.values())
+
+
+def test_serve_postings_resident_after_first_miss(spark, salted):
+    """The first miss reads the postings termid and blob columns whole;
+    every later miss slices them in memory. With the postings directory
+    renamed away after one miss, the same searcher (2-entry LRU, so
+    entries are evicted and decoded again) serves never-cached terms of
+    every df band bit-identically to the exact path. A searcher opened
+    before the rename has not read the column at construction: its first
+    miss fails while the directory is away, and serves once it is back."""
+    import pyarrow.dataset as pads
+
+    root, idx = salted
+    dic = pads.dataset(f"{root}/dictionary").to_table().to_pandas()
+    by_df = dic.sort_values(["df", "term"], ascending=False)["term"].tolist()
+    # every df band, salted terms to hapax ones, none requested yet
+    picks = [t for t in by_df[:: max(1, len(by_df) // 40)] if t != "import"]
+    texts = ["import"] + picks + [" ".join(picks[i:i + 3]) for i in range(0, 30, 3)]
+    texts += [f"{picks[0]} {picks[0]} zzq_oov_token", "import"]  # import: evicted
+    queries = [{"qid": f"r{i:02d}", "query": t} for i, t in enumerate(texts)]
+    want = _exact(spark, idx, queries)
+
+    searcher = LocalSearcher(root, cache_runs=2)
+    assert _bits(searcher.search("import", k=K)) == _bits(want["r00"])
+    unloaded = LocalSearcher(root)
+    postings, away = os.path.join(root, "postings"), os.path.join(root, "postings_away")
+    os.rename(postings, away)
+    try:
+        for q in queries[1:]:
+            got = searcher.search(q["query"], k=K)
+            assert _bits(got) == _bits(want[q["qid"]]), q
+        with pytest.raises(FileNotFoundError):
+            unloaded.search("import", k=K)
+    finally:
+        os.rename(away, postings)
+    assert _bits(unloaded.search("import", k=K)) == _bits(want["r00"])
 
 
 def test_parse_model_xml_string_params():
