@@ -50,6 +50,9 @@ from ivory_spark.plans.manifest import StageRun, stage_is_valid
 BROADCAST_BUDGET_BYTES = 256 * 1024 * 1024
 # per-row JVM overhead headroom of a broadcast hash relation
 _BROADCAST_ROW_OVERHEAD = 48
+# docmap winners up to this many rows broadcast without a key-width
+# probe job; past it the probe and BROADCAST_BUDGET_BYTES decide
+DOCMAP_PROBE_SKIP_ROWS = 10_000
 
 
 @dataclass
@@ -165,8 +168,8 @@ def build_docmap(
     # frame (reads the cache, no recompute).
     broadcast_ok = False
     if total <= 1_000_000:
-        if total <= 100_000:
-            # even pathological kB-scale keys stay ~100 MB here — skip
+        if total <= DOCMAP_PROBE_SKIP_ROWS:
+            # even pathological kB-scale keys stay tens of MB here — skip
             # the probe job entirely for the common small-corpus case
             broadcast_ok = True
         else:

@@ -36,6 +36,13 @@ Each blob is one *run*: a docno-sorted, docno-range-contiguous slice of one
 term's postings. Salted builds emit several runs per term over disjoint
 docno ranges; they can be scored independently and in parallel, so no
 global merge is required (merge_runs exists for the byte-equivalence test).
+
+Multi-run work goes a frame at a time: encode_frame encodes many runs in
+a few vectorized passes, and decode_frame, its inverse, decodes many
+blobs with one varint pass, paying numpy's per-call overhead once per
+frame rather than once per block. Their per-run references are
+encode_run and decode_run (the tests compare the two routes), and
+decode_block is the random access the WAND kernel uses.
 """
 
 from __future__ import annotations
@@ -318,11 +325,13 @@ def encode_frame(
     # global d-gaps: absolute at each run start, deltas elsewhere
     gaps = np.empty(n_total, dtype=np.uint64)
     if n_total:
+        # an empty run's start may be n_total: it restarts nothing
+        firsts = run_starts[run_ends > run_starts]
         gaps[0] = docnos[0]
         gaps[1:] = docnos[1:] - docnos[:-1]
-        gaps[run_starts] = docnos[run_starts]
+        gaps[firsts] = docnos[firsts]
         interior = np.ones(n_total, dtype=bool)
-        interior[run_starts] = False
+        interior[firsts] = False
         # uint64 wraparound on a non-increasing docno yields a huge gap;
         # detect via the signed view to keep encode_run's contract
         if interior.any() and (gaps[interior].view(np.int64) <= 0).any():
@@ -465,6 +474,89 @@ def decode_run(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         start = end
         out += sz
     return docnos, tfs.astype(np.int32), dls.astype(np.int32)
+
+
+def _gather_u32(buf: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """The little-endian uint32 at each byte offset of buf, as int64."""
+    raw = buf[offsets[:, None] + np.arange(4)]
+    return raw.view("<u4").ravel().astype(np.int64)
+
+
+def decode_frame(
+    blobs: list[bytes],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode many runs at once -> (docnos uint64, tfs int32, dls int32,
+    indptr int64[len(blobs)+1]); run i is [indptr[i], indptr[i+1]) and
+    equals decode_run(blobs[i]). The inverse of encode_frame.
+
+    decode_run pays about 15 numpy dispatches per block. Here the blobs
+    are joined into one buffer; every header and directory `end` is read
+    by a vectorized gather. A varint-sentinel block's payload is one
+    varint stream (gaps, then tfs, then dls), so the tf/dl sections of
+    every block and the gap sections of every sentinel block are decoded
+    by ONE varint_decode. Only bit-packed blocks (runs of 512+ postings)
+    go through pfor_decode, one call each. Docnos are one cumsum over
+    all gaps, reset at each run start (a block's first gap is relative
+    to the previous block's last docno, the run's first gap absolute).
+    """
+    m = len(blobs)
+    boff = np.zeros(m + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, blobs), dtype=np.int64, count=m), out=boff[1:])
+    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    hdr = _gather_u32(buf, (boff[:-1, None] + np.arange(0, 12, 4)).ravel()).reshape(m, 3)
+    n, nb, bs = hdr[:, 0], hdr[:, 1], hdr[:, 2]
+    indptr = np.zeros(m + 1, dtype=np.int64)
+    np.cumsum(n, out=indptr[1:])
+    total = int(indptr[-1])
+
+    # per block: owning run, payload byte range in buf, posting count
+    bptr = np.zeros(m + 1, dtype=np.int64)
+    np.cumsum(nb, out=bptr[1:])
+    run = np.repeat(np.arange(m), nb)
+    j = np.arange(int(bptr[-1])) - bptr[run]
+    ends = _gather_u32(buf, boff[run] + _HDR.itemsize + j * _DIR.itemsize + _DIR.fields["end"][1])
+    payload = (boff[:-1] + _HDR.itemsize + nb * _DIR.itemsize)[run]
+    lo = payload + np.concatenate(([0], ends[:-1]))
+    lo[j == 0] = payload[j == 0]
+    hi = payload + ends
+    sz = bs[run]
+    last = bptr[1:][nb > 0] - 1
+    sz[last] = (n - bs * (nb - 1))[nb > 0]
+    sentinel = buf[lo] == _PFOR_VARINT
+
+    # one varint stream: [gaps,] tfs, dls of every block, in block order
+    vstart = lo + 2
+    packed = np.flatnonzero(~sentinel)
+    packed_gaps = []
+    for k in packed.tolist():
+        g, used = pfor_decode(buf[lo[k] : hi[k]], int(sz[k]))
+        packed_gaps.append(g)
+        vstart[k] = lo[k] + used
+    vlen = hi - vstart
+    vptr = np.zeros(len(vlen) + 1, dtype=np.int64)
+    np.cumsum(vlen, out=vptr[1:])
+    vals = varint_decode(buf[np.repeat(vstart - vptr[:-1], vlen) + np.arange(int(vptr[-1]))])
+
+    # per posting: offset of its gap slot in vals; tf and dl follow at
+    # one and two block sizes past it (a bit-packed block has no gap
+    # slots, so its tfs start where its gaps would)
+    nv = (2 + sentinel) * sz
+    voff = np.zeros(len(nv) + 1, dtype=np.int64)
+    np.cumsum(nv, out=voff[1:])
+    pptr = np.zeros(len(sz) + 1, dtype=np.int64)
+    np.cumsum(sz, out=pptr[1:])
+    blk = np.repeat(np.arange(len(sz)), sz)
+    szp = sz[blk]
+    gap_at = voff[:-1][blk] + np.arange(total) - pptr[blk] - (~sentinel)[blk] * szp
+    gaps = vals[np.maximum(gap_at, 0)]
+    for k, g in zip(packed.tolist(), packed_gaps):
+        gaps[pptr[k] : pptr[k + 1]] = g
+    tfs = vals[gap_at + szp].astype(np.int32)
+    dls = vals[gap_at + 2 * szp].astype(np.int32)
+    cs = np.zeros(total + 1, dtype=np.uint64)
+    np.cumsum(gaps, dtype=np.uint64, out=cs[1:])
+    docnos = cs[1:] - np.repeat(cs[indptr[:-1]], n)
+    return docnos, tfs, dls, indptr
 
 
 def decode_block(blob: bytes, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -31,7 +31,9 @@ Correctness contract:
   therefore marks properties["bounds_stale"] = True; the WAND path
   refuses stale bounds (run_batch falls back to the exact plan) until
   refresh_bounds() re-derives every run's impacts under current stats —
-  a shuffle-free, embarrassingly-parallel decode/re-encode pass.
+  a shuffle-free, embarrassingly-parallel pass that decodes and
+  re-encodes each Arrow batch of runs as one frame
+  (codec.decode_frame / codec.encode_frame).
 
 Limitations (documented, asserted): min_df == 1 and max_df is None
 (df-band cuts depend on merged stats and would need base tdf rows for
@@ -44,7 +46,6 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part
@@ -301,9 +302,13 @@ def refresh_bounds(spark: SparkSession, index_root: str) -> dict:
     in-blob block directory) under the CURRENT n_docs/avgdl/df stats, and
     clear bounds_stale so WAND pruning is safe again.
 
-    Shuffle-free: one mapInPandas pass over the postings rows
-    (decode -> recompute float32 impacts -> re-encode); at cluster scale
-    this is embarrassingly parallel over parquet splits."""
+    Shuffle-free: one mapInPandas pass over the postings rows, vectorized
+    a frame at a time: each Arrow batch of runs is decoded by one
+    codec.decode_frame call, its float32 impacts are computed as
+    build.encode_groups computes them, and it is re-encoded by one
+    codec.encode_frame call. With stats unchanged since encode, the
+    rows come out byte-identical to the build's. At cluster scale this
+    is embarrassingly parallel over parquet splits."""
     props_path = os.path.join(index_root, "properties.json")
     with open(props_path) as f:
         props = json.load(f)
@@ -326,20 +331,18 @@ def refresh_bounds(spark: SparkSession, index_root: str) -> dict:
 
     def reencode(batches):
         for pdf in batches:
-            blobs, maxes = [], []
-            for blob, df_now in zip(pdf["blob"], pdf["df_now"]):
-                d, tf, dl = codec.decode_run(bytes(blob))
-                idf = bm25_idf(n_docs, np.array([df_now]), mode=idf_mode)[0]
-                imp = np.float32(idf) * bm25_tf_part(
-                    tf.astype(np.int64), dl.astype(np.int64), avgdl, k1, b
-                )
-                blobs.append(
-                    codec.encode_run(d, tf.astype(np.int64), dl.astype(np.int64), imp)
-                )
-                maxes.append(np.float32(imp.max()) if len(imp) else np.float32(0))
+            d, tf, dl, indptr = codec.decode_frame(pdf["blob"].tolist())
+            n = np.diff(indptr)
+            idf = bm25_idf(n_docs, pdf["df_now"].to_numpy(np.int64), mode=idf_mode)
+            # build.encode_groups' float32 impact expression, so runs
+            # whose stats did not change re-encode byte-identically
+            imp = np.repeat(idf, n) * bm25_tf_part(tf, dl, avgdl, k1, b)
+            maxes = np.zeros(len(n), dtype=np.float32)
+            if n.any():
+                maxes[n > 0] = np.maximum.reduceat(imp, indptr[:-1][n > 0])
             out = pdf.drop(columns=["blob", "max_impact"]).copy()
-            out["blob"] = blobs
-            out["max_impact"] = pd.Series(maxes, dtype="float32")
+            out["blob"] = codec.encode_frame(d, tf, dl, imp, indptr[:-1], indptr[1:])
+            out["max_impact"] = maxes
             out["df"] = pdf["df_now"].astype("int32")
             out["cf"] = pdf["cf_now"].astype("int64")
             out = out.drop(columns=["df_now", "cf_now"])

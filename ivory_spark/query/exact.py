@@ -103,26 +103,19 @@ def candidate_postings(index: Index, termids: list[int]) -> DataFrame:
 
 
 def _decode_runs(runs: DataFrame) -> DataFrame:
-    """blob rows -> (termid, docno, tf, dl) posting rows via Arrow batches."""
+    """blob rows -> (termid, docno, tf, dl) posting rows, one frame
+    decode and one pandas frame per Arrow batch."""
 
     def gen(it):
         for pdf in it:
-            outs = []
-            for termid, blob in zip(pdf["termid"], pdf["blob"]):
-                docnos, tfs, dls = codec.decode_run(bytes(blob))
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "termid": np.full(len(docnos), termid, dtype=np.int64),
-                            "docno": docnos.astype(np.int64),
-                            "tf": tfs,
-                            "dl": dls,
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"termid": pd.Series(dtype="int64"), "docno": pd.Series(dtype="int64"),
-                 "tf": pd.Series(dtype="int32"), "dl": pd.Series(dtype="int32")}
+            docnos, tfs, dls, indptr = codec.decode_frame(pdf["blob"].tolist())
+            yield pd.DataFrame(
+                {
+                    "termid": np.repeat(pdf["termid"].to_numpy(np.int64), np.diff(indptr)),
+                    "docno": docnos.astype(np.int64),
+                    "tf": tfs,
+                    "dl": dls,
+                }
             )
 
     return runs.select("termid", "blob").mapInPandas(

@@ -17,7 +17,9 @@ Memory model of a serving replica:
   same order, at the first positional miss, so plain BM25 serving never
   reads or pins position bytes;
 - decoded postings of recently used terms in a termid-keyed LRU
-  (`cache_runs` term entries).
+  (`cache_runs` term entries). A query's misses are one frame decode:
+  every missed run's blob goes through a single codec.decode_frame
+  call, and each term's entry is a copied slice of its output.
 Construction reads no postings column: it pins the postings file list
 next to the dictionary and docmap it reads, so a later append is not
 seen.
@@ -172,20 +174,24 @@ class LocalSearcher:
             pos_blobs = self._resident_pos().take(idx).to_pylist()
         else:
             pos_blobs = [b""] * len(idx)
-        bounds = np.concatenate(([0], np.cumsum(hi - lo)))
+        # one frame decode for every missed run; each entry copies its
+        # slices, so it never pins the whole frame once evicted
+        d, tf, dl, indptr = codec.decode_frame(blobs)
+        indptr = indptr.tolist()
+        bounds = np.concatenate(([0], np.cumsum(hi - lo))).tolist()
         for t, a, b in zip(missing, bounds[:-1], bounds[1:]):
             if a == b:
                 continue
-            runs = [codec.decode_run(blob) for blob in blobs[a:b]]
             if positions:
                 cache[t] = [
-                    (d.astype(np.int64), tf.astype(np.int64), dl.astype(np.int64),
-                     *codec.decode_positions_flat(pos or b"", tf))
-                    for (d, tf, dl), pos in zip(runs, pos_blobs[a:b])
+                    (d[p:q].astype(np.int64), tf[p:q].astype(np.int64),
+                     dl[p:q].astype(np.int64),
+                     *codec.decode_positions_flat(pos or b"", tf[p:q]))
+                    for p, q, pos in zip(indptr[a:b], indptr[a + 1 : b + 1], pos_blobs[a:b])
                 ]
             else:
-                d, tf, dl = (np.concatenate(c) for c in zip(*runs))
-                cache[t] = (d.astype(np.int64), tf, dl)
+                p, q = indptr[a], indptr[b]
+                cache[t] = (d[p:q].astype(np.int64), tf[p:q].copy(), dl[p:q].copy())
         cap = max(self._cache_runs, len(termids))
         while len(cache) > cap:
             cache.popitem(last=False)

@@ -17,6 +17,12 @@ def rt(docnos, tfs, dls):
     assert np.array_equal(d, docnos)
     assert np.array_equal(t, tfs)
     assert np.array_equal(l, dls)
+    fd, ft, fl, indptr = codec.decode_frame([blob])
+    assert indptr.tolist() == [0, len(docnos)]
+    assert fd.dtype == np.uint64 and ft.dtype == np.int32 and fl.dtype == np.int32
+    assert np.array_equal(fd, docnos)
+    assert np.array_equal(ft, tfs)
+    assert np.array_equal(fl, dls)
     return blob
 
 
@@ -207,3 +213,53 @@ def test_encode_frame_rejects_non_increasing_within_run():
         np.ones(4, dtype=np.float32), np.array([0, 2]), np.array([2, 4]),
     )
     assert len(blobs) == 2
+
+
+def test_decode_frame_matches_block_decode():
+    """decode_frame over one frame of many runs equals decode_block over
+    every block of every run (an independent per-block decoder): empty
+    and 1-posting runs, long runs whose bit-packed blocks carry
+    exceptions, 2^40 gaps, multi-byte tf/dl varints, and a run that
+    restarts below the previous run's last docno."""
+    rng = np.random.default_rng(11)
+    runs = []
+    for n in [0, 1, 5, 0, 1, 40, 600, 2048, 3000, 0, 1]:
+        gaps = rng.choice([1, 2, 3, 2**40], size=n, p=[0.5, 0.3, 0.18, 0.02])
+        runs.append(np.cumsum(gaps.astype(np.uint64)))
+    runs[3] = np.array([7, 2**40 + 7], dtype=np.uint64)  # below runs[2]'s tail
+    lens = np.array([len(r) for r in runs])
+    ends = np.cumsum(lens)
+    docnos = np.concatenate(runs)
+    tfs = rng.integers(1, 70_000, len(docnos))
+    dls = rng.integers(1, 2**31 - 1, len(docnos))
+    imps = rng.random(len(docnos)).astype(np.float32)
+    blobs = codec.encode_frame(docnos, tfs, dls, imps, ends - lens, ends)
+
+    packed_with_exceptions = 0
+    ref_d, ref_t, ref_l = [], [], []
+    for blob in blobs:
+        payload, start = codec._payload(blob), 0
+        for bi, end in enumerate(codec.read_directory(blob)["end"].tolist()):
+            width, n_exc = int(payload[start]), int(payload[start + 1])
+            packed_with_exceptions += width != 0xFF and n_exc > 0
+            start = end
+            d, t, l = codec.decode_block(blob, bi)
+            ref_d.append(d)
+            ref_t.append(t)
+            ref_l.append(l)
+    assert packed_with_exceptions > 0
+    assert np.array_equal(np.concatenate(ref_d), docnos)
+
+    d, t, l, indptr = codec.decode_frame(blobs)
+    assert indptr.tolist() == [0] + ends.tolist()
+    assert np.array_equal(d, np.concatenate(ref_d))
+    assert np.array_equal(t, np.concatenate(ref_t))
+    assert np.array_equal(l, np.concatenate(ref_l))
+    assert np.array_equal(t, tfs) and np.array_equal(l, dls)
+
+
+def test_decode_frame_empty():
+    d, t, l, indptr = codec.decode_frame([])
+    assert d.size == t.size == l.size == 0
+    assert d.dtype == np.uint64 and t.dtype == np.int32 and l.dtype == np.int32
+    assert indptr.tolist() == [0]

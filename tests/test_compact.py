@@ -224,6 +224,29 @@ def test_wand_refuses_stale_bounds_then_matches_after_refresh(spark, roots):
     assert ea == wa  # bit-identical after bounds refresh
 
 
+def test_refresh_without_append_keeps_build_bytes(spark, corpora, tmp_path):
+    """With stats unchanged since encode, refresh_bounds re-derives the
+    build's exact impacts: every postings row's blob, max_impact, df and
+    cf equal the build's, so its frame-vectorized impact expression has
+    not slipped from build.encode_groups' float32 arithmetic."""
+    import pyarrow.dataset as pads
+
+    root = str(tmp_path / "fresh")
+    build_index(spark, corpora["base"], root, IndexConfig(salt_threshold=40, n_shards=5))
+
+    def rows():
+        tab = pads.dataset(os.path.join(root, "postings")).to_table(
+            columns=["termid", "salt", "blob", "max_impact", "df", "cf"]
+        )
+        cols = [tab[c].to_pylist() for c in tab.column_names]
+        return {(t, s): rest for t, s, *rest in zip(*cols)}
+
+    built = rows()
+    assert len(built) > len({t for t, _ in built})  # salted: multi-run terms
+    refresh_bounds(spark, root)
+    assert rows() == built
+
+
 def test_append_drops_cross_base_duplicates(spark, roots):
     appended_root, rebuilt_root, props = roots
     # the overlap rows duplicated base content: appended n_docs equals the

@@ -37,6 +37,11 @@ def test_codec_roundtrip_random(run):
     assert np.array_equal(d, docnos)
     assert np.array_equal(t, tfs)
     assert np.array_equal(l, dls)
+    fd, ft, fl, indptr = codec.decode_frame([blob])
+    assert indptr.tolist() == [0, len(docnos)]
+    assert np.array_equal(fd, docnos)
+    assert np.array_equal(ft, tfs)
+    assert np.array_equal(fl, dls)
     # block random access agrees with full decode
     _, n_blocks, _ = codec.read_header(blob)
     pieces = [codec.decode_block(blob, bi)[0] for bi in range(n_blocks)]
