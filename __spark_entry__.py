@@ -1,11 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-queries() exposes the implemented operators from SURVEY.md §2 plus the
-training-data-pipeline suite over the driver's testdata tables;
-oracle_sql() gives DuckDB-runnable ANSI SQL for each SQL-expressible one.
-Engine-native paths (float32 BM25 WAND kernel, LSH-approximate ANN,
-multimodal stubs) are exposed without oracles (rows-only checks); their
-correctness gates live in tests/ (bit-exact vs the numpy oracle).
+queries() exposes the index, retrieval, dedup and similarity operators
+from SURVEY.md §2, plus the text-statistics, PII, sampling, packing,
+BPE, DSIR and domain operators that have not been deleted yet, over the
+driver's testdata tables; oracle_sql() gives a DuckDB-runnable SQL twin
+for every one, with identical column names and rounded floats. The
+engine-native paths (float32 BM25/WAND, SD, cascade, PRF, SQE, LTR) are
+checked against float32-emulating DuckDB SQL; their bit-exact gates
+against the numpy oracle live in tests/.
 """
 
 from __future__ import annotations
@@ -17,16 +19,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.ops import bpe as BP
-from ivory_spark.ops import curate as CU
 from ivory_spark.ops import dedup as D
 from ivory_spark.ops import dsir as DS
 from ivory_spark.ops import domains as DOM
 from ivory_spark.ops import ir_relational as IR
 from ivory_spark.ops import pii as PII
-from ivory_spark.ops import repetition as RP
 from ivory_spark.ops import sampling as SP
 from ivory_spark.ops import similarity as SIM
-from ivory_spark.ops import substring as SUB
 from ivory_spark.ops import textstats as TS
 from ivory_spark.sources.testdata import documents_as_corpus, read_table
 
@@ -187,25 +186,6 @@ def _docs(spark, sf_dir):
     return read_table(spark, sf_dir, "documents")
 
 
-def _docs_structured(spark, sf_dir):
-    """documents with deterministic line/paragraph structure injected
-    (the synthetic text has no newlines, which would leave the
-    repetition gate's line/paragraph columns degenerate): ' table ' ->
-    blank line, then ' the ' -> newline. The DuckDB twin applies the
-    identical literal replaces, so the gate exercises every column of
-    repetition_stats on real variation."""
-    d = _docs(spark, sf_dir)
-    t = F.regexp_replace(F.col("text"), " table ", "\n\n")
-    t = F.regexp_replace(t, " the ", "\n")
-    return d.select("doc_id", t.alias("text"))
-
-
-# DuckDB twin of _docs_structured's text expression
-_SQL_STRUCTURED_TEXT = (
-    "replace(replace(text, ' table ', chr(10) || chr(10)), ' the ', chr(10))"
-)
-
-
 def _docs_pii(spark, sf_dir):
     """documents with deterministic PII injected (the synthetic text has
     no emails/phones/IPs, which would leave the PII gates all-zero):
@@ -274,70 +254,6 @@ def _pii_redact_fp(spark, sf_dir):
         "doc_id",
         F.substring(F.md5("text"), 1, 16).alias("fp16"),
         F.length("text").cast("int").alias("n_chars"),
-    )
-
-
-# Duplicate canary for the curate_pipeline gate: every 13th doc's text is
-# replaced wholesale by this constant, so the exact-dedup stage visibly
-# collapses 39 docs -> 1 at sf0.01. Built from tokens outside the synthetic
-# vocabulary (no 4-gram run of stopwords reaches length 4), so the canary
-# never trips the decontamination stage; 9/22 stopwords + 22 distinct
-# tokens put its quality score at 1.0, clearing the gate's 0.6 floor.
-_CURATE_CANARY = (
-    "zanzibar quokka and the xylophone of a marimba is qwerty for wombat"
-    " on kumquat with jacaranda in bandicoot narwhal axolotl pangolin vicuna"
-)
-
-
-def _docs_curate(spark, sf_dir):
-    """curate_pipeline gate input: PII-injected documents with the
-    duplicate canary overriding every 13th doc, so one table exercises
-    the quality gate (min_quality=0.6 keeps ~half), exact dedup (39
-    identical canaries), decontamination (vs the doc_id%17 benchmark
-    slice) and redaction (the injected PII) in a single composed run."""
-    d = _docs_pii(spark, sf_dir)
-    t = F.when(F.col("doc_id") % 13 == 0, F.lit(_CURATE_CANARY)).otherwise(
-        F.col("text")
-    )
-    return d.select("doc_id", t.alias("text"))
-
-
-# DuckDB twin of _docs_curate's text expression
-_SQL_CURATE_TEXT = (
-    f"CASE WHEN doc_id % 13 = 0 THEN '{_CURATE_CANARY}' ELSE {_SQL_PII_TEXT} END"
-)
-
-
-def _curate_pipeline(spark, sf_dir):
-    """One-call curation recipe (ops/curate.curate_corpus) over the
-    canary+PII table: quality gate -> exact dedup -> benchmark
-    decontamination -> PII redaction -> hash split, projected to a
-    hashable shape (doc_id, fp16 of the redacted text, n_chars, split).
-    The repetition and near-dup stages are disabled here — each has its
-    own dedicated gate — keeping the oracle a five-stage CTE chain."""
-    docs = _docs_curate(spark, sf_dir)
-    bench = (
-        _docs(spark, sf_dir)
-        .filter(F.col("doc_id") % 17 == 0)
-        .select("doc_id", "text")
-    )
-    out = CU.curate_corpus(
-        docs,
-        min_quality=0.6,
-        max_dup_line_frac=None,
-        max_top_ngram_char_frac=None,
-        exact_dedup=True,
-        neardup_threshold=None,
-        benchmark=bench,
-        decontaminate_ngram=4,
-        redact=True,
-        split_weights=_SPLIT_WEIGHTS,
-    )
-    return out.select(
-        "doc_id",
-        F.substring(F.md5("text"), 1, 16).alias("fp16"),
-        F.length("text").cast("int").alias("n_chars"),
-        "split",
     )
 
 
@@ -1047,39 +963,6 @@ pv AS (SELECT g.qid, g.docno, g.grade, {feat_cases}
 """
 
 
-def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exploded (media_id, kind, n_bytes, dim, feature) — scalar rows so
-    the gate's sorted compare works; the features are sha256-derived and
-    therefore reproducible by the DuckDB oracle bit-for-bit."""
-    from ivory_spark.ops.multimodal import decode_features, explode_features, synthesize_media
-
-    return explode_features(decode_features(synthesize_media(spark, _docs(spark, sf_dir))))
-
-
-def _sql_multimodal_features() -> str:
-    """DuckDB twin of synthesize_media + decode_features + explode_features:
-    payload = utf-8 bytes of text, feature[j] = float32(u32_le(sha256(payload),
-    4j) / 2^32) rounded to 6 dp after exact promotion to double."""
-    dim_rows = []
-    for j in range(8):  # FEATURE_DIM
-        p = 8 * j  # 0-based hex offset of the 4 little-endian bytes
-        le = (
-            f"substr(h, {p + 7}, 2) || substr(h, {p + 5}, 2) || "
-            f"substr(h, {p + 3}, 2) || substr(h, {p + 1}, 2)"
-        )
-        dim_rows.append(
-            f"SELECT media_id, kind, n_bytes, {j} AS dim, "
-            f"round(((('0x' || {le})::BIGINT)::DOUBLE / 4294967296.0)::FLOAT::DOUBLE, 6) "
-            f"AS feature FROM m"
-        )
-    return (
-        "WITH m AS (SELECT doc_id AS media_id, "
-        "CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' "
-        "ELSE 'video' END AS kind, strlen(text)::BIGINT AS n_bytes, "
-        "sha256(text) AS h FROM documents) " + " UNION ALL ".join(dim_rows)
-    )
-
-
 def _engine_prf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance-feedback expansion + weighted retrieval (MRFExpander
     analogue; rows-only — bit-exact goldens in tests/test_expansion.py)."""
@@ -1629,71 +1512,6 @@ SELECT qid, rank, vec_id, cosine FROM (
 """
 
 
-def _sql_gram_ctes(n: int, text_expr: str = "text") -> str:
-    """Shared CTE chain t -> g producing per-doc word n-gram rows (DuckDB
-    twin of ops/repetition._grams: lowercase, single-space split, empties
-    dropped, overlapping n-grams joined by spaces)."""
-    return f"""
-t AS (SELECT doc_id, length({text_expr}) AS n_chars,
-        list_filter(list_transform(string_split({text_expr}, chr(10)), s -> trim(s)), s -> s <> '') AS lines,
-        list_filter(list_transform(string_split({text_expr}, chr(10) || chr(10)), s -> trim(s)), s -> s <> '') AS paras,
-        list_filter(string_split(lower({text_expr}), ' '), s -> s <> '') AS toks
-      FROM documents),
-g AS (SELECT doc_id, array_to_string(toks[p:p+{n - 1}], ' ') AS gram
-      FROM t, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - {n - 1}, 0))) AS p) l)"""
-
-
-def _sql_text_repetition(n: int = 3) -> str:
-    """DuckDB twin of repetition_stats over the newline-injected text."""
-
-    def seg(col):
-        chars = f"coalesce(list_sum(list_transform({col}, s -> length(s))), 0)"
-        dchars = f"coalesce(list_sum(list_transform(list_distinct({col}), s -> length(s))), 0)"
-        return (
-            f"len({col})::INT AS n_{col},\n"
-            f"  round(CASE WHEN len({col}) > 0 THEN (len({col}) - len(list_distinct({col}))) / len({col}) ELSE 0 END, 6) AS dup_{col[:-1]}_frac,\n"
-            f"  round(CASE WHEN {chars} > 0 THEN ({chars} - {dchars}) / {chars} ELSE 0 END, 6) AS dup_{col[:-1]}_char_frac"
-        )
-
-    return f"""
-WITH {_sql_gram_ctes(n, _SQL_STRUCTURED_TEXT)},
-gc AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY doc_id, gram),
-gt AS (SELECT doc_id, cnt, length(gram) AS lg,
-         row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, gram) AS rn,
-         sum(cnt) OVER (PARTITION BY doc_id) AS ng,
-         count(*) OVER (PARTITION BY doc_id) AS ndg
-       FROM gc),
-top AS (SELECT doc_id, ng, ndg, cnt * lg AS topchars FROM gt WHERE rn = 1)
-SELECT t.doc_id,
-  {seg("lines")},
-  {seg("paras")},
-  coalesce(top.ng, 0)::INT AS n_ngrams,
-  round(CASE WHEN coalesce(top.ng, 0) > 0 THEN (top.ng - top.ndg) / top.ng ELSE 0 END, 6) AS dup_ngram_frac,
-  round(CASE WHEN t.n_chars > 0 THEN coalesce(top.topchars, 0) / t.n_chars ELSE 0 END, 6) AS top_ngram_char_frac
-FROM t LEFT JOIN top USING (doc_id)"""
-
-
-def _sql_common_ngrams(n: int = 3, min_docs: int = 5) -> str:
-    return f"""
-WITH {_sql_gram_ctes(n)},
-gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY doc_id, gram)
-SELECT gram, count(*)::INT AS n_docs, sum(c)::BIGINT AS n_total
-FROM gc GROUP BY gram HAVING count(*) >= {min_docs}"""
-
-
-def _sql_decontaminate(n: int = 4, mod: int = 17) -> str:
-    return f"""
-WITH {_sql_gram_ctes(n)},
-gd AS (SELECT DISTINCT doc_id, gram FROM g),
-b AS (SELECT DISTINCT gram FROM gd WHERE doc_id % {mod} = 0),
-ns AS (SELECT doc_id, count(*) AS n_shingles FROM gd WHERE doc_id % {mod} <> 0 GROUP BY doc_id),
-h AS (SELECT gd.doc_id, count(*) AS n_hits FROM gd JOIN b USING (gram)
-      WHERE gd.doc_id % {mod} <> 0 GROUP BY gd.doc_id)
-SELECT h.doc_id, ns.n_shingles::INT AS n_shingles, h.n_hits::INT AS n_hits,
-       round(h.n_hits / ns.n_shingles, 6) AS contamination_frac
-FROM h JOIN ns USING (doc_id)"""
-
-
 def _sql_u60(salt: str, key: str = "doc_id") -> str:
     """DuckDB twin of ops/sampling._u: 60-bit md5 hash scaled to [0,1)
     by the exact power-of-two 2^60."""
@@ -1893,69 +1711,6 @@ SELECT doc_id, source, (gs - 1)::INT AS epoch
 FROM c, LATERAL (SELECT unnest(generate_series(1, n)) AS gs) l"""
 
 
-def _sql_substring_ctes(k: int, min_count: int) -> str:
-    """Shared CTE chain t -> w -> s -> marked -> spans: the DuckDB twin
-    of ops/substring.duplicate_spans (k-token window hashes, global
-    count + first occurrence, keep-first marking, interval merge). The
-    first occurrence is ordered by the packed key doc_id*1e9+pos, which
-    equals Spark's lexicographic min(struct(doc_id, pos)) for any
-    realistic document length."""
-    return f"""
-t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-      FROM documents),
-w AS (SELECT doc_id, p - 1 AS pos, md5(array_to_string(toks[p:p+{k - 1}], ' ')) AS h
-      FROM t, LATERAL (SELECT unnest(generate_series(1, greatest(len(toks) - {k - 1}, 0))) AS p) l),
-s AS (SELECT h, count(*) AS cnt, min(doc_id * 1000000000 + pos) AS fk FROM w GROUP BY h),
-marked AS (SELECT w.doc_id, w.pos FROM w JOIN s USING (h)
-           WHERE cnt >= {min_count} AND w.doc_id * 1000000000 + w.pos <> fk),
-m2 AS (SELECT doc_id, pos,
-         CASE WHEN pos > coalesce(max(pos + {k - 1}) OVER (PARTITION BY doc_id ORDER BY pos
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -2) + 1
-              THEN 1 ELSE 0 END AS new_span
-       FROM marked),
-m3 AS (SELECT doc_id, pos, sum(new_span) OVER (PARTITION BY doc_id ORDER BY pos) AS span_id
-       FROM m2),
-spans AS (SELECT doc_id, min(pos) AS span_start, max(pos) + {k - 1} AS span_end,
-            (max(pos) + {k - 1} - min(pos) + 1)::INT AS n_tokens, count(*)::INT AS n_windows
-          FROM m3 GROUP BY doc_id, span_id)"""
-
-
-def _sql_substring_spans(k: int = 5, min_count: int = 2) -> str:
-    return f"""
-WITH {_sql_substring_ctes(k, min_count)}
-SELECT doc_id, span_start, span_end, n_tokens, n_windows FROM spans"""
-
-
-def _sql_substring_strip(k: int = 5, min_count: int = 2) -> str:
-    """DuckDB twin of strip_duplicate_spans projected to the gate shape
-    (doc_id, fp16 of the stripped canonical text, n_kept, n_removed)."""
-    return f"""
-WITH {_sql_substring_ctes(k, min_count)},
-tok AS (SELECT doc_id, gs - 1 AS pos, toks[gs] AS term
-        FROM t, LATERAL (SELECT unnest(generate_series(1, len(toks))) AS gs) l),
-keep AS (SELECT tok.doc_id, tok.pos, tok.term FROM tok
-         WHERE NOT EXISTS (SELECT 1 FROM spans sp
-               WHERE sp.doc_id = tok.doc_id
-                 AND tok.pos BETWEEN sp.span_start AND sp.span_end)),
-agg AS (SELECT doc_id, string_agg(term, ' ' ORDER BY pos) AS rt, count(*) AS nk
-        FROM keep GROUP BY doc_id)
-SELECT t.doc_id, substr(md5(coalesce(agg.rt, '')), 1, 16) AS fp16,
-       coalesce(agg.nk, 0)::INT AS n_kept,
-       (len(t.toks) - coalesce(agg.nk, 0))::INT AS n_removed
-FROM t LEFT JOIN agg USING (doc_id)"""
-
-
-def _substring_strip_fp(spark, sf_dir):
-    """strip_duplicate_spans projected to a hashable gate shape."""
-    r = SUB.strip_duplicate_spans(_docs(spark, sf_dir), k=5)
-    return r.select(
-        "doc_id",
-        F.substring(F.md5("text"), 1, 16).alias("fp16"),
-        "n_kept",
-        "n_removed",
-    )
-
-
 def _docs_url(spark, sf_dir):
     """domain-gate input: documents with a deterministic URL injected
     (the synthetic table has none) — seven siteN.example.com hosts by
@@ -2019,41 +1774,6 @@ WITH {_SQL_DOMAIN_CTE}
 SELECT doc_id FROM d WHERE domain <> '{blocked}'"""
 
 
-def _sql_line_strip(min_count: int = 2) -> str:
-    """DuckDB twin of strip_duplicate_lines over the newline-injected
-    text, projected to (doc_id, fp16 of the rewritten text, n_kept,
-    n_removed). Grouping directly on the line is equivalent to Spark's
-    md5(line) shuffle key; the packed key replays min(struct(doc_id,
-    pos)) for the keep-first rule."""
-    return f"""
-WITH t AS (SELECT doc_id, list_filter(list_transform(string_split({_SQL_STRUCTURED_TEXT},
-             chr(10)), s -> trim(s)), s -> s <> '') AS lines FROM documents),
-l AS (SELECT doc_id, gs - 1 AS pos, lines[gs] AS line
-      FROM t, LATERAL (SELECT unnest(generate_series(1, len(lines))) AS gs) g),
-s AS (SELECT line, count(*) AS cnt, min(doc_id * 1000000000 + pos) AS fk
-      FROM l GROUP BY line),
-keep AS (SELECT l.doc_id, l.pos, l.line FROM l JOIN s USING (line)
-         WHERE cnt < {min_count} OR doc_id * 1000000000 + pos = fk),
-agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS rt, count(*) AS nk
-        FROM keep GROUP BY doc_id)
-SELECT t.doc_id, substr(md5(coalesce(agg.rt, '')), 1, 16) AS fp16,
-       coalesce(agg.nk, 0)::INT AS n_kept,
-       (len(t.lines) - coalesce(agg.nk, 0))::INT AS n_removed
-FROM t LEFT JOIN agg USING (doc_id)"""
-
-
-def _line_strip_fp(spark, sf_dir):
-    """strip_duplicate_lines over the newline-injected documents,
-    projected to a hashable gate shape."""
-    r = SUB.strip_duplicate_lines(_docs_structured(spark, sf_dir))
-    return r.select(
-        "doc_id",
-        F.substring(F.md5("text"), 1, 16).alias("fp16"),
-        "n_kept",
-        "n_removed",
-    )
-
-
 def _sql_cluster_reps(threshold: float = 0.8) -> str:
     """DuckDB twin of cluster_representatives over the minhash duplicate
     clusters: quality-ranked representative per cluster (row_number by
@@ -2078,56 +1798,6 @@ SELECT cluster_id, doc_id, quality FROM (
   SELECT *, row_number() OVER (PARTITION BY cluster_id
             ORDER BY quality DESC, doc_id) AS rn
   FROM scored) WHERE rn = 1"""
-
-
-def _sql_curate_pipeline() -> str:
-    """DuckDB twin of _curate_pipeline: the five enabled curation stages
-    composed as one CTE chain — quality floor (0.6), exact dedup (min id
-    per sha256), 4-gram decontamination vs the doc_id%17 slice, PII
-    redaction (email -> phone -> IPv4, the redact_pii order), md5 hash
-    split. Reuses the per-stage oracle arithmetic verbatim."""
-    stop = ", ".join(f"'{s}'" for s in TS.STOPWORDS_EN)
-    e, p, i = PII.EMAIL_RE, PII.PHONE_RE, PII.IPV4_RE
-    red = (
-        "regexp_replace(regexp_replace(regexp_replace(text, "
-        f"'{e}', '<EMAIL>', 'g'), '{p}', '<PHONE>', 'g'), '{i}', '<IP>', 'g')"
-    )
-    cases = " ".join(
-        f"WHEN u < {acc!r}::DOUBLE THEN '{name}'"
-        for name, acc in SP.split_boundaries(_SPLIT_WEIGHTS)
-    )
-    last = list(_SPLIT_WEIGHTS)[-1]
-    grams = (
-        "SELECT DISTINCT doc_id, array_to_string(toks[p:p+3], ' ') AS gram "
-        "FROM {src}, LATERAL (SELECT unnest(generate_series(1, "
-        "greatest(len(toks) - 3, 0))) AS p) l"
-    )
-    return f"""
-WITH src AS (SELECT doc_id, {_SQL_CURATE_TEXT} AS text FROM documents),
-qt AS (SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term FROM src),
-qa AS (SELECT doc_id, count(*) AS n,
-         sum(CASE WHEN term IN ({stop}) THEN 1 ELSE 0 END) AS ns,
-         count(DISTINCT term) AS nd
-       FROM qt GROUP BY doc_id),
-q AS (SELECT doc_id FROM qa
-      WHERE round(((CASE WHEN n >= 10 AND n <= 100000 THEN 1.0 ELSE 0.0 END)
-            + least(ns / greatest(n, 1) * 5.0, 1.0)
-            + nd / greatest(n, 1)) / 3.0, 6) >= 0.6),
-k1 AS (SELECT s.doc_id, s.text FROM src s JOIN q USING (doc_id)),
-d AS (SELECT min(doc_id) AS doc_id FROM k1 GROUP BY sha256(text)),
-k2 AS (SELECT k1.doc_id, k1.text FROM k1 JOIN d USING (doc_id)),
-ct AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks FROM k2),
-cg AS ({grams.format(src="ct")}),
-bt AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-       FROM documents WHERE doc_id % 17 = 0),
-bg AS (SELECT DISTINCT gram FROM ({grams.format(src="bt")})),
-kill AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (gram)),
-k3 AS (SELECT doc_id, {red} AS rt FROM k2
-       WHERE doc_id NOT IN (SELECT doc_id FROM kill))
-SELECT doc_id, substr(md5(rt), 1, 16) AS fp16, length(rt)::INT AS n_chars,
-       CASE {cases} ELSE '{last}' END AS split
-FROM (SELECT doc_id, rt, {_sql_u60('split')} AS u FROM k3)
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -2350,9 +2020,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": lambda s, d: D.simhash(_docs(s, d)),
         "dedup_simhash_pairs": lambda s, d: D.simhash_pairs(D.simhash(_docs(s, d)), max_hamming=2),
         "dedup_ngram_jaccard": lambda s, d: D.ngram_jaccard_pairs(_docs(s, d), threshold=0.5),
-        "dedup_substring_spans": lambda s, d: SUB.duplicate_spans(_docs(s, d), k=5),
-        "dedup_substring_strip": _substring_strip_fp,
-        "dedup_line_strip": _line_strip_fp,
         "domain_stats": lambda s, d: DOM.domain_stats(_docs_url(s, d)),
         "domain_cap": lambda s, d: DOM.cap_per_domain(_docs_url(s, d), 20).select("doc_id"),
         "domain_cap_approx": lambda s, d: DOM.cap_per_domain_approx(
@@ -2382,13 +2049,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": lambda s, d: TS.quality_score(_docs(s, d)),
         "text_langid": lambda s, d: TS.langid(_docs(s, d)),
         "text_fingerprint": lambda s, d: TS.fingerprint(_docs(s, d)),
-        "text_repetition": lambda s, d: RP.repetition_stats(_docs_structured(s, d), ngram=3),
-        "dedup_common_ngrams": lambda s, d: RP.common_ngrams(_docs(s, d), n=3, min_docs=5),
-        "dedup_decontaminate": lambda s, d: RP.decontaminate(
-            _docs(s, d).filter(F.col("doc_id") % 17 != 0),
-            _docs(s, d).filter(F.col("doc_id") % 17 == 0),
-            n=4,
-        ),
         # --- pipeline assembly: PII / sampling / packing ------------------
         "pii_stats": lambda s, d: PII.pii_stats(_docs_pii(s, d)),
         "pii_redact": _pii_redact_fp,
@@ -2432,7 +2092,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(s, d), _dsir_logratio(s, d), k=50
         ),
         "lm_perplexity_nll": _lm_nll,
-        "curate_pipeline": _curate_pipeline,
         "assemble_pipeline": lambda s, d: SP.assemble_corpus(
             _docs(s, d), budget=64, rates=_MIX_RATES, epochs=_EPOCHS, n_shards=4
         ).select(
@@ -2457,7 +2116,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ltr_model_scores": _ltr_model_scores,
         "ptc_queries": _ptc_queries,
         "bitext_pairs": _bitext_pairs,
-        "multimodal_features": _multimodal_features,
     }
 
 
@@ -2595,9 +2253,6 @@ SELECT doc_id, len(p)::INT AS n_pieces,
          AS pieces_per_ws_token
 FROM b""",
         "text_langid": _sql_langid(),
-        "text_repetition": _sql_text_repetition(3),
-        "dedup_common_ngrams": _sql_common_ngrams(3, 5),
-        "dedup_decontaminate": _sql_decontaminate(4, 17),
         "pii_stats": _sql_pii_stats(),
         "pii_redact": _sql_pii_redact(),
         "sample_hash_split": _sql_hash_split(),
@@ -2615,11 +2270,7 @@ FROM b""",
         "dsir_scores": _sql_dsir_scores(),
         "dsir_top50": _sql_dsir_top50(),
         "lm_perplexity_nll": _sql_lm_nll(),
-        "curate_pipeline": _sql_curate_pipeline(),
         "assemble_pipeline": _sql_assemble_pipeline(64, 4),
-        "dedup_substring_spans": _sql_substring_spans(5, 2),
-        "dedup_substring_strip": _sql_substring_strip(5, 2),
-        "dedup_line_strip": _sql_line_strip(2),
         "dedup_cluster_reps": _sql_cluster_reps(0.8),
         "domain_stats": _sql_domain_stats(),
         "domain_cap": _sql_domain_cap(20),
@@ -2628,7 +2279,6 @@ FROM b""",
         "text_fingerprint": "SELECT doc_id, substr(md5(array_to_string("
         "list_filter(string_split(lower(text), ' '), x -> x <> ''), ' ')), 1, 16) AS fp16 "
         "FROM documents",
-        "multimodal_features": _sql_multimodal_features(),
         "engine_bm25_top10": _sql_engine_bm25_top10(),
         "engine_nl_bm25_top10": _sql_engine_bm25_top10(tokenizer="nl_nostem"),
         "engine_dirichlet_top10": _sql_engine_scored_top10("dirichlet"),

@@ -35,14 +35,14 @@ replacement for Ivory's in-RAM DocLengthTable
 Each blob is one *run*: a docno-sorted, docno-range-contiguous slice of one
 term's postings. Salted builds emit several runs per term over disjoint
 docno ranges; they can be scored independently and in parallel, so no
-global merge is required (merge_runs exists for the byte-equivalence test).
+global merge is required.
 
 Multi-run work goes a frame at a time: encode_frame encodes many runs in
 a few vectorized passes, and decode_frame, its inverse, decodes many
 blobs with one varint pass, paying numpy's per-call overhead once per
-frame rather than once per block. Their per-run references are
-encode_run and decode_run (the tests compare the two routes), and
-decode_block is the random access the WAND kernel uses.
+frame rather than once per block. Their per-run references,
+encode_run and decode_run, live in tests/codec_ref.py, and decode_block
+is the random access the WAND kernel uses.
 """
 
 from __future__ import annotations
@@ -226,46 +226,6 @@ def pfor_decode(buf: np.ndarray, n: int) -> tuple[np.ndarray, int]:
     return v, off
 
 
-def encode_run(
-    docnos: np.ndarray, tfs: np.ndarray, dls: np.ndarray, impacts: np.ndarray
-) -> bytes:
-    """Encode one doc-sorted postings run. impacts: float32 per posting."""
-    n = int(len(docnos))
-    docnos = np.asarray(docnos, dtype=np.uint64)
-    if n > 1 and not (docnos[1:] > docnos[:-1]).all():
-        raise ValueError("docnos must be strictly increasing within a run")
-    bs = _block_size_for(n)
-    n_blocks = (n + bs - 1) // bs
-    hdr = np.zeros(1, dtype=_HDR)
-    hdr["n_postings"] = n
-    hdr["n_blocks"] = n_blocks
-    hdr["block_size"] = bs
-    if n == 0:
-        return hdr.tobytes()
-
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = docnos[0]
-    gaps[1:] = docnos[1:] - docnos[:-1]
-    imp = np.asarray(impacts, dtype=np.float32)
-    tfs64 = np.asarray(tfs, dtype=np.uint64)
-    dls64 = np.asarray(dls, dtype=np.uint64)
-
-    directory = np.zeros(n_blocks, dtype=_DIR)
-    payloads: list[bytes] = []
-    off = 0
-    for bi in range(n_blocks):
-        lo, hi = bi * bs, min(n, (bi + 1) * bs)
-        payload = (
-            pfor_encode(gaps[lo:hi])
-            + varint_encode(tfs64[lo:hi]).tobytes()
-            + varint_encode(dls64[lo:hi]).tobytes()
-        )
-        off += len(payload)
-        directory[bi] = (docnos[lo], docnos[hi - 1], imp[lo:hi].max(), off)
-        payloads.append(payload)
-    return hdr.tobytes() + directory.tobytes() + b"".join(payloads)
-
-
 def varint_lengths(values: np.ndarray) -> np.ndarray:
     """Per-value LEB128 byte length (vectorized; 0 -> 1 byte)."""
     v = np.asarray(values, dtype=np.uint64)
@@ -297,7 +257,8 @@ def encode_frame(
     run_starts: np.ndarray,
     run_ends: np.ndarray,
 ) -> list[bytes]:
-    """Encode many runs at once, byte-identical to per-run encode_run.
+    """Encode many runs at once, byte-identical to the per-run reference
+    encode_run (tests/codec_ref.py).
 
     encode_run spends ~80% of its time in per-block varint_encode calls
     whose fixed numpy-dispatch overhead dwarfs the work on <=128-value
@@ -448,34 +409,6 @@ def _decode_block_payload(
     return gaps, vals[:sz], vals[sz : 2 * sz]
 
 
-def decode_run(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Full decode -> (docnos uint64, tfs int32, dls int32)."""
-    n, n_blocks, bs = read_header(blob)
-    if n == 0:
-        z = np.empty(0, dtype=np.uint64)
-        return z, z.astype(np.int32), z.astype(np.int32)
-    directory = read_directory(blob)
-    payload = _payload(blob)
-    docnos = np.empty(n, dtype=np.uint64)
-    tfs = np.empty(n, dtype=np.int64)
-    dls = np.empty(n, dtype=np.int64)
-    base = np.uint64(0)
-    start = 0
-    out = 0
-    for bi in range(n_blocks):
-        sz = bs if bi < n_blocks - 1 else n - bs * (n_blocks - 1)
-        end = int(directory[bi]["end"])
-        gaps, tf_b, dl_b = _decode_block_payload(payload[start:end], sz)
-        d = np.cumsum(gaps, dtype=np.uint64) + base
-        docnos[out : out + sz] = d
-        base = d[-1]
-        tfs[out : out + sz] = tf_b
-        dls[out : out + sz] = dl_b
-        start = end
-        out += sz
-    return docnos, tfs.astype(np.int32), dls.astype(np.int32)
-
-
 def _gather_u32(buf: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """The little-endian uint32 at each byte offset of buf, as int64."""
     raw = buf[offsets[:, None] + np.arange(4)]
@@ -487,7 +420,8 @@ def decode_frame(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Decode many runs at once -> (docnos uint64, tfs int32, dls int32,
     indptr int64[len(blobs)+1]); run i is [indptr[i], indptr[i+1]) and
-    equals decode_run(blobs[i]). The inverse of encode_frame.
+    equals the per-run reference decode_run(blobs[i]) in
+    tests/codec_ref.py. The inverse of encode_frame.
 
     decode_run pays about 15 numpy dispatches per block. Here the blobs
     are joined into one buffer; every header and directory `end` is read
@@ -620,23 +554,3 @@ def decode_positions(pos_blob: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     if flat.size == 0:
         return [np.empty(0, dtype=np.int64) for _ in range(len(np.asarray(tfs)))]
     return list(np.split(flat, indptr[1:-1]))
-
-
-def merge_runs(blobs: list[bytes], impacts_fn) -> bytes:
-    """Merge docno-disjoint, range-ordered runs into one blob.
-
-    Used only to prove salted == unsalted byte equality in tests
-    (the engine keeps salted runs as separate index rows).
-    impacts_fn(tfs, dls) -> float32 impacts for directory rebuild.
-    """
-    parts = [decode_run(b) for b in blobs if read_header(b)[0] > 0]
-    parts.sort(key=lambda p: int(p[0][0]) if len(p[0]) else 0)
-    if not parts:
-        return encode_run(
-            np.empty(0, np.uint64), np.empty(0, np.int64), np.empty(0, np.int64),
-            np.empty(0, np.float32),
-        )
-    docnos = np.concatenate([p[0] for p in parts])
-    tfs = np.concatenate([p[1] for p in parts])
-    dls = np.concatenate([p[2] for p in parts])
-    return encode_run(docnos, tfs, dls, impacts_fn(tfs, dls))

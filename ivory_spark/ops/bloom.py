@@ -67,10 +67,12 @@ def build_bloom_signatures(
 
     def gen(batches):
         for pdf in batches:
-            rows = []
-            for termid, df_, blob in zip(pdf["termid"], pdf["df"], pdf["blob"]):
-                docnos, _, _ = codec.decode_run(bytes(blob))
-                rows.append((int(termid), int(df_), bloom_from_docnos(docnos, bits, k_hashes)))
+            docnos, _, _, indptr = codec.decode_frame(pdf["blob"].tolist())
+            rows = [
+                (int(termid), int(df_),
+                 bloom_from_docnos(docnos[indptr[i] : indptr[i + 1]], bits, k_hashes))
+                for i, (termid, df_) in enumerate(zip(pdf["termid"], pdf["df"]))
+            ]
             yield pd.DataFrame(rows, columns=["termid", "df", "bloom"])
 
     per_run = index.postings.select("termid", "df", "blob").mapInPandas(
@@ -124,14 +126,13 @@ def conjunctive_candidates_bloom(
 
     def gen(batches):
         for pdf in batches:
-            outs = []
-            for blob in pdf["blob"]:
-                docnos, _, _ = codec.decode_run(bytes(blob))
-                keep = np.ones(len(docnos), dtype=bool)
-                for bm in filters:
-                    keep &= bloom_test(bm, docnos, k_hashes)
-                outs.append(pd.DataFrame({"docno": docnos[keep].astype(np.int64)}))
-            yield pd.concat(outs) if outs else pd.DataFrame({"docno": pd.Series(dtype="int64")})
+            # membership is per docno, so the batch's runs are tested as
+            # one frame: the concatenation of the per-run results
+            docnos, _, _, _ = codec.decode_frame(pdf["blob"].tolist())
+            keep = np.ones(len(docnos), dtype=bool)
+            for bm in filters:
+                keep &= bloom_test(bm, docnos, k_hashes)
+            yield pd.DataFrame({"docno": docnos[keep].astype(np.int64)})
 
     runs = index.postings.filter(F.col("termid") == driver_tid).select("blob")
     return runs.mapInPandas(gen, schema="docno long")

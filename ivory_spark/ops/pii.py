@@ -65,8 +65,7 @@ def pii_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 def redact_expr(text: Column) -> Column:
     """The email -> phone -> IPv4 redaction chain as a standalone column
-    expression — the composable form pipeline recipes (ops/curate) apply
-    in place; redact_pii is the projection view of the same chain."""
+    expression; redact_pii is the projection view of the same chain."""
     t = text
     for pat, tag in _TAGS:
         t = F.regexp_replace(t, pat, tag)

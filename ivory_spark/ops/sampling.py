@@ -260,8 +260,7 @@ def assemble_corpus(
     text_col: str = "text",
     source_col: str = "source",
 ) -> DataFrame:
-    """One-call corpus assembly — the downstream half of the pipeline
-    (curate_corpus is the upstream half): optional deterministic mixture
+    """One-call corpus assembly: optional deterministic mixture
     sampling, optional fractional epoch upsampling (each copy gets the
     distinct derived id `id * (max_whole_epochs + 1) + epoch`, so packing
     treats copies as separate documents), then materialization into

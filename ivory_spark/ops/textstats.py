@@ -72,24 +72,6 @@ def bpe_token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     )
 
 
-def quality_expr(text: Column) -> Column:
-    """The rounded `quality` heuristic as a standalone per-row column
-    expression — lets pipeline compositions (ops/curate) filter on
-    quality inline instead of materializing quality_score and joining
-    back (identical value to quality_score's `quality` column)."""
-    toks = _tokens(text)
-    n = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    stop_ratio = n_stop.cast("double") / F.greatest(n.cast("double"), F.lit(1.0))
-    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / F.greatest(
-        n.cast("double"), F.lit(1.0)
-    )
-    length_ok = F.when((n >= 10) & (n <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
-    quality = (length_ok + F.least(stop_ratio * 5.0, F.lit(1.0)) + distinct_ratio) / 3.0
-    return F.round(quality, 6)
-
-
 def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, avg_token_len, stopword_ratio, distinct_ratio,
     quality) — quality = mean of clamped heuristics, rounded to 6 dp."""

@@ -651,26 +651,29 @@ def make_shard_bounds(n_shards: int, n_docs: int):
 
 
 def decode_shard_runs(pdf: pd.DataFrame, term_by_id: dict, lo: int, hi: int) -> list:
-    """Decode each postings-run row of one (qid, shard) group, masked to
-    the shard's [lo, hi] docno range -> [(term, docnos int64, tfs, dls,
-    flat_pos, indptr)] ready for assemble_term_data. Rows without a
-    pos_blob column (non-positional index) decode empty positions."""
+    """Decode the postings-run rows of one (qid, shard) group with one
+    codec.decode_frame, masked to the shard's [lo, hi] docno range ->
+    [(term, docnos int64, tfs, dls, flat_pos, indptr)] ready for
+    assemble_term_data. Rows without a pos_blob column (non-positional
+    index) decode empty positions."""
+    docnos, tfs_all, dls_all, rptr = codec.decode_frame(pdf["blob"].tolist())
+    d64_all = docnos.astype(np.int64)
+    pos_blobs = pdf["pos_blob"].tolist() if "pos_blob" in pdf else [None] * len(pdf)
     decoded = []
-    for row in pdf.itertuples(index=False):
-        term = term_by_id[int(row.termid)]
-        docnos, tfs, dl_arr = codec.decode_run(bytes(row.blob))
-        d64 = docnos.astype(np.int64)
+    for i, (termid, pos_blob) in enumerate(zip(pdf["termid"].tolist(), pos_blobs)):
+        term = term_by_id[int(termid)]
+        run = slice(rptr[i], rptr[i + 1])
+        d64, tfs = d64_all[run], tfs_all[run]
         mask = (d64 >= lo) & (d64 <= hi)
         if not mask.any():
             continue
-        pos_blob = getattr(row, "pos_blob", None)
         flat, indptr = codec.decode_positions_flat(
             bytes(pos_blob) if pos_blob is not None else b"", tfs
         )
         rows = np.nonzero(mask)[0]
         fvals, lens = _gather_csr(flat, indptr, rows)
         iptr = np.concatenate(([0], np.cumsum(lens)))
-        decoded.append((term, d64[rows], tfs[rows], dl_arr[rows], fvals, iptr))
+        decoded.append((term, d64[rows], tfs[rows], dls_all[run][rows], fvals, iptr))
     return decoded
 
 

@@ -29,6 +29,10 @@ CORPUS_SCHEMA = T.StructType(
     ]
 )
 
+# The quality gate's own short stopword list. functions/stopwords has a
+# 330-word list; swapping it in would change which docs the gate drops.
+STOPWORDS_EN = ["the", "a", "of", "and", "to", "in", "is", "for", "on", "with"]
+
 
 def read_document_stream(spark: SparkSession, path: str) -> DataFrame:
     return (
@@ -64,12 +68,11 @@ def streaming_exact_dedup(stream: DataFrame, watermark: str = "10 minutes") -> D
 def streaming_quality_filter(
     stream: DataFrame, min_tokens: int = 5, max_stopword_ratio: float = 0.9
 ) -> DataFrame:
-    """Stateless quality gate on the ingest stream: the textstats column
-    expressions compose directly onto readStream (JVM codegen, no state),
-    so low-quality docs are dropped before they cost index work."""
+    """Stateless quality gate on the ingest stream: token count and
+    STOPWORDS_EN ratio are column expressions that compose directly onto
+    readStream (JVM codegen, no state), so low-quality docs are dropped
+    before they cost index work."""
     toks = tokens_expr(F.col("content"))
-    from ivory_spark.ops.textstats import STOPWORDS_EN
-
     stop_arr = F.array(*[F.lit(s) for s in sorted(STOPWORDS_EN)])
     n = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))

@@ -1,6 +1,5 @@
-"""Query sources (S8), TREC sink (S9), weighted doc vectors (P9),
-forward-index access (S10), index validation (A9), df-band filter (P7),
-streaming ingest."""
+"""Query sources (S8), TREC sink (S9), index validation (A9), df-band
+filter (P7), streaming ingest."""
 
 import gzip
 import os
@@ -77,25 +76,6 @@ def test_validate_detects_corruption(spark, idx):
     )
     with pytest.raises(IndexValidationError):
         validate_index(spark, broken)
-
-
-def test_forward_index_and_weighted_vectors(spark, idx):
-    from ivory_spark.ops.docvectors import fetch_doc_vector, weighted_doc_vectors
-
-    v = fetch_doc_vector(spark, idx, 1).collect()
-    assert len(v) > 0
-    assert all(r["docno"] == 1 for r in v)
-    tids = [r["termid"] for r in v]
-    assert tids == sorted(tids)
-
-    w = weighted_doc_vectors(spark, idx, normalize=True)
-    norms = (
-        w.groupBy("docno")
-        .agg(F.sum(F.col("weight") * F.col("weight")).alias("sq"))
-        .collect()
-    )
-    for r in norms:
-        assert abs(r["sq"] - 1.0) < 1e-3  # L2-normalized per doc
 
 
 def test_df_band_filter(spark, tiny_corpus_path, tmp_path):
@@ -179,16 +159,18 @@ def test_streaming_quality_filter(spark, tmp_path):
 
     rows = pd.DataFrame(
         {
-            "repo": ["r"] * 3,
-            "path": ["a", "b", "c"],
-            "commit": ["1", "2", "3"],
-            "lang": ["en"] * 3,
+            "repo": ["r"] * 4,
+            "path": ["a", "b", "c", "d"],
+            "commit": ["1", "2", "3", "4"],
+            "lang": ["en"] * 4,
             "content": [
                 "def good_function(arg): return arg + compute(arg)",  # keeps
                 "x",  # too short
                 "the the the the the the",  # all stopwords
+                # keeps: none of these is in the gate's own stopword list
+                "we would should could about above",
             ],
-            "ingest_ts": [pd.Timestamp("2026-01-01")] * 3,
+            "ingest_ts": [pd.Timestamp("2026-01-01")] * 4,
         }
     )
     rows["ingest_ts"] = rows["ingest_ts"].astype("datetime64[us]")
@@ -201,7 +183,7 @@ def test_streaming_quality_filter(spark, tmp_path):
         "squal",
     )
     got = spark.sql("select path from squal").toPandas()
-    assert sorted(got["path"]) == ["a"]
+    assert sorted(got["path"]) == ["a", "d"]
 
 
 def test_streaming_neardup_stateful(spark, tmp_path):

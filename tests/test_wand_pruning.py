@@ -7,8 +7,8 @@ skew-shaped synthetic posting set)."""
 import numpy as np
 import pandas as pd
 
+from codec_ref import decode_run, encode_run
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part, group_sum_f32
-from ivory_spark.index import codec
 from ivory_spark.query.wand import _score_group
 
 N_DOCS = 100_000
@@ -19,7 +19,7 @@ K1, B = 1.2, 0.75
 def make_run(termid, docnos, tfs, dls, df):
     idf = bm25_idf(N_DOCS, np.array([df]))[0]
     impacts = np.float32(idf) * bm25_tf_part(tfs, dls, AVGDL, K1, B)
-    blob = codec.encode_run(np.asarray(docnos, np.uint64), tfs, dls, impacts)
+    blob = encode_run(np.asarray(docnos, np.uint64), tfs, dls, impacts)
     return {
         "termid": termid, "qtf": 1, "df": df, "blob": blob,
         "n": len(docnos), "first_docno": int(docnos[0]), "last_docno": int(docnos[-1]),
@@ -30,7 +30,7 @@ def make_run(termid, docnos, tfs, dls, df):
 def brute_force(runs, k):
     dd, tt, cc = [], [], []
     for r in runs:
-        docnos, tfs, dls = codec.decode_run(r["blob"])
+        docnos, tfs, dls = decode_run(r["blob"])
         idf = bm25_idf(N_DOCS, np.array([r["df"]]))[0]
         contrib = np.float32(r["qtf"]) * (np.float32(idf) * bm25_tf_part(tfs, dls, AVGDL, K1, B))
         dd.append(docnos.astype(np.int64))

@@ -88,9 +88,13 @@ def run_at(cpus: int, corpus_path: str, n_docs: int) -> dict:
 def main() -> None:
     n_low = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 400000
-    from bench import ensure_bench_corpus  # noqa: E402
+    corpus_dir = f"/tmp/ivory_bench_corpus_{n_docs}"
+    corpus_path = os.path.join(corpus_dir, "corpus.parquet")
+    if not os.path.exists(corpus_path):
+        sys.path.insert(0, REPO)
+        from ivory_spark.corpus import write_corpus
 
-    corpus_path = ensure_bench_corpus(f"/tmp/ivory_bench_corpus_{n_docs}", n_docs)
+        write_corpus(corpus_dir, n_docs, seed=13)
 
     lo = run_at(n_low, corpus_path, n_docs)
     hi = run_at(n_low * 4, corpus_path, n_docs)

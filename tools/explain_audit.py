@@ -234,27 +234,6 @@ def main() -> None:
          f"materialize_sequences = ONE shard Exchange shared by window+agg: {ok_mat}\n")
     )
 
-    # substring dedup: the window-hash rollup must be partial-aggregated
-    # (map-side combine before the shuffle — the reason a hot boilerplate
-    # window cannot skew the reduce side) and the first-occurrence pick
-    # must NOT be a rank() window over the hash (no per-key sort); the
-    # strip join back to docs must stay a keyed join
-    from ivory_spark.ops.substring import duplicate_spans, strip_duplicate_spans
-
-    spans_plan = captured_explain(duplicate_spans(docs, k=5))
-    strip_plan = captured_explain(strip_duplicate_spans(docs, k=5))
-    ok_substr = (
-        "partial_count" in spans_plan
-        and "rank(" not in spans_plan
-        and "CartesianProduct" not in spans_plan
-        and "BroadcastNestedLoopJoin" not in strip_plan
-        and "CartesianProduct" not in strip_plan
-    )
-    sections.append(
-        ("substring-dedup checks",
-         f"hash rollup partial-aggregated, rank-free, keyed joins: {ok_substr}\n")
-    )
-
     # BPE word counting must be one partial-aggregated Exchange (the
     # shuffle is vocabulary-sized, not corpus-sized); DSIR scoring must
     # be a single map-side-combined groupBy over a zero-shuffle gram
@@ -325,7 +304,6 @@ def main() -> None:
     print("BITEXT_NO_BNLJ_OK" if ok_bitext else "BITEXT_BNLJ_PRESENT")
     print("ROWOPS_NO_EXCHANGE_OK" if ok_rowops else "ROWOPS_EXCHANGE_PRESENT")
     print("PACK_ONE_EXCHANGE_OK" if ok_pack else "PACK_PLAN_UNEXPECTED")
-    print("SUBSTR_PLAN_OK" if ok_substr else "SUBSTR_PLAN_UNEXPECTED")
     print("EPOCH_NO_EXCHANGE_OK" if ok_epoch else "EPOCH_EXCHANGE_PRESENT")
     print("SHUFFLE_BUCKETED_OK" if ok_shuffle else "SHUFFLE_PLAN_UNEXPECTED")
     print("MATERIALIZE_PLAN_OK" if ok_mat else "MATERIALIZE_PLAN_UNEXPECTED")
