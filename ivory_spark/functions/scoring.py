@@ -22,8 +22,12 @@ and the WAND kernel all call these same functions, which is what makes
 bit-identical scores across build/scorer variants achievable.
 
 Canonical accumulation rule (ours, documented): a document's score is
-np.sum(dtype=float32) over its per-term float32 contributions sorted by
-termid, with duplicate query terms folded to a float32 qtf multiplier.
+np.add.reduceat's float32 fold over its per-term float32 contributions
+sorted by termid, with duplicate query terms folded to a float32 qtf
+multiplier. On numpy 1.26 that fold is c0 + pairwise(c1, ...), not a
+left fold: numpy's pairwise sum adds up to 8 terms in order and more
+through 8 strided accumulators combined as a tree
+(tests/test_property.py pins the bits).
 Ivory sums per-clique in query order; any fixed order is equally faithful
 — what matters is that every component uses the same one.
 """
@@ -130,10 +134,11 @@ def tfidf_score(tf: np.ndarray, df: np.ndarray | int, N: int) -> np.ndarray:
 
 
 def f32_ordered_sum(contribs: np.ndarray) -> np.float32:
-    """Canonical float32 accumulation: strict left-to-right fold over the
-    (already termid-sorted) contributions — implemented via
-    np.add.reduceat so oracle / exact path / WAND kernel share one
-    reduction algorithm and therefore one rounding behavior."""
+    """Canonical float32 accumulation over the (already termid-sorted)
+    contributions: np.add.reduceat's c0 + pairwise(c1, ...) fold, the
+    one group_sum_f32 applies, so oracle / exact path / WAND kernel /
+    serve kernel share one reduction algorithm and therefore one
+    rounding behavior."""
     arr = np.ascontiguousarray(contribs, dtype=np.float32)
     if arr.size == 0:
         return F32(0.0)
@@ -144,7 +149,8 @@ def group_sum_f32(
     docnos: np.ndarray, termids: np.ndarray, contribs: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Per-docno canonical float32 score: sort by (docno, termid), then a
-    sequential reduceat fold per docno group. Returns (unique_docnos,
+    reduceat fold per docno group (c0 + pairwise(c1, ...), see the
+    module docstring). Returns (unique_docnos,
     scores_f32). Single source of truth for all scorer implementations."""
     if len(docnos) == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)

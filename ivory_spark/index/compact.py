@@ -29,8 +29,9 @@ Correctness contract:
   impacts ABOVE the stale bounds (okapi idf rises with N; tf_part rises
   with avgdl) — an unsafe direction for WAND pruning. append_delta
   therefore marks properties["bounds_stale"] = True; the WAND path
-  refuses stale bounds (run_batch falls back to the exact plan) until
-  refresh_bounds() re-derives every run's impacts under current stats —
+  refuses stale bounds until refresh_bounds() re-derives every run's
+  impacts under current stats (run_batch and LocalSearcher read no
+  bounds and serve the appended index at once) —
   a shuffle-free, embarrassingly-parallel pass that decodes and
   re-encodes each Arrow batch of runs as one frame
   (codec.decode_frame / codec.encode_frame).

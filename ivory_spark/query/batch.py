@@ -16,10 +16,14 @@ from __future__ import annotations
 
 import gzip
 import json
+import os
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 
 def parse_query_xml(path_or_text: str) -> list[dict]:
@@ -224,34 +228,18 @@ def run_batch(
     index,
     queries: list[dict],
     model=None,  # Model | MrfModel | None
-    use_wand: bool = True,
 ) -> DataFrame:
     """End-to-end batch retrieval with a model spec (RunQueryLocal
-    analogue). Only bm25 has the WAND fast path; other scorers use the
-    exact relational plan; MrfModel specs (SD/FD run files) route to the
-    positional MRF kernel."""
+    analogue). bm25 runs on the serve kernel (bm25_topk_serve, k1/b/idf
+    overrides included); other scorers use the exact relational plan;
+    MrfModel specs (SD/FD run files) route to the positional MRF kernel."""
     model = model or Model()
     from ivory_spark.query.mrf import MrfModel, mrf_topk
 
     if isinstance(model, MrfModel):
         return mrf_topk(spark, index, queries, model=model)
     if model.scorer == "bm25":
-        props = index.properties
-        overridden = any(
-            model.params.get(key) is not None
-            and model.params[key] != props[prop]
-            for key, prop in (("k1", "k1"), ("b", "b"), ("idf", "idf_mode"))
-            if key in model.params
-        )
-        if use_wand and not overridden and not props.get("bounds_stale"):
-            from ivory_spark.query.wand import bm25_topk_wand
-
-            return bm25_topk_wand(spark, index, queries, k=model.k)
-        # model-XML k1/b/idf overrides: the stored block-max bounds are
-        # k1/b-specific, so overridden runs use the exact path
-        from ivory_spark.query.exact import bm25_topk
-
-        return bm25_topk(spark, index, queries, k=model.k, params=model.params)
+        return bm25_topk_serve(spark, index, queries, k=model.k, params=model.params)
     # dirichlet / jm / tfidf / f2exp: the generalized exact path.
     # (Dirichlet/JM scores are negative so MaxScore bounds don't prune —
     # no WAND variant; mirrors DirichletScoringFunction.java:30-66 etc.)
@@ -259,4 +247,116 @@ def run_batch(
 
     return scored_topk(
         spark, index, queries, scorer=model.scorer, params=model.params, k=model.k
+    )
+
+
+# Resident bytes of one dictionary term and of one docid in a
+# LocalSearcher, beyond its postings: the Python str and its dict or
+# list slot, plus the term's numpy termid/df/cf entries.
+_TERM_BYTES = 200
+_DOC_BYTES = 160
+
+# The LocalSearcher of this Spark Python worker process, with the
+# snapshot key it was opened for; a batch that pins another key
+# replaces it.
+_WORKER = {"key": None, "searcher": None}
+
+
+def _snapshot(index) -> tuple[tuple, int]:
+    """The batch's snapshot key (index root, properties, sorted postings
+    file names; pyarrow's discovery skips '.' and '_' files) and an
+    upper bound on one searcher's resident bytes: the postings files
+    whole (termid and blob columns, plus position bytes BM25 never
+    reads), the dictionary and the docids."""
+    names, nbytes = [], 0
+    for e in os.scandir(os.path.join(index.root, "postings")):
+        if e.is_file() and not e.name.startswith((".", "_")):
+            names.append(e.name)
+            nbytes += e.stat().st_size
+    props = index.properties
+    key = (index.root, json.dumps(props, sort_keys=True), tuple(sorted(names)))
+    return key, nbytes + props["n_terms"] * _TERM_BYTES + props["n_docs"] * _DOC_BYTES
+
+
+def _worker_searcher(key: tuple):
+    """This worker's LocalSearcher for the pinned snapshot `key`. The
+    searcher pins what it finds on disk, which must be what the driver
+    pinned: an append or refresh in between would mix two snapshots."""
+    from ivory_spark.query.serve import LocalSearcher
+
+    if _WORKER["key"] != key:
+        _WORKER.update(key=None, searcher=None)  # free the old one first
+        root, props, files = key
+        searcher = LocalSearcher(root)
+        if (
+            json.dumps(searcher.props, sort_keys=True) != props
+            or searcher.postings_files != files
+        ):
+            raise RuntimeError(
+                f"index at {root} changed after the batch pinned it; reopen the index"
+            )
+        _WORKER.update(key=key, searcher=searcher)
+    return _WORKER["searcher"]
+
+
+def _serve_slice(key, k, with_docid, params, batches):
+    """mapInPandas body: every query of this slice through the worker's
+    searcher, rows in (qid, rank) order. An empty slice opens none."""
+    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
+    for pdf in batches:
+        searcher = _worker_searcher(key)
+        hits = [
+            {"qid": qid, **r}
+            for qid, text in zip(pdf["qid"].tolist(), pdf["query"].tolist())
+            for r in searcher.search(text, k, with_docid, params)
+        ]
+        yield pd.DataFrame(hits, columns=cols).astype(
+            {"rank": np.int32, "docno": np.int64, "score": np.float32}
+        )
+
+
+def bm25_topk_serve(
+    spark: SparkSession,
+    index,
+    queries: list[dict],
+    k: int = 10,
+    with_docid: bool = True,
+    params: dict | None = None,
+) -> DataFrame:
+    """Batch BM25 on the serve kernel -> (qid, rank, docno[, docid],
+    score), rows in (qid, rank) order, bit-identical to exact.bm25_topk.
+
+    Ivory's retrieval is a single-process engine over the MapReduce
+    build (BatchQueryRunner.java); here each Spark Python worker is that
+    engine. The driver pins a snapshot (index root, properties, postings
+    file list) and parallelizes the qid-sorted queries into
+    min(len(queries), defaultParallelism) contiguous slices. A
+    mapInPandas task runs its slice through LocalSearcher.search
+    (params: k1/b/idf overrides, as bm25_topk reads them) in a searcher
+    the worker process keeps across batches, one per process, reopened
+    when the pin changes. So the plan has no shuffle, no block-max
+    bounds (an appended index is served before refresh_bounds), no
+    docmap join and no sort: collect() returns slices in order.
+
+    Memory budget: each worker process holds the postings termid and
+    blob columns, the dictionary and every docid in memory. When the
+    upper bound _snapshot computes for that set exceeds
+    build.BROADCAST_BUDGET_BYTES (256 MB), the batch runs the exact
+    relational plan (exact.bm25_topk) instead.
+    """
+    from ivory_spark.index import build
+
+    key, resident = _snapshot(index)
+    if resident > build.BROADCAST_BUDGET_BYTES:
+        from ivory_spark.query.exact import bm25_topk
+
+        return bm25_topk(spark, index, queries, k=k, with_docid=with_docid, params=params)
+    schema = "qid string, rank int, docno long, score float"
+    if with_docid:
+        schema = "qid string, rank int, docno long, docid string, score float"
+    rows = sorted(((q["qid"], q["query"]) for q in queries), key=lambda r: r[0])
+    sc = spark.sparkContext
+    slices = sc.parallelize(rows, max(1, min(len(rows), sc.defaultParallelism)))
+    return spark.createDataFrame(slices, "qid string, query string").mapInPandas(
+        partial(_serve_slice, key, k, with_docid, params), schema
     )

@@ -164,9 +164,11 @@ def bm25_topk(
     document potential (smrf/model/potential/DocumentPotential.java:1-109,
     docscores loaded at BatchQueryRunner.java:93-105).
     params: optional per-run {'k1','b','idf'} overrides (the model-XML
-    surface, BM25ScoringFunction.java:30-52) — exact path only; the
-    stored block-max bounds are k1/b-specific, so run_batch falls back
-    here from WAND when a model overrides them."""
+    surface, BM25ScoringFunction.java:30-52), read as
+    LocalSearcher.search reads them; the WAND path has none, because
+    its stored block-max bounds are k1/b-specific. run_batch runs here
+    only when a batch's serve-kernel workers would exceed the memory
+    budget (batch.bm25_topk_serve)."""
     props = index.properties
     n_docs, avgdl = props["n_docs"], props["avgdl"]
     p = params or {}

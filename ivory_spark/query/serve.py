@@ -4,9 +4,13 @@ Spark batch retrieval amortizes the plan+schedule floor (~2 s on this
 host) across a query batch; an ad-hoc single query pays it in full
 (BENCH r01: p50 2.2 s vs 249 ms amortized). This module is the serving
 tier: a long-lived process loads the dictionary and the docid of every
-docno once, and serves every query from memory.
+docno once, and serves every query from memory. Batch BM25 runs the
+same replica inside Spark: each Python worker process keeps one
+searcher across batches and scores its slice of a batch's queries
+with it (query/batch.bm25_topk_serve, which run_batch calls).
 
-Memory model of a serving replica:
+Memory model of a serving replica (a driver-side process or one Spark
+Python worker):
 - the dictionary (term -> termid, df, cf) and the docid of every docno;
 - the compressed postings column: every run's termid and blob, read
   whole at the first LRU miss and held sorted by termid (a stable sort,
@@ -129,6 +133,11 @@ class LocalSearcher:
         self._run_cache: OrderedDict[int, tuple] = OrderedDict()
         self._run_cache_pos: OrderedDict[int, list] = OrderedDict()
         self._cache_runs = cache_runs
+
+    @property
+    def postings_files(self) -> tuple[str, ...]:
+        """Sorted names of the postings files pinned at construction."""
+        return tuple(sorted(os.path.basename(f) for f in self._postings.files))
 
     def _resident(self) -> tuple:
         """The postings termid and blob columns, read whole on first use
@@ -307,10 +316,15 @@ class LocalSearcher:
         scores = _score_of(res, dl_vec, n_docs, avgdl_int)
         return self._ranked(cand[mask], scores[mask], k, with_docid)
 
-    def search(self, query: str, k: int = 10, with_docid: bool = True) -> list[dict]:
+    def search(
+        self, query: str, k: int = 10, with_docid: bool = True, params: dict | None = None
+    ) -> list[dict]:
         """-> [{rank, docno[, docid], score}] — Ivory tie-break, scores
-        bit-identical to bm25_topk / bm25_topk_wand."""
+        bit-identical to bm25_topk / bm25_topk_wand. params: optional
+        {'k1','b','idf'} overrides, read as bm25_topk reads them."""
         p = self.props
+        q = params or {}
+        k1, b = q.get("k1", p["k1"]), q.get("b", p["b"])
         rows, qtfs = [], []
         for term, qtf in Counter(self._tokenize(query)).items():
             r = self._term_row.get(term)
@@ -325,11 +339,11 @@ class LocalSearcher:
         lens = [len(e[0]) for e in entries]
         # one vectorized pass over every posting: the same float32
         # contribution as query/wand.py, qtf * (idf * tf_part)
-        idf = bm25_idf(p["n_docs"], self._df[rows], mode=p["idf_mode"])
+        idf = bm25_idf(p["n_docs"], self._df[rows], mode=q.get("idf", p["idf_mode"]))
         tf_part = bm25_tf_part(
             np.concatenate([e[1] for e in entries]),
             np.concatenate([e[2] for e in entries]),
-            p["avgdl"], p["k1"], p["b"],
+            p["avgdl"], k1, b,
         )
         contrib = np.repeat(np.array(qtfs, dtype=np.float32), lens) * (
             np.repeat(idf, lens) * tf_part

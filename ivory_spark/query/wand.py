@@ -242,11 +242,11 @@ def bm25_topk_wand(
         # appended-to index: stored block-max bounds were computed under
         # smaller n_docs/avgdl and may UNDERSTATE true impacts — pruning
         # on them can drop true top-k docs. compact.refresh_bounds
-        # re-derives them; until then callers must use the exact path
-        # (query/batch.run_batch routes automatically).
+        # re-derives them; paths that read no bounds serve meanwhile
+        # (query/batch.run_batch, exact.bm25_topk).
         raise ValueError(
-            "index has stale WAND bounds after append_delta; "
-            "run compact.refresh_bounds or use the exact path"
+            "index has stale WAND bounds after append_delta; run "
+            "compact.refresh_bounds, or use batch.run_batch or exact.bm25_topk"
         )
     n_docs, avgdl = props["n_docs"], props["avgdl"]
     k1, b, idf_mode = props["k1"], props["b"], props["idf_mode"]

@@ -87,6 +87,54 @@ def test_group_sum_deterministic_under_permutation(rows):
         assert np.array_equal(s1.view(np.uint32), s2.view(np.uint32))
 
 
+# float32 contribution bits of four docs' groups (2, 3, 9 and 20 terms,
+# termid order) and the committed bits of their folded scores. A strict
+# left fold gives different bits for the last three groups.
+_FOLD_GROUPS = [
+    [1071968711, 1054834232],
+    [1176057384, 1021138698, 3314533215],
+    [3178053223, 1175634293, 3214350241, 3255496348, 1032308641, 3273835055,
+     1053538226, 3330182732, 3263140607],
+    [1115298070, 3190054301, 3264857196, 3194719532, 1172886656, 1184522807,
+     3214884719, 3206569180, 3321572682, 3222983234, 3211558306, 3213037148,
+     1177526046, 3299140750, 3218065361, 1059425414, 3255730720, 3274592361,
+     3262032108, 3205934623],
+]
+_FOLD_BITS = [1074686122, 1168288040, 3319778037, 1189151995]
+
+
+def test_group_sum_fold_bits_frozen():
+    """The canonical fold is np.add.reduceat's: c0 + pairwise(c1, ...),
+    where numpy's pairwise sum adds up to 8 terms in order and more
+    through 8 strided accumulators combined as a tree. Every scorer
+    path's rank identity, and every golden, rests on these bits, so a
+    numpy release that changes the fold fails here."""
+    f = np.float32
+
+    def pairwise(a):
+        if len(a) < 8:
+            acc = f(-0.0)
+            for x in a:
+                acc = f(acc + x)
+            return acc
+        r = list(a[:8])
+        whole = len(a) - len(a) % 8
+        for i in range(8, whole, 8):
+            r = [f(r[j] + a[i + j]) for j in range(8)]
+        acc = f(f(f(r[0] + r[1]) + f(r[2] + r[3])) + f(f(r[4] + r[5]) + f(r[6] + r[7])))
+        for x in a[whole:]:
+            acc = f(acc + x)
+        return acc
+
+    groups = [np.array(g, dtype=np.uint32).view(np.float32) for g in _FOLD_GROUPS]
+    docnos = np.repeat(np.arange(1, 5), [len(g) for g in groups])
+    termids = np.concatenate([np.arange(len(g)) for g in groups])
+    d, s = group_sum_f32(docnos, termids, np.concatenate(groups))
+    assert d.tolist() == [1, 2, 3, 4]
+    assert s.view(np.uint32).tolist() == _FOLD_BITS
+    assert [f(g[0] + pairwise(g[1:])).view(np.uint32) for g in groups] == _FOLD_BITS
+
+
 @settings(max_examples=40, deadline=None)
 @given(
     st.integers(min_value=1, max_value=10**9),  # N

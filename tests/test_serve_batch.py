@@ -1,0 +1,159 @@
+"""Batch BM25 on the serve kernel (query/batch.bm25_topk_serve, the
+route run_batch takes for bm25): each Spark Python worker scores its
+slice of the queries with a LocalSearcher it keeps across batches. The
+rows must equal the exact relational plan's (exact.bm25_topk) bit for
+bit, docids included, on an appended index whose bounds were never
+refreshed; a batch after an append must see the appended docs; and
+past the memory budget the batch runs the exact plan."""
+
+import re
+
+import numpy as np
+import pytest
+
+from ivory_spark.corpus import QUERY_SET, generate_corpus
+from ivory_spark.index import build
+from ivory_spark.index.build import IndexConfig, build_index
+from ivory_spark.index.compact import append_delta, refresh_bounds
+from ivory_spark.index.reader import open_index
+from ivory_spark.query import batch
+from ivory_spark.query.batch import Model, bm25_topk_serve, run_batch
+from ivory_spark.query.exact import bm25_topk
+
+N_BASE, N_DELTA = 120, 80
+CFG = IndexConfig(salt_threshold=8, n_shards=5)
+
+
+@pytest.fixture(scope="module")
+def corpora(tmp_path_factory):
+    """base and delta corpus paths; the delta repeats 40 base docs,
+    which append_delta drops as duplicates."""
+    d = tmp_path_factory.mktemp("serve_batch_corpora")
+    full = generate_corpus(N_BASE + N_DELTA, seed=31).drop(columns=["sha256"])
+    paths = {}
+    for name, pdf in (("base", full.iloc[:N_BASE]), ("delta", full.iloc[N_DELTA:])):
+        paths[name] = str(d / f"{name}.parquet")
+        pdf.to_parquet(paths[name], index=False)
+    return paths
+
+
+@pytest.fixture(scope="module")
+def appended(spark, corpora, tmp_path_factory):
+    """A salted multi-run index grown by append_delta, never refreshed,
+    and queries with OOV tokens, qtf=2 and a df > N/2 term."""
+    import pyarrow.dataset as pads
+
+    root = str(tmp_path_factory.mktemp("serve_batch") / "appended")
+    build_index(spark, corpora["base"], root, CFG)
+    append_delta(spark, root, corpora["delta"])
+    idx = open_index(spark, root)
+    assert idx.properties["bounds_stale"] is True
+    dic = pads.dataset(f"{root}/dictionary").to_table().to_pandas()
+    hi = dic.sort_values(["df", "term"], ascending=False).iloc[0]
+    assert hi["df"] > idx.properties["n_docs"] / 2, hi  # okapi idf < 0
+    runs = pads.dataset(f"{root}/postings").to_table(columns=["termid"]).to_pandas()
+    assert runs["termid"].value_counts()[hi["termid"]] > 1  # several runs
+    hi = hi["term"]
+    texts = [q["query"] for q in QUERY_SET]  # OOV (q005), qtf=2 (q004)
+    texts += [hi, f"{hi} {hi} zzq_oov_token class", f"{hi} import import", "zzq_oov_token"]
+    # qids out of order: the batch returns them sorted
+    queries = [{"qid": f"d{i:02d}", "query": t} for i, t in reversed(list(enumerate(texts)))]
+    return idx, queries
+
+
+def _rows(df) -> list[tuple]:
+    """Collected rows in arrival order, scores as float32 bits."""
+    return [
+        tuple(np.float32(v).view(np.uint32).item() if c == "score" else v
+              for c, v in r.asDict().items())
+        for r in df.collect()
+    ]
+
+
+def _plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_serve_batch_matches_exact_on_appended_index(spark, appended):
+    """bm25_topk_serve and run_batch equal bm25_topk bit for bit, with
+    and without docids, under k1/b/idf overrides, with k above every
+    query's candidate count, and for an empty query list."""
+    idx, queries = appended
+    cases = [
+        (10, True, None),
+        (10, False, {"k1": 2.0, "b": 0.4}),
+        (10, True, {"idf": "classic"}),
+        (1000, True, {"k1": 0.9, "b": 0.3, "idf": "okapi-positive"}),
+        (1000, False, None),
+    ]
+    for k, with_docid, params in cases:
+        want = _rows(bm25_topk(spark, idx, queries, k=k, with_docid=with_docid, params=params))
+        got = _rows(bm25_topk_serve(spark, idx, queries, k=k, with_docid=with_docid,
+                                    params=params))
+        assert got == want, (k, with_docid, params)
+        if params is None and k == 10:
+            assert any(r[-1] >= 1 << 31 for r in want)  # a negative score ranks
+        if k == 1000:
+            assert max(r[1] for r in want) < k  # every query has fewer candidates
+    for params in ({}, {"k1": 2.0, "b": 0.4, "idf": "classic"}):
+        want = _rows(bm25_topk(spark, idx, queries, k=10, params=params))
+        assert _rows(run_batch(spark, idx, queries, Model(params=params))) == want
+    empty = bm25_topk_serve(spark, idx, [])
+    assert empty.collect() == [] and empty.schema == bm25_topk(spark, idx, []).schema
+
+
+def test_serve_batch_snapshot_follows_append_and_refresh(spark, corpora, tmp_path):
+    """Three batches in one session, so the Python workers and their
+    searchers carry over: after append_delta the batch returns the
+    appended docs and equals bm25_topk on the stale index; after
+    refresh_bounds it is unchanged. Rows arrive in (qid, rank) order
+    from a plan with no sort, window or shuffle. A worker holding the
+    pre-append snapshot key refuses to open the grown index."""
+    root = str(tmp_path / "idx")
+    build_index(spark, corpora["base"], root, CFG)
+    queries = [{"qid": q["qid"], "query": q["query"]} for q in reversed(QUERY_SET)]
+
+    def run(idx):
+        df = run_batch(spark, idx, queries)
+        plan = _plan(df)
+        assert "MapInPandas" in plan
+        assert not re.search(r"\b(Sort|Window|Exchange)\b", plan), plan
+        rows = _rows(df)
+        assert [r[:2] for r in rows] == sorted(r[:2] for r in rows)
+        return rows
+
+    base = open_index(spark, root)
+    first = run(base)
+    assert first
+    pinned, _ = batch._snapshot(base)
+
+    append_delta(spark, root, corpora["delta"])
+    grown = open_index(spark, root)
+    second = run(grown)
+    assert second == _rows(bm25_topk(spark, grown, queries))
+    assert second != first and max(r[2] for r in second) > base.n_docs
+    try:
+        with pytest.raises(RuntimeError, match="changed after the batch pinned it"):
+            batch._worker_searcher(pinned)
+    finally:
+        batch._WORKER.update(key=None, searcher=None)
+
+    refresh_bounds(spark, root)
+    assert run(open_index(spark, root)) == second
+
+
+def test_serve_batch_budget_routes_to_exact(spark, appended, monkeypatch):
+    """Within the budget the batch is one MapInPandas over the query
+    slices, reading no parquet in the plan; with a zero budget it is the
+    exact plan (parquet postings scan, window top-k) with the same rows."""
+    idx, queries = appended
+    plan = _plan(run_batch(spark, idx, queries))
+    assert "MapInPandas" in plan and "FileScan" not in plan and "Window" not in plan
+    want = _rows(bm25_topk(spark, idx, queries))
+
+    monkeypatch.setattr(build, "BROADCAST_BUDGET_BYTES", 0)
+    df = run_batch(spark, idx, queries)
+    plan = _plan(df)
+    assert "FileScan parquet" in plan and "Window" in plan
+    assert _rows(df) == want
