@@ -38,11 +38,14 @@ docno ranges; they can be scored independently and in parallel, so no
 global merge is required.
 
 Multi-run work goes a frame at a time: encode_frame encodes many runs in
-a few vectorized passes, and decode_frame, its inverse, decodes many
-blobs with one varint pass, paying numpy's per-call overhead once per
-frame rather than once per block. Their per-run references,
-encode_run and decode_run, live in tests/codec_ref.py, and decode_block
-is the random access the WAND kernel uses.
+a few vectorized passes, and decode_runs, its inverse, decodes every run
+that starts at the given byte offsets of one buffer with a fixed number
+of whole-frame passes, paying numpy's per-call overhead once per frame
+rather than once per run or block. The serving tier calls it on its
+resident postings buffer; decode_frame is the adapter for a list of
+blobs. Their per-run references, encode_run and decode_run, live in
+tests/codec_ref.py, and decode_block is the random access the WAND
+kernel uses.
 """
 
 from __future__ import annotations
@@ -54,6 +57,12 @@ MIN_BLOCK = 8
 FORMAT_VERSION = 4  # v4: pfor varint-sentinel blocks (v3: PForDelta d-gaps)
 
 _HDR = np.dtype([("n_postings", "<u4"), ("n_blocks", "<u4"), ("block_size", "<u4")])
+
+# numpy scalars of the array's own dtype: a Python int operand costs a
+# value-based cast resolution per call, which dominates on tiny arrays
+_U8_127, _U8_128 = np.uint8(0x7F), np.uint8(0x80)
+# byte offsets of a uint32 and of the 12-byte run header
+_I4, _I12 = np.arange(4), np.arange(12)
 
 
 def _block_size_for(n: int) -> int:
@@ -100,16 +109,15 @@ def varint_decode(buf: np.ndarray) -> np.ndarray:
     b = np.asarray(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    last_idx = np.nonzero(is_last)[0]
-    n = last_idx.size
-    starts = np.empty(n, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = last_idx[:-1] + 1
-    gid = np.cumsum(is_last) - is_last  # 0-based group id per byte
-    pos = np.arange(b.size, dtype=np.int64) - starts[gid]
-    shifted = (b.astype(np.uint64) & np.uint64(0x7F)) << (np.uint64(7) * pos.astype(np.uint64))
-    return np.bitwise_or.reduceat(shifted, starts)
+    last = (b < _U8_128).nonzero()[0]  # the last byte of each value
+    first = np.empty_like(last)
+    first[0] = 0
+    first[1:] = last[:-1] + 1
+    # each byte's 7 payload bits, shifted by 7 per earlier byte of its value
+    shift = np.arange(b.size) - first.repeat(last - first + 1)
+    shift *= 7
+    low = (b & _U8_127).astype(np.uint64)
+    return np.bitwise_or.reduceat(low << shift.view(np.uint64), first)
 
 
 # ---------------------------------------------------------------------------
@@ -409,88 +417,106 @@ def _decode_block_payload(
     return gaps, vals[:sz], vals[sz : 2 * sz]
 
 
-def _gather_u32(buf: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """The little-endian uint32 at each byte offset of buf, as int64."""
-    raw = buf[offsets[:, None] + np.arange(4)]
-    return raw.view("<u4").ravel().astype(np.int64)
-
-
 def decode_frame(
     blobs: list[bytes],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Decode many runs at once -> (docnos uint64, tfs int32, dls int32,
     indptr int64[len(blobs)+1]); run i is [indptr[i], indptr[i+1]) and
     equals the per-run reference decode_run(blobs[i]) in
-    tests/codec_ref.py. The inverse of encode_frame.
+    tests/codec_ref.py. The inverse of encode_frame: the blobs are joined
+    into one buffer and decoded by decode_runs."""
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=len(blobs))
+    return decode_runs(np.frombuffer(b"".join(blobs), dtype=np.uint8), lens.cumsum() - lens)
 
-    decode_run pays about 15 numpy dispatches per block. Here the blobs
-    are joined into one buffer; every header and directory `end` is read
-    by a vectorized gather. A varint-sentinel block's payload is one
-    varint stream (gaps, then tfs, then dls), so the tf/dl sections of
-    every block and the gap sections of every sentinel block are decoded
-    by ONE varint_decode. Only bit-packed blocks (runs of 512+ postings)
-    go through pfor_decode, one call each. Docnos are one cumsum over
-    all gaps, reset at each run start (a block's first gap is relative
-    to the previous block's last docno, the run's first gap absolute).
+
+def decode_runs(
+    buf: np.ndarray, starts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode the runs that begin at byte offsets `starts` of the uint8
+    buffer `buf` -> (docnos uint64, tfs int32, dls int32,
+    indptr int64[len(starts)+1]), run i being [indptr[i], indptr[i+1]).
+    A run is self-delimiting (its header and directory give its length),
+    so only its start is needed: the runs may be any subset of a larger
+    buffer, and nothing is copied out of it per run.
+
+    The cost on a frame of a few short runs is numpy's per-call dispatch,
+    so the work is a fixed number of whole-frame passes, not passes per
+    block. A run's payload (its blocks' sections back to back) is read as
+    one varint stream: a varint-sentinel block's 0xFF 0x00 prefix reads
+    as one value, then come its gaps, tfs and dls, so block j of a run
+    holds 1 + 3 * size_j values at a position known from the header
+    alone, and one varint_decode reads every payload of the frame. Only
+    bit-packed d-gap sections (blocks of 32+ postings) are decoded apart,
+    by pfor_decode; each is replaced in the stream by 1 + size zero bytes
+    that hold its value slots. Docnos are one cumsum over all gaps, reset
+    at each run start (a block's first gap is relative to the previous
+    block's last docno, the run's first gap absolute).
     """
-    m = len(blobs)
-    boff = np.zeros(m + 1, dtype=np.int64)
-    np.cumsum(np.fromiter(map(len, blobs), dtype=np.int64, count=m), out=boff[1:])
-    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-    hdr = _gather_u32(buf, (boff[:-1, None] + np.arange(0, 12, 4)).ravel()).reshape(m, 3)
-    n, nb, bs = hdr[:, 0], hdr[:, 1], hdr[:, 2]
-    indptr = np.zeros(m + 1, dtype=np.int64)
-    np.cumsum(n, out=indptr[1:])
+    starts = np.asarray(starts, dtype=np.int64)
+    n, nb, bs = buf[starts[:, None] + _I12].view("<u4").astype(np.int64).T
+    indptr = np.zeros(len(starts) + 1, dtype=np.int64)
+    n.cumsum(out=indptr[1:])
     total = int(indptr[-1])
+    if not total:
+        return np.empty(0, np.uint64), np.empty(0, np.int32), np.empty(0, np.int32), indptr
 
-    # per block: owning run, payload byte range in buf, posting count
-    bptr = np.zeros(m + 1, dtype=np.int64)
-    np.cumsum(nb, out=bptr[1:])
-    run = np.repeat(np.arange(m), nb)
-    j = np.arange(int(bptr[-1])) - bptr[run]
-    ends = _gather_u32(buf, boff[run] + _HDR.itemsize + j * _DIR.itemsize + _DIR.fields["end"][1])
-    payload = (boff[:-1] + _HDR.itemsize + nb * _DIR.itemsize)[run]
-    lo = payload + np.concatenate(([0], ends[:-1]))
-    lo[j == 0] = payload[j == 0]
-    hi = payload + ends
-    sz = bs[run]
-    last = bptr[1:][nb > 0] - 1
-    sz[last] = (n - bs * (nb - 1))[nb > 0]
-    sentinel = buf[lo] == _PFOR_VARINT
+    # payload byte range of every run, ending at its last block's
+    # directory `end`: the 4 bytes just before the payload
+    pay = nb * _DIR.itemsize
+    pay += starts
+    pay += _HDR.itemsize
+    plen = buf[(pay - 4)[:, None] + _I4].view("<u4").ravel().astype(np.int64)
+    plen *= nb > 0  # an empty run has no directory
+    pend = plen.cumsum()
+    stream = buf[(pay - pend + plen).repeat(plen) + np.arange(pend[-1])]
 
-    # one varint stream: [gaps,] tfs, dls of every block, in block order
-    vstart = lo + 2
-    packed = np.flatnonzero(~sentinel)
-    packed_gaps = []
-    for k in packed.tolist():
-        g, used = pfor_decode(buf[lo[k] : hi[k]], int(sz[k]))
-        packed_gaps.append(g)
-        vstart[k] = lo[k] + used
-    vlen = hi - vstart
-    vptr = np.zeros(len(vlen) + 1, dtype=np.int64)
-    np.cumsum(vlen, out=vptr[1:])
-    vals = varint_decode(buf[np.repeat(vstart - vptr[:-1], vlen) + np.arange(int(vptr[-1]))])
+    # only blocks of 32+ postings may be bit-packed
+    packed = []  # (stream offset, section bytes, block size, first posting, gaps)
+    for r in (bs >= 32).nonzero()[0].tolist():
+        at, b = int(pay[r]), int(bs[r])
+        end = buf[starts[r] + _HDR.itemsize : at].view(_DIR)["end"].astype(np.int64)
+        lo = np.concatenate(([0], end[:-1]))
+        for k in (buf[at + lo] != _PFOR_VARINT).nonzero()[0].tolist():
+            sz = min(b, int(n[r]) - k * b)
+            gaps, used = pfor_decode(buf[at + lo[k] : at + end[k]], sz)
+            packed.append((int(pend[r] - plen[r] + lo[k]), used, sz, int(indptr[r]) + k * b, gaps))
+    if packed:
+        pieces, cut = [], 0
+        for at, used, sz, _, _ in packed:
+            pieces += [stream[cut:at], np.zeros(1 + sz, dtype=np.uint8)]
+            cut = at + used
+        stream = np.concatenate(pieces + [stream[cut:]])
+    vals = varint_decode(stream)
 
-    # per posting: offset of its gap slot in vals; tf and dl follow at
-    # one and two block sizes past it (a bit-packed block has no gap
-    # slots, so its tfs start where its gaps would)
-    nv = (2 + sentinel) * sz
-    voff = np.zeros(len(nv) + 1, dtype=np.int64)
-    np.cumsum(nv, out=voff[1:])
-    pptr = np.zeros(len(sz) + 1, dtype=np.int64)
-    np.cumsum(sz, out=pptr[1:])
-    blk = np.repeat(np.arange(len(sz)), sz)
-    szp = sz[blk]
-    gap_at = voff[:-1][blk] + np.arange(total) - pptr[blk] - (~sentinel)[blk] * szp
-    gaps = vals[np.maximum(gap_at, 0)]
-    for k, g in zip(packed.tolist(), packed_gaps):
-        gaps[pptr[k] : pptr[k + 1]] = g
-    tfs = vals[gap_at + szp].astype(np.int32)
-    dls = vals[gap_at + 2 * szp].astype(np.int32)
+    # run r's values start at rv[r], and its block j at
+    # rv[r] + j * (1 + 3 * bs[r]): one header value, then size_j gaps,
+    # tfs and dls. Posting i = j * bs + k of the run has its gap at
+    # rv + j * (1 + 3 * bs) + 1 + k = (rv + 1) + i + j + 2 * j * bs, and
+    # its tf and dl size_j and 2 * size_j values further
+    nval = n * 3
+    nval += nb
+    rv = nval.cumsum()
+    rv -= nval
+    rv += 1
+    i = np.arange(total) - indptr[:-1].repeat(n)
+    bsp = bs.repeat(n)
+    j = i // bsp
+    jb = j * bsp
+    size = np.minimum(bsp, n.repeat(n) - jb)
+    gap_at = rv.repeat(n) + i
+    gap_at += j
+    jb *= 2
+    gap_at += jb
+    gaps = vals[gap_at]
+    for _, _, sz, p, g in packed:
+        gaps[p : p + sz] = g
+    gap_at += size
+    tfs = vals[gap_at].astype(np.int32)
+    gap_at += size
+    dls = vals[gap_at].astype(np.int32)
     cs = np.zeros(total + 1, dtype=np.uint64)
-    np.cumsum(gaps, dtype=np.uint64, out=cs[1:])
-    docnos = cs[1:] - np.repeat(cs[indptr[:-1]], n)
-    return docnos, tfs, dls, indptr
+    gaps.cumsum(out=cs[1:])
+    return cs[1:] - cs[indptr[:-1]].repeat(n), tfs, dls, indptr
 
 
 def decode_block(blob: bytes, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -12,18 +12,21 @@ with it (query/batch.bm25_topk_serve, which run_batch calls).
 Memory model of a serving replica (a driver-side process or one Spark
 Python worker):
 - the dictionary (term -> termid, df, cf) and the docid of every docno;
-- the compressed postings column: every run's termid and blob, read
-  whole at the first LRU miss and held sorted by termid (a stable sort,
-  since an appended index's delta runs are not termid-clustered). A miss
-  is a searchsorted slice of it, not a parquet scan, as Ivory reaches a
-  term's postings with one seek through its forward index
-  (IntPostingsForwardIndex.java:68-110). Position blobs join it, in the
-  same order, at the first positional miss, so plain BM25 serving never
-  reads or pins position bytes;
+- the compressed postings column as one byte buffer plus int64 run byte
+  offsets, read whole at the first LRU miss and held sorted by termid (a
+  stable sort, since an appended index's delta runs are not
+  termid-clustered). Its bytes are Arrow's own buffer after that sort,
+  one copy. A term's runs are adjacent in that order, so a missed term
+  is one byte range of the buffer, found by searchsorted, not a parquet
+  scan, as Ivory reaches a term's postings with one seek through its
+  forward index (IntPostingsForwardIndex.java:68-110). Position blobs
+  join it, in the same order, at the first positional miss, so plain
+  BM25 serving never reads or pins position bytes;
 - decoded postings of recently used terms in a termid-keyed LRU
-  (`cache_runs` term entries). A query's misses are one frame decode:
-  every missed run's blob goes through a single codec.decode_frame
-  call, and each term's entry is a copied slice of its output.
+  (`cache_runs` term entries). A query's misses are one decode: a single
+  codec.decode_runs call reads every missed run in place in the buffer,
+  with no per-run bytes object, and each term's entry is a copied slice
+  of its output.
 Construction reads no postings column: it pins the postings file list
 next to the dictionary and docmap it reads, so a later append is not
 seen.
@@ -68,6 +71,34 @@ from ivory_spark.query.wand import _score_group  # noqa: F401
 # what _runs_for returns when every term hit the LRU, built once: a
 # DataFrame costs about a third of a cached BM25 query to build (read-only)
 _NO_RUNS = pd.DataFrame({"termid": np.empty(0, dtype=np.int64), "blob": []})
+
+
+class _DecodedRuns:
+    """The (termid, blob) frame of the runs one _runs_for call decoded,
+    in resident order, built on first indexing: a search never reads it,
+    so an untraced search never pays for it (a frame costs about a
+    quarter of a cold query)."""
+
+    __slots__ = ("_src", "_frame")
+
+    def __init__(self, rterm, buf, off, idx):
+        self._src = (rterm, buf, off, idx)
+        self._frame = None
+
+    def frame(self) -> pd.DataFrame:
+        if self._frame is None:
+            rterm, buf, off, idx = self._src
+            self._frame = pd.DataFrame({
+                "termid": rterm[idx],
+                "blob": [buf[a:b].tobytes() for a, b in zip(off[idx].tolist(), off[idx + 1].tolist())],
+            })
+        return self._frame
+
+    def __getitem__(self, key):
+        return self.frame()[key]
+
+    def __len__(self) -> int:
+        return len(self._src[3])
 
 
 class LocalSearcher:
@@ -123,7 +154,7 @@ class LocalSearcher:
         # the postings file list, pinned here; its columns are read at
         # the first miss (_resident, _resident_pos)
         self._postings = pads.dataset(os.path.join(index_root, "postings"))
-        self._rows = None  # (sorted termids, blobs in that order, row order)
+        self._rows = None  # (sorted termids, blob buffer, run offsets, row order)
         self._pos_blobs = None
         # two LRUs of decoded postings, keyed by termid. BM25 entries are
         # (docnos, tfs, dls) over all of a term's runs, so plain BM25
@@ -140,14 +171,23 @@ class LocalSearcher:
         return tuple(sorted(os.path.basename(f) for f in self._postings.files))
 
     def _resident(self) -> tuple:
-        """The postings termid and blob columns, read whole on first use
-        and sorted by termid; a stable sort keeps each term's runs in
-        file order."""
+        """The postings termid column and blob bytes, read whole on first
+        use and held sorted by termid; a stable sort keeps each term's
+        runs in file order. -> (termids, buf, off, order): run i is
+        buf[off[i]:off[i+1]] of one uint8 buffer. The blobs are cast to
+        large_binary before the take, so the offsets stay 64-bit past
+        2 GiB and the take makes the one copy of the bytes."""
         if self._rows is None:
+            import pyarrow as pa
+
             tab = self._postings.to_table(columns=["termid", "blob"])
             termid = tab["termid"].to_numpy()
             order = np.argsort(termid, kind="stable")
-            self._rows = (termid[order], tab["blob"].take(order), order)
+            blob = tab["blob"].cast(pa.large_binary()).take(order).combine_chunks()
+            _, offsets, data = blob.buffers()
+            off = np.frombuffer(offsets, dtype=np.int64)[blob.offset : blob.offset + len(blob) + 1]
+            buf = np.frombuffer(data or b"", dtype=np.uint8)
+            self._rows = (termid[order], buf, off, order)
         return self._rows
 
     def _resident_pos(self):
@@ -155,16 +195,17 @@ class LocalSearcher:
         the first positional miss. The pinned file list is scanned in the
         same fragment order as the termid read, so the rows align."""
         if self._pos_blobs is None:
-            order = self._resident()[2]
+            order = self._resident()[3]
             tab = self._postings.to_table(columns=["pos_blob"])
             self._pos_blobs = tab["pos_blob"].take(order)
         return self._pos_blobs
 
-    def _runs_for(self, termids: list[int], positions: bool = False) -> pd.DataFrame:
+    def _runs_for(self, termids: list[int], positions: bool = False):
         """Put every termid's decoded postings in the LRU, decoding the
         resident runs of the terms that miss. Returns the runs decoded,
-        as a (termid, blob) frame that is empty when every term hit;
-        callers take the decoded entries from the cache."""
+        as a (termid, blob) frame that is empty when every term hit and
+        is built only when indexed (_DecodedRuns); callers take the
+        decoded entries from the cache."""
         cache = self._run_cache_pos if positions else self._run_cache
         # touch cached hits FIRST so eviction below can never drop a term
         # the current query needs (would silently corrupt scores)
@@ -174,20 +215,23 @@ class LocalSearcher:
         missing = [t for t in termids if t not in cache]
         if not missing:
             return _NO_RUNS
-        rterm, rblob, _ = self._resident()
+        rterm, buf, off, _ = self._resident()
+        # a term's runs are adjacent in the resident order: rows lo..hi,
+        # one byte range of buf, decoded in place by one decode_runs call
         lo = np.searchsorted(rterm, missing, side="left")
         hi = np.searchsorted(rterm, missing, side="right")
-        idx = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)])
-        blobs = rblob.take(idx).to_pylist()
+        counts = hi - lo
+        bounds = np.zeros(len(missing) + 1, dtype=np.int64)
+        np.cumsum(counts, out=bounds[1:])
+        idx = np.repeat(lo - bounds[:-1], counts) + np.arange(bounds[-1])
+        d, tf, dl, indptr = codec.decode_runs(buf, off[idx])
+        indptr, bounds = indptr.tolist(), bounds.tolist()
         if positions and self.props.get("positional"):
             pos_blobs = self._resident_pos().take(idx).to_pylist()
         else:
             pos_blobs = [b""] * len(idx)
-        # one frame decode for every missed run; each entry copies its
-        # slices, so it never pins the whole frame once evicted
-        d, tf, dl, indptr = codec.decode_frame(blobs)
-        indptr = indptr.tolist()
-        bounds = np.concatenate(([0], np.cumsum(hi - lo))).tolist()
+        # each entry copies its slices, so it never pins the whole frame
+        # once evicted
         for t, a, b in zip(missing, bounds[:-1], bounds[1:]):
             if a == b:
                 continue
@@ -204,7 +248,7 @@ class LocalSearcher:
         cap = max(self._cache_runs, len(termids))
         while len(cache) > cap:
             cache.popitem(last=False)
-        return pd.DataFrame({"termid": rterm[idx], "blob": blobs})
+        return _DecodedRuns(rterm, buf, off, idx)
 
     def docids(self, docnos: list[int]) -> dict[int, str]:
         """docno -> 'repo/path@commit', from the in-memory docid array."""

@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """spark.driver.memory: SPARK_DRIVER_MEM if set, else a quarter of
+    physical memory, at least 1g and at most 16g. A local-mode JVM runs
+    the whole job in the driver and may grow its heap to this size, so a
+    fixed 16g let the kernel OOM-kill it on a 15 GB host."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, max(1 << 10, ram // 4 >> 20))}m"
+
+
 def get_spark(
     app_name: str = "ivory_spark",
     cores: int | None = None,
@@ -46,7 +58,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # bench-scale inputs are tens of MB; the 128 MB/64 MB defaults for

@@ -264,3 +264,54 @@ def test_decode_frame_empty():
     assert d.size == t.size == l.size == 0
     assert d.dtype == np.uint64 and t.dtype == np.int32 and l.dtype == np.int32
     assert indptr.tolist() == [0]
+
+
+def _packed_blocks_with_exceptions(blob: bytes) -> int:
+    """Blocks of `blob` whose d-gaps are bit-packed with exceptions."""
+    payload, start, count = codec._payload(blob), 0, 0
+    for end in codec.read_directory(blob)["end"].tolist():
+        count += payload[start] != 0xFF and payload[start + 1] > 0
+        start = end
+    return count
+
+
+def test_decode_runs_on_a_frame_cut_from_a_larger_buffer():
+    """decode_runs over a frame cut from the middle of a larger buffer,
+    with its run offsets rebased to the cut, equals decode_frame over the
+    frame's blobs and the per-run reference decode_run on every run; so
+    does decode_runs over the whole buffer at the original offsets. The
+    frame holds empty and 1-posting runs and 2,048- and 3,000-posting
+    runs whose bit-packed blocks carry exceptions."""
+    rng = np.random.default_rng(23)
+    sizes = [9, 0, 1, 2048, 0, 1, 3000, 1, 0, 6, 30]
+    runs = [
+        np.cumsum(rng.choice([1, 2, 5, 2**33], size=n, p=[0.5, 0.3, 0.18, 0.02]).astype(np.uint64))
+        for n in sizes
+    ]
+    lens = np.array(sizes)
+    ends = np.cumsum(lens)
+    docnos = np.concatenate(runs)
+    tfs = rng.integers(1, 70_000, len(docnos))
+    dls = rng.integers(1, 2**31 - 1, len(docnos))
+    blobs = codec.encode_frame(
+        docnos, tfs, dls, rng.random(len(docnos)).astype(np.float32), ends - lens, ends
+    )
+    off = np.concatenate(([0], np.cumsum([len(b) for b in blobs])))
+    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    a, z = 1, len(blobs) - 1  # the frame: every run but the first and last
+    frame = blobs[a:z]
+    assert _packed_blocks_with_exceptions(frame[2]) and _packed_blocks_with_exceptions(frame[5])
+
+    cut = codec.decode_runs(buf[off[a] : off[z]], off[a:z] - off[a])
+    whole = codec.decode_runs(buf, off[a:z])
+    listed = codec.decode_frame(frame)
+    for got in (cut, whole):
+        for x, y in zip(got, listed):
+            assert x.dtype == y.dtype and np.array_equal(x, y)
+    d, t, l, indptr = cut
+    assert indptr.tolist() == [0, *np.cumsum(sizes[a:z])]
+    for i, blob in enumerate(frame):
+        rd, rt_, rl = decode_run(blob)
+        p, q = indptr[i], indptr[i + 1]
+        assert np.array_equal(d[p:q], rd) and np.array_equal(t[p:q], rt_)
+        assert np.array_equal(l[p:q], rl)

@@ -2,6 +2,7 @@
 Spark paths and the numpy oracle, and fast enough for ad-hoc queries
 (the Spark plan/schedule floor is the thing it exists to avoid)."""
 
+import json
 import os
 import time
 
@@ -143,6 +144,69 @@ def test_serve_postings_resident_after_first_miss(spark, salted):
     finally:
         os.rename(away, postings)
     assert _bits(unloaded.search("import", k=K)) == _bits(want["r00"])
+
+
+@pytest.fixture(scope="module")
+def appended(spark, tmp_path_factory):
+    """A salted index over 120 docs grown by append_delta with 80 more,
+    never refreshed: (root, base n_docs)."""
+    from ivory_spark.corpus import generate_corpus
+    from ivory_spark.index.compact import append_delta
+
+    d = tmp_path_factory.mktemp("idx_serve_appended")
+    full = generate_corpus(200, seed=31).drop(columns=["sha256"])
+    base, delta = str(d / "base.parquet"), str(d / "delta.parquet")
+    full.iloc[:120].to_parquet(base, index=False)
+    full.iloc[120:].to_parquet(delta, index=False)
+    root = str(d / "idx")
+    build_index(spark, base, root, IndexConfig(salt_threshold=8, n_shards=5))
+    with open(os.path.join(root, "properties.json")) as f:
+        n_base = json.load(f)["n_docs"]
+    append_delta(spark, root, delta)
+    return root, n_base
+
+
+def test_serve_misses_from_chunked_resident_buffer_on_appended_index(spark, appended):
+    """The resident blob buffer of an appended multi-file index comes from
+    an Arrow column of several chunks. With a 2-entry LRU, queries whose
+    missed terms have runs in both the base and the delta files equal the
+    exact path bit for bit. Once indexed, _runs_for's frame holds exactly
+    the (termid, blob) rows of the runs it decoded, in resident order
+    (termid, then file order): only the missed terms' runs, none when
+    every term hits."""
+    import pyarrow.dataset as pads
+
+    from ivory_spark.index.reader import open_index
+
+    root, n_base = appended
+    postings = pads.dataset(os.path.join(root, "postings"))
+    tab = postings.to_table(columns=["termid", "first_docno", "blob"])
+    assert tab["blob"].num_chunks > 1
+    runs = tab.select(["termid", "first_docno"]).to_pandas()
+    sides = (runs["first_docno"] > n_base).groupby(runs["termid"]).nunique()
+    dic = pads.dataset(os.path.join(root, "dictionary")).to_table().to_pandas()
+    dic = dic[dic["termid"].isin(sides.index[sides == 2])].sort_values(["df", "term"])
+    both = dic["term"].tolist()[:: max(1, len(dic) // 12)]
+    assert len(both) >= 6
+    texts = both + [" ".join(both[i : i + 3]) for i in range(0, len(both), 3)]
+    texts += [f"{both[0]} {both[0]} zzq_oov_token {both[-1]}", f"{both[1]} {both[-2]}"]
+    queries = [{"qid": f"a{i:02d}", "query": t} for i, t in enumerate(texts)]
+    want = _exact(spark, open_index(spark, root), queries)
+    searcher = LocalSearcher(root, cache_runs=2)
+    for q in queries:
+        assert _bits(searcher.search(q["query"], k=K)) == _bits(want[q["qid"]]), q
+
+    order = np.argsort(tab["termid"].to_numpy(), kind="stable")
+    resident = list(zip(tab["termid"].to_numpy()[order].tolist(),
+                        tab["blob"].take(order).to_pylist()))
+    tids = sorted(dic["termid"].tolist()[:3])
+    fresh = LocalSearcher(root, cache_runs=2)
+    fresh._runs_for(tids[:1])
+    out = fresh._runs_for(tids)  # tids[0] hits; the other two miss
+    got = list(zip(out["termid"].tolist(), out["blob"].tolist()))
+    assert got == [r for r in resident if r[0] in tids[1:]]
+    assert len(out) == len(got) > 2
+    assert len(fresh._runs_for(tids)["termid"]) == 0
 
 
 def test_parse_model_xml_string_params():
