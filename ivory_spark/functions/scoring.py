@@ -24,10 +24,14 @@ bit-identical scores across build/scorer variants achievable.
 Canonical accumulation rule (ours, documented): a document's score is
 np.add.reduceat's float32 fold over its per-term float32 contributions
 sorted by termid, with duplicate query terms folded to a float32 qtf
-multiplier. On numpy 1.26 that fold is c0 + pairwise(c1, ...), not a
-left fold: numpy's pairwise sum adds up to 8 terms in order and more
-through 8 strided accumulators combined as a tree
-(tests/test_property.py pins the bits).
+multiplier. One step applies it (_fold_sorted) to rows already in
+(docno, termid) order. group_sum_f32 gets that order from rows in any
+order with one lexsort; docno_fold_f32 gets it from termid-major input
+(contributions term by term in ascending termid order, as the serve
+path hands over its postings) with one stable docno argsort. On numpy
+1.26 that fold is c0 + pairwise(c1, ...), not a left fold: numpy's
+pairwise sum adds up to 8 terms in order and more through 8 strided
+accumulators combined as a tree (tests/test_property.py pins the bits).
 Ivory sums per-clique in query order; any fixed order is equally faithful
 — what matters is that every component uses the same one.
 """
@@ -145,20 +149,40 @@ def f32_ordered_sum(contribs: np.ndarray) -> np.float32:
     return np.add.reduceat(arr, np.array([0]))[0]
 
 
+def _fold_sorted(d: np.ndarray, c: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The canonical fold of rows already in (docno, termid) order: a
+    reduceat per docno group (c0 + pairwise(c1, ...), see the module
+    docstring). -> (unique_docnos, scores_f32)."""
+    first = np.empty(len(d), dtype=bool)
+    first[0] = True
+    np.not_equal(d[1:], d[:-1], out=first[1:])
+    starts = first.nonzero()[0]
+    return d[starts], np.add.reduceat(np.ascontiguousarray(c, dtype=np.float32), starts)
+
+
 def group_sum_f32(
     docnos: np.ndarray, termids: np.ndarray, contribs: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-docno canonical float32 score: sort by (docno, termid), then a
-    reduceat fold per docno group (c0 + pairwise(c1, ...), see the
-    module docstring). Returns (unique_docnos,
-    scores_f32). Single source of truth for all scorer implementations."""
+    """Per-docno canonical float32 score of (docno, termid, contrib) rows
+    in any order: sort by (docno, termid), then _fold_sorted. Returns
+    (unique_docnos, scores_f32). Single source of truth for all scorer
+    implementations."""
     if len(docnos) == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
     order = np.lexsort((termids, docnos))
-    d = np.asarray(docnos)[order]
-    c = np.ascontiguousarray(np.asarray(contribs)[order], dtype=np.float32)
-    starts = np.nonzero(np.concatenate(([True], d[1:] != d[:-1])))[0]
-    return d[starts], np.add.reduceat(c, starts)
+    return _fold_sorted(np.asarray(docnos)[order], np.asarray(contribs)[order])
+
+
+def docno_fold_f32(docnos: np.ndarray, contribs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """group_sum_f32 over termid-major input: contributions given term by
+    term in ascending termid order. One stable docno argsort then gives
+    the (docno, termid) order lexsort((termids, docnos)) gives, and
+    _fold_sorted folds it, so the serve path shares the one fold without
+    a termid column. Returns (unique_docnos, scores_f32)."""
+    if len(docnos) == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
+    order = np.argsort(docnos, kind="stable")
+    return _fold_sorted(np.asarray(docnos)[order], np.asarray(contribs)[order])
 
 
 SCORERS = {

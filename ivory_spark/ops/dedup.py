@@ -296,8 +296,10 @@ def ngram_jaccard_pairs(
     else:
         a = ex.select(F.col(id_col).alias("doc_a"), F.col("nsh").alias("na"), "g")
         b = ex.select(F.col(id_col).alias("doc_b"), F.col("nsh").alias("nb"), "g")
+        # no shuffle_hash hint: uncapped, a hot shingle's partition can
+        # outgrow a hash build side, where a sort-merge join spills
         inter = (
-            a.join(b.hint("shuffle_hash"), "g")
+            a.join(b, "g")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b", "na", "nb")
             .agg(F.count(F.lit(1)).alias("inter"))

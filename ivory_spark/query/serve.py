@@ -26,17 +26,26 @@ Python worker):
   (`cache_runs` term entries). A query's misses are one decode: a single
   codec.decode_runs call reads every missed run in place in the buffer,
   with no per-run bytes object, and each term's entry is a copied slice
-  of its output.
+  of its output. A BM25 entry holds each posting's docno, tf and dl and
+  its float32 impact idf * tf_part under the index's own k1, b and idf
+  (4 B more per posting), computed once when the entry is filled, from
+  a float32 idf-by-termid array built at the first BM25 miss.
 Construction reads no postings column: it pins the postings file list
 next to the dictionary and docmap it reads, so a later append is not
 seen.
 
 BM25 (`search`) scores every decoded posting of the query terms in one
 vectorized pass: the contribution qtf * (idf * tf_part) of the exact
-path and the WAND kernel, with idf from the dictionary's df, folded by
-the canonical group_sum_f32 and cut to top-k with Ivory's tie-break. So
-served scores are bit-identical to the Spark exact path, the WAND path
-and the numpy oracle. It reads no block-max bounds and never the
+path and the WAND kernel, with idf from the dictionary's df. A query
+under the index's own k1, b and idf mode (no params, or params equal to
+them) reads the entries' impacts and multiplies by qtf only when a qtf
+exceeds 1; a query under other stats recomputes its impacts from the
+entries' tf and dl, in one pass. The query's terms are taken in
+ascending termid order, so its postings arrive termid-major and the
+canonical fold (scoring.docno_fold_f32) orders them by (docno, termid)
+with one stable docno sort. Then a cut to top-k with Ivory's tie-break.
+So served scores are bit-identical to the Spark exact path, the WAND
+path and the numpy oracle. It reads no block-max bounds and never the
 postings rows' df (append_delta leaves both stale), so an appended
 index serves before refresh_bounds. SD/FD (`search_sd`) and structured
 queries (`search_sqe`) run the MRF and sqe kernels (build_cliques +
@@ -60,7 +69,7 @@ from collections import Counter, OrderedDict
 import numpy as np
 import pandas as pd
 
-from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part, group_sum_f32
+from ivory_spark.functions.scoring import F32, bm25_idf, bm25_tf_part, docno_fold_f32
 from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index import codec
 
@@ -155,9 +164,11 @@ class LocalSearcher:
         # the first miss (_resident, _resident_pos)
         self._postings = pads.dataset(os.path.join(index_root, "postings"))
         self._rows = None  # (sorted termids, blob buffer, run offsets, row order)
+        self._idf = None  # float32 idf by termid, built at the first BM25 miss
         self._pos_blobs = None
         # two LRUs of decoded postings, keyed by termid. BM25 entries are
-        # (docnos, tfs, dls) over all of a term's runs, so plain BM25
+        # (docnos, tfs, dls, impacts) over all of a term's runs, the
+        # impacts idf * tf_part under the index's own stats, so plain BM25
         # serving never reads or pins position bytes (the largest
         # column); SD/FD and sqe entries are per-run lists of
         # (docnos, tfs, dls, flat positions, indptr)
@@ -228,8 +239,15 @@ class LocalSearcher:
         indptr, bounds = indptr.tolist(), bounds.tolist()
         if positions and self.props.get("positional"):
             pos_blobs = self._resident_pos().take(idx).to_pylist()
-        else:
+        elif positions:
             pos_blobs = [b""] * len(idx)
+        else:
+            # impacts idf * tf_part under the index's own k1, b and idf
+            p = self.props
+            if self._idf is None:
+                self._idf = np.zeros(int(self._termid.max(initial=0)) + 1, dtype=np.float32)
+                self._idf[self._termid] = bm25_idf(p["n_docs"], self._df, mode=p["idf_mode"])
+            tf_part = bm25_tf_part(tf, dl, p["avgdl"], p["k1"], p["b"])
         # each entry copies its slices, so it never pins the whole frame
         # once evicted
         for t, a, b in zip(missing, bounds[:-1], bounds[1:]):
@@ -244,7 +262,8 @@ class LocalSearcher:
                 ]
             else:
                 p, q = indptr[a], indptr[b]
-                cache[t] = (d[p:q].astype(np.int64), tf[p:q].copy(), dl[p:q].copy())
+                cache[t] = (d[p:q].astype(np.int64), tf[p:q].copy(), dl[p:q].copy(),
+                            self._idf[t] * tf_part[p:q])
         cap = max(self._cache_runs, len(termids))
         while len(cache) > cap:
             cache.popitem(last=False)
@@ -276,24 +295,22 @@ class LocalSearcher:
         return (cand, *assemble_term_data(decoded, cand), stats)
 
     def _ranked(self, docnos, scores, k: int, with_docid: bool) -> list[dict]:
-        """Top-k rows, score desc then docno desc (Accumulator.java:38-53)."""
-        neg = -scores.astype(np.float64)
+        """Top-k rows, score desc then docno desc (Accumulator.java:38-53);
+        each score is its float32 value as a Python float."""
+        neg = -scores
         if 0 < k < len(neg):
             # only docs scoring at least the kth best can rank; partition
             # and lexsort both order NaN last, so NaN scores stay ranked
             # as a full lexsort ranks them
-            keep = np.flatnonzero(~(neg > np.partition(neg, k - 1)[k - 1]))
+            keep = (~(neg > np.partition(neg, k - 1)[k - 1])).nonzero()[0]
             docnos, scores, neg = docnos[keep], scores[keep], neg[keep]
         sel = np.lexsort((-docnos, neg))[:k]
         top = docnos[sel].tolist()
-        ids = self.docids(top) if with_docid else {}
-        out = []
-        for rank, (d, s) in enumerate(zip(top, scores[sel]), start=1):
-            row = {"rank": rank, "docno": d, "score": np.float32(s)}
-            if with_docid:
-                row["docid"] = ids[d]
-            out.append(row)
-        return out
+        ranked = zip(range(1, len(top) + 1), top, scores[sel].astype(np.float32).tolist())
+        if not with_docid:
+            return [{"rank": r, "docno": d, "score": s} for r, d, s in ranked]
+        ids = self.docids(top)
+        return [{"rank": r, "docno": d, "score": s, "docid": ids[d]} for r, d, s in ranked]
 
     def search_sd(
         self, query: str, k: int = 10, with_docid: bool = True, model=None
@@ -365,10 +382,13 @@ class LocalSearcher:
     ) -> list[dict]:
         """-> [{rank, docno[, docid], score}] — Ivory tie-break, scores
         bit-identical to bm25_topk / bm25_topk_wand. params: optional
-        {'k1','b','idf'} overrides, read as bm25_topk reads them."""
+        {'k1','b','idf'} overrides, read as bm25_topk reads them. The
+        entries' cached impacts serve every query whose k1 and b equal
+        the index's as float32 and whose idf mode is the index's, params
+        or not; any other query recomputes its impacts from tf and dl."""
         p = self.props
         q = params or {}
-        k1, b = q.get("k1", p["k1"]), q.get("b", p["b"])
+        k1, b, idf_mode = q.get("k1", p["k1"]), q.get("b", p["b"]), q.get("idf", p["idf_mode"])
         rows, qtfs = [], []
         for term, qtf in Counter(self._tokenize(query)).items():
             r = self._term_row.get(term)
@@ -377,22 +397,26 @@ class LocalSearcher:
                 qtfs.append(qtf)
         if not rows:
             return []
-        termids = self._termid[rows]
-        self._runs_for(sorted(termids.tolist()))
-        entries = [self._run_cache[t] for t in termids.tolist()]
+        # terms in ascending termid order, so the postings arrive
+        # termid-major and docno_fold_f32 needs one docno sort
+        termids, qtfs, rows = zip(*sorted(zip(self._termid[rows].tolist(), qtfs, rows)))
+        self._runs_for(list(termids))
+        entries = [self._run_cache[t] for t in termids]
         lens = [len(e[0]) for e in entries]
-        # one vectorized pass over every posting: the same float32
-        # contribution as query/wand.py, qtf * (idf * tf_part)
-        idf = bm25_idf(p["n_docs"], self._df[rows], mode=q.get("idf", p["idf_mode"]))
-        tf_part = bm25_tf_part(
-            np.concatenate([e[1] for e in entries]),
-            np.concatenate([e[2] for e in entries]),
-            p["avgdl"], k1, b,
-        )
-        contrib = np.repeat(np.array(qtfs, dtype=np.float32), lens) * (
-            np.repeat(idf, lens) * tf_part
-        )
-        d, s = group_sum_f32(
-            np.concatenate([e[0] for e in entries]), np.repeat(termids, lens), contrib
-        )
+        # bm25_tf_part reads k1 and b as float32
+        if (F32(k1), F32(b), idf_mode) == (F32(p["k1"]), F32(p["b"]), p["idf_mode"]):
+            contrib = np.concatenate([e[3] for e in entries])
+        else:
+            # other stats: the impacts from tf and dl, in one pass
+            idf = bm25_idf(p["n_docs"], self._df[list(rows)], mode=idf_mode)
+            contrib = np.repeat(idf, lens) * bm25_tf_part(
+                np.concatenate([e[1] for e in entries]),
+                np.concatenate([e[2] for e in entries]),
+                p["avgdl"], k1, b,
+            )
+        # the same float32 contribution as query/wand.py, qtf * (idf *
+        # tf_part); a product with qtf = 1 is exact, so it is skipped
+        if max(qtfs) > 1:
+            contrib = np.repeat(np.array(qtfs, dtype=np.float32), lens) * contrib
+        d, s = docno_fold_f32(np.concatenate([e[0] for e in entries]), contrib)
         return self._ranked(d, s, k, with_docid)

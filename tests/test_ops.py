@@ -74,8 +74,11 @@ def test_ngram_jaccard(spark):
     d = spark.createDataFrame(rows, "doc_id long, text string")
     from ivory_spark.ops.dedup import ngram_jaccard_pairs
 
-    got = {(r["doc_a"], r["doc_b"]) for r in ngram_jaccard_pairs(d, threshold=0.3).collect()}
-    assert (1, 2) in got and (1, 3) not in got
+    pairs = ngram_jaccard_pairs(d, threshold=0.3)
+    got = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in pairs.collect()}
+    assert got == {(1, 2, 0.4)}  # 4 shared of 10 distinct word trigrams
+    # the uncapped self-join sort-merges, so a hot shingle can spill
+    assert "ShuffledHashJoin" not in _explain_str(pairs)
 
 
 def test_embedding_neardup_self(spark, emb):

@@ -6,7 +6,13 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from codec_ref import decode_run, encode_run
-from ivory_spark.functions.scoring import bm25_idf, bm25_max_score, bm25_tf_part, group_sum_f32
+from ivory_spark.functions.scoring import (
+    bm25_idf,
+    bm25_max_score,
+    bm25_tf_part,
+    docno_fold_f32,
+    group_sum_f32,
+)
 from ivory_spark.index import codec
 
 
@@ -73,7 +79,9 @@ def test_varint_roundtrip_random(vals):
     )
 )
 def test_group_sum_deterministic_under_permutation(rows):
-    """Canonical fold must not depend on input row order."""
+    """Canonical fold must not depend on input row order, and
+    docno_fold_f32 over the rows put termid-major (the order the serve
+    path hands it) gives group_sum_f32's docnos and bits."""
     d = np.array([r[0] for r in rows], dtype=np.int64)
     t = np.array([r[1] for r in rows], dtype=np.int64)
     c = np.array([r[2] for r in rows], dtype=np.float32)
@@ -85,6 +93,10 @@ def test_group_sum_deterministic_under_permutation(rows):
     # restrict the assertion to inputs with unique (docno, termid) pairs
     if len({(int(a), int(b)) for a, b in zip(d, t)}) == len(d):
         assert np.array_equal(s1.view(np.uint32), s2.view(np.uint32))
+    tm = np.lexsort((d, t))
+    d3, s3 = docno_fold_f32(d[tm], c[tm])
+    assert np.array_equal(d1, d3)
+    assert np.array_equal(s1.view(np.uint32), s3.view(np.uint32))
 
 
 # float32 contribution bits of four docs' groups (2, 3, 9 and 20 terms,
@@ -108,7 +120,8 @@ def test_group_sum_fold_bits_frozen():
     where numpy's pairwise sum adds up to 8 terms in order and more
     through 8 strided accumulators combined as a tree. Every scorer
     path's rank identity, and every golden, rests on these bits, so a
-    numpy release that changes the fold fails here."""
+    numpy release that changes the fold fails here. docno_fold_f32,
+    given the same rows termid-major, gives the same bits."""
     f = np.float32
 
     def pairwise(a):
@@ -130,6 +143,10 @@ def test_group_sum_fold_bits_frozen():
     docnos = np.repeat(np.arange(1, 5), [len(g) for g in groups])
     termids = np.concatenate([np.arange(len(g)) for g in groups])
     d, s = group_sum_f32(docnos, termids, np.concatenate(groups))
+    assert d.tolist() == [1, 2, 3, 4]
+    assert s.view(np.uint32).tolist() == _FOLD_BITS
+    tm = np.lexsort((docnos, termids))
+    d, s = docno_fold_f32(docnos[tm], np.concatenate(groups)[tm])
     assert d.tolist() == [1, 2, 3, 4]
     assert s.view(np.uint32).tolist() == _FOLD_BITS
     assert [f(g[0] + pairwise(g[1:])).view(np.uint32) for g in groups] == _FOLD_BITS

@@ -209,6 +209,67 @@ def test_serve_misses_from_chunked_resident_buffer_on_appended_index(spark, appe
     assert len(fresh._runs_for(tids)["termid"]) == 0
 
 
+def test_serve_override_params_never_reuse_cached_impacts(spark, appended, monkeypatch):
+    """A BM25 entry caches its impacts under the index's own k1, b and
+    idf. One searcher with a 2-entry LRU serves default queries, params
+    equal to the index's own (a model XML's filled-in defaults) and
+    k1/b, classic-idf and okapi-positive-idf overrides, interleaved over
+    the same terms of the appended, never-refreshed index: one-term
+    queries, a one-term qtf=2 query and a term with df > N/2 (negative
+    okapi idf) among them. Every result equals bm25_topk run with the
+    same params, bit for bit, so no override reads a cached impact and
+    no default query reads an override's. Params equal to the index's
+    read the cached impacts: with every term cached, they recompute no
+    tf_part."""
+    from ivory_spark.query import serve
+    import pyarrow.dataset as pads
+
+    from ivory_spark.index.reader import open_index
+    from ivory_spark.query.exact import bm25_topk
+
+    root, _ = appended
+    idx = open_index(spark, root)
+    dic = pads.dataset(os.path.join(root, "dictionary")).to_table().to_pandas()
+    dic = dic.sort_values(["df", "term"], ascending=False)
+    hi = dic["term"].iloc[0]
+    assert dic["df"].iloc[0] > idx.properties["n_docs"] / 2  # okapi idf < 0
+    mid, low = dic["term"].iloc[len(dic) // 20], dic["term"].iloc[len(dic) // 5]
+    kb = {"k1": 0.9, "b": 0.4}
+    own = {"k1": 1.2, "b": 0.75, "idf": "okapi"}  # batch._parse_feature's defaults
+    props = idx.properties
+    assert (props["k1"], props["b"], props["idf_mode"]) == (own["k1"], own["b"], own["idf"])
+    cases = [
+        (f"{hi} {mid}", None), (f"{hi} {mid}", kb), (f"{hi} {mid}", None),
+        (mid, None), (mid, kb), (f"{mid} {mid}", None), (f"{mid} {mid}", kb),
+        (hi, None), (hi, {"idf": "classic"}), (hi, None),
+        (f"{hi} {low} {mid}", {"idf": "classic"}), (f"{hi} {low} {mid}", None),
+        (f"{low} {low}", {"idf": "okapi-positive"}), (f"{low} {low}", None),
+        (f"{mid} {hi} {low}", {"idf": "okapi-positive"}), (f"{mid} {hi} {hi}", None),
+        (f"{low} {mid}", kb), (f"{low} {mid}", None),
+        (f"{hi} {mid}", own), (f"{mid} {mid}", own), (f"{low} {mid}", own),
+    ]
+    want = {}
+    for params in (None, kb, {"idf": "classic"}, {"idf": "okapi-positive"}, own):
+        queries = [{"qid": f"o{i:02d}", "query": t} for i, (t, q) in enumerate(cases) if q == params]
+        rows = bm25_topk(spark, idx, queries, k=K, params=params).orderBy("qid", "rank").collect()
+        for q in queries:
+            want[q["qid"]] = [r for r in rows if r["qid"] == q["qid"]]
+    searcher = LocalSearcher(root, cache_runs=2)
+    for i, (text, params) in enumerate(cases):
+        got = searcher.search(text, k=K, params=params)
+        assert got and _bits(got) == _bits(want[f"o{i:02d}"]), (text, params)
+    assert any(r["score"] < 0 for r in want["o07"])
+
+    def no_tf_part(*a, **kw):
+        raise AssertionError("cached impacts not read")
+
+    searcher.search(f"{hi} {mid} {low}", k=K)  # all three terms cached
+    monkeypatch.setattr(serve, "bm25_tf_part", no_tf_part)
+    for i, (text, params) in enumerate(cases[-3:], start=len(cases) - 3):
+        assert _bits(searcher.search(text, k=K, params=params)) == _bits(want[f"o{i:02d}"])
+        assert _bits(searcher.search(text, k=K)) == _bits(want[f"o{i:02d}"])
+
+
 def test_parse_model_xml_string_params():
     from ivory_spark.query.batch import parse_model_xml
 
