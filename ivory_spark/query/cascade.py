@@ -3,7 +3,11 @@
 Reference: ivory/cascade/retrieval/CascadeEval.java (multi-stage ranking
 where each stage scores only the previous stage's survivors, trading
 effectiveness for cost). Stage 0 is always the cheap bag-of-words BM25
-pass via the block-max WAND kernel; every later stage is a dependence
+pass, bm25_topk_wand, which runs the serve kernel (a LocalSearcher in
+each Spark Python worker, batch.bm25_topk_serve): the block-max WAND
+Spark plan it replaced was 4-6x slower at 2k and 394k docs, and the
+WAND kernel itself costs about 20 ms a query in process against
+0.07-0.27 ms for LocalSearcher.search. Every later stage is a dependence
 model (SD/FD window potentials) over the survivors, each cutting to its
 own k — the reference's staged-pruning shape (CascadeEval.java:1-896
 applies a per-stage pruner then the next, costlier scorer).
@@ -135,11 +139,11 @@ def cascade_topk(
     costs: dict | None = None,
     stages: list[dict] | None = None,
 ) -> DataFrame:
-    """Staged cascade. Default = the canonical two-stage form (WAND BM25
-    keeps top stage1_k, the SD/FD model reranks only those). `stages`
-    generalizes to N: a list of {"model": MrfModel, "k": int,
+    """Staged cascade. Default = the canonical two-stage form (BM25 on
+    the serve kernel keeps top stage1_k, the SD/FD model reranks only
+    those). `stages` generalizes to N: a list of {"model": MrfModel, "k": int,
     "unit_cost": float (optional, default STAGE2_UNIT_COST)} applied in
-    order after the WAND pass, each restricted to the previous stage's
+    order after the BM25 pass, each restricted to the previous stage's
     survivors via the distributed candidates_df flow.
 
     A non-final stage may replace its fixed top-k cut with a CascadeEval
@@ -175,6 +179,8 @@ def cascade_topk(
         raise ValueError("cascade needs at least one rerank stage")
 
     t0 = time.monotonic()
+    # stage 1: BM25 top-stage1_k on the serve kernel (one mapInPandas over
+    # query slices, no shuffle); the "wand_bm25" cost label keeps its name
     s1 = bm25_topk_wand(spark, index, queries, k=stage1_k, with_docid=False)
     surv = s1.select("qid", "docno")
     stage_costs = []
@@ -278,7 +284,7 @@ def oracle_cascade_topk(
     oracle_index, queries: list[dict], stage1_k: int = 100,
     model: MrfModel | None = None, stages: list[dict] | None = None,
 ) -> dict[str, list[dict]]:
-    """Single-node composition golden: WAND-equivalent exact BM25 top-k,
+    """Single-node composition golden: exact BM25 top-k (stage 1's rows),
     then each stage's oracle MRF restricted to the previous survivors.
     Pruner stages use the SAME prune_retain_size kernel as the
     distributed path (shared-kernel invariant) over the oracle's ranked

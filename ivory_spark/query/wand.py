@@ -1,46 +1,46 @@
-"""Block-max WAND retrieval kernel — the throughput path.
+"""bm25_topk_wand: batch BM25 top-k, run on the serve kernel.
 
-Upgrades Ivory's term-level MaxScore pruning
+The entry keeps its name, signature and stale-bounds refusal, and
+returns batch.bm25_topk_serve: each Spark Python worker scores its
+slice of the queries with a LocalSearcher it keeps across batches
+(Ivory's BatchQueryRunner is a single-process engine over the MapReduce
+build). The plan has no postings scan, shard shuffle, Window or docmap join.
+The Spark plan it replaces (scan, shard explode, a grouped_apply per
+(qid, shard), a Window top-k and a docmap broadcast join) was 4-6x
+slower than the kernel at both 2k and 394k docs, with bit-identical
+rows. Running _score_group inside the workers instead is not enough:
+in process it takes 1.7-2.2 s per 100 benchmark queries, against 7-27
+ms for LocalSearcher.search, with equal results.
+
+_score_group, the block-max WAND kernel, stays while
+tests/test_wand_pruning.py tests its pruning and perfbench/trace.py
+patches serve._score_group and codec.decode_block by name. It upgrades
+Ivory's term-level MaxScore pruning
 (ivory/smrf/retrieval/MRFDocumentRanker.java:99-155, bounds
 ivory/smrf/model/score/BM25ScoringFunction.java:73-89) to block-max
 pruning using the per-block max-impact metadata the codec stores
-(block layout modeled on ivory/bloomir/data/CompressedPostings.java:20-174).
-
-Execution shape (Spark-first, doc-sharded like Ivory's broker
-architecture, docs/clue.html:164-180):
-
-1. driver: tokenize queries, resolve termids/df via the dictionary,
-   fold duplicate tokens into qtf;
-2. candidate postings runs: Parquet scan with a literal termid IN filter
-   (row-group pruning), broadcast-joined to the query-term table;
-3. each run is expanded to the docno shards it overlaps (salted runs hit
-   exactly one shard; rare single-run terms replicate to the few shards
-   they span — bounded by the salt threshold) and shuffled so one task
-   holds *all* query-term postings for one (qid, shard);
-4. kernel per (qid, shard): merge every term's block boundaries into a
-   segment grid; upper-bound each segment by the sum of per-term block
-   maxima (× qtf); visit segments in descending bound order, exactly
-   scoring each (vectorized decode + canonical float32 fold) and stop
-   when the next segment's bound is strictly below the running kth-best
-   score — block-max WAND re-organized for vectorized execution;
-5. per-query global top-k merge with Ivory's tie-break
-   (score desc, docno desc; Accumulator.java:38-53).
-
-Results are bit-identical to the exact path and the numpy oracle because
-decode + scoring + accumulation all share the same kernels
-(ivory_spark.functions.scoring, ivory_spark.index.codec).
+(block layout modeled on ivory/bloomir/data/CompressedPostings.java:20-174):
+merge every term's block boundaries into a segment grid, upper-bound
+each segment by the sum of per-term block maxima (x qtf), visit
+segments in descending bound order, exactly scoring each (vectorized
+decode + canonical float32 fold), and stop when the next segment's
+bound is strictly below the running kth-best score. Its scores are
+bit-identical to the exact path because decode + scoring + accumulation
+share the same kernels (ivory_spark.functions.scoring,
+ivory_spark.index.codec).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ivory_spark.functions.scoring import F32, bm25_idf, bm25_tf_part, group_sum_f32
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
-from ivory_spark.query.exact import candidate_postings, query_term_rows
+from ivory_spark.query.batch import bm25_topk_serve
+from ivory_spark.query.exact import query_term_rows
 
 SEGMENT_BATCH = 32  # segments scored per pruning-check round
 
@@ -237,66 +237,26 @@ def bm25_topk_wand(
     k: int = 10,
     with_docid: bool = True,
 ) -> DataFrame:
-    props = index.properties
-    if props.get("bounds_stale"):
-        # appended-to index: stored block-max bounds were computed under
-        # smaller n_docs/avgdl and may UNDERSTATE true impacts — pruning
-        # on them can drop true top-k docs. compact.refresh_bounds
-        # re-derives them; paths that read no bounds serve meanwhile
-        # (query/batch.run_batch, exact.bm25_topk).
+    """Batch BM25 top-k -> (qid, rank, docno[, docid], score), rows in
+    (qid, rank) order, bit-identical to exact.bm25_topk: the rows of
+    batch.bm25_topk_serve, which runs the exact plan past its memory
+    budget. Refuses an index whose bounds append_delta left stale."""
+    if index.properties.get("bounds_stale"):
+        # The serve kernel reads no block-max bounds, so this refusal
+        # protects nothing now; it stays for as long as refresh_bounds and
+        # bounds_stale do, and goes with them. Paths that never refused:
+        # batch.run_batch, exact.bm25_topk.
         raise ValueError(
             "index has stale WAND bounds after append_delta; run "
             "compact.refresh_bounds, or use batch.run_batch or exact.bm25_topk"
         )
-    n_docs, avgdl = props["n_docs"], props["avgdl"]
-    k1, b, idf_mode = props["k1"], props["b"], props["idf_mode"]
-    n_shards = props["n_shards"]
-
-    rows, termids = query_term_rows(index, queries)
-    qt = spark.createDataFrame(rows, "qid string, termid long, qtf int, df int, cf long")
-    schema = "qid string, rank int, docno long, score float"
-    if with_docid:
-        schema = "qid string, rank int, docno long, docid string, score float"
+    # the driver-side term lookup answers an all-OOV batch with no
+    # Spark plan; perfbench/trace.py times it by patching
+    # wand.query_term_rows
+    _, termids = query_term_rows(index, queries)
     if not termids:
+        schema = "qid string, rank int, docno long, score float"
+        if with_docid:
+            schema = "qid string, rank int, docno long, docid string, score float"
         return spark.createDataFrame([], schema)
-
-    # df comes from the postings rows; drop qt's copy to avoid ambiguity.
-    # Project only WAND's columns — a positional index's pos_blob must be
-    # column-pruned out of the scan and never shuffled here.
-    runs = candidate_postings(index, termids).select(
-        "termid", "df", "n", "first_docno", "last_docno", "max_impact", "blob"
-    ).join(F.broadcast(qt.select("qid", "termid", "qtf")), "termid")
-    shard_of = lambda c: F.floor(c * F.lit(n_shards) / F.lit(n_docs + 1)).cast("int")
-    runs = runs.withColumn(
-        "shard", F.explode(F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno"))))
-    )
-
-    def shard_bounds(s: int) -> tuple[int, int]:
-        lo = -((-s * (n_docs + 1)) // n_shards)  # ceil(s*(N+1)/S)
-        hi = -((-(s + 1) * (n_docs + 1)) // n_shards) - 1
-        return max(lo, 1), min(hi, n_docs)
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard = key
-        lo, hi = shard_bounds(int(shard))
-        d, s = _score_group(pdf, n_docs, avgdl, k1, b, idf_mode, lo, hi, k)
-        return pd.DataFrame({"qid": np.repeat(qid, len(d)), "docno": d, "score": s})
-
-    # grouped_apply, not groupBy().applyInPandas: a query batch over the
-    # shard grid makes |queries| x n_shards tiny groups, and Spark's
-    # per-group Arrow dispatch (~8 ms each) would dominate the kernel —
-    # one mapInPandas stream per partition pays the tax once (gmap.py)
-    from ivory_spark.functions.gmap import grouped_apply
-
-    local = grouped_apply(
-        runs, ["qid", "shard"], kernel, schema="qid string, docno long, score float"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("docno"))
-    topk = local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if with_docid:
-        # topk is q*k rows but sits behind a window, so Catalyst has no
-        # size estimate and can pick a sort-merge join against the full
-        # docmap scan; broadcast the tiny side explicitly (guide §3.1)
-        topk = F.broadcast(topk).join(index.docid_expr(), "docno")
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
-    return topk.select(*cols).orderBy("qid", "rank")
+    return bm25_topk_serve(spark, index, queries, k=k, with_docid=with_docid)

@@ -4,9 +4,11 @@ slice of the queries with a LocalSearcher it keeps across batches. The
 rows must equal the exact relational plan's (exact.bm25_topk) bit for
 bit, docids included, on an appended index whose bounds were never
 refreshed; a batch after an append must see the appended docs; and
-past the memory budget the batch runs the exact plan."""
+past the memory budget the batch runs the exact plan. wand.bm25_topk_wand
+returns the same batch once the index's bounds are refreshed."""
 
 import re
+import shutil
 
 import numpy as np
 import pytest
@@ -19,6 +21,7 @@ from ivory_spark.index.reader import open_index
 from ivory_spark.query import batch
 from ivory_spark.query.batch import Model, bm25_topk_serve, run_batch
 from ivory_spark.query.exact import bm25_topk
+from ivory_spark.query.wand import bm25_topk_wand
 
 N_BASE, N_DELTA = 120, 80
 CFG = IndexConfig(salt_threshold=8, n_shards=5)
@@ -107,15 +110,15 @@ def test_serve_batch_snapshot_follows_append_and_refresh(spark, corpora, tmp_pat
     """Three batches in one session, so the Python workers and their
     searchers carry over: after append_delta the batch returns the
     appended docs and equals bm25_topk on the stale index; after
-    refresh_bounds it is unchanged. Rows arrive in (qid, rank) order
-    from a plan with no sort, window or shuffle. A worker holding the
+    refresh_bounds it is unchanged, and bm25_topk_wand equals bm25_topk
+    with and without docids. Rows arrive in (qid, rank) order from a
+    plan with no sort, window or shuffle. A worker holding the
     pre-append snapshot key refuses to open the grown index."""
     root = str(tmp_path / "idx")
     build_index(spark, corpora["base"], root, CFG)
     queries = [{"qid": q["qid"], "query": q["query"]} for q in reversed(QUERY_SET)]
 
-    def run(idx):
-        df = run_batch(spark, idx, queries)
+    def run(df):
         plan = _plan(df)
         assert "MapInPandas" in plan
         assert not re.search(r"\b(Sort|Window|Exchange)\b", plan), plan
@@ -124,13 +127,13 @@ def test_serve_batch_snapshot_follows_append_and_refresh(spark, corpora, tmp_pat
         return rows
 
     base = open_index(spark, root)
-    first = run(base)
+    first = run(run_batch(spark, base, queries))
     assert first
     pinned, _ = batch._snapshot(base)
 
     append_delta(spark, root, corpora["delta"])
     grown = open_index(spark, root)
-    second = run(grown)
+    second = run(run_batch(spark, grown, queries))
     assert second == _rows(bm25_topk(spark, grown, queries))
     assert second != first and max(r[2] for r in second) > base.n_docs
     try:
@@ -140,20 +143,31 @@ def test_serve_batch_snapshot_follows_append_and_refresh(spark, corpora, tmp_pat
         batch._WORKER.update(key=None, searcher=None)
 
     refresh_bounds(spark, root)
-    assert run(open_index(spark, root)) == second
+    refreshed = open_index(spark, root)
+    assert run(run_batch(spark, refreshed, queries)) == second
+    for with_docid in (True, False):
+        want = _rows(bm25_topk(spark, refreshed, queries, with_docid=with_docid))
+        got = run(bm25_topk_wand(spark, refreshed, queries, with_docid=with_docid))
+        assert got == want, with_docid
 
 
-def test_serve_batch_budget_routes_to_exact(spark, appended, monkeypatch):
+def test_serve_batch_budget_routes_to_exact(spark, appended, monkeypatch, tmp_path):
     """Within the budget the batch is one MapInPandas over the query
     slices, reading no parquet in the plan; with a zero budget it is the
-    exact plan (parquet postings scan, window top-k) with the same rows."""
+    exact plan (parquet postings scan, window top-k) with the same rows,
+    through run_batch and, on a refreshed copy of the index,
+    bm25_topk_wand."""
     idx, queries = appended
     plan = _plan(run_batch(spark, idx, queries))
     assert "MapInPandas" in plan and "FileScan" not in plan and "Window" not in plan
     want = _rows(bm25_topk(spark, idx, queries))
+    root = str(tmp_path / "refreshed")
+    shutil.copytree(idx.root, root)
+    refresh_bounds(spark, root)
+    refreshed = open_index(spark, root)
 
     monkeypatch.setattr(build, "BROADCAST_BUDGET_BYTES", 0)
-    df = run_batch(spark, idx, queries)
-    plan = _plan(df)
-    assert "FileScan parquet" in plan and "Window" in plan
-    assert _rows(df) == want
+    for df in (run_batch(spark, idx, queries), bm25_topk_wand(spark, refreshed, queries)):
+        plan = _plan(df)
+        assert "FileScan parquet" in plan and "Window" in plan
+        assert _rows(df) == want
