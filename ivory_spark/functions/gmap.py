@@ -112,6 +112,12 @@ def spread_partitions(df: DataFrame, min_partitions: int | None = None) -> DataF
     to the shuffle parallelism unlocks the cores; when the input already
     has at least that many partitions (any real at-scale table) this is
     a NO-OP — scale-adaptive, not a local-mode constant.
+
+    The partition count is read only from a plan without an Exchange: a
+    scan's count is known up front, but under AQE reading df.rdd of a
+    plan with an Exchange runs the upstream stages to settle it. Such a
+    plan is repartitioned without asking; its shuffle's own count is
+    the session's, or fewer once AQE has coalesced it.
     """
     if min_partitions is None:
         try:
@@ -120,6 +126,7 @@ def spread_partitions(df: DataFrame, min_partitions: int | None = None) -> DataF
             )
         except ValueError:
             min_partitions = 32
-    if df.rdd.getNumPartitions() >= min_partitions:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" not in plan and df.rdd.getNumPartitions() >= min_partitions:
         return df
     return df.repartition(min_partitions)

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ivory_spark.session import local_frame
+
 MIN_VECTOR_TERMS = 3  # CLIRUtils.java:78
 MIN_SENTENCE_LENGTH = 5  # CLIRUtils.java:79
 SENT_SPLIT_RX = r"[.!?\n。！？]+"
@@ -96,7 +98,7 @@ def translate_vectors(
     ttable: f_term -> [(e_term, prob)], broadcast as literal rows."""
     spark = sents.sparkSession
     rows = [(f, e, float(p)) for f, es in ttable.items() for e, p in es]
-    tt = spark.createDataFrame(rows, "f_term string, e_term string, p double")
+    tt = local_frame(spark, rows, "f_term string, e_term string, p double")
     entries = sents.select(
         "docno", "sent_id", "sentence", "length",
         F.explode("vector").alias("f_term", "w"),

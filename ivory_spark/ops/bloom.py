@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
+from ivory_spark.session import local_frame
 
 # splitmix64-style avalanche; k seeded variants give k hash functions
 _MULT = np.uint64(0x9E3779B97F4A7C15)
@@ -112,7 +113,7 @@ def conjunctive_candidates_bloom(
         "term", "termid", "df"
     ).collect()
     if len(dict_rows) < len(set(terms)):
-        return spark.createDataFrame([], "docno long")  # OOV term → empty AND
+        return local_frame(spark, [], "docno long")  # OOV term → empty AND
     by_df = sorted(dict_rows, key=lambda r: r["df"])
     driver_tid = int(by_df[0]["termid"])
     other_tids = [int(r["termid"]) for r in by_df[1:]]

@@ -21,6 +21,8 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ivory_spark.session import local_frame
+
 K1 = 1.2
 B = 0.75
 MU = 2500.0
@@ -94,7 +96,7 @@ def _query_df(spark: SparkSession, queries: list[dict]) -> DataFrame:
         toks = [t for t in q["query"].lower().split(" ") if t]
         for term, qtf in sorted(Counter(toks).items()):
             rows.append((q["qid"], term, qtf))
-    return spark.createDataFrame(rows, "qid string, term string, qtf int")
+    return local_frame(spark, rows, "qid string, term string, qtf int")
 
 
 def _candidates(spark: SparkSession, docs: DataFrame, queries: list[dict]) -> DataFrame:

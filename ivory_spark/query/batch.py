@@ -25,6 +25,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ivory_spark.session import local_frame
+
 
 def parse_query_xml(path_or_text: str) -> list[dict]:
     """Parse Ivory's <parameters><query id=...>text</query> format."""
@@ -329,8 +331,10 @@ def bm25_topk_serve(
     Ivory's retrieval is a single-process engine over the MapReduce
     build (BatchQueryRunner.java); here each Spark Python worker is that
     engine. The driver pins a snapshot (index root, properties, postings
-    file list) and parallelizes the qid-sorted queries into
-    min(len(queries), defaultParallelism) contiguous slices. A
+    file list) and hands the qid-sorted queries to Spark as a
+    session.local_frame: a LocalTableScan in the JVM, which splits them
+    into min(len(queries), defaultParallelism) contiguous slices in
+    order, so no Python worker starts just to read them. A
     mapInPandas task runs its slice through LocalSearcher.search
     (params: k1/b/idf overrides, as bm25_topk reads them) in a searcher
     the worker process keeps across batches, one per process, reopened
@@ -355,8 +359,6 @@ def bm25_topk_serve(
     if with_docid:
         schema = "qid string, rank int, docno long, docid string, score float"
     rows = sorted(((q["qid"], q["query"]) for q in queries), key=lambda r: r[0])
-    sc = spark.sparkContext
-    slices = sc.parallelize(rows, max(1, min(len(rows), sc.defaultParallelism)))
-    return spark.createDataFrame(slices, "qid string, query string").mapInPandas(
+    return local_frame(spark, rows, "qid string, query string").mapInPandas(
         partial(_serve_slice, key, k, with_docid, params), schema
     )

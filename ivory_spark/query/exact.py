@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part, group_sum_f32
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
+from ivory_spark.session import local_frame
 
 
 def query_term_rows(
@@ -90,9 +91,7 @@ def query_term_table(
 ) -> DataFrame:
     """(qid, termid, qtf, df, cf) for all in-dictionary query terms."""
     rows, _ = query_term_rows(index, queries)
-    return spark.createDataFrame(
-        rows, "qid string, termid long, qtf int, df int, cf long"
-    )
+    return local_frame(spark, rows, "qid string, termid long, qtf int, df int, cf long")
 
 
 def candidate_postings(index: Index, termids: list[int]) -> DataFrame:
@@ -137,8 +136,8 @@ def weighted_query_table(
             rows.append((q["qid"], term, float(w)))
             terms.add(term)
     if not rows:
-        return spark.createDataFrame([], "qid string, termid long, qtf float, df int")
-    qt = spark.createDataFrame(rows, "qid string, term string, qtf float")
+        return local_frame(spark, [], "qid string, termid long, qtf float, df int")
+    qt = local_frame(spark, rows, "qid string, term string, qtf float")
     dict_rows = index.dictionary.filter(F.col("term").isin(sorted(terms))).select(
         "term", "termid", "df"
     )
@@ -181,14 +180,14 @@ def bm25_topk(
         termids = [r["termid"] for r in qt.select("termid").distinct().collect()]
     else:
         rows, termids = query_term_rows(index, queries)
-        qt = spark.createDataFrame(
-            rows, "qid string, termid long, qtf int, df int, cf long"
+        qt = local_frame(
+            spark, rows, "qid string, termid long, qtf int, df int, cf long"
         ).drop("cf")
     if not termids:
         schema = "qid string, rank int, docno long, score float"
         if with_docid:
             schema = "qid string, rank int, docno long, docid string, score float"
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     postings = _decode_runs(candidate_postings(index, termids))
     cand = postings.join(F.broadcast(qt), "termid")
@@ -327,12 +326,12 @@ def scored_topk(
     n_docs, avgdl, clen = props["n_docs"], props["avgdl"], props["collection_length"]
 
     rows, termids = query_term_rows(index, queries)
-    qt = spark.createDataFrame(rows, "qid string, termid long, qtf int, df int, cf long")
+    qt = local_frame(spark, rows, "qid string, termid long, qtf int, df int, cf long")
     if not termids:
         schema = "qid string, rank int, docno long, score float"
         if with_docid:
             schema = "qid string, rank int, docno long, docid string, score float"
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     postings = _decode_runs(candidate_postings(index, termids))
     if scorer in ("dirichlet", "jm"):
@@ -378,7 +377,8 @@ def scored_topk(
                 bg = (mu * cf / clen) if scorer == "dirichlet" else (lam * cf / clen)
                 c, qsum = qconst.get(qid, (0.0, 0.0))
                 qconst[qid] = (c + qtf * math.log(bg), qsum + qtf)
-            qc = spark.createDataFrame(
+            qc = local_frame(
+                spark,
                 [(qid, c, qsum) for qid, (c, qsum) in qconst.items()],
                 "qid string, cq double, qsum double",
             )

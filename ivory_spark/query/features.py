@@ -58,6 +58,7 @@ from ivory_spark.query.mrf import (
     make_shard_bounds,
     shard_of_expr,
 )
+from ivory_spark.session import local_frame
 
 F32 = np.float32
 
@@ -322,7 +323,7 @@ def extract_features(
         qid: np.array(sorted(qrels[qid]), dtype=np.int64) for qid in q_cliques
     }
     if not judged:
-        empty = spark.createDataFrame([], out_schema)
+        empty = local_frame(spark, [], out_schema)
         return _explode_feats(empty, col_names)
 
     # authoritative doclens for every judged doc (postings rows only know
@@ -364,7 +365,7 @@ def extract_features(
             for tid in termids
             if term_by_id[tid] in q_terms[qid]
         ]
-        qdf = spark.createDataFrame(qrows, "qid string, termid long")
+        qdf = local_frame(spark, qrows, "qid string, termid long")
         runs = runs.join(F.broadcast(qdf), "termid")
         shard_of = shard_of_expr(n_shards, n_docs)
         runs = runs.withColumn(
@@ -390,7 +391,7 @@ def extract_features(
                 pass  # stopped session from an earlier SparkSession
         extract_features._cached_scored = scored
     else:
-        scored = spark.createDataFrame([], feat_schema)
+        scored = local_frame(spark, [], feat_schema)
 
     grade_rows = [
         (qid, int(d), float(g))
@@ -398,7 +399,7 @@ def extract_features(
         if qid in q_cliques
         for d, g in js.items()
     ]
-    grades = spark.createDataFrame(grade_rows, "qid string, docno long, grade float")
+    grades = local_frame(spark, grade_rows, "qid string, docno long, grade float")
 
     # judged docs whose shard met no postings row: only the MISSING
     # (qid, docno) pairs come to the driver (left-anti against the
@@ -420,7 +421,7 @@ def extract_features(
         for i, d in enumerate(missing):
             bg_rows.append((qid, int(d), [float(x) for x in feats[i]]))
     if bg_rows:
-        scored = scored.unionByName(spark.createDataFrame(bg_rows, feat_schema))
+        scored = scored.unionByName(local_frame(spark, bg_rows, feat_schema))
 
     out = scored.join(F.broadcast(grades), ["qid", "docno"])
     return _explode_feats(out, col_names)

@@ -51,6 +51,7 @@ from ivory_spark.functions.scoring import (
 from ivory_spark.functions.tokenizer import MAX_TF, get_tokenizer
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
+from ivory_spark.session import local_frame
 
 SHORT_MAX = 32767
 
@@ -751,7 +752,7 @@ def mrf_topk(
         schema = "qid string, rank int, docno long, score float"
         if with_docid:
             schema = "qid string, rank int, docno long, docid string, score float"
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     runs = index.postings.filter(F.col("termid").isin(termids)).select(
         "termid", "n", "first_docno", "last_docno", "blob", "pos_blob"
@@ -762,7 +763,7 @@ def mrf_topk(
         for tid in termids
         if term_by_id[tid] in q_terms[q["qid"]]
     ]
-    qdf = spark.createDataFrame(qrows, "qid string, termid long")
+    qdf = local_frame(spark, qrows, "qid string, termid long")
     runs = runs.join(F.broadcast(qdf), "termid")
     shard_of = shard_of_expr(n_shards, n_docs)
     runs = runs.withColumn(

@@ -1,13 +1,16 @@
 """Warm serving mode: driver-local single-query retrieval.
 
-Spark batch retrieval amortizes the plan+schedule floor (~2 s on this
-host) across a query batch; an ad-hoc single query pays it in full
-(BENCH r01: p50 2.2 s vs 249 ms amortized). This module is the serving
-tier: a long-lived process loads the dictionary and the docid of every
-docno once, and serves every query from memory. Batch BM25 runs the
-same replica inside Spark: each Python worker process keeps one
-searcher across batches and scores its slice of a batch's queries
-with it (query/batch.bm25_topk_serve, which run_batch calls).
+A Spark batch pays a fixed floor whatever its size: planning, one task
+per query slice, and each task's Python worker setup. On the 2,000-doc
+perfbench index (4-vCPU host, warm session) a 1-query run_batch takes
+0.25-0.39 s and a 100-query one 0.32-0.48 s (BENCH_pr11.json), against
+about 0.35 ms for one query served here.
+This module is the serving tier: a long-lived process loads the
+dictionary and the docid of every docno once, and serves every query
+from memory. Batch BM25 runs the same replica inside Spark: each
+Python worker process keeps one searcher across batches and scores its
+slice of a batch's queries with it (query/batch.bm25_topk_serve, which
+run_batch calls).
 
 Memory model of a serving replica (a driver-side process or one Spark
 Python worker):

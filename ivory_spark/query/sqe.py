@@ -62,6 +62,7 @@ from ivory_spark.query.mrf import (
     make_shard_bounds,
     shard_of_expr,
 )
+from ivory_spark.session import local_frame
 
 F32 = np.float32
 K1 = F32(0.5)  # TfDfWeight.java:23
@@ -298,7 +299,7 @@ def sqe_topk(
     out_schema = "qid string, rank int, docno long"
     out_schema += (", docid string" if with_docid else "") + ", score float"
     if not termids:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     cols = ["termid", "n", "first_docno", "last_docno", "blob"]
     if props.get("positional"):
@@ -311,7 +312,7 @@ def sqe_topk(
         for tid in termids
         if term_by_id[tid] in q_terms[qid]
     ]
-    qdf = spark.createDataFrame(qrows, "qid string, termid long")
+    qdf = local_frame(spark, qrows, "qid string, termid long")
     runs = runs.join(F.broadcast(qdf), "termid")
     shard_of = shard_of_expr(n_shards, n_docs)
     runs = runs.withColumn(

@@ -41,6 +41,7 @@ from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
 from ivory_spark.query.batch import bm25_topk_serve
 from ivory_spark.query.exact import query_term_rows
+from ivory_spark.session import local_frame
 
 SEGMENT_BATCH = 32  # segments scored per pruning-check round
 
@@ -258,5 +259,5 @@ def bm25_topk_wand(
         schema = "qid string, rank int, docno long, score float"
         if with_docid:
             schema = "qid string, rank int, docno long, docid string, score float"
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return bm25_topk_serve(spark, index, queries, k=k, with_docid=with_docid)

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -12,6 +13,25 @@ def spark():
 
     s = get_spark("ivory-tests", cores=4, shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """jobs_started(fn) -> (fn(), ids of the Spark jobs fn started). The
+    listener bus is drained first, so a job fn started is counted."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_started_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -18,6 +18,9 @@ WEIGHTED = [
     {"qid": "w1", "terms": [("import", 0.7), ("class", 0.2), ("return", 0.1)]},
     {"qid": "w2", "terms": [("public", 0.5), ("static", 0.5)]},
     {"qid": "w3", "terms": [("zlib_handle", 1.0), ("nonexistent_token_xyzzy", 0.4)]},
+    # float32 holds neither 0.1 nor 1/3: the weights reach Spark as an
+    # Arrow float32 column and must round as numpy rounds them
+    {"qid": "w4", "terms": [("import", 1 / 3), ("class", 2.0), ("static", 0.1)]},
 ]
 
 

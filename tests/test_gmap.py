@@ -98,3 +98,30 @@ def test_spread_partitions_is_adaptive(spark):
     assert spread_partitions(small, 4).rdd.getNumPartitions() == 4
     big = spark.range(0, 100, 1, 8)
     assert spread_partitions(big, 4).rdd.getNumPartitions() == 8  # no-op
+
+
+def test_spread_partitions_runs_no_upstream_stage(spark, jobs_started, tmp_path):
+    """A plan with an Exchange is repartitioned without reading its
+    partition count, which under AQE would run the upstream shuffle; a
+    one-file parquet scan (the tokenizer's input in build and append)
+    still gets its round-robin spread, and a wide one none."""
+    grouped = spark.range(0, 1000, 1, 4).groupBy((F.col("id") % 10).alias("k")).count()
+    spread, jobs = jobs_started(lambda: spread_partitions(grouped, 4))
+    assert jobs == []
+    assert spread.rdd.getNumPartitions() == 4
+    assert sorted(spread.collect()) == sorted(grouped.collect())
+
+    one = str(tmp_path / "one")
+    spark.range(0, 100).coalesce(1).write.parquet(one)
+    scan = spark.read.parquet(one)  # schema inference runs a job of its own
+    spread, jobs = jobs_started(lambda: spread_partitions(scan, 4))
+    assert jobs == []
+    plan = spread._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning(4)" in plan and "FileScan parquet" in plan
+    wide = str(tmp_path / "wide")
+    spark.range(0, 100, 1, 8).write.parquet(wide)
+    scan = spark.read.parquet(wide)
+    n = scan.rdd.getNumPartitions()
+    assert n > 1
+    plan = spread_partitions(scan, n)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan

@@ -121,6 +121,7 @@ def test_serve_batch_snapshot_follows_append_and_refresh(spark, corpora, tmp_pat
     def run(df):
         plan = _plan(df)
         assert "MapInPandas" in plan
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
         assert not re.search(r"\b(Sort|Window|Exchange)\b", plan), plan
         rows = _rows(df)
         assert [r[:2] for r in rows] == sorted(r[:2] for r in rows)
@@ -160,6 +161,7 @@ def test_serve_batch_budget_routes_to_exact(spark, appended, monkeypatch, tmp_pa
     idx, queries = appended
     plan = _plan(run_batch(spark, idx, queries))
     assert "MapInPandas" in plan and "FileScan" not in plan and "Window" not in plan
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
     want = _rows(bm25_topk(spark, idx, queries))
     root = str(tmp_path / "refreshed")
     shutil.copytree(idx.root, root)
@@ -171,3 +173,42 @@ def test_serve_batch_budget_routes_to_exact(spark, appended, monkeypatch, tmp_pa
         plan = _plan(df)
         assert "FileScan parquet" in plan and "Window" in plan
         assert _rows(df) == want
+
+
+def test_all_oov_batch_is_empty_and_its_result_starts_no_job(
+    spark, appended, jobs_started, tmp_path
+):
+    """An all-OOV batch returns no rows, with the column names and types
+    a batch with hits has (the exact plan's rank is not nullable). Where
+    the driver's term lookup finds no term (bm25_topk_wand, bm25_topk,
+    run_batch's other scorers) the result is an empty local frame, and
+    collecting it starts no Spark job. The serve kernel (run_batch's
+    bm25 route) learns of the OOV terms in its workers: one job, over
+    the query slices as a LocalTableScan."""
+    idx, queries = appended
+    root = str(tmp_path / "refreshed")
+    shutil.copytree(idx.root, root)
+    refresh_bounds(spark, root)
+    refreshed = open_index(spark, root)
+    oov = [{"qid": "o1", "query": "zzq_oov_token"}, {"qid": "o2", "query": "zzq_oov zzq_oov_token"}]
+    dirichlet = Model(scorer="dirichlet")
+    for with_docid in (True, False):
+        for call in (
+            lambda qs: bm25_topk_wand(spark, refreshed, qs, with_docid=with_docid),
+            lambda qs: bm25_topk(spark, idx, qs, with_docid=with_docid),
+        ):
+            want = call(queries).schema.simpleString()
+            df = call(oov)
+            rows, jobs = jobs_started(df.collect)
+            assert rows == [] and jobs == [], with_docid
+            assert df.schema.simpleString() == want, with_docid
+    want = run_batch(spark, idx, queries, dirichlet).schema.simpleString()
+    df = run_batch(spark, idx, oov, dirichlet)
+    rows, jobs = jobs_started(df.collect)
+    assert rows == [] and jobs == [] and df.schema.simpleString() == want
+    df = run_batch(spark, idx, oov)
+    rows, jobs = jobs_started(df.collect)
+    assert rows == [] and len(jobs) == 1
+    assert df.schema == run_batch(spark, idx, queries).schema
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
