@@ -1,11 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 queries() exposes the index, retrieval, dedup and similarity operators
-from SURVEY.md §2, plus the text-statistics, PII, sampling, packing,
-BPE, DSIR and domain operators that have not been deleted yet, over the
-driver's testdata tables; oracle_sql() gives a DuckDB-runnable SQL twin
-for every one, with identical column names and rounded floats. The
-engine-native paths (float32 BM25/WAND, SD, cascade, PRF, SQE, LTR) are
+from SURVEY.md §2, plus the text-statistics operators that have not been
+deleted yet, over the driver's testdata tables; oracle_sql() gives a
+DuckDB-runnable SQL twin for every one, with identical column names and
+rounded floats. The engine-native paths (float32 BM25/WAND, SD, cascade, PRF, SQE, LTR) are
 checked against float32-emulating DuckDB SQL; their bit-exact gates
 against the numpy oracle live in tests/.
 """
@@ -18,13 +17,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ivory_spark.ops import bpe as BP
 from ivory_spark.ops import dedup as D
-from ivory_spark.ops import dsir as DS
-from ivory_spark.ops import domains as DOM
 from ivory_spark.ops import ir_relational as IR
-from ivory_spark.ops import pii as PII
-from ivory_spark.ops import sampling as SP
 from ivory_spark.ops import similarity as SIM
 from ivory_spark.ops import textstats as TS
 from ivory_spark.sources.testdata import documents_as_corpus, read_table
@@ -184,77 +178,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _docs(spark, sf_dir):
     return read_table(spark, sf_dir, "documents")
-
-
-def _docs_pii(spark, sf_dir):
-    """documents with deterministic PII injected (the synthetic text has
-    no emails/phones/IPs, which would leave the PII gates all-zero):
-    every 3rd doc gains two emails, every 4th an international phone,
-    every 5th an IPv4 — so the gates exercise multi-match counting,
-    redaction order, and the untouched-text path on one table. The
-    DuckDB twin applies the identical concatenation."""
-    d = _docs(spark, sf_dir)
-    t = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.lit(" contact alice.smith+spam@mail.example.org or Bob.J@EX.co now"),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 4 == 0, F.lit(" call +1 555-867 5309 today")
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 5 == 0, F.lit(" host 10.0.254.7 responded")
-        ).otherwise(F.lit("")),
-    )
-    return d.select("doc_id", t.alias("text"))
-
-
-# DuckDB twin of _docs_pii's text expression
-_SQL_PII_TEXT = (
-    "text"
-    " || CASE WHEN doc_id % 3 = 0 THEN"
-    " ' contact alice.smith+spam@mail.example.org or Bob.J@EX.co now' ELSE '' END"
-    " || CASE WHEN doc_id % 4 = 0 THEN ' call +1 555-867 5309 today' ELSE '' END"
-    " || CASE WHEN doc_id % 5 = 0 THEN ' host 10.0.254.7 responded' ELSE '' END"
-)
-
-# gate parameters for the sampling suite (shared by queries() and oracle_sql())
-_SPLIT_WEIGHTS = {"train": 8.0, "val": 1.0, "test": 1.0}
-_MIX_RATES = {"src0": 0.9, "src1": 0.5, "src2": 0.25, "src3": 1.0}
-# per-source epoch counts for the upsampling gate: covers >1 whole part,
-# frac-only (0.75 drops some docs entirely), and integer (no frac branch)
-_EPOCHS = {"src0": 2.5, "src1": 1.25, "src2": 0.75, "src3": 3.0}
-
-# BPE gate fixture: 24 merges learned by ops/bpe.train_bpe from the
-# sf0.01 documents word counts (deterministic: count desc, pair-lex
-# tie-break) — pinned here so the oracle can replay them as literal
-# string replaces. All merges have a != b (encode_fingerprint
-# precondition). Recorded in FIXTURES.md.
-_BPE_MERGES = [
-    ("e", "r"), ("e", "</w>"), ("n", "</w>"), ("er", "</w>"), ("o", "w"),
-    ("ow", "</w>"), ("o", "r"), ("s", "t"), ("h", "</w>"), ("a", "t"),
-    ("l", "u"), ("i", "n"), ("a", "</w>"), ("g", "</w>"), ("y", "</w>"),
-    ("a", "r"), ("p", "ar"), ("t", "</w>"), ("i", "n</w>"), ("j", "o"),
-    ("jo", "in</w>"), ("a", "s"), ("as", "h</w>"), ("h", "ash</w>"),
-]
-
-# DSIR gate parameters: 64 hash buckets (the oracle recomputes the full
-# fit in SQL via generate_series, so the bucket table is never injected
-# as literals), target = two of the twenty synthetic sources.
-_DSIR_BUCKETS = 64
-_DSIR_TARGET = ("src0", "src1")
-
-
-def _pii_redact_fp(spark, sf_dir):
-    """redact_pii projected to a hashable gate shape: (doc_id, fp16 =
-    md5 prefix of the redacted text, n_chars)."""
-    r = PII.redact_pii(_docs_pii(spark, sf_dir))
-    return r.select(
-        "doc_id",
-        F.substring(F.md5("text"), 1, 16).alias("fp16"),
-        F.length("text").cast("int").alias("n_chars"),
-    )
 
 
 def _source_fingerprint(sf_dir: str) -> str:
@@ -1518,268 +1441,6 @@ SELECT qid, rank, vec_id, cosine FROM (
 """
 
 
-def _sql_u60(salt: str, key: str = "doc_id") -> str:
-    """DuckDB twin of ops/sampling._u: 60-bit md5 hash scaled to [0,1)
-    by the exact power-of-two 2^60."""
-    return (
-        f"(('0x' || substr(md5('{salt}:' || {key}::VARCHAR), 1, 15))::BIGINT"
-        " / 1152921504606846976.0)"
-    )
-
-
-def _sql_pii_stats() -> str:
-    e, p, i = PII.EMAIL_RE, PII.PHONE_RE, PII.IPV4_RE
-    return f"""
-WITH t AS (SELECT doc_id, {_SQL_PII_TEXT} AS t FROM documents),
-c AS (SELECT doc_id,
-  len(regexp_extract_all(t, '{e}'))::INT AS n_emails,
-  len(regexp_extract_all(t, '{p}'))::INT AS n_phones,
-  len(regexp_extract_all(t, '{i}'))::INT AS n_ipv4 FROM t)
-SELECT doc_id, n_emails, n_phones, n_ipv4,
-       (n_emails + n_phones + n_ipv4 > 0) AS has_pii FROM c"""
-
-
-def _sql_pii_redact() -> str:
-    e, p, i = PII.EMAIL_RE, PII.PHONE_RE, PII.IPV4_RE
-    red = (
-        f"regexp_replace(regexp_replace(regexp_replace({_SQL_PII_TEXT}, "
-        f"'{e}', '<EMAIL>', 'g'), '{p}', '<PHONE>', 'g'), '{i}', '<IP>', 'g')"
-    )
-    return (
-        f"SELECT doc_id, substr(md5({red}), 1, 16) AS fp16, "
-        f"length({red})::INT AS n_chars FROM documents"
-    )
-
-
-def _sql_hash_split() -> str:
-    cases = " ".join(
-        f"WHEN u < {acc!r}::DOUBLE THEN '{name}'"
-        for name, acc in SP.split_boundaries(_SPLIT_WEIGHTS)
-    )
-    last = list(_SPLIT_WEIGHTS)[-1]
-    return (
-        f"WITH u AS (SELECT doc_id, {_sql_u60('split')} AS u FROM documents) "
-        f"SELECT doc_id, CASE {cases} ELSE '{last}' END AS split FROM u"
-    )
-
-
-def _sql_mixture_sample() -> str:
-    cases = " ".join(f"WHEN '{s}' THEN {r!r}::DOUBLE" for s, r in _MIX_RATES.items())
-    return (
-        f"SELECT doc_id, source FROM documents "
-        f"WHERE {_sql_u60('mix')} < CASE source {cases} ELSE 0.0::DOUBLE END"
-    )
-
-
-def _sql_pack_sequences(budget: int = 256, n_shards: int = 4) -> str:
-    return f"""
-WITH b AS (SELECT doc_id,
-    (('0x' || substr(md5('shard:' || doc_id::VARCHAR), 1, 15))::BIGINT % {n_shards})::INT AS shard,
-    len(list_filter(string_split(lower(text), ' '), x -> x <> ''))::BIGINT AS n_tokens
-  FROM documents),
-p AS (SELECT doc_id, shard, n_tokens,
-    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS tok_start
-  FROM b)
-SELECT doc_id, shard, n_tokens, tok_start,
-  (tok_start // {budget})::BIGINT AS seq_first,
-  (CASE WHEN n_tokens > 0 THEN (tok_start + n_tokens - 1) // {budget}
-        ELSE tok_start // {budget} END)::BIGINT AS seq_last,
-  (tok_start % {budget})::BIGINT AS offset_in_seq
-FROM p"""
-
-
-def _sql_materialize_sequences(
-    budget: int = 64,
-    n_shards: int = 4,
-    bounds: bool = False,
-    prelude: str = "",
-    src: str = "documents",
-) -> str:
-    """DuckDB twin of ops/sampling.materialize_sequences: same layout
-    CTEs as _sql_pack_sequences, then LATERAL generate_series over the
-    touched sequences, 1-based inclusive list slices, and an ordered
-    string_agg per (shard, seq). bounds=True swaps the projection for
-    the comma-joined document-boundary offsets (empty string for a
-    wholly mid-document sequence, matching Spark's array_join)."""
-    b = budget
-    proj = (
-        """coalesce(string_agg(boundary::VARCHAR, ',' ORDER BY tok_start)
-        FILTER (WHERE boundary IS NOT NULL), '') AS bounds"""
-        if bounds
-        else """string_agg(array_to_string(piece, ' '), ' ' ORDER BY tok_start) AS text,
-    sum(len(piece)) AS n_tokens"""
-    )
-    final = (
-        "SELECT shard, seq::BIGINT AS seq, bounds FROM s"
-        if bounds
-        else "SELECT shard, seq::BIGINT AS seq, n_tokens::INT AS n_tokens,\n"
-        "       substr(md5(text), 1, 16) AS fp16 FROM s"
-    )
-    return f"""
-WITH {prelude}t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-  FROM {src}),
-base AS (SELECT doc_id,
-    (('0x' || substr(md5('shard:' || doc_id::VARCHAR), 1, 15))::BIGINT % {n_shards})::INT AS shard,
-    len(toks)::BIGINT AS n_tokens, toks FROM t),
-p AS (SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS tok_start
-  FROM base),
-x AS (SELECT shard, tok_start, n_tokens, toks, gs AS seq
-  FROM p, LATERAL (SELECT unnest(generate_series(tok_start // {b},
-       (tok_start + n_tokens - 1) // {b})) AS gs) l
-  WHERE n_tokens > 0),
-pieces AS (SELECT shard, seq, tok_start,
-    toks[(greatest(0, seq * {b} - tok_start) + 1):least(n_tokens, (seq + 1) * {b} - tok_start)] AS piece,
-    CASE WHEN tok_start >= seq * {b} THEN (tok_start - seq * {b})::INT END AS boundary
-  FROM x),
-s AS (SELECT shard, seq, {proj} FROM pieces GROUP BY shard, seq)
-{final}"""
-
-
-def _sql_weighted_sample() -> str:
-    """DuckDB twin of ops/sampling.weighted_sample over quality_score:
-    same 6-dp quality formula as the text_quality oracle, then the
-    survive-iff-u<p filter (quality is already in [0,1]; the clamp is a
-    no-op both sides)."""
-    stop_list = ", ".join(f"'{s}'" for s in TS.STOPWORDS_EN)
-    return f"""
-WITH {TOKS},
-agg AS (SELECT doc_id, count(*) AS n,
-               sum(CASE WHEN term IN ({stop_list}) THEN 1 ELSE 0 END) AS ns,
-               count(DISTINCT term) AS nd
-        FROM toks GROUP BY doc_id),
-q AS (SELECT doc_id,
-        round(((CASE WHEN n >= 10 AND n <= 100000 THEN 1.0 ELSE 0.0 END)
-               + least(ns / greatest(n, 1) * 5.0, 1.0)
-               + nd / greatest(n, 1)) / 3.0, 6) AS quality
-      FROM agg)
-SELECT doc_id, quality FROM q WHERE {_sql_u60('wsample')} < quality"""
-
-
-def _sql_assemble_pipeline(budget: int = 64, n_shards: int = 4) -> str:
-    """DuckDB twin of ops/sampling.assemble_corpus(_MIX_RATES, _EPOCHS):
-    mixture filter -> epoch copies with derived ids -> the materialize
-    chain over the upsampled CTE."""
-    mix_cases = " ".join(
-        f"WHEN '{s}' THEN {r!r}::DOUBLE" for s, r in _MIX_RATES.items()
-    )
-    whole_cases = " ".join(
-        f"WHEN '{s}' THEN {int(float(e))}" for s, e in _EPOCHS.items()
-    )
-    frac_cases = " ".join(
-        f"WHEN '{s}' THEN {float(e) - int(float(e))!r}::DOUBLE"
-        for s, e in _EPOCHS.items()
-    )
-    k = int(max(float(e) for e in _EPOCHS.values())) + 1
-    prelude = f"""mix AS (SELECT doc_id, source, text FROM documents
-  WHERE {_sql_u60('mix')} < CASE source {mix_cases} ELSE 0.0::DOUBLE END),
-eu AS (SELECT doc_id, text,
-    (CASE source {whole_cases} ELSE 0 END
-     + CASE WHEN {_sql_u60('epoch')} < CASE source {frac_cases} ELSE 0.0::DOUBLE END
-            THEN 1 ELSE 0 END) AS n
-  FROM mix),
-up AS (SELECT doc_id * {k} + (gs - 1) AS doc_id, text
-  FROM eu, LATERAL (SELECT unnest(generate_series(1, n)) AS gs) l),
-"""
-    return _sql_materialize_sequences(budget, n_shards, prelude=prelude, src="up")
-
-
-def _sql_corpus_shuffle(n_buckets: int = 8) -> str:
-    """DuckDB twin of ops/sampling.corpus_shuffle: a plain global
-    row_number over (key, doc_id) — equal to Spark's bucketed
-    offset+rank because buckets are contiguous hash ranges."""
-    bits = n_buckets.bit_length() - 1
-    return f"""
-WITH k AS (SELECT doc_id,
-    ('0x' || substr(md5('shuffle:' || doc_id::VARCHAR), 1, 15))::BIGINT AS key
-  FROM documents)
-SELECT doc_id, (key >> {60 - bits})::INT AS bucket,
-       (row_number() OVER (ORDER BY key, doc_id) - 1)::BIGINT AS pos
-FROM k"""
-
-
-def _sql_epoch_upsample() -> str:
-    whole_cases = " ".join(
-        f"WHEN '{s}' THEN {int(float(e))}" for s, e in _EPOCHS.items()
-    )
-    frac_cases = " ".join(
-        f"WHEN '{s}' THEN {float(e) - int(float(e))!r}::DOUBLE"
-        for s, e in _EPOCHS.items()
-    )
-    return f"""
-WITH c AS (SELECT doc_id, source,
-    (CASE source {whole_cases} ELSE 0 END
-     + CASE WHEN {_sql_u60('epoch')} < CASE source {frac_cases} ELSE 0.0::DOUBLE END
-            THEN 1 ELSE 0 END) AS n
-  FROM documents)
-SELECT doc_id, source, (gs - 1)::INT AS epoch
-FROM c, LATERAL (SELECT unnest(generate_series(1, n)) AS gs) l"""
-
-
-def _docs_url(spark, sf_dir):
-    """domain-gate input: documents with a deterministic URL injected
-    (the synthetic table has none) — seven siteN.example.com hosts by
-    doc_id%7, every 13th doc scheme-less so the empty-domain path is
-    exercised. The DuckDB twin concatenates identically."""
-    d = _docs(spark, sf_dir)
-    url = F.when(
-        F.col("doc_id") % 13 == 0,
-        F.concat(F.lit("bare.example/path/"), F.col("doc_id").cast("string")),
-    ).otherwise(
-        F.concat(
-            F.lit("https://site"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit(".example.com/a/"),
-            F.col("doc_id").cast("string"),
-        )
-    )
-    return d.select("doc_id", url.alias("url"), "text")
-
-
-# DuckDB twin of _docs_url's url expression
-_SQL_URL = (
-    "CASE WHEN doc_id % 13 = 0 THEN 'bare.example/path/' || doc_id::VARCHAR"
-    " ELSE 'https://site' || (doc_id % 7)::VARCHAR || '.example.com/a/'"
-    " || doc_id::VARCHAR END"
-)
-
-# shared CTE: url injection + domain extraction (twin of extract_domain)
-_SQL_DOMAIN_CTE = f"""
-u AS (SELECT doc_id, {_SQL_URL} AS url, text FROM documents),
-d AS (SELECT doc_id, lower(regexp_extract(url, '{DOM.DOMAIN_RE}', 1)) AS domain, text
-      FROM u)"""
-
-
-def _sql_domain_stats() -> str:
-    return f"""
-WITH {_SQL_DOMAIN_CTE}
-SELECT domain, count(*)::INT AS n_docs, sum(length(text))::BIGINT AS n_chars
-FROM d GROUP BY domain"""
-
-
-def _sql_domain_cap(max_docs: int = 20) -> str:
-    return f"""
-WITH {_SQL_DOMAIN_CTE},
-r AS (SELECT doc_id, row_number() OVER (PARTITION BY domain
-        ORDER BY {_sql_u60("domain-cap")}, doc_id) AS rn FROM d)
-SELECT doc_id FROM r WHERE rn <= {max_docs}"""
-
-
-def _sql_domain_cap_approx(max_docs: int = 20) -> str:
-    return f"""
-WITH {_SQL_DOMAIN_CTE},
-c AS (SELECT domain, count(*) AS cnt FROM d GROUP BY domain)
-SELECT doc_id FROM d JOIN c USING (domain)
-WHERE {_sql_u60("domain-cap")} < least(1.0, {float(max_docs)!r} / cnt)"""
-
-
-def _sql_domain_blocklist(blocked: str) -> str:
-    return f"""
-WITH {_SQL_DOMAIN_CTE}
-SELECT doc_id FROM d WHERE domain <> '{blocked}'"""
-
-
 def _sql_cluster_reps(threshold: float = 0.8) -> str:
     """DuckDB twin of cluster_representatives over the minhash duplicate
     clusters: quality-ranked representative per cluster (row_number by
@@ -1806,203 +1467,6 @@ SELECT cluster_id, doc_id, quality FROM (
   FROM scored) WHERE rn = 1"""
 
 
-# ---------------------------------------------------------------------------
-# BPE tokenizer + DSIR importance-resampling gates
-# ---------------------------------------------------------------------------
-
-
-def _dsir_logratio(spark, sf_dir) -> list[int]:
-    """Fit the quantized per-bucket log-ratio on (target = _DSIR_TARGET
-    sources, raw = all documents) — the model half of the DSIR gates."""
-    d = _docs(spark, sf_dir)
-    tgt = d.filter(F.col("source").isin(*_DSIR_TARGET))
-    return DS.fit_logratio(
-        DS.ngram_bucket_counts(tgt, _DSIR_BUCKETS),
-        DS.ngram_bucket_counts(d, _DSIR_BUCKETS),
-        _DSIR_BUCKETS,
-    )
-
-
-def _lm_nll(spark, sf_dir):
-    """CCNet-style perplexity filter gate: reference model fit on the
-    _DSIR_TARGET sources, mean NLL scored over every document."""
-    d = _docs(spark, sf_dir)
-    ref = d.filter(F.col("source").isin(*_DSIR_TARGET))
-    lp = DS.fit_logprob(
-        DS.ngram_bucket_counts(ref, _DSIR_BUCKETS), _DSIR_BUCKETS
-    )
-    return DS.lm_perplexity(d, lp)
-
-
-def _sql_lm_nll() -> str:
-    """DuckDB twin of _lm_nll: the dsir gram/bucket CTEs, a log-prob
-    table over all buckets fit on the reference sources (floor(x+0.5)
-    micro-nat quantization), then nll = -sum(lp)/(n*QUANT) — a ratio of
-    exact integers, rounded to 6 dp like the Spark side."""
-    b, q = _DSIR_BUCKETS, DS.QUANT
-    tgt = ", ".join(f"'{s}'" for s in _DSIR_TARGET)
-    return f"""
-WITH w AS (SELECT doc_id, source,
-    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-  FROM documents),
-uni AS (SELECT doc_id, source, unnest(ws) AS gram FROM w),
-bi AS (SELECT doc_id, source, ws[gs] || ' ' || ws[gs+1] AS gram
-       FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS gs) l),
-grams AS (SELECT * FROM uni UNION ALL SELECT * FROM bi),
-bk AS (SELECT doc_id, source,
-    (('0x' || substr(md5('dsir:' || gram), 1, 15))::BIGINT % {b})::INT AS bucket
-  FROM grams),
-tb AS (SELECT bucket, count(*)::BIGINT AS c FROM bk WHERE source IN ({tgt}) GROUP BY 1),
-tt AS (SELECT count(*)::DOUBLE + {b} AS t FROM bk WHERE source IN ({tgt})),
-lp AS (SELECT gs.g::INT AS bucket,
-    floor({q} * ln((coalesce(tb.c, 0) + 1) / tt.t) + 0.5)::BIGINT AS lp
-  FROM (SELECT unnest(generate_series(0, {b - 1})) AS g) gs
-  LEFT JOIN tb ON tb.bucket = gs.g, tt)
-SELECT bk.doc_id, count(*)::BIGINT AS n_grams,
-       round(-sum(lp.lp) / (count(*) * {q}.0), 6) AS nll
-FROM bk JOIN lp USING (bucket) GROUP BY bk.doc_id"""
-
-
-def _sql_bpe_encode_fixed() -> str:
-    """DuckDB twin of ops/bpe.encode_fingerprint(_BPE_MERGES): doc-level
-    space-joined char stream, each merge replayed as TWO literal
-    ' a b ' -> ' ab ' replaces (two passes == the per-word left-to-right
-    scan for a != b merges; see ops/bpe.encode_fingerprint)."""
-    expr = "' ' || stream || ' '"
-    for a, b in _BPE_MERGES:
-        for _ in range(2):
-            expr = f"replace({expr}, ' {a} {b} ', ' {a}{b} ')"
-    return rf"""
-WITH s AS (SELECT doc_id,
-  coalesce(list_aggregate(list_transform(
-      list_filter(string_split(lower(text), ' '), w -> w <> ''),
-      w -> rtrim(regexp_replace(w, '(.)', '\1 ', 'g')) || ' </w>'),
-    'string_agg', ' '), '') AS stream
-  FROM documents),
-enc AS (SELECT doc_id, trim({expr}) AS enc FROM s)
-SELECT doc_id,
-       (CASE WHEN enc = '' THEN 0 ELSE len(string_split(enc, ' ')) END)::INT
-         AS n_tokens,
-       substr(md5(enc), 1, 16) AS enc_fp
-FROM enc"""
-
-
-def _pack_materialize_ids(spark, sf_dir):
-    """materialize_token_sequences over SQL-reproducible synthetic token
-    ids (h60('tokid:'||word) % 1000 per whitespace token) so the packed
-    id sequences hash-compare against the DuckDB twin. The real
-    producer is ops/bpe.encode, whose merge semantics carry their own
-    gate (bpe_encode_fixed); this gate pins the id-array packing."""
-    d = _docs(spark, sf_dir)
-    toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
-    ids = F.transform(
-        toks, lambda w: (SP._h60("tokid", w) % F.lit(1000)).cast("int")
-    )
-    enc = d.select("doc_id", ids.alias("token_ids"))
-    out = SP.materialize_token_sequences(enc, budget=64, n_shards=4)
-    return out.select(
-        "shard",
-        "seq",
-        "n_tokens",
-        F.array_join(
-            F.transform("boundaries", lambda o: o.cast("string")), ","
-        ).alias("bounds"),
-        F.substring(
-            F.md5(
-                F.array_join(
-                    F.transform("token_ids", lambda i: i.cast("string")), ","
-                )
-            ),
-            1,
-            16,
-        ).alias("ids_fp"),
-    )
-
-
-def _sql_materialize_token_sequences(budget: int = 64, n_shards: int = 4) -> str:
-    """DuckDB twin of _pack_materialize_ids: the materialize CTE chain
-    with list_transform'd synthetic token ids and a comma-joined
-    ordered id-string aggregation (string_agg of per-piece
-    array_to_string == array_join of the flattened id array because
-    every piece is non-empty)."""
-    b = budget
-    return f"""
-WITH t AS (SELECT doc_id,
-    list_transform(list_filter(string_split(lower(text), ' '), x -> x <> ''),
-      w -> (('0x' || substr(md5('tokid:' || w), 1, 15))::BIGINT % 1000)::INT) AS toks
-  FROM documents),
-base AS (SELECT doc_id,
-    (('0x' || substr(md5('shard:' || doc_id::VARCHAR), 1, 15))::BIGINT % {n_shards})::INT AS shard,
-    len(toks)::BIGINT AS n_tokens, toks FROM t),
-p AS (SELECT *, coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS tok_start
-  FROM base),
-x AS (SELECT shard, tok_start, n_tokens, toks, gs AS seq
-  FROM p, LATERAL (SELECT unnest(generate_series(tok_start // {b},
-       (tok_start + n_tokens - 1) // {b})) AS gs) l
-  WHERE n_tokens > 0),
-pieces AS (SELECT shard, seq, tok_start,
-    toks[(greatest(0, seq * {b} - tok_start) + 1):least(n_tokens, (seq + 1) * {b} - tok_start)] AS piece,
-    CASE WHEN tok_start >= seq * {b} THEN (tok_start - seq * {b})::INT END AS boundary
-  FROM x),
-s AS (SELECT shard, seq,
-    string_agg(array_to_string(piece, ','), ',' ORDER BY tok_start) AS idstr,
-    sum(len(piece)) AS n_tokens,
-    coalesce(string_agg(boundary::VARCHAR, ',' ORDER BY tok_start)
-      FILTER (WHERE boundary IS NOT NULL), '') AS bounds
-  FROM pieces GROUP BY shard, seq)
-SELECT shard, seq::BIGINT AS seq, n_tokens::INT AS n_tokens, bounds,
-       substr(md5(idstr), 1, 16) AS ids_fp FROM s"""
-
-
-def _sql_dsir(final: str) -> str:
-    """Shared DuckDB body for the DSIR gates: hashed unigram+bigram
-    bucket counts, the full smoothed log-ratio fit recomputed in SQL
-    (generate_series over all buckets, floor(x + 0.5) micro-nat
-    quantization — the ops/dsir.fit_logratio semantics), exact int64
-    per-doc scores."""
-    b, q = _DSIR_BUCKETS, DS.QUANT
-    tgt = ", ".join(f"'{s}'" for s in _DSIR_TARGET)
-    return f"""
-WITH w AS (SELECT doc_id, source,
-    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-  FROM documents),
-uni AS (SELECT doc_id, source, unnest(ws) AS gram FROM w),
-bi AS (SELECT doc_id, source, ws[gs] || ' ' || ws[gs+1] AS gram
-       FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS gs) l),
-grams AS (SELECT * FROM uni UNION ALL SELECT * FROM bi),
-bk AS (SELECT doc_id, source,
-    (('0x' || substr(md5('dsir:' || gram), 1, 15))::BIGINT % {b})::INT AS bucket
-  FROM grams),
-cnt AS (SELECT doc_id, bucket, count(*)::BIGINT AS cnt FROM bk GROUP BY 1, 2),
-tb AS (SELECT bucket, count(*)::BIGINT AS c FROM bk WHERE source IN ({tgt}) GROUP BY 1),
-rb AS (SELECT bucket, count(*)::BIGINT AS c FROM bk GROUP BY 1),
-tt AS (SELECT count(*)::DOUBLE + {b} AS t FROM bk WHERE source IN ({tgt})),
-rt AS (SELECT count(*)::DOUBLE + {b} AS t FROM bk),
-lr AS (SELECT gs.g::INT AS bucket,
-    floor({q} * ln(((coalesce(tb.c, 0) + 1) / tt.t)
-                   / ((coalesce(rb.c, 0) + 1) / rt.t)) + 0.5)::BIGINT AS lr
-  FROM (SELECT unnest(generate_series(0, {b - 1})) AS g) gs
-  LEFT JOIN tb ON tb.bucket = gs.g LEFT JOIN rb ON rb.bucket = gs.g, tt, rt),
-sc AS (SELECT c.doc_id, sum(c.cnt * l.lr)::BIGINT AS score
-       FROM cnt c JOIN lr l USING (bucket) GROUP BY 1)
-{final}"""
-
-
-def _sql_dsir_scores() -> str:
-    return _sql_dsir("SELECT doc_id, score FROM sc")
-
-
-def _sql_dsir_top50() -> str:
-    q = DS.QUANT
-    return _sql_dsir(
-        f""", k AS (SELECT doc_id, score,
-    score / {q}.0 + (-ln(-ln({_sql_u60('gumbel:dsir')}))) AS key FROM sc)
-SELECT doc_id, score, round(key, 6) AS key FROM k
-ORDER BY key DESC, doc_id LIMIT 50"""
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- IR pipeline (SURVEY.md §2: A1-A8, F1/F2/F5, K1/K2, J4/J5, P1) ---
@@ -2026,15 +1490,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": lambda s, d: D.simhash(_docs(s, d)),
         "dedup_simhash_pairs": lambda s, d: D.simhash_pairs(D.simhash(_docs(s, d)), max_hamming=2),
         "dedup_ngram_jaccard": lambda s, d: D.ngram_jaccard_pairs(_docs(s, d), threshold=0.5),
-        "domain_stats": lambda s, d: DOM.domain_stats(_docs_url(s, d)),
-        "domain_cap": lambda s, d: DOM.cap_per_domain(_docs_url(s, d), 20).select("doc_id"),
-        "domain_cap_approx": lambda s, d: DOM.cap_per_domain_approx(
-            _docs_url(s, d), 20
-        ).select("doc_id"),
-        "domain_blocklist": lambda s, d: DOM.filter_blocklist(
-            _docs_url(s, d),
-            s.createDataFrame([("site3.example.com",)], ["domain"]),
-        ).select("doc_id"),
         "dedup_cluster_reps": lambda s, d: D.cluster_representatives(
             D.dedup_clusters(D.minhash_dedup_pairs(_docs(s, d), threshold=0.8)),
             TS.quality_score(_docs(s, d)).select("doc_id", "quality"),
@@ -2055,54 +1510,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": lambda s, d: TS.quality_score(_docs(s, d)),
         "text_langid": lambda s, d: TS.langid(_docs(s, d)),
         "text_fingerprint": lambda s, d: TS.fingerprint(_docs(s, d)),
-        # --- pipeline assembly: PII / sampling / packing ------------------
-        "pii_stats": lambda s, d: PII.pii_stats(_docs_pii(s, d)),
-        "pii_redact": _pii_redact_fp,
-        "sample_hash_split": lambda s, d: SP.hash_split(
-            _docs(s, d), _SPLIT_WEIGHTS
-        ).select("doc_id", "split"),
-        "sample_mixture": lambda s, d: SP.mixture_sample(_docs(s, d), _MIX_RATES).select(
-            "doc_id", "source"
-        ),
-        "pack_sequences": lambda s, d: SP.pack_sequences(_docs(s, d), budget=256, n_shards=4),
-        "pack_materialize": lambda s, d: SP.materialize_sequences(
-            _docs(s, d), budget=64, n_shards=4
-        ).select(
-            "shard", "seq", "n_tokens", F.substring(F.md5("text"), 1, 16).alias("fp16")
-        ),
-        "pack_materialize_bounds": lambda s, d: SP.materialize_sequences(
-            _docs(s, d), budget=64, n_shards=4
-        ).select(
-            "shard",
-            "seq",
-            F.array_join(
-                F.transform("boundaries", lambda o: o.cast("string")), ","
-            ).alias("bounds"),
-        ),
-        "sample_corpus_shuffle": lambda s, d: SP.corpus_shuffle(_docs(s, d), n_buckets=8),
-        "sample_epoch_upsample": lambda s, d: SP.epoch_upsample(
-            _docs(s, d), _EPOCHS
-        ).select("doc_id", "source", "epoch"),
-        "sample_weighted": lambda s, d: SP.weighted_sample(
-            TS.quality_score(_docs(s, d)).select("doc_id", "quality"), "quality"
-        ),
-        "pack_materialize_ids": _pack_materialize_ids,
-        "bpe_word_counts": lambda s, d: BP.word_counts(_docs(s, d)),
-        "bpe_encode_fixed": lambda s, d: BP.encode_fingerprint(
-            _docs(s, d), _BPE_MERGES
-        ),
-        "dsir_scores": lambda s, d: DS.dsir_score(
-            _docs(s, d), _dsir_logratio(s, d)
-        ),
-        "dsir_top50": lambda s, d: DS.dsir_resample(
-            _docs(s, d), _dsir_logratio(s, d), k=50
-        ),
-        "lm_perplexity_nll": _lm_nll,
-        "assemble_pipeline": lambda s, d: SP.assemble_corpus(
-            _docs(s, d), budget=64, rates=_MIX_RATES, epochs=_EPOCHS, n_shards=4
-        ).select(
-            "shard", "seq", "n_tokens", F.substring(F.md5("text"), 1, 16).alias("fp16")
-        ),
         # --- engine-native (float32 kernels; DuckDB float32-emulating oracles)
         "engine_bm25_top10": _engine_bm25_top10,
         "engine_nl_bm25_top10": _engine_nl_bm25_top10,
@@ -2259,29 +1666,7 @@ SELECT doc_id, len(p)::INT AS n_pieces,
          AS pieces_per_ws_token
 FROM b""",
         "text_langid": _sql_langid(),
-        "pii_stats": _sql_pii_stats(),
-        "pii_redact": _sql_pii_redact(),
-        "sample_hash_split": _sql_hash_split(),
-        "sample_mixture": _sql_mixture_sample(),
-        "pack_sequences": _sql_pack_sequences(256, 4),
-        "pack_materialize": _sql_materialize_sequences(64, 4),
-        "pack_materialize_bounds": _sql_materialize_sequences(64, 4, bounds=True),
-        "sample_corpus_shuffle": _sql_corpus_shuffle(8),
-        "sample_epoch_upsample": _sql_epoch_upsample(),
-        "sample_weighted": _sql_weighted_sample(),
-        "pack_materialize_ids": _sql_materialize_token_sequences(64, 4),
-        "bpe_word_counts": "WITH " + TOKS + " SELECT term AS word, "
-        "count(*)::BIGINT AS cnt FROM toks GROUP BY term",
-        "bpe_encode_fixed": _sql_bpe_encode_fixed(),
-        "dsir_scores": _sql_dsir_scores(),
-        "dsir_top50": _sql_dsir_top50(),
-        "lm_perplexity_nll": _sql_lm_nll(),
-        "assemble_pipeline": _sql_assemble_pipeline(64, 4),
         "dedup_cluster_reps": _sql_cluster_reps(0.8),
-        "domain_stats": _sql_domain_stats(),
-        "domain_cap": _sql_domain_cap(20),
-        "domain_cap_approx": _sql_domain_cap_approx(20),
-        "domain_blocklist": _sql_domain_blocklist("site3.example.com"),
         "text_fingerprint": "SELECT doc_id, substr(md5(array_to_string("
         "list_filter(string_split(lower(text), ' '), x -> x <> ''), ' ')), 1, 16) AS fp16 "
         "FROM documents",

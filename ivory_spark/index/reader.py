@@ -14,7 +14,12 @@ import json
 import os
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the footer key under which Spark stores the row schema it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -50,6 +55,19 @@ class Index:
         )
 
 
+def _read_artifact(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path) under the schema Spark wrote into the
+    footer of the first data file ('.' and '_' files are not data).
+    Given a schema, the read starts no Spark job to infer one."""
+    first = min(
+        e.name for e in os.scandir(path)
+        if e.is_file() and not e.name.startswith((".", "_"))
+    )
+    meta = pq.read_metadata(os.path.join(path, first)).metadata
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
+
+
 def open_index(spark: SparkSession, index_root: str) -> Index:
     with open(os.path.join(index_root, "properties.json")) as f:
         props = json.load(f)
@@ -68,8 +86,8 @@ def open_index(spark: SparkSession, index_root: str) -> Index:
     return Index(
         root=index_root,
         properties=props,
-        docmap=spark.read.parquet(os.path.join(index_root, "docmap")),
-        doclens=spark.read.parquet(os.path.join(index_root, "doclens")),
-        dictionary=spark.read.parquet(os.path.join(index_root, "dictionary")),
-        postings=spark.read.parquet(os.path.join(index_root, "postings")),
+        docmap=_read_artifact(spark, os.path.join(index_root, "docmap")),
+        doclens=_read_artifact(spark, os.path.join(index_root, "doclens")),
+        dictionary=_read_artifact(spark, os.path.join(index_root, "dictionary")),
+        postings=_read_artifact(spark, os.path.join(index_root, "postings")),
     )

