@@ -12,14 +12,16 @@ Stage map to the reference (see SURVEY.md §3.1):
                  rank by df desc, term asc, starting at 1)
   postings   <- BuildIPInvertedIndexDocSorted (core/index/
                 BuildIPInvertedIndexDocSorted.java:220-226: partition by
-                termid, sort by (termid, docno), stream-encode) — here a
-                *salted* groupBy().applyInPandas() with docno-range salts
-                so a skewed term (e.g. "return" in ~every doc) splits into
-                bounded, independently-scorable runs.
+                termid, sort by (termid, docno), stream-encode) — here
+                repartition(termid, salt) + sortWithinPartitions +
+                mapInPandas over whole sorted batches, with docno-range
+                salts so a skewed term (e.g. "return" in ~every doc)
+                splits into bounded, independently-scorable runs.
 
 Scale notes (100 TB / 10^12 rows):
 - sequential id assignment (docno, termid) is two-phase — range
-  partition + per-partition offsets — never a single-task global window;
+  partition + per-partition offsets added in the JVM — never a
+  single-task global window;
 - the dictionary join is left to AQE (broadcast when small, shuffle
   otherwise); the salt count adapts per term (ceil(df / target_run));
 - postings rows are written range-clustered by termid so Parquet
@@ -27,7 +29,10 @@ Scale notes (100 TB / 10^12 rows):
   query paths (the LocalSearcher serving tier reads the termid and blob
   columns whole, once, and slices them in memory);
 - every stage writes an artifact + manifest and is skipped when valid
-  (checkpoint-resume; BuildTermDocVectors.java:346-350 made auditable).
+  (checkpoint-resume; BuildTermDocVectors.java:346-350 made auditable);
+- artifacts are read back under the schema in their parquet footers and
+  counted from those footers, so neither a read nor a count of an
+  artifact starts a Spark job of its own.
 """
 
 from __future__ import annotations
@@ -38,11 +43,14 @@ from dataclasses import asdict, dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part
 from ivory_spark.index import codec
+from ivory_spark.index.reader import artifact_rows, read_artifact
 from ivory_spark.plans.manifest import StageRun, stage_is_valid
+from ivory_spark.session import local_frame
 
 # byte budget of a forced broadcast (the docmap re-attach and the
 # vocabulary-sized termid joins); past it they fall back to a
@@ -75,56 +83,87 @@ def _p(index_root: str, name: str) -> str:
 
 def assign_sequential_ids(
     df: DataFrame, order_cols: list[str], id_col: str, partitions: int
-) -> DataFrame:
+) -> tuple[DataFrame, int, object]:
     """Dense 1-based ids in (order_cols) order, without a global window.
 
     Range-partition + sortWithinPartitions, count rows per partition,
-    then add per-partition offsets inside mapInPandas — the scalable
+    then add each row's partition offset in the JVM — the scalable
     replacement for row_number() over a global Window (which would put
-    every row through one task).
+    every row through one task). The pinned projection computes
+    spark_partition_id() and monotonically_increasing_id() side by side;
+    the latter is (partition id << 33) + the row's position in its
+    partition, so `_mid - (_pid << 33)` is the row's rank inside its
+    sorted partition. The offsets reach the rows by a broadcast join
+    with a local frame of (pid, offset) rows, which stays valid at any
+    partition count (an array literal would be inlined into generated
+    code).
 
-    The sorted frame is persisted before counting: repartitionByRange
-    samples range boundaries per job, so without pinning, the counting
-    job and the assignment job could see different partitionings and
-    produce permuted ids. The *input* is persisted too: the range
-    sampler otherwise re-runs the whole upstream plan (e.g. the dedup
-    aggregation) once for sampling and again for the shuffle.
-    """
+    The sorted frame is pinned as a local checkpoint before counting:
+    repartitionByRange samples range boundaries per job, so a recomputed
+    partitioning could disagree with the counted one and permute the
+    ids. A checkpoint cuts the lineage, so nothing can recompute it —
+    neither an evicted cache block nor a write into a directory the
+    input reads (a write refreshes every cached plan that scans its
+    path, as append_delta's docmap append would the delta's dedup
+    against the base docmap). The *input* is persisted until the count
+    has filled the checkpoint: the range sampler otherwise re-runs the
+    whole upstream plan (e.g. the dedup aggregation) once for sampling
+    and again for the shuffle. The checkpoint's blocks live only in
+    executor storage: an executor lost before the last read of the ids
+    fails the stage ("Checkpoint block not found") rather than
+    recomputing the partitioning, and checkpoint-resume then reruns
+    that stage.
+
+    Returns (frame with id_col appended, row count, handle whose
+    unpersist() releases the checkpoint)."""
     cols = [F.col(c) for c in order_cols]
     src = df.persist()
-    sorted_df = src.repartitionByRange(partitions, *cols).sortWithinPartitions(*cols)
-    with_pid = sorted_df.withColumn("_pid", F.spark_partition_id()).persist()
-    counts = {r["_pid"]: r["cnt"] for r in with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    total = sum(counts.values())
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += f", {id_col} long"
-
-    def add_ids(it):
-        seen = 0
-        base = None
-        for pdf in it:
-            n = len(pdf)
-            if n and base is None:
-                base = offsets[int(pdf["_pid"].iloc[0])]
-            pdf = pdf.drop(columns=["_pid"])
-            if n:
-                pdf[id_col] = np.arange(base + seen + 1, base + seen + 1 + n, dtype=np.int64)
-            else:
-                pdf[id_col] = np.array([], dtype=np.int64)
-            seen += n
-            yield pdf
+    pinned = (
+        src.repartitionByRange(partitions, *cols)
+        .sortWithinPartitions(*cols)
+        .select(
+            "*",
+            F.spark_partition_id().alias("_pid"),
+            F.monotonically_increasing_id().alias("_mid"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    offsets, total = [], 0
+    for r in sorted(pinned.groupBy("_pid").count().collect()):
+        offsets.append((r["_pid"], total))
+        total += r["count"]
+    src.unpersist()
+    base = local_frame(pinned.sparkSession, offsets, "_pid int, _base long")
+    rank = F.col("_mid") - F.shiftleft(F.col("_pid").cast("long"), 33)
+    out = pinned.join(F.broadcast(base), "_pid").select(
+        *df.columns, (F.col("_base") + rank + 1).alias(id_col)
+    )
 
     class _Pinned:
         def unpersist(self):
-            with_pid.unpersist()
-            src.unpersist()
+            # a local checkpoint is no cached query: release the blocks
+            # of the RDD it reads
+            pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
-    return with_pid.mapInPandas(add_ids, schema=out_schema), total, _Pinned()
+    return out, total, _Pinned()
+
+
+def run_side_by_side(spark: SparkSession, *fns) -> list:
+    """Run fns on concurrent driver threads; return their results in
+    order, re-raising the first failure. Each thread carries the
+    caller's Spark local properties (job group, scheduler pool) and job
+    tags, so the jobs it starts are tagged as the caller's own. With
+    pinned-thread mode off (PYSPARK_PIN_THREAD=false) a Python thread
+    owns no JVM thread, so there is nothing to carry:
+    inheritable_thread_target then hands its argument back, and the
+    fns run as they are."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    inherit = inheritable_thread_target(spark)
+    targets = fns if inherit is spark else [inherit(fn) for fn in fns]
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(fn) for fn in targets]
+        return [f.result() for f in futures]
 
 
 def build_docmap(
@@ -244,13 +283,14 @@ def build_index(
             # build_docmap's slim re-attach join assumes (repo, path,
             # commit) identifies a row; a corpus with fully identical
             # rows would fan the winner out to the same docno twice.
-            # The footer-only count is free — detect the (pathological)
-            # case and restore the exactly-one-survivor-per-hash
-            # semantics by deduping on docno (fanned rows are identical
-            # by construction: same key, same sha, hence same content).
-            written = spark.read.parquet(docmap_path).count()
+            # The footer row count needs no Spark job — detect the
+            # (pathological) case and restore the exactly-one-survivor-
+            # per-hash semantics by deduping on docno (fanned rows are
+            # identical by construction: same key, same sha, hence same
+            # content).
+            written = artifact_rows(docmap_path)
             if written != n_docs:
-                fixed = spark.read.parquet(docmap_path).dropDuplicates(["docno"])
+                fixed = read_artifact(spark, docmap_path).dropDuplicates(["docno"])
                 tmp_path = docmap_path + "_dedup_tmp"
                 fixed.write.mode("overwrite").parquet(tmp_path)
                 import shutil as _sh
@@ -262,7 +302,7 @@ def build_index(
             run.metrics["n_docs"] = n_docs
             run.metrics["partitions"] = partitions
 
-    docmap = spark.read.parquet(docmap_path)
+    docmap = read_artifact(spark, docmap_path)
 
     # ---- stage: tdf (tokenize -> (docno, term, tf, dl)) ------------------
     if not stage_is_valid(index_root, "tdf", fp, [tdf_path]):
@@ -286,11 +326,10 @@ def build_index(
             w = Window.partitionBy("docno")
             tdf = tdf.withColumn("dl", F.sum("tf").over(w).cast("int"))
             tdf.write.mode("overwrite").parquet(tdf_path)
-            # count() over plain parquet is footer-metadata only — cheap
-            run.metrics["n_rows"] = spark.read.parquet(tdf_path).count()
+            run.metrics["n_rows"] = artifact_rows(tdf_path)
             run.record_artifact(tdf_path)
 
-    tdf = spark.read.parquet(tdf_path)
+    tdf = read_artifact(spark, tdf_path)
 
     # ---- stages: doclens + dictionary (independent — both read only the
     # tdf artifact — so they run as two concurrent driver threads; the
@@ -313,7 +352,10 @@ def build_index(
             return
         with StageRun(index_root, "dictionary", fp) as run:
             stats = tdf.groupBy("term").agg(
-                F.count(F.lit(1)).cast("int").alias("df"),
+                # a sum of ones, not count(), whose column is never null:
+                # df is then nullable as in append_delta's merged
+                # dictionary, so both write the same footer schema
+                F.sum(F.lit(1)).cast("int").alias("df"),
                 F.sum("tf").cast("long").alias("cf"),
             )
             if cfg.min_df > 1:
@@ -330,14 +372,9 @@ def build_index(
             run.record_artifact(dict_path)
             run.metrics["n_terms"] = n_terms
 
-    from concurrent.futures import ThreadPoolExecutor
+    run_side_by_side(spark, _run_doclens, _run_dictionary)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [pool.submit(_run_doclens), pool.submit(_run_dictionary)]
-        for f in futures:
-            f.result()  # re-raise stage failures
-
-    dictionary = spark.read.parquet(dict_path)
+    dictionary = read_artifact(spark, dict_path)
 
     # ---- stage: properties -----------------------------------------------
     if not stage_is_valid(index_root, "properties", fp, [props_path]):
@@ -352,7 +389,10 @@ def build_index(
             n_terms = (
                 dict_manifest["metrics"]["n_terms"] if dict_manifest else dictionary.count()
             )
-            clen = spark.read.parquet(doclens_path).agg(F.sum("doclen")).collect()[0][0] or 0
+            clen = (
+                read_artifact(spark, doclens_path).agg(F.sum("doclen")).collect()[0][0]
+                or 0
+            )
             props = {
                 "n_docs": int(n_docs),
                 "collection_length": int(clen),
@@ -395,7 +435,7 @@ def build_index(
                 .write.mode("overwrite")
                 .parquet(postings_path)
             )
-            run.metrics["n_runs"] = spark.read.parquet(postings_path).count()
+            run.metrics["n_runs"] = artifact_rows(postings_path)
             run.metrics["partitions"] = partitions
             run.record_artifact(postings_path)
 

@@ -12,7 +12,13 @@ appended runs with zero changes. The reference's analogue is re-running
 its MapReduce build over the grown collection
 (ivory/app/PreprocessCollection.java); here appending is shuffle-light:
 delta-only tokenize + stats, one postings encode over delta rows, and a
-dictionary/doclens merge.
+dictionary/doclens merge. The writes run one after another: docmap,
+tdf, doclens and the new dictionary, then the postings encode, which
+needs the merged dictionary and stats; the properties file, the commit
+point, is written last. (Running the independent ones on concurrent
+driver threads cut the append's wall time on the 2,000-doc benchmark
+corpus by less than its run-to-run spread and left build_ingest's
+throughput unresolved, so they stay serial.)
 
 Correctness contract:
 - content-level exact dedup spans the base index (delta docs whose
@@ -57,6 +63,7 @@ from ivory_spark.index.build import (
     encode_postings,
     join_on_termid,
 )
+from ivory_spark.index.reader import artifact_rows, read_artifact
 
 
 def append_delta(
@@ -100,7 +107,7 @@ def _append_delta_inner(
     from ivory_spark.functions.tokenizer import get_tokenizer
 
     docmap_path = os.path.join(index_root, "docmap")
-    base_hashes = spark.read.parquet(docmap_path).select("sha256")
+    base_docmap = read_artifact(spark, docmap_path)
 
     # 1. dedup the delta: within itself (min identity wins) and against
     #    the base docmap's content hashes
@@ -111,16 +118,12 @@ def _append_delta_inner(
     w = Window.partitionBy("sha256").orderBy("repo", "path", "commit")
     # align to the base docmap's columns so the parquet append stays
     # schema-homogeneous (stream sinks carry extra columns like ingest_ts)
-    base_cols = [
-        f.name
-        for f in spark.read.parquet(docmap_path).schema.fields
-        if f.name != "docno"
-    ]
+    base_cols = [c for c in base_docmap.columns if c != "docno"]
     fresh = (
         hashed.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(*base_cols)
-        .join(base_hashes, "sha256", "left_anti")
+        .join(base_docmap.select("sha256"), "sha256", "left_anti")
     )
     new_docs, n_new, pinned = assign_sequential_ids(
         fresh, ["repo", "path", "commit"], "docno", partitions
@@ -130,33 +133,32 @@ def _append_delta_inner(
         return props
     new_docs = new_docs.withColumn("docno", F.col("docno") + F.lit(n_docs0))
     new_docs.write.mode("append").parquet(docmap_path)
-    pinned.unpersist()
-    new_docmap = spark.read.parquet(docmap_path).filter(F.col("docno") > n_docs0)
 
-    # 2. tokenize the delta only
+    # 2. tokenize the delta only, from the pinned new_docs frame
     tok = get_tokenizer(cfg.tokenizer)
     if cfg.positional:
-        tdf = tok.doc_terms_positional(new_docmap.select("docno", "content"))
+        tdf = tok.doc_terms_positional(new_docs.select("docno", "content"))
     else:
-        tdf = tok.doc_terms(new_docmap.select("docno", "content"))
+        tdf = tok.doc_terms(new_docs.select("docno", "content"))
     tdf = tdf.repartitionByRange(partitions, "docno")
     wdl = Window.partitionBy("docno")
     tdf = tdf.withColumn("dl", F.sum("tf").over(wdl).cast("int"))
     tdf.write.mode("append").parquet(os.path.join(index_root, "tdf"))
-    tdf = spark.read.parquet(os.path.join(index_root, "tdf")).filter(
+    tdf = read_artifact(spark, os.path.join(index_root, "tdf")).filter(
         F.col("docno") > n_docs0
     )
 
     # 3. doclens append (docs with zero kept tokens still get a row)
     dls = tdf.groupBy("docno").agg(F.first("dl").alias("doclen"))
-    all_new = new_docmap.select("docno").join(dls, "docno", "left").fillna({"doclen": 0})
+    all_new = new_docs.select("docno").join(dls, "docno", "left").fillna({"doclen": 0})
     all_new.write.mode("append").parquet(os.path.join(index_root, "doclens"))
+    pinned.unpersist()
 
     # 4. dictionary merge: existing terms keep their termid with df/cf
     #    incremented; new terms get termids beyond the current max,
     #    ranked by (delta df desc, term asc) — deterministic
     dict_path = os.path.join(index_root, "dictionary")
-    base_dict = spark.read.parquet(dict_path)
+    base_dict = read_artifact(spark, dict_path)
     delta_stats = tdf.groupBy("term").agg(
         F.count(F.lit(1)).cast("int").alias("df_d"),
         F.sum("tf").cast("long").alias("cf_d"),
@@ -188,7 +190,7 @@ def _append_delta_inner(
     tmp_dict = dict_path + "_tmp"
     updated.write.mode("overwrite").parquet(tmp_dict)
     pinned2.unpersist()
-    dictionary = spark.read.parquet(tmp_dict)
+    dictionary = read_artifact(spark, tmp_dict)
 
     # 5. properties BEFORE postings encode: the delta runs' impacts use
     #    the merged stats (they are the freshest bounds in the index)
@@ -261,7 +263,7 @@ def repair_partial_append(spark: SparkSession, index_root: str) -> dict:
     if os.path.exists(old_dict):
         cur_ok = (
             os.path.exists(dict_path)
-            and spark.read.parquet(dict_path).count() == props["n_terms"]
+            and artifact_rows(dict_path) == props["n_terms"]
         )
         if cur_ok:
             shutil.rmtree(old_dict)
@@ -287,9 +289,8 @@ def repair_partial_append(spark: SparkSession, index_root: str) -> dict:
     for name, col in (("docmap", "docno"), ("tdf", "docno"),
                       ("doclens", "docno"), ("postings", "first_docno")):
         path = os.path.join(index_root, name)
-        df = spark.read.parquet(path)
-        kept = df.filter(F.col(col) <= n_docs)
-        if kept.count() == df.count():
+        kept = read_artifact(spark, path).filter(F.col(col) <= n_docs)
+        if kept.count() == artifact_rows(path):
             continue
         tmp = path + "_repair"
         kept.write.mode("overwrite").parquet(tmp)
@@ -317,9 +318,9 @@ def refresh_bounds(spark: SparkSession, index_root: str) -> dict:
     k1, b, idf_mode = props["k1"], props["b"], props["idf_mode"]
     positional = props.get("positional", False)
     postings_path = os.path.join(index_root, "postings")
-    posts = spark.read.parquet(postings_path)
+    posts = read_artifact(spark, postings_path)
     # current df per termid (append keeps per-run df at encode-time value)
-    cur = spark.read.parquet(os.path.join(index_root, "dictionary")).select(
+    cur = read_artifact(spark, os.path.join(index_root, "dictionary")).select(
         "termid", F.col("df").alias("df_now"), F.col("cf").alias("cf_now")
     )
     joined = join_on_termid(posts, cur, props["n_terms"], row_bytes=20)  # termid, df, cf

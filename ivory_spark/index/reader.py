@@ -55,17 +55,29 @@ class Index:
         )
 
 
-def _read_artifact(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet(path) under the schema Spark wrote into the
-    footer of the first data file ('.' and '_' files are not data).
-    Given a schema, the read starts no Spark job to infer one."""
-    first = min(
-        e.name for e in os.scandir(path)
+def _data_files(path: str) -> list[str]:
+    """The data files of a Spark-written parquet directory, in name
+    order ('.' and '_' files are not data)."""
+    return sorted(
+        os.path.join(path, e.name) for e in os.scandir(path)
         if e.is_file() and not e.name.startswith((".", "_"))
     )
-    meta = pq.read_metadata(os.path.join(path, first)).metadata
+
+
+def read_artifact(spark: SparkSession, path: str) -> DataFrame:
+    """A parquet read of the artifact at path under the schema Spark
+    wrote into the footer of its first data file. Given a schema, the
+    read starts no Spark job to infer one."""
+    meta = pq.read_metadata(_data_files(path)[0]).metadata
     schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
     return spark.read.schema(schema).parquet(path)
+
+
+def artifact_rows(path: str) -> int:
+    """Row count of a parquet directory, summed from its data files'
+    footers on the driver: the count a Spark read of it would return,
+    without a Spark job."""
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
 
 
 def open_index(spark: SparkSession, index_root: str) -> Index:
@@ -86,8 +98,8 @@ def open_index(spark: SparkSession, index_root: str) -> Index:
     return Index(
         root=index_root,
         properties=props,
-        docmap=_read_artifact(spark, os.path.join(index_root, "docmap")),
-        doclens=_read_artifact(spark, os.path.join(index_root, "doclens")),
-        dictionary=_read_artifact(spark, os.path.join(index_root, "dictionary")),
-        postings=_read_artifact(spark, os.path.join(index_root, "postings")),
+        docmap=read_artifact(spark, os.path.join(index_root, "docmap")),
+        doclens=read_artifact(spark, os.path.join(index_root, "doclens")),
+        dictionary=read_artifact(spark, os.path.join(index_root, "dictionary")),
+        postings=read_artifact(spark, os.path.join(index_root, "postings")),
     )

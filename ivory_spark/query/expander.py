@@ -25,7 +25,7 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.tokenizer import get_tokenizer
-from ivory_spark.index.reader import Index
+from ivory_spark.index.reader import Index, read_artifact
 
 
 def rm_weights(records: list[tuple[str, int, int, int]], fb_terms: int) -> list[tuple[str, float]]:
@@ -136,7 +136,7 @@ def expand_queries(
     # (which mines the dictionary). left_semi keeps the scan one-pass;
     # tdf is range-clustered by docno at write, so the isin filter prunes
     # to the feedback docs' row groups.
-    tdf = spark.read.parquet(os.path.join(index.root, "tdf"))
+    tdf = read_artifact(spark, os.path.join(index.root, "tdf"))
     rows = (
         tdf.filter(F.col("docno").isin([int(d) for d in all_docnos]))
         .join(F.broadcast(index.dictionary.select("term")), "term", "left_semi")
@@ -174,7 +174,7 @@ def _expand_joined(
     import pandas as pd
 
     fbdf = initial.select("qid", "docno", F.col("score").cast("double").alias("score"))
-    tdf = spark.read.parquet(os.path.join(index.root, "tdf"))
+    tdf = read_artifact(spark, os.path.join(index.root, "tdf"))
     rows_df = (
         tdf.join(F.broadcast(fbdf), "docno")
         .join(F.broadcast(index.dictionary.select("term")), "term", "left_semi")
@@ -310,7 +310,7 @@ def mine_bigram_concepts(
     all_docnos = sorted({d for ds in fb.values() for d, _ in ds})
     if not all_docnos:
         return {q["qid"]: [] for q in queries}
-    tdf = spark.read.parquet(os.path.join(index.root, "tdf"))
+    tdf = read_artifact(spark, os.path.join(index.root, "tdf"))
     rows = (
         tdf.filter(F.col("docno").isin([int(d) for d in all_docnos]))
         .join(F.broadcast(index.dictionary.select("term")), "term", "left_semi")

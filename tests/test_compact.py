@@ -16,7 +16,7 @@ from codec_ref import decode_run
 from ivory_spark.corpus import QUERY_SET, generate_corpus
 from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.compact import append_delta, refresh_bounds
-from ivory_spark.index.reader import open_index
+from ivory_spark.index.reader import artifact_rows, open_index, read_artifact
 from ivory_spark.query.exact import bm25_topk
 from ivory_spark.query.serve import LocalSearcher
 from ivory_spark.query.wand import bm25_topk_wand
@@ -82,6 +82,54 @@ def test_open_index_starts_no_job(spark, roots, jobs_started):
     for name in ("docmap", "doclens", "dictionary", "postings"):
         inferred = spark.read.parquet(os.path.join(appended_root, name)).schema
         assert getattr(idx, name).schema == inferred, name
+
+
+def test_footer_counts_and_tdf_schema(spark, roots):
+    """On the appended index, whose artifacts span base and delta files,
+    artifact_rows counts what a Spark read counts, and read_artifact
+    reads tdf under the schema a Spark read infers."""
+    appended_root = roots[0]
+    for name in ("docmap", "tdf", "doclens", "dictionary", "postings"):
+        p = os.path.join(appended_root, name)
+        assert len([f for f in os.listdir(p) if f.endswith(".parquet")]) > 1, name
+        assert artifact_rows(p) == spark.read.parquet(p).count(), name
+    tdf = os.path.join(appended_root, "tdf")
+    assert read_artifact(spark, tdf).schema == spark.read.parquet(tdf).schema
+
+
+def test_stage_threads_carry_callers_job_group(spark, corpora, jobs_started, tmp_path):
+    """Every Spark job build_index and append_delta start, the ones
+    their stage threads start included, is tagged with the caller's job
+    group: a call's group holds exactly the jobs between a one-row job
+    before the call and one after it."""
+    root = str(tmp_path / "index")
+    cfg = IndexConfig(salt_threshold=40, n_shards=5)
+
+    def trivial():
+        return spark.range(1).collect()
+
+    for call in (
+        lambda: build_index(spark, corpora["base"], root, cfg),
+        lambda: append_delta(spark, root, corpora["delta"]),
+    ):
+        _, before = jobs_started(trivial)
+        _, jobs = jobs_started(call)
+        _, after = jobs_started(trivial)
+        assert sorted(jobs) == list(range(max(before) + 1, min(after)))
+
+
+def test_side_by_side_with_pinned_thread_mode_off(spark, monkeypatch):
+    """With pinned-thread mode off (PYSPARK_PIN_THREAD=false), pyspark's
+    inheritable_thread_target hands back whatever it is given, the
+    session included; run_side_by_side then runs its targets as they
+    are, results in order and the first failure re-raised."""
+    from ivory_spark.index import build
+
+    monkeypatch.setattr(build, "inheritable_thread_target", lambda f=None: f)
+    got = build.run_side_by_side(spark, lambda: 1, lambda: spark.range(3).count())
+    assert got == [1, 3]
+    with pytest.raises(ZeroDivisionError):
+        build.run_side_by_side(spark, lambda: 2, lambda: 1 // 0)
 
 
 def test_append_postings_content_match(spark, roots):
