@@ -116,14 +116,15 @@ def _append_delta_inner(
     delta = spark.read.parquet(delta_corpus_path)
     hashed = delta.withColumn("sha256", F.sha2(F.col("content"), 256))
     w = Window.partitionBy("sha256").orderBy("repo", "path", "commit")
-    # align to the base docmap's columns so the parquet append stays
-    # schema-homogeneous (stream sinks carry extra columns like ingest_ts)
+    # align to the base docmap's columns, in their order, so the parquet
+    # append stays schema-homogeneous (stream sinks carry extra columns
+    # like ingest_ts, and the anti-join moves its key to the front)
     base_cols = [c for c in base_docmap.columns if c != "docno"]
     fresh = (
         hashed.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(*base_cols)
         .join(base_docmap.select("sha256"), "sha256", "left_anti")
+        .select(*base_cols)
     )
     new_docs, n_new, pinned = assign_sequential_ids(
         fresh, ["repo", "path", "commit"], "docno", partitions

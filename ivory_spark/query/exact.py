@@ -16,9 +16,14 @@ not the throughput path.
 from __future__ import annotations
 
 from collections import Counter
+from urllib.parse import quote
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part, group_sum_f32
@@ -27,13 +32,56 @@ from ivory_spark.index.reader import Index
 from ivory_spark.session import local_frame
 
 
+def _read_dictionary(index: Index, terms: list[str]) -> dict[str, tuple[int, int, int]]:
+    """{term: (termid, df, cf)} for those of `terms` the dictionary
+    holds, read on the driver from the dictionary files the Index pinned
+    at open: inputFiles() lists them without a Spark job, and pyarrow
+    reads each file's term, termid, df and cf columns. An Index opened
+    before an append still names the files the append swapped out, so
+    the read raises; it never returns the new dictionary's stats."""
+    want = pa.array(terms, pa.string())
+    found = {}
+    for uri in index.dictionary.inputFiles():
+        # Spark leaves non-ASCII characters of a path unescaped in the
+        # URI, which pyarrow's parser refuses
+        filesystem, path = pafs.FileSystem.from_uri(quote(uri, safe=":/%@"))
+        with filesystem.open_input_file(path) as f:
+            for batch in pq.ParquetFile(f).iter_batches(columns=["term", "termid", "df", "cf"]):
+                hit = batch.filter(pc.is_in(batch.column("term"), value_set=want))
+                for term, termid, df, cf in zip(*(c.to_pylist() for c in hit.columns)):
+                    found[term] = (termid, df, cf)
+    return found
+
+
+def _resolve_terms(index: Index, terms: set[str]) -> dict[str, tuple[int, int, int]]:
+    """{term: (termid, df, cf)} for the in-dictionary terms of `terms`.
+    A per-Index memo holds every term resolved so far, hits and misses
+    (OOV) alike, so a batch reads the dictionary files only for terms no
+    earlier batch asked for: the in-process form of Ivory's resident
+    dictionary (RetrievalEnvironment.java:66-67). It is query-term-sized,
+    never vocabulary-sized, and dies with the Index object, so a
+    reopened (e.g. appended) index starts clean."""
+    cache = getattr(index, "_term_cache", None)
+    if cache is None:
+        cache = {}
+        object.__setattr__(index, "_term_cache", cache)
+    missing = sorted(t for t in terms if t not in cache)
+    if missing:
+        found = _read_dictionary(index, missing)
+        for t in missing:
+            cache[t] = found.get(t)  # None = OOV, cached too
+    return {t: cache[t] for t in terms if cache[t] is not None}
+
+
 def query_term_rows(
     index: Index, queries: list[dict]
 ) -> tuple[list[tuple], list[int]]:
-    """Driver-side query-term resolution: one dictionary-lookup job per
-    BATCH (not per query, not per term — the analogue of Ivory keeping
-    the dictionary in RAM, RetrievalEnvironment.java:66-67).
-    Returns ([(qid, termid, qtf, df), ...], sorted unique termids).
+    """Driver-side query-term resolution: no Spark job. The terms no
+    earlier batch on this Index asked for are read from the dictionary
+    files the Index pinned at open (_read_dictionary), the analogue of
+    Ivory keeping the dictionary in RAM (RetrievalEnvironment.java:66-67);
+    the rest come from the Index's memo (_resolve_terms).
+    Returns ([(qid, termid, qtf, df, cf), ...], sorted unique termids).
 
     Query strings are tokenized with the *same* tokenizer the index was
     built with (index.properties['tokenizer'];
@@ -41,8 +89,8 @@ def query_term_rows(
     fold into a qtf weight (TermCliqueSet.java:62-79 — duplicate cliques
     multiply the term's contribution).
 
-    Rows are (qid, termid, qtf, df, cf) — cf is carried for the
-    language-model scorers (Dirichlet/JM background probabilities)."""
+    cf is carried for the language-model scorers (Dirichlet/JM
+    background probabilities)."""
     from ivory_spark.functions.tokenizer import get_tokenizer
 
     tok = get_tokenizer(index.properties.get("tokenizer", "code_v1")).tokenize_py
@@ -54,26 +102,7 @@ def query_term_rows(
         terms.update(t for t, _ in counts)
     if not terms:
         return [], []
-    # per-Index memo of resolved terms (hits AND misses): repeat queries
-    # skip the dictionary-scan job entirely — the in-process form of
-    # Ivory's resident dictionary (RetrievalEnvironment.java:66-67).
-    # Query-term-sized, never vocabulary-sized; dies with the Index
-    # object, so a reopened (e.g. compacted) index starts clean.
-    cache = getattr(index, "_term_cache", None)
-    if cache is None:
-        cache = {}
-        object.__setattr__(index, "_term_cache", cache)
-    missing = sorted(t for t in terms if t not in cache)
-    if missing:
-        found = {
-            r["term"]: (r["termid"], r["df"], r["cf"])
-            for r in index.dictionary.filter(F.col("term").isin(missing))
-            .select("term", "termid", "df", "cf")
-            .collect()
-        }
-        for t in missing:
-            cache[t] = found.get(t)  # None = OOV, cached too
-    lookup = {t: cache[t] for t in terms if cache[t] is not None}
+    lookup = _resolve_terms(index, terms)
     rows = []
     termids = set()
     for qid, counts in per_q:
@@ -122,26 +151,24 @@ def _decode_runs(runs: DataFrame) -> DataFrame:
     )
 
 
-def weighted_query_table(
-    spark: SparkSession, index: Index, wqueries: list[dict]
-) -> DataFrame:
-    """(qid, termid, qtf(float), df) from weighted queries
-    [{'qid', 'terms': [(term, weight), ...]}] — the #weight/#combine
-    structured-query surface (ivory/sqe/retrieval/StructuredQuery.java,
+def weighted_query_rows(
+    index: Index, wqueries: list[dict]
+) -> tuple[list[tuple], list[int]]:
+    """([(qid, termid, weight, df), ...], sorted unique termids) for the
+    in-dictionary terms of weighted queries [{'qid', 'terms': [(term,
+    weight), ...]}], resolved as query_term_rows resolves terms (no Spark
+    job) — the #weight/#combine structured-query surface
+    (ivory/sqe/retrieval/StructuredQuery.java,
     PostingsReaderWrapper.java:47-190: weights scale each term's score)."""
-    rows = []
-    terms = set()
-    for q in wqueries:
-        for term, w in sorted(q["terms"]):
-            rows.append((q["qid"], term, float(w)))
-            terms.add(term)
-    if not rows:
-        return local_frame(spark, [], "qid string, termid long, qtf float, df int")
-    qt = local_frame(spark, rows, "qid string, term string, qtf float")
-    dict_rows = index.dictionary.filter(F.col("term").isin(sorted(terms))).select(
-        "term", "termid", "df"
-    )
-    return qt.join(F.broadcast(dict_rows), "term").select("qid", "termid", "qtf", "df")
+    terms = {term for q in wqueries for term, _ in q["terms"]}
+    lookup = _resolve_terms(index, terms)
+    rows = [
+        (q["qid"], int(lookup[term][0]), float(w), int(lookup[term][1]))
+        for q in wqueries
+        for term, w in sorted(q["terms"])
+        if term in lookup
+    ]
+    return rows, sorted({r[1] for r in rows})
 
 
 def bm25_topk(
@@ -157,7 +184,7 @@ def bm25_topk(
 ) -> DataFrame:
     """Exact BM25 top-k for a query batch -> (qid, rank, docno[, docid], score).
 
-    weighted=True: `queries` are weighted queries (see weighted_query_table).
+    weighted=True: `queries` are weighted queries (see weighted_query_rows).
     priors: optional (docno, prior float) DataFrame added per doc as
     score += prior_weight * prior — Ivory's additive query-independent
     document potential (smrf/model/potential/DocumentPotential.java:1-109,
@@ -176,8 +203,8 @@ def bm25_topk(
     idf_mode = p.get("idf", props["idf_mode"])
 
     if weighted:
-        qt = weighted_query_table(spark, index, queries)
-        termids = [r["termid"] for r in qt.select("termid").distinct().collect()]
+        rows, termids = weighted_query_rows(index, queries)
+        qt = local_frame(spark, rows, "qid string, termid long, qtf float, df int")
     else:
         rows, termids = query_term_rows(index, queries)
         qt = local_frame(

@@ -251,8 +251,9 @@ def bm25_topk_wand(
             "index has stale WAND bounds after append_delta; run "
             "compact.refresh_bounds, or use batch.run_batch or exact.bm25_topk"
         )
-    # the driver-side term lookup answers an all-OOV batch with no
-    # Spark plan; perfbench/trace.py times it by patching
+    # the driver-side term lookup reads the pinned dictionary files
+    # with pyarrow, no Spark job, so an all-OOV batch starts no Spark
+    # job at all; perfbench/trace.py times it by patching
     # wand.query_term_rows
     _, termids = query_term_rows(index, queries)
     if not termids:

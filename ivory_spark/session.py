@@ -8,9 +8,12 @@ are what we would ship in `spark-submit --conf` on a real cluster.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from functools import partial
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 
@@ -104,80 +107,115 @@ def _warm_start(spark: SparkSession) -> None:
     broadcast machinery init, the parquet codec path, and the Python
     worker pool spawn (measured ~7 s folded into whatever stage happens
     to run first — the index build's docmap stage in the bench). The
-    broadcast side is a local_frame, as every batch's query rows are, so
-    it warms the LocalTableScan-plus-broadcast path those take and needs
-    no Python job of its own; only the mapInPandas step below starts
-    Python workers. This touches no user data and caches no results; it
-    is the same warm-the-workers practice the query benchmarks already
-    apply per-path, applied once at the session boundary. It always
-    runs: without it the first batch of a session pays the JVM and
-    Python-worker warm-up, which showed as a query_p95_ms regression on
-    the benchmark's build_ingest workload."""
-    import shutil
-    import tempfile
-
-    import pyspark.sql.functions as F
+    five steps are independent and run side by side (build.run_side_by_side),
+    the Python step submitted first so that its tasks take every core.
+    That step spawns one Python worker per task slot and has each import
+    what a batch task imports (_import_batch_modules); Spark's
+    PythonWorkerFactory kills a worker that sits idle for 60 s, so a
+    session whose first batch comes later pays those spawns and imports
+    again. The broadcast side of the join step is a local_frame, as
+    every batch's query rows are, so it warms the LocalTableScan-plus-
+    broadcast path those take and starts no Python worker. This touches
+    no user data and caches no results. It always runs: without it the
+    first batch of a session pays the JVM and Python-worker warm-up,
+    which showed as a query_p95_ms regression on the benchmark's
+    build_ingest workload."""
+    from ivory_spark.index.build import run_side_by_side
 
     if getattr(spark, "_ivory_warmed", False):
         return
     spark._ivory_warmed = True
+    steps = (_warm_workers, _warm_join, _warm_window, _warm_codegen, _warm_parquet)
     try:
-        df = spark.range(0, 512, 1, 4).select(
-            "id", F.sha2(F.col("id").cast("string"), 256).alias("h")
-        )
-        tiny = local_frame(spark, [(1, "a")], "id long, v string")
-        # codegen + hash aggregate + shuffle + broadcast join of a
-        # LocalTableScan, the way the batch paths join their query rows
-        df.join(F.broadcast(tiny), "id", "left").groupBy("v").agg(
-            F.count(F.lit(1))
-        ).collect()
-        # range partitioner (the build's id assignment) + window
-        from pyspark.sql import Window
-
-        df.repartitionByRange(2, "id").withColumn(
-            "rn", F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("id"))
-        ).write.format("noop").mode("overwrite").save()
-        # Python/Arrow worker pool spawn (one per core the build will use)
-        spark.range(0, 64, 1, 8).mapInPandas(lambda it: it, "id long").count()
-        # expression-class codegen the operators lean on: regexp token
-        # extraction + higher-order filter (tokenizers), explode +
-        # aggregate (tf counting), md5/conv portable hashes (dedup),
-        # array set ops (jaccard verify), fold-style aggregate/zip_with
-        # (cosine) — each first compilation otherwise lands in a timed
-        # stage (measured ~2.6 s residue in the first build's tdf stage)
-        txt = spark.range(0, 64, 1, 4).select(
-            F.concat(F.lit("ab cd ef "), F.col("id").cast("string")).alias("t")
-        )
-        toks = F.filter(
-            F.regexp_extract_all(F.lower(F.col("t")), F.lit(r"[a-z0-9_]+"), 0),
-            lambda x: F.length(x) <= 126,
-        )
-        exploded = txt.select(
-            F.col("t"),
-            toks.alias("a"),
-            F.conv(F.substring(F.md5(F.concat(F.lit("0:"), F.col("t"))), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h"),
-            F.size(F.array_intersect(toks, toks)).alias("ai"),
-            F.aggregate(
-                F.zip_with(toks, toks, lambda x, y: F.length(x).cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("fold"),
-        ).select("h", "ai", "fold", F.explode("a").alias("term"))
-        (
-            exploded.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("c"), F.sum(F.col("h") % 1000003).alias("s"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        # parquet write + read (zstd codec, footer machinery)
-        d = tempfile.mkdtemp(prefix="ivory_warm_")
-        try:
-            df.limit(64).write.mode("overwrite").parquet(os.path.join(d, "p"))
-            spark.read.parquet(os.path.join(d, "p")).count()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
+        run_side_by_side(spark, *(partial(step, spark) for step in steps))
     except Exception:
         pass  # warm-up is best-effort; never block session creation
+
+
+def _import_batch_modules(batches):
+    """mapInPandas body of the warm-up's Python step: import in this
+    worker what a batch task imports (the serve chain pulls in wand,
+    exact, session and reader; LocalSearcher reads through
+    pyarrow.dataset), so the session's first batch does not."""
+    import pyarrow.dataset  # noqa: F401
+
+    import ivory_spark.query.batch  # noqa: F401
+    import ivory_spark.query.serve  # noqa: F401
+
+    yield from batches
+
+
+def _warm_workers(spark: SparkSession) -> None:
+    """Spawn a Python worker for every task slot: a batch runs
+    defaultParallelism slices, and a slot with no idle worker spawns
+    one inside the batch's timing."""
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, n, 1, n).mapInPandas(_import_batch_modules, "id long").count()
+
+
+def _warm_rows(spark: SparkSession) -> DataFrame:
+    return spark.range(0, 512, 1, 4).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+
+
+def _warm_join(spark: SparkSession) -> None:
+    """codegen + hash aggregate + shuffle + broadcast join of a
+    LocalTableScan, the way the batch paths join their query rows"""
+    tiny = local_frame(spark, [(1, "a")], "id long, v string")
+    _warm_rows(spark).join(F.broadcast(tiny), "id", "left").groupBy("v").agg(
+        F.count(F.lit(1))
+    ).collect()
+
+
+def _warm_window(spark: SparkSession) -> None:
+    """range partitioner (the build's id assignment) + window"""
+    _warm_rows(spark).repartitionByRange(2, "id").withColumn(
+        "rn", F.row_number().over(Window.partitionBy(F.lit(0)).orderBy("id"))
+    ).write.format("noop").mode("overwrite").save()
+
+
+def _warm_codegen(spark: SparkSession) -> None:
+    """expression-class codegen the operators lean on: regexp token
+    extraction + higher-order filter (tokenizers), explode + aggregate
+    (tf counting), md5/conv portable hashes (dedup), array set ops
+    (jaccard verify), fold-style aggregate/zip_with (cosine) — each
+    first compilation otherwise lands in a timed stage (measured ~2.6 s
+    residue in the first build's tdf stage)"""
+    txt = spark.range(0, 64, 1, 4).select(
+        F.concat(F.lit("ab cd ef "), F.col("id").cast("string")).alias("t")
+    )
+    toks = F.filter(
+        F.regexp_extract_all(F.lower(F.col("t")), F.lit(r"[a-z0-9_]+"), 0),
+        lambda x: F.length(x) <= 126,
+    )
+    exploded = txt.select(
+        F.col("t"),
+        toks.alias("a"),
+        F.conv(F.substring(F.md5(F.concat(F.lit("0:"), F.col("t"))), 1, 15), 16, 10)
+        .cast("long")
+        .alias("h"),
+        F.size(F.array_intersect(toks, toks)).alias("ai"),
+        F.aggregate(
+            F.zip_with(toks, toks, lambda x, y: F.length(x).cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("fold"),
+    ).select("h", "ai", "fold", F.explode("a").alias("term"))
+    (
+        exploded.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("c"), F.sum(F.col("h") % 1000003).alias("s"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+
+
+def _warm_parquet(spark: SparkSession) -> None:
+    """parquet write + read (zstd codec, footer machinery)"""
+    d = tempfile.mkdtemp(prefix="ivory_warm_")
+    try:
+        _warm_rows(spark).limit(64).write.mode("overwrite").parquet(os.path.join(d, "p"))
+        spark.read.parquet(os.path.join(d, "p")).count()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

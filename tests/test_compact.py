@@ -7,8 +7,11 @@ WAND must refuse stale bounds until refresh_bounds, and then be
 bit-identical to the exact path."""
 
 import os
+import shutil
+from collections import Counter
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,7 +20,8 @@ from ivory_spark.corpus import QUERY_SET, generate_corpus
 from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.compact import append_delta, refresh_bounds
 from ivory_spark.index.reader import artifact_rows, open_index, read_artifact
-from ivory_spark.query.exact import bm25_topk
+from ivory_spark.plans.manifest import load_manifest
+from ivory_spark.query.exact import bm25_topk, query_term_rows
 from ivory_spark.query.serve import LocalSearcher
 from ivory_spark.query.wand import bm25_topk_wand
 
@@ -95,6 +99,105 @@ def test_footer_counts_and_tdf_schema(spark, roots):
         assert artifact_rows(p) == spark.read.parquet(p).count(), name
     tdf = os.path.join(appended_root, "tdf")
     assert read_artifact(spark, tdf).schema == spark.read.parquet(tdf).schema
+
+
+def test_appended_docmap_keeps_build_column_order(spark, roots):
+    """append_delta writes its docmap files under the build's footer
+    schema, so an appended docmap is schema-homogeneous and opens with
+    its columns in build order whichever data file sorts first."""
+    from ivory_spark.index.reader import _SPARK_SCHEMA_KEY, _data_files
+
+    appended_root, rebuilt_root, _ = roots
+
+    def footer(f):
+        return pq.read_metadata(f).metadata[_SPARK_SCHEMA_KEY]
+
+    want = {footer(f) for f in _data_files(os.path.join(rebuilt_root, "docmap"))}
+    assert len(want) == 1
+    files = _data_files(os.path.join(appended_root, "docmap"))
+    assert len(files) > 1
+    for f in files:
+        assert {footer(f)} == want, f
+    assert (
+        open_index(spark, appended_root).docmap.columns
+        == open_index(spark, rebuilt_root).docmap.columns
+    )
+
+
+def _spark_term_rows(index, queries):
+    """query_term_rows as a Spark lookup: one filter(isin).collect() job
+    over the dictionary, no memo."""
+    from ivory_spark.functions.tokenizer import get_tokenizer
+
+    tok = get_tokenizer(index.properties.get("tokenizer", "code_v1")).tokenize_py
+    per_q = [(q["qid"], sorted(Counter(tok(q["query"])).items())) for q in queries]
+    terms = sorted({t for _, counts in per_q for t, _ in counts})
+    found = {
+        r["term"]: (r["termid"], r["df"], r["cf"])
+        for r in index.dictionary.filter(F.col("term").isin(terms))
+        .select("term", "termid", "df", "cf")
+        .collect()
+    }
+    rows = [
+        (qid, found[t][0], qtf, found[t][1], found[t][2])
+        for qid, counts in per_q
+        for t, qtf in counts
+        if t in found
+    ]
+    return rows, sorted({r[1] for r in rows})
+
+
+def test_query_term_rows_matches_spark_lookup_and_starts_no_job(
+    spark, roots, jobs_started
+):
+    """On the appended index, whose dictionary spans several files, the
+    driver-side term lookup returns what the Spark filter(isin) lookup
+    returns, row for row: OOV tokens, a duplicate token (qtf=2), a term
+    only the append added, and a second batch that mixes memo hits with
+    misses. Neither call starts a Spark job."""
+    appended_root = roots[0]
+    idx = open_index(spark, appended_root)
+    assert len(idx.dictionary.inputFiles()) > 1
+    n_new = load_manifest(appended_root, "append_0")["metrics"]["n_new_terms"]
+    assert n_new > 0
+    dic = sorted(
+        (r["termid"], r["term"]) for r in idx.dictionary.select("termid", "term").collect()
+    )
+    added = dic[-1][1]  # new terms take termids past the base's
+    assert dic[-1][0] > idx.properties["n_terms"] - n_new
+    t1, t2, t3 = dic[0][1], dic[1][1], dic[len(dic) // 2][1]
+    first = [
+        {"qid": "a1", "query": f"{t1} {t1} {t2} zzq_oov_a"},
+        {"qid": "a2", "query": "zzq_oov_b"},
+        *QUERY_SET,
+    ]
+    second = [
+        {"qid": "b1", "query": f"{t2} {added} zzq_oov_a zzq_oov_c"},
+        {"qid": "b2", "query": f"{t3} {t3} {t1}"},
+    ]
+    for queries in (first, second):
+        got, jobs = jobs_started(lambda: query_term_rows(idx, queries))
+        assert jobs == []
+        assert got == _spark_term_rows(idx, queries)
+    assert dic[-1][0] in got[1]
+
+
+def test_query_term_rows_on_an_index_opened_before_an_append_raises(
+    spark, roots, tmp_path
+):
+    """An Index names the dictionary files it found at open. After an
+    append swaps the dictionary, a lookup on the old Index raises; it
+    never returns the new dictionary's stats."""
+    root = str(tmp_path / "index")
+    shutil.copytree(roots[0], root)
+    old = open_index(spark, root)
+    rows, _ = query_term_rows(old, QUERY_SET)
+    assert rows
+    delta = str(tmp_path / "delta2.parquet")
+    generate_corpus(20, seed=47).drop(columns=["sha256"]).to_parquet(delta, index=False)
+    assert append_delta(spark, root, delta)["n_docs"] > old.properties["n_docs"]
+    with pytest.raises(FileNotFoundError):
+        query_term_rows(old, [{"qid": "s1", "query": "class import zzq_fresh_term"}])
 
 
 def test_stage_threads_carry_callers_job_group(spark, corpora, jobs_started, tmp_path):

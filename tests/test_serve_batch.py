@@ -182,30 +182,45 @@ def test_all_oov_batch_is_empty_and_its_result_starts_no_job(
     a batch with hits has (the exact plan's rank is not nullable). Where
     the driver's term lookup finds no term (bm25_topk_wand, bm25_topk,
     run_batch's other scorers) the result is an empty local frame, and
-    collecting it starts no Spark job. The serve kernel (run_batch's
-    bm25 route) learns of the OOV terms in its workers: one job, over
-    the query slices as a LocalTableScan."""
+    neither the call, its term lookup included, nor collecting its
+    result starts a Spark job. Each case asks for OOV terms no earlier
+    call asked for, since the Index's memo keeps OOV terms too. The
+    serve kernel (run_batch's bm25 route) learns of the OOV terms in its
+    workers: one job, over the query slices as a LocalTableScan."""
     idx, queries = appended
     root = str(tmp_path / "refreshed")
     shutil.copytree(idx.root, root)
     refresh_bounds(spark, root)
     refreshed = open_index(spark, root)
-    oov = [{"qid": "o1", "query": "zzq_oov_token"}, {"qid": "o2", "query": "zzq_oov zzq_oov_token"}]
+    fresh = iter(range(1000))
+
+    def oov_batch():
+        n = next(fresh)
+        return [
+            {"qid": "o1", "query": f"zzq_oov_{n}"},
+            {"qid": "o2", "query": f"zzq_oov zzq_oov_{n}"},
+        ]
+
+    def call_and_collect(call, qs):
+        df = call(qs)
+        return df, df.collect()
+
     dirichlet = Model(scorer="dirichlet")
-    for with_docid in (True, False):
+    cases = [
+        (with_docid, call)
+        for with_docid in (True, False)
         for call in (
-            lambda qs: bm25_topk_wand(spark, refreshed, qs, with_docid=with_docid),
-            lambda qs: bm25_topk(spark, idx, qs, with_docid=with_docid),
-        ):
-            want = call(queries).schema.simpleString()
-            df = call(oov)
-            rows, jobs = jobs_started(df.collect)
-            assert rows == [] and jobs == [], with_docid
-            assert df.schema.simpleString() == want, with_docid
-    want = run_batch(spark, idx, queries, dirichlet).schema.simpleString()
-    df = run_batch(spark, idx, oov, dirichlet)
-    rows, jobs = jobs_started(df.collect)
-    assert rows == [] and jobs == [] and df.schema.simpleString() == want
+            lambda qs, w=with_docid: bm25_topk_wand(spark, refreshed, qs, with_docid=w),
+            lambda qs, w=with_docid: bm25_topk(spark, idx, qs, with_docid=w),
+        )
+    ] + [("dirichlet", lambda qs: run_batch(spark, idx, qs, dirichlet))]
+    for name, call in cases:
+        want = call(queries).schema.simpleString()
+        oov = oov_batch()
+        (df, rows), jobs = jobs_started(lambda: call_and_collect(call, oov))
+        assert rows == [] and jobs == [], name
+        assert df.schema.simpleString() == want, name
+    oov = oov_batch()
     df = run_batch(spark, idx, oov)
     rows, jobs = jobs_started(df.collect)
     assert rows == [] and len(jobs) == 1
