@@ -1,8 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 queries() exposes the index, retrieval, dedup and similarity operators
-from SURVEY.md §2, plus the text-statistics operators that have not been
-deleted yet, over the driver's testdata tables; oracle_sql() gives a
+from SURVEY.md §2 over the driver's testdata tables; oracle_sql() gives a
 DuckDB-runnable SQL twin for every one, with identical column names and
 rounded floats. The engine-native paths (float32 BM25/WAND, SD, cascade, PRF, SQE, LTR) are
 checked against float32-emulating DuckDB SQL; their bit-exact gates
@@ -20,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ivory_spark.ops import dedup as D
 from ivory_spark.ops import ir_relational as IR
 from ivory_spark.ops import similarity as SIM
-from ivory_spark.ops import textstats as TS
 from ivory_spark.sources.testdata import documents_as_corpus, read_table
 
 # ---------------------------------------------------------------------------
@@ -144,24 +142,6 @@ def _sql_simhash_expr() -> str:
 WITH {TOKS}, {TF},
 h AS (SELECT doc_id, term, tf, ('0x' || substr(md5('0:' || term), 1, 15))::BIGINT AS h FROM tf)
 SELECT doc_id, ({bits})::BIGINT AS simhash FROM h GROUP BY doc_id
-"""
-
-
-def _sql_langid() -> str:
-    score_cols = []
-    for lang, markers in sorted(TS.LANG_MARKERS.items()):
-        in_list = ", ".join(f"'{m}'" for m in markers)
-        score_cols.append(
-            f"sum(CASE WHEN term IN ({in_list}) THEN 1 ELSE 0 END)::INT AS s_{lang}"
-        )
-    langs = sorted(TS.LANG_MARKERS)
-    m = "greatest(" + ", ".join(f"s_{la}" for la in langs) + ")"
-    case = "CASE " + " ".join(f"WHEN s_{la} = m THEN '{la}'" for la in langs) + " END"
-    return f"""
-WITH {TOKS},
-sc AS (SELECT doc_id, {", ".join(score_cols)} FROM toks GROUP BY doc_id)
-SELECT doc_id, {case} AS pred_lang, m::INT AS score
-FROM (SELECT *, {m} AS m FROM sc)
 """
 
 
@@ -1395,78 +1375,6 @@ SELECT qid, rank, vec_id, cosine FROM (
 """
 
 
-def _sql_ann_ivf_top5(n_centroids: int = 16, nprobe: int = 6, k: int = 5) -> str:
-    """DuckDB twin of similarity.ivf_topk: centroids are the md5-ranked
-    vector sample (pure SQL — no literals needed); every cosine used for
-    cell assignment / probe selection is the same ordered left fold both
-    engines compute, so argmax cells agree at boundaries."""
-    fold_dot = (
-        "list_reduce(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]), "
-        "(a, b) -> a + b)"
-    )
-    fold_norm = "sqrt(list_reduce(list_transform({a}, x -> x * x), (a, b) -> a + b))"
-    asgn_cos = (
-        fold_dot.format(a="t.v", b="c.cv")
-        + " / (" + fold_norm.format(a="t.v") + " * c.cnorm)"
-    )
-    out_cos = (
-        "round(" + fold_dot.format(a="q.qv", b="eb.v")
-        + " / (" + fold_norm.format(a="q.qv") + " * " + fold_norm.format(a="eb.v") + "), 6)"
-    )
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-ch AS (SELECT vec_id, v,
-       ('0x' || substr(md5('0:' || vec_id::VARCHAR), 1, 15))::BIGINT AS h FROM e),
-cents AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS cidx, v AS cv,
-          {fold_norm.format(a="v")} AS cnorm
-          FROM ch ORDER BY h, vec_id LIMIT {n_centroids}),
-asgn AS (SELECT t.vec_id, c.cidx, {asgn_cos} AS cos
-         FROM (SELECT vec_id, v FROM e) t(vec_id, v) CROSS JOIN cents c),
-cell AS (SELECT a.vec_id, a.cidx AS cell FROM (
-          SELECT *, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY cos DESC, cidx) AS rn FROM asgn) a WHERE rn = 1),
-q0 AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-qasgn AS (SELECT t.qid, c.cidx, {asgn_cos.replace('t.v', 't.qv')} AS cos
-          FROM (SELECT qid, qv FROM q0) t(qid, qv) CROSS JOIN cents c),
-qp AS (SELECT qid, cidx AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY qid
-                  ORDER BY cos DESC, cidx) AS rn FROM qasgn) WHERE rn <= {nprobe}),
-cand AS (SELECT DISTINCT qp.qid, ce.vec_id FROM qp
-         JOIN cell ce USING (cell) WHERE ce.vec_id <> qp.qid),
-j AS (SELECT c.qid, c.vec_id, {out_cos} AS cosine
-      FROM cand c JOIN q0 q ON q.qid = c.qid JOIN e eb ON eb.vec_id = c.vec_id)
-SELECT qid, rank, vec_id, cosine FROM (
-  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id)::INT AS rank
-  FROM j) WHERE rank <= {k}
-"""
-
-
-def _sql_cluster_reps(threshold: float = 0.8) -> str:
-    """DuckDB twin of cluster_representatives over the minhash duplicate
-    clusters: quality-ranked representative per cluster (row_number by
-    quality DESC, doc_id ASC == Spark's max over the (quality, -id)
-    struct)."""
-    stop = ", ".join(f"'{s}'" for s in TS.STOPWORDS_EN)
-    return f"""
-WITH clus AS (SELECT * FROM ({_sql_minhash_clusters(threshold)}) c),
-{TOKS},
-qa AS (SELECT doc_id, count(*) AS n,
-         sum(CASE WHEN term IN ({stop}) THEN 1 ELSE 0 END) AS ns,
-         count(DISTINCT term) AS nd
-       FROM toks GROUP BY doc_id),
-qual AS (SELECT doc_id,
-           round(((CASE WHEN n >= 10 AND n <= 100000 THEN 1.0 ELSE 0.0 END)
-             + least(ns / greatest(n, 1) * 5.0, 1.0)
-             + nd / greatest(n, 1)) / 3.0, 6) AS quality
-         FROM qa),
-scored AS (SELECT clus.cluster_id, clus.doc_id, qual.quality
-           FROM clus JOIN qual USING (doc_id))
-SELECT cluster_id, doc_id, quality FROM (
-  SELECT *, row_number() OVER (PARTITION BY cluster_id
-            ORDER BY quality DESC, doc_id) AS rn
-  FROM scored) WHERE rn = 1"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # --- IR pipeline (SURVEY.md §2: A1-A8, F1/F2/F5, K1/K2, J4/J5, P1) ---
@@ -1490,26 +1398,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash": lambda s, d: D.simhash(_docs(s, d)),
         "dedup_simhash_pairs": lambda s, d: D.simhash_pairs(D.simhash(_docs(s, d)), max_hamming=2),
         "dedup_ngram_jaccard": lambda s, d: D.ngram_jaccard_pairs(_docs(s, d), threshold=0.5),
-        "dedup_cluster_reps": lambda s, d: D.cluster_representatives(
-            D.dedup_clusters(D.minhash_dedup_pairs(_docs(s, d), threshold=0.8)),
-            TS.quality_score(_docs(s, d)).select("doc_id", "quality"),
-            score_col="quality",
-        ),
         "dedup_embedding_cosine": lambda s, d: D.embedding_neardup_pairs(
             read_table(s, d, "embeddings"), threshold=0.3
         ),
         # --- similarity search -------------------------------------------
         "ann_cosine_top5": lambda s, d: SIM.brute_force_topk(*_ann_queries(s, d), k=5),
         "ann_lsh_top5": lambda s, d: SIM.lsh_bucketed_topk(*_ann_queries(s, d), k=5),
-        "ann_ivf_top5": lambda s, d: SIM.ivf_topk(
-            *_ann_queries(s, d), k=5, n_centroids=16, nprobe=6
-        ),
-        # --- text analysis ------------------------------------------------
-        "text_token_count": lambda s, d: TS.token_count(_docs(s, d)),
-        "text_bpe_token_count": lambda s, d: TS.bpe_token_count(_docs(s, d)),
-        "text_quality": lambda s, d: TS.quality_score(_docs(s, d)),
-        "text_langid": lambda s, d: TS.langid(_docs(s, d)),
-        "text_fingerprint": lambda s, d: TS.fingerprint(_docs(s, d)),
         # --- engine-native (float32 kernels; DuckDB float32-emulating oracles)
         "engine_bm25_top10": _engine_bm25_top10,
         "engine_nl_bm25_top10": _engine_nl_bm25_top10,
@@ -1635,41 +1529,6 @@ pairs AS (
 SELECT qid, rank, vec_id, cosine FROM (
   SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id)::INT AS rank
   FROM pairs) WHERE rank <= 5""",
-        "text_token_count": "SELECT doc_id, "
-        "len(list_filter(string_split(lower(text), ' '), x -> x <> ''))::INT AS n_tokens, "
-        "len(list_distinct(list_filter(string_split(lower(text), ' '), x -> x <> '')))::INT AS n_distinct, "
-        "length(text)::INT AS n_chars FROM documents",
-        "text_quality": f"""
-WITH {TOKS},
-agg AS (SELECT doc_id, count(*) AS n, sum(length(term)) AS sl,
-               sum(CASE WHEN term IN ({", ".join(f"'{s}'" for s in TS.STOPWORDS_EN)})
-                   THEN 1 ELSE 0 END) AS ns,
-               count(DISTINCT term) AS nd
-        FROM toks GROUP BY doc_id)
-SELECT doc_id, n::INT AS n_tokens,
-       round(sl / greatest(n, 1), 6) AS avg_token_len,
-       round(ns / greatest(n, 1), 6) AS stopword_ratio,
-       round(nd / greatest(n, 1), 6) AS distinct_ratio,
-       round(((CASE WHEN n >= 10 AND n <= 100000 THEN 1.0 ELSE 0.0 END)
-              + least(ns / greatest(n, 1) * 5.0, 1.0)
-              + nd / greatest(n, 1)) / 3.0, 6) AS quality
-FROM agg""",
-        "text_bpe_token_count": """
-WITH b AS (SELECT doc_id,
-    regexp_extract_all(lower(text),
-      '''(?:[sdmt]|ll|ve|re)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\\s'']+|\\s+') AS p,
-    len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS n_ws
-  FROM documents)
-SELECT doc_id, len(p)::INT AS n_pieces,
-       len(list_filter(p, x -> trim(x) <> ''))::INT AS n_word_pieces,
-       round(len(list_filter(p, x -> trim(x) <> '')) / greatest(n_ws, 1), 6)
-         AS pieces_per_ws_token
-FROM b""",
-        "text_langid": _sql_langid(),
-        "dedup_cluster_reps": _sql_cluster_reps(0.8),
-        "text_fingerprint": "SELECT doc_id, substr(md5(array_to_string("
-        "list_filter(string_split(lower(text), ' '), x -> x <> ''), ' ')), 1, 16) AS fp16 "
-        "FROM documents",
         "engine_bm25_top10": _sql_engine_bm25_top10(),
         "engine_nl_bm25_top10": _sql_engine_bm25_top10(tokenizer="nl_nostem"),
         "engine_dirichlet_top10": _sql_engine_scored_top10("dirichlet"),
@@ -1683,7 +1542,6 @@ FROM b""",
         ),
         "engine_xml_sd_top10": _sql_engine_sd_top10(),
         "ann_lsh_top5": _sql_ann_lsh_top5(),
-        "ann_ivf_top5": _sql_ann_ivf_top5(),
         "engine_prf_top10": _sql_engine_prf_top10(),
         "engine_lce_top10": _sql_engine_prf_top10(method="lce"),
         "engine_sqe_top10": _sql_engine_sqe_top10(),

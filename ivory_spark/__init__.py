@@ -13,10 +13,12 @@ This package re-expresses that pipeline Spark-first:
 - the inverted index as a salted, term-partitioned shuffle followed by a
   per-run NumPy d-gap + variable-byte block encoder
   (reference: ivory/core/index/BuildIPInvertedIndexDocSorted.java),
-- BM25 top-k retrieval both as an exact DataFrame plan and as a
-  block-max-WAND executor kernel
+- BM25 top-k retrieval both as an exact DataFrame plan and as a batch
+  path that runs the LocalSearcher serve kernel in Spark Python workers
   (reference: ivory/smrf/retrieval/MRFDocumentRanker.java,
-  ivory/smrf/model/score/BM25ScoringFunction.java).
+  ivory/smrf/model/score/BM25ScoringFunction.java),
+- incremental append of a parquet document delta to a built index, and
+  the Spark-free LocalSearcher serving tier over the index files.
 
 No code is copied from the reference; file:line citations in docstrings
 identify the behavior being reproduced.

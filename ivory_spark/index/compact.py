@@ -1,14 +1,12 @@
-"""Incremental index maintenance: fold a document delta (e.g. the
-parquet output of a streaming ingest) into an existing index without
-rebuilding it.
+"""Incremental index maintenance: fold a document delta (any parquet
+delta in the corpus schema) into an existing index without rebuilding
+it.
 
-This is the batch side of the streaming division of labor
-(streaming/ingest.py, streaming/neardup.py): the stream handles
-watermark-window dedup and candidate flagging; append_delta folds the
-accumulated documents into the inverted index as NEW docno-disjoint
-postings runs — the same multi-run-per-term representation salted builds
-already use (index/build.py encode_postings), so every query path reads
-appended runs with zero changes. The reference's analogue is re-running
+append_delta dedups the delta and folds its documents into the
+inverted index as NEW docno-disjoint postings runs — the same
+multi-run-per-term representation salted builds already use
+(index/build.py encode_postings), so every query path reads appended
+runs with zero changes. The reference's analogue is re-running
 its MapReduce build over the grown collection
 (ivory/app/PreprocessCollection.java); here appending is shuffle-light:
 delta-only tokenize + stats, one postings encode over delta rows, and a
@@ -21,9 +19,10 @@ corpus by less than its run-to-run spread and left build_ingest's
 throughput unresolved, so they stay serial.)
 
 Correctness contract:
-- content-level exact dedup spans the base index (delta docs whose
-  sha256 already exists in the base docmap are dropped — the north-rule
-  content invariant);
+- content-level exact dedup spans the delta (the minimum (repo, path,
+  commit) identity keeps repeated content) and the base index (delta
+  docs whose sha256 already exists in the base docmap are dropped — the
+  north-rule content invariant);
 - merged df/cf/doclen/n_docs/avgdl equal a full rebuild's, so the
   EXACT BM25 path scores identically to a full rebuild (modulo the
   termid fold order for multi-term queries: appended indexes keep the
@@ -117,8 +116,8 @@ def _append_delta_inner(
     hashed = delta.withColumn("sha256", F.sha2(F.col("content"), 256))
     w = Window.partitionBy("sha256").orderBy("repo", "path", "commit")
     # align to the base docmap's columns, in their order, so the parquet
-    # append stays schema-homogeneous (stream sinks carry extra columns
-    # like ingest_ts, and the anti-join moves its key to the front)
+    # append stays schema-homogeneous (a delta may carry extra columns
+    # like an ingest timestamp, and the anti-join moves its key to the front)
     base_cols = [c for c in base_docmap.columns if c != "docno"]
     fresh = (
         hashed.withColumn("_rn", F.row_number().over(w))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
+from ivory_spark.query.exact import resolve_terms
 from ivory_spark.session import local_frame
 
 # splitmix64-style avalanche; k seeded variants give k hash functions
@@ -109,14 +110,13 @@ def conjunctive_candidates_bloom(
     """False-positive-tolerant AND: decode only the rarest term's
     postings; test each docno against the other terms' Bloom filters.
     Returns (docno) — a superset of the exact intersection."""
-    dict_rows = index.dictionary.filter(F.col("term").isin(terms)).select(
-        "term", "termid", "df"
-    ).collect()
-    if len(dict_rows) < len(set(terms)):
+    lookup = resolve_terms(index, set(terms))
+    if len(lookup) < len(set(terms)):
         return local_frame(spark, [], "docno long")  # OOV term → empty AND
-    by_df = sorted(dict_rows, key=lambda r: r["df"])
-    driver_tid = int(by_df[0]["termid"])
-    other_tids = [int(r["termid"]) for r in by_df[1:]]
+    # (df, termid): a df tie picks the same driver term on every run
+    by_df = sorted((df, tid) for tid, df, _ in lookup.values())
+    driver_tid = by_df[0][1]
+    other_tids = [tid for _, tid in by_df[1:]]
     other_blooms = {
         r["termid"]: bytes(r["bloom"])
         for r in blooms.filter(F.col("termid").isin(other_tids)).collect()

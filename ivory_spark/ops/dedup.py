@@ -460,7 +460,7 @@ def cluster_representatives(
 
     The keep-the-best-copy policy real curation pipelines use instead
     of keep-min-id — e.g. keep the longest or highest-quality duplicate
-    (pass quality_score output as `scores`). One equi-join plus one
+    (`scores` is any (id_col, score_col) frame). One equi-join plus one
     partial-aggregated groupBy (max over a (score, -id) struct — no
     per-cluster sort, no window), so a pathological million-member
     cluster still reduces map-side.

@@ -151,143 +151,3 @@ def query_vectors(spark: SparkSession, emb: DataFrame, n: int = 10) -> DataFrame
         .limit(n)
         .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     )
-
-
-# ---------------------------------------------------------------------------
-# IVF-flat (inverted-file) ANN: the coarse-quantizer counterpart to the
-# SRP-LSH path. Centroids are a deterministic md5-ranked sample of the
-# corpus vectors (sampled-centroid IVF initialization; NO Lloyd
-# iterations, so an independent SQL engine reproduces the exact same
-# cells — the same portability rationale as rademacher_planes). Every
-# vector is assigned to its max-cosine centroid; queries probe the
-# nprobe nearest cells, so the search joins on cell id instead of
-# cross-producting the corpus. Reference analogue: the lsh/pwsim
-# signature-blocking family (ivory/lsh/), re-expressed as an IVF.
-# ---------------------------------------------------------------------------
-
-
-def _fold_cosine(vec: Column, lits: "list[float]") -> Column:
-    """Cosine of a vector column against a literal centroid, with the dot
-    and norms computed as ORDERED left folds (F.aggregate) so DuckDB's
-    list_reduce reproduces the identical float64 value — assignment
-    argmax then agrees at cell boundaries."""
-    arr = F.array(*[F.lit(float(x)) for x in lits])
-    dot = F.aggregate(
-        F.zip_with(vec, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nv = F.sqrt(
-        F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    # centroid norm as an ORDERED left fold (np.sum is pairwise and would
-    # round differently than DuckDB's list_reduce)
-    acc = 0.0
-    for x in lits:
-        acc += float(x) * float(x)
-    import math
-
-    return dot / (nv * F.lit(math.sqrt(acc)))
-
-
-def ivf_centroids(
-    emb: DataFrame, n_centroids: int = 16,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    lloyd_iters: int = 0,
-) -> "list[tuple[int, list[float]]]":
-    """Deterministic centroid sample: the n vectors whose md5(id) ranks
-    lowest (ties by id). Returns [(centroid_idx, vector)] — small, meant
-    to be broadcast as literals.
-
-    lloyd_iters > 0 refines the sample with that many Lloyd iterations
-    (spherical k-means shape: assign by max cosine, recenter on the
-    element-wise mean — cosine is scale-invariant so the unnormalized
-    mean yields identical assignments). Each iteration is one JVM-side
-    assignment pass + one (cell, idx) aggregation; empty cells keep
-    their previous centroid. Deterministic up to float64 summation
-    order: F.avg accumulates in partition order, so refined centroids
-    (and cell assignments exactly at ties) can differ across partition
-    counts — the gates pin lloyd_iters=0, the bit-reproducible mode
-    (ADVICE r05). The default (0) stays the SQL-reproducible sampled
-    mode the gates pin; Lloyd mode trades that for the recall/balance a
-    real IVF index wants at scale (recall grid: BENCH.md)."""
-    from ivory_spark.ops.dedup import portable_hash
-
-    h = portable_hash(F.col(id_col).cast("string"), 0)
-    rows = (
-        emb.select(F.col(id_col), F.col(vec_col), h.alias("_h"))
-        .orderBy("_h", id_col)
-        .limit(n_centroids)
-        .collect()
-    )
-    cents = [(i, [float(x) for x in r[vec_col]]) for i, r in enumerate(rows)]
-    for _ in range(lloyd_iters):
-        means = (
-            emb.withColumn("cell", _cell_expr(F.col(vec_col), cents))
-            .select("cell", F.posexplode(vec_col).alias("idx", "x"))
-            .groupBy("cell", "idx").agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("idx", "m"))).alias("pairs"))
-            .collect()
-        )
-        new = {r["cell"]: [float(p["m"]) for p in r["pairs"]] for r in means}
-        cents = [(i, new.get(i, v)) for i, v in cents]
-    return cents
-
-
-def _cell_expr(vec: Column, cents) -> Column:
-    """Max-cosine centroid index (first index wins ties — both engines
-    break ties the same way via position-of-max)."""
-    cos_arr = F.array(*[_fold_cosine(vec, v) for _, v in cents])
-    return (F.array_position(cos_arr, F.array_max(cos_arr)) - 1).cast("int")
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    lloyd_iters: int = 0,
-) -> DataFrame:
-    """Approximate cosine top-k via IVF cells: vectors live in their
-    max-cosine cell; each query scans its nprobe highest-cosine cells.
-    Recall < 1.0 by design (verified vs brute force in tests); the cell
-    equi-join replaces the cross product at scale. lloyd_iters refines
-    the sampled centroids (see ivf_centroids; gates pin the default 0)."""
-    from ivory_spark.functions.gmap import spread_partitions
-
-    cents = ivf_centroids(emb, n_centroids, id_col, vec_col, lloyd_iters)
-    e = spread_partitions(emb).withColumn("cell", _cell_expr(F.col(vec_col), cents))
-    qcos = F.array(*[_fold_cosine(F.col(qvec_col), v) for _, v in cents])
-    # top-nprobe cells: sort (cosine desc, idx asc) via struct sort
-    probe = F.slice(
-        F.transform(
-            F.reverse(
-                F.array_sort(
-                    F.transform(
-                        qcos, lambda c, i: F.struct(c.alias("c"), (-i).alias("ni"))
-                    )
-                )
-            ),
-            lambda s: -s["ni"],
-        ),
-        1,
-        nprobe,
-    )
-    q = queries.withColumn("cell", F.explode(probe)).withColumn(
-        "cell", F.col("cell").cast("int")
-    )
-    j = q.join(e, "cell").filter(F.col(qid_col) != F.col(id_col))
-    j = j.dropDuplicates([qid_col, id_col])
-    j = j.withColumn("cosine", F.round(cosine_expr(F.col(qvec_col), F.col(vec_col)), 6))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "cosine")
-    )

@@ -53,7 +53,7 @@ def _read_dictionary(index: Index, terms: list[str]) -> dict[str, tuple[int, int
     return found
 
 
-def _resolve_terms(index: Index, terms: set[str]) -> dict[str, tuple[int, int, int]]:
+def resolve_terms(index: Index, terms: set[str]) -> dict[str, tuple[int, int, int]]:
     """{term: (termid, df, cf)} for the in-dictionary terms of `terms`.
     A per-Index memo holds every term resolved so far, hits and misses
     (OOV) alike, so a batch reads the dictionary files only for terms no
@@ -80,7 +80,7 @@ def query_term_rows(
     earlier batch on this Index asked for are read from the dictionary
     files the Index pinned at open (_read_dictionary), the analogue of
     Ivory keeping the dictionary in RAM (RetrievalEnvironment.java:66-67);
-    the rest come from the Index's memo (_resolve_terms).
+    the rest come from the Index's memo (resolve_terms).
     Returns ([(qid, termid, qtf, df, cf), ...], sorted unique termids).
 
     Query strings are tokenized with the *same* tokenizer the index was
@@ -102,7 +102,7 @@ def query_term_rows(
         terms.update(t for t, _ in counts)
     if not terms:
         return [], []
-    lookup = _resolve_terms(index, terms)
+    lookup = resolve_terms(index, terms)
     rows = []
     termids = set()
     for qid, counts in per_q:
@@ -161,7 +161,7 @@ def weighted_query_rows(
     (ivory/sqe/retrieval/StructuredQuery.java,
     PostingsReaderWrapper.java:47-190: weights scale each term's score)."""
     terms = {term for q in wqueries for term, _ in q["terms"]}
-    lookup = _resolve_terms(index, terms)
+    lookup = resolve_terms(index, terms)
     rows = [
         (q["qid"], int(lookup[term][0]), float(w), int(lookup[term][1]))
         for q in wqueries

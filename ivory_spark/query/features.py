@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index.reader import Index
+from ivory_spark.query.exact import resolve_terms
 from ivory_spark.query.batch import Model
 from ivory_spark.query.mrf import (
     MrfModel,
@@ -293,9 +294,9 @@ def extract_features(
     ops = _resolve_ops(col_names, base_of, op_by_name)
 
     all_tokens = sorted({t for q in queries for t in tokenize(q["query"])})
-    dict_rows = index.dictionary.filter(F.col("term").isin(all_tokens)).collect()
-    stats = {r["term"]: (r["df"], r["cf"]) for r in dict_rows}
-    term_by_id = {r["termid"]: r["term"] for r in dict_rows}
+    lookup = resolve_terms(index, set(all_tokens))
+    stats = {t: (df, cf) for t, (_, df, cf) in lookup.items()}
+    term_by_id = {tid: t for t, (tid, _, _) in lookup.items()}
     termids = sorted(term_by_id)
 
     # per-query cliques over the postings-backed token subsequence

@@ -51,6 +51,7 @@ from ivory_spark.functions.scoring import (
 from ivory_spark.functions.tokenizer import MAX_TF, get_tokenizer
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
+from ivory_spark.query.exact import resolve_terms
 from ivory_spark.session import local_frame
 
 SHORT_MAX = 32767
@@ -730,9 +731,9 @@ def mrf_topk(
         {t for q in queries for t in tokenize(q["query"])}
         | {t for ts in extra_terms.values() for t in ts}
     )
-    dict_rows = index.dictionary.filter(F.col("term").isin(all_terms)).collect()
-    stats = {r["term"]: (r["df"], r["cf"]) for r in dict_rows}
-    term_by_id = {r["termid"]: r["term"] for r in dict_rows}
+    lookup = resolve_terms(index, set(all_terms))
+    stats = {t: (df, cf) for t, (_, df, cf) in lookup.items()}
+    term_by_id = {tid: t for t, (tid, _, _) in lookup.items()}
     termids = sorted(term_by_id)
 
     q_cliques = {

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index.reader import Index
+from ivory_spark.query.exact import resolve_terms
 from ivory_spark.query.mrf import (
     TermData,
     _clique_window_counts,
@@ -291,9 +292,9 @@ def sqe_topk(
     if needs_positions and not props.get("positional"):
         raise ValueError("phrase leaves require an index built with positional=True")
     all_terms = sorted({t for tree in trees.values() for t in query_terms(tree)})
-    dict_rows = index.dictionary.filter(F.col("term").isin(all_terms)).collect()
-    stats = {r["term"]: (r["df"], r["cf"]) for r in dict_rows}
-    term_by_id = {r["termid"]: r["term"] for r in dict_rows}
+    lookup = resolve_terms(index, set(all_terms))
+    stats = {t: (df, cf) for t, (_, df, cf) in lookup.items()}
+    term_by_id = {tid: t for t, (tid, _, _) in lookup.items()}
     termids = sorted(term_by_id)
 
     out_schema = "qid string, rank int, docno long"

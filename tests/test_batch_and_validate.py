@@ -1,10 +1,8 @@
 """Query sources (S8), TREC sink (S9), index validation (A9), df-band
-filter (P7), streaming ingest."""
+filter (P7)."""
 
 import gzip
-import os
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,412 +85,3 @@ def test_df_band_filter(spark, tiny_corpus_path, tmp_path):
     agg = idx.dictionary.agg(F.min("df").alias("lo"), F.max("df").alias("hi")).collect()[0]
     assert agg["lo"] >= 2 and agg["hi"] <= 50
     assert props["min_df"] == 2
-
-
-def test_streaming_term_stats(spark, tiny_corpus, tmp_path):
-    import pandas as pd
-
-    from ivory_spark.streaming.ingest import (
-        incremental_term_stats,
-        read_document_stream,
-        run_to_memory,
-    )
-
-    pdf = tiny_corpus.head(50).drop(columns=["sha256"]).copy()
-    pdf["ingest_ts"] = pd.Timestamp("2026-01-01 00:00:00")
-    stream_dir = str(tmp_path / "stream")
-    os.makedirs(stream_dir)
-    pdf.to_parquet(os.path.join(stream_dir, "batch0.parquet"), index=False)
-
-    stream = read_document_stream(spark, stream_dir)
-    agg = incremental_term_stats(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("tstats")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r["term"]: r["cf_delta"] for r in spark.sql("select * from tstats").collect()}
-    # oracle: token counts from the same tokenizer
-    from collections import Counter
-
-    from ivory_spark.functions.tokenizer import tokenize_py
-
-    want = Counter()
-    for c in pdf["content"]:
-        want.update(tokenize_py(c))
-    assert got == dict(want)
-
-
-def test_streaming_exact_dedup(spark, tiny_corpus, tmp_path):
-    import pandas as pd
-
-    from ivory_spark.streaming.ingest import (
-        read_document_stream,
-        run_to_memory,
-        streaming_exact_dedup,
-    )
-
-    pdf = tiny_corpus.head(60).drop(columns=["sha256"]).copy()
-    pdf["ingest_ts"] = pd.Timestamp("2026-01-01 00:00:00")
-    stream_dir = str(tmp_path / "sdedup")
-    os.makedirs(stream_dir)
-    pdf.to_parquet(os.path.join(stream_dir, "batch0.parquet"), index=False)
-
-    run_to_memory(streaming_exact_dedup(read_document_stream(spark, stream_dir)), "sdedup")
-    got = spark.sql("select * from sdedup").toPandas()
-    # one survivor per distinct content (tiny_corpus plants duplicates)
-    assert len(got) == pdf["content"].nunique()
-    assert got["sha256"].is_unique
-
-
-def test_streaming_quality_filter(spark, tmp_path):
-    import pandas as pd
-
-    from ivory_spark.streaming.ingest import (
-        read_document_stream,
-        run_to_memory,
-        streaming_quality_filter,
-    )
-
-    rows = pd.DataFrame(
-        {
-            "repo": ["r"] * 4,
-            "path": ["a", "b", "c", "d"],
-            "commit": ["1", "2", "3", "4"],
-            "lang": ["en"] * 4,
-            "content": [
-                "def good_function(arg): return arg + compute(arg)",  # keeps
-                "x",  # too short
-                "the the the the the the",  # all stopwords
-                # keeps: none of these is in the gate's own stopword list
-                "we would should could about above",
-            ],
-            "ingest_ts": [pd.Timestamp("2026-01-01")] * 4,
-        }
-    )
-    rows["ingest_ts"] = rows["ingest_ts"].astype("datetime64[us]")
-    stream_dir = str(tmp_path / "squal")
-    os.makedirs(stream_dir)
-    rows.to_parquet(os.path.join(stream_dir, "b0.parquet"), index=False)
-
-    run_to_memory(
-        streaming_quality_filter(read_document_stream(spark, stream_dir), min_tokens=5),
-        "squal",
-    )
-    got = spark.sql("select path from squal").toPandas()
-    assert sorted(got["path"]) == ["a", "d"]
-
-
-def test_streaming_neardup_stateful(spark, tmp_path):
-    """applyInPandasWithState near-dup candidates: duplicate content
-    flags against the bucket's first occupant; signatures agree with the
-    batch minhash op.
-
-    The stateful-streaming drain runs in a SUBPROCESS with a hard
-    timeout: this PySpark build's applyInPandasWithState path is
-    environment-flaky (observed: infinite micro-batch retry loops on
-    crashed Python workers, and a Spark-internal planning error), and a
-    stuck streaming query cannot be stopped from within the session —
-    the subprocess boundary guarantees the suite can never hang on it.
-    On flake the test SKIPs (with the subprocess tail for diagnosis);
-    assertions run whenever the drain completes."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    script = r"""
-import json, os, sys
-sys.path.insert(0, %(repo)r)
-import pandas as pd
-from ivory_spark.session import get_spark
-from ivory_spark.streaming.ingest import CORPUS_SCHEMA
-from ivory_spark.streaming.neardup import streaming_neardup_candidates
-from pyspark.sql import types as T
-
-spark = get_spark("nd-sub", cores=2, shuffle_partitions=2)
-dup = "alpha beta gamma delta epsilon zeta eta theta"
-schema = T.StructType(CORPUS_SCHEMA.fields + [T.StructField("doc_id", T.LongType())])
-d = %(dir)r
-pd.DataFrame(
-    {"repo": ["r"] * 3, "path": ["a", "b", "c"], "commit": ["1", "2", "3"],
-     "lang": ["x"] * 3,
-     "content": [dup, "totally different words entirely here", dup],
-     "ingest_ts": pd.Series([pd.Timestamp("2026-01-01")] * 3).astype("datetime64[us]"),
-     "doc_id": [10, 20, 30]}
-).to_parquet(os.path.join(d, "b0.parquet"), index=False)
-stream = spark.readStream.schema(schema).parquet(d)
-out = streaming_neardup_candidates(stream)
-q = (out.writeStream.outputMode("append").format("memory").queryName("nd_cand")
-     .trigger(availableNow=True).start())
-q.awaitTermination()
-rows = [r.asDict() for r in spark.sql("select * from nd_cand").collect()]
-print("RESULT_JSON:" + json.dumps(rows))
-"""
-    stream_dir = str(tmp_path / "nd")
-    os.makedirs(stream_dir)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        proc = subprocess.run(
-            [_sys.executable, "-c", script % {"repo": repo_root, "dir": stream_dir}],
-            capture_output=True, text=True, timeout=240, check=False,
-        )
-    except subprocess.TimeoutExpired:
-        pytest.skip("stateful-streaming drain exceeded 240s in subprocess (flake)")
-    tail = (proc.stdout + proc.stderr)[-800:]
-    result_lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT_JSON:")]
-    if proc.returncode != 0 or not result_lines:
-        pytest.skip(f"stateful-streaming drain failed/flaked in subprocess: {tail}")
-    got = json.loads(result_lines[0][len("RESULT_JSON:"):])
-    flagged = [r for r in got if r["doc_id"] == 30]
-    assert len(flagged) == 4  # 12 hashes / 3 per band
-    assert all(r["first_seen_doc"] == 10 for r in flagged)
-    assert all(r["doc_id"] != 20 for r in got)  # unique doc never collides
-    assert all(r["doc_id"] != r["first_seen_doc"] for r in got)  # no self-pairs
-
-    # signature parity with the batch operator: the stream's band keys
-    # (native-expression minhash, band_rows run here in batch mode — all
-    # exprs are row-local) equal the batch minhash_signatures' band keys
-    from ivory_spark.ops.dedup import minhash_signatures
-    from ivory_spark.streaming.neardup import band_rows
-
-    texts = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "totally different words entirely here"),
-        (3, ""),  # token-less: no band rows from either path
-    ]
-    bdf = spark.createDataFrame(texts, "doc_id long, content string")
-    stream_keys = {
-        (r["doc_id"], r["band"], r["bkey"]) for r in band_rows(bdf).collect()
-    }
-    batch_keys = set()
-    for row in minhash_signatures(bdf, text_col="content").collect():
-        for b in range(4):
-            key = "_".join(str(row[f"m{b * 3 + j}"]) for j in range(3))
-            batch_keys.add((row["doc_id"], b, key))
-    assert stream_keys == batch_keys and len(stream_keys) == 8
-
-
-def test_streaming_neardup_multibatch(spark, tmp_path):
-    """Cross-micro-batch state: a duplicate arriving in a LATER micro-batch
-    still pairs against the first batch's occupant, and a re-delivered
-    doc_id never self-pairs. File-source ordering is pinned with os.utime
-    (the file source orders same-mtime files arbitrarily). Subprocess-
-    isolated like the single-batch test."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    script = r"""
-import json, os, sys
-sys.path.insert(0, %(repo)r)
-import pandas as pd
-from ivory_spark.session import get_spark
-from ivory_spark.streaming.ingest import CORPUS_SCHEMA
-from ivory_spark.streaming.neardup import streaming_neardup_candidates
-from pyspark.sql import types as T
-
-spark = get_spark("nd-sub2", cores=2, shuffle_partitions=2)
-dup = "alpha beta gamma delta epsilon zeta eta theta"
-schema = T.StructType(CORPUS_SCHEMA.fields + [T.StructField("doc_id", T.LongType())])
-d = %(dir)r
-
-def write(name, rows, mtime):
-    p = os.path.join(d, name)
-    pd.DataFrame(
-        {"repo": ["r"] * len(rows), "path": [str(i) for i, _ in rows],
-         "commit": ["c"] * len(rows), "lang": ["x"] * len(rows),
-         "content": [t for _, t in rows],
-         "ingest_ts": pd.Series([pd.Timestamp("2026-01-01")] * len(rows)).astype("datetime64[us]"),
-         "doc_id": [i for i, _ in rows]}
-    ).to_parquet(p, index=False)
-    os.utime(p, (mtime, mtime))
-
-write("b0.parquet", [(10, dup)], 1_000_000)
-write("b1.parquet", [(30, dup), (10, dup)], 1_000_100)  # dup + re-delivery
-stream = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(d))
-out = streaming_neardup_candidates(stream)
-q = (out.writeStream.outputMode("append").format("memory").queryName("nd2")
-     .trigger(availableNow=True).start())
-q.awaitTermination()
-rows = [r.asDict() for r in spark.sql("select * from nd2").collect()]
-print("RESULT_JSON:" + json.dumps(rows))
-"""
-    stream_dir = str(tmp_path / "nd2")
-    os.makedirs(stream_dir)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        proc = subprocess.run(
-            [_sys.executable, "-c", script % {"repo": repo_root, "dir": stream_dir}],
-            capture_output=True, text=True, timeout=240, check=False,
-        )
-    except subprocess.TimeoutExpired:
-        pytest.skip("stateful-streaming drain exceeded 240s in subprocess (flake)")
-    tail = (proc.stdout + proc.stderr)[-800:]
-    result_lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT_JSON:")]
-    if proc.returncode != 0 or not result_lines:
-        pytest.skip(f"stateful-streaming drain failed/flaked in subprocess: {tail}")
-    got = json.loads(result_lines[0][len("RESULT_JSON:"):])
-    flagged = [r for r in got if r["doc_id"] == 30]
-    assert len(flagged) == 4  # doc 30 pairs against batch-0 state in all 4 bands
-    assert all(r["first_seen_doc"] == 10 for r in flagged)
-    # re-delivered doc 10 must not self-pair or re-emit
-    assert all(r["doc_id"] != 10 for r in got)
-
-
-def test_streaming_neardup_ttl_retires_state(spark, tmp_path):
-    """state_ttl_minutes + a processing-time trigger (the production
-    long-running-stream configuration; the documented hang is specific to
-    ProcessingTimeTimeout + trigger(availableNow)): after the TTL expires
-    and an unrelated batch fires the timeout sweep, a later duplicate of
-    the pre-TTL doc must NOT pair against it — bucket state was retired
-    (near-dups across the TTL horizon are batch compaction's job).
-    Subprocess-isolated, skip-on-flake like the other stateful tests."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    script = r"""
-import json, os, sys, time
-sys.path.insert(0, %(repo)r)
-import pandas as pd
-from ivory_spark.session import get_spark
-from ivory_spark.streaming.ingest import CORPUS_SCHEMA
-from ivory_spark.streaming.neardup import streaming_neardup_candidates
-from pyspark.sql import types as T
-
-spark = get_spark("nd-ttl", cores=2, shuffle_partitions=2)
-dup = "alpha beta gamma delta epsilon zeta eta theta"
-other = "completely unrelated vocabulary tokens spread wide apart"
-schema = T.StructType(CORPUS_SCHEMA.fields + [T.StructField("doc_id", T.LongType())])
-d = %(dir)r
-
-def write(name, rows):
-    pd.DataFrame(
-        {"repo": ["r"] * len(rows), "path": [str(i) for i, _ in rows],
-         "commit": ["c"] * len(rows), "lang": ["x"] * len(rows),
-         "content": [t for _, t in rows],
-         "ingest_ts": pd.Series([pd.Timestamp("2026-01-01")] * len(rows)).astype("datetime64[us]"),
-         "doc_id": [i for i, _ in rows]}
-    ).to_parquet(os.path.join(d, name), index=False)
-
-write("b0.parquet", [(10, dup)])
-stream = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(d))
-# 0.05 min = 3 s TTL
-out = streaming_neardup_candidates(stream, state_ttl_minutes=0.05)
-q = (out.writeStream.outputMode("append").format("memory").queryName("ndttl")
-     .trigger(processingTime="500 milliseconds").start())
-
-def wait_rows(pred, deadline=60):
-    t0 = time.time()
-    while time.time() - t0 < deadline:
-        rows = [r.asDict() for r in spark.sql("select * from ndttl").collect()]
-        if pred(rows):
-            return rows
-        time.sleep(0.5)
-    return [r.asDict() for r in spark.sql("select * from ndttl").collect()]
-
-wait_rows(lambda rows: True, deadline=5)      # let batch 0 seed state
-time.sleep(5)                                  # > TTL horizon
-write("b1.parquet", [(20, other)])             # fires the timeout sweep
-time.sleep(4)
-write("b2.parquet", [(30, dup)])               # post-TTL duplicate of doc 10
-time.sleep(6)
-rows = wait_rows(lambda rows: any(r["doc_id"] == 30 for r in rows), deadline=10)
-q.stop()
-print("RESULT_JSON:" + json.dumps(rows))
-"""
-    stream_dir = str(tmp_path / "ndttl")
-    os.makedirs(stream_dir)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        proc = subprocess.run(
-            [_sys.executable, "-c", script % {"repo": repo_root, "dir": stream_dir}],
-            capture_output=True, text=True, timeout=300, check=False,
-        )
-    except subprocess.TimeoutExpired:
-        pytest.skip("TTL streaming drain exceeded 300s in subprocess (flake)")
-    tail = (proc.stdout + proc.stderr)[-800:]
-    result_lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT_JSON:")]
-    if proc.returncode != 0 or not result_lines:
-        pytest.skip(f"TTL streaming drain failed/flaked in subprocess: {tail}")
-    got = json.loads(result_lines[0][len("RESULT_JSON:"):])
-    # doc 30 arrived after doc 10's buckets were retired: no pair emitted
-    pairs_30 = [r for r in got if r["doc_id"] == 30 and r["first_seen_doc"] == 10]
-    assert pairs_30 == [], got
-
-
-def test_streaming_neardup_evicted_redelivery_guard(spark, tmp_path):
-    """Forced re-delivery of a doc EVICTED from the FIFO window: with the
-    evicted-id bloom guard the re-delivered doc is recognized and emits
-    NO new candidates (pre-guard it was indistinguishable from a new doc
-    and re-paired). max_state=2 forces doc 10's eviction when doc 30
-    arrives; batch 3 then re-delivers doc 10. Subprocess-isolated,
-    skip-on-flake like the other stateful-streaming tests."""
-    import json
-    import subprocess
-    import sys as _sys
-
-    script = r"""
-import json, os, sys
-sys.path.insert(0, %(repo)r)
-import pandas as pd
-from ivory_spark.session import get_spark
-from ivory_spark.streaming.ingest import CORPUS_SCHEMA
-from ivory_spark.streaming.neardup import streaming_neardup_candidates
-from pyspark.sql import types as T
-
-spark = get_spark("nd-evict", cores=2, shuffle_partitions=2)
-dup = "alpha beta gamma delta epsilon zeta eta theta"
-schema = T.StructType(CORPUS_SCHEMA.fields + [T.StructField("doc_id", T.LongType())])
-d = %(dir)r
-
-def write(name, rows, mtime):
-    p = os.path.join(d, name)
-    pd.DataFrame(
-        {"repo": ["r"] * len(rows), "path": [str(i) for i, _ in rows],
-         "commit": ["c"] * len(rows), "lang": ["x"] * len(rows),
-         "content": [t for _, t in rows],
-         "ingest_ts": pd.Series([pd.Timestamp("2026-01-01")] * len(rows)).astype("datetime64[us]"),
-         "doc_id": [i for i, _ in rows]}
-    ).to_parquet(p, index=False)
-    os.utime(p, (mtime, mtime))
-
-write("b0.parquet", [(10, dup)], 1_000_000)
-write("b1.parquet", [(20, dup), (30, dup)], 1_000_100)  # evicts 10 (max_state=2)
-write("b2.parquet", [(10, dup)], 1_000_200)             # re-delivery of evicted 10
-stream = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(d))
-out = streaming_neardup_candidates(stream, max_state=2)
-q = (out.writeStream.outputMode("append").format("memory").queryName("ndev")
-     .trigger(availableNow=True).start())
-q.awaitTermination()
-rows = [r.asDict() for r in spark.sql("select * from ndev").collect()]
-print("RESULT_JSON:" + json.dumps(rows))
-"""
-    stream_dir = str(tmp_path / "ndev")
-    os.makedirs(stream_dir)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        proc = subprocess.run(
-            [_sys.executable, "-c", script % {"repo": repo_root, "dir": stream_dir}],
-            capture_output=True, text=True, timeout=240, check=False,
-        )
-    except subprocess.TimeoutExpired:
-        pytest.skip("stateful-streaming drain exceeded 240s in subprocess (flake)")
-    tail = (proc.stdout + proc.stderr)[-800:]
-    result_lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT_JSON:")]
-    if proc.returncode != 0 or not result_lines:
-        pytest.skip(f"stateful-streaming drain failed/flaked in subprocess: {tail}")
-    got = json.loads(result_lines[0][len("RESULT_JSON:"):])
-    # docs 20 and 30 each paired in all 4 bands when they arrived
-    assert len([r for r in got if r["doc_id"] == 20]) == 4
-    assert len([r for r in got if r["doc_id"] == 30]) == 4
-    # the re-delivered, evicted doc 10 emitted NOTHING (bloom guard);
-    # without the guard it would re-pair in all 4 bands
-    assert [r for r in got if r["doc_id"] == 10] == []
-    assert all(r["doc_id"] != r["first_seen_doc"] for r in got)

@@ -472,20 +472,15 @@ def test_partial_append_detected_and_repaired(spark, tmp_path_factory):
     assert served == before
 
 
-def test_stream_to_index_integration(spark, tiny_corpus, tmp_path):
-    """The full streaming division of labor: documents arrive on a
-    stream, streaming_exact_dedup drops within-horizon duplicates, the
-    survivors stage to parquet, append_delta folds them into the batch
-    index (dropping docs whose content the base already has), and after
-    refresh_bounds the WAND path retrieves the new documents."""
+def test_append_dedups_within_delta_and_against_base(spark, tiny_corpus, tmp_path):
+    """A parquet delta with an extra column (ingest_ts): append_delta
+    keeps one copy of content repeated within the delta (the minimum
+    (repo, path, commit) identity), drops content the base already
+    holds, writes the docmap under the build's columns, and after
+    refresh_bounds the WAND path retrieves the new document."""
     import pandas as pd
 
-    from ivory_spark.index.compact import repair_partial_append  # noqa: F401
-    from ivory_spark.streaming.ingest import (
-        read_document_stream,
-        run_to_parquet,
-        streaming_exact_dedup,
-    )
+    from ivory_spark.index.reader import _data_files
 
     base_pdf = tiny_corpus.head(60).drop(columns=["sha256"])
     base_path = str(tmp_path / "base.parquet")
@@ -493,13 +488,15 @@ def test_stream_to_index_integration(spark, tiny_corpus, tmp_path):
     root = str(tmp_path / "idx")
     build_index(spark, base_path, root, IndexConfig(salt_threshold=30, n_shards=4))
     n0 = open_index(spark, root).properties["n_docs"]
+    docmap_dir = os.path.join(root, "docmap")
+    build_cols = {tuple(pq.read_schema(f).names) for f in _data_files(docmap_dir)}
+    assert len(build_cols) == 1
 
-    # stream: one brand-new doc (unique token), one duplicate of a base
-    # doc (same content), and the new doc re-delivered (stream dedup)
-    stream_dir = str(tmp_path / "stream")
-    os.makedirs(stream_dir)
+    # one brand-new doc (unique token), one copy of a base doc, and a
+    # second identity carrying the new doc's content
     new_text = "zzzuniqueterm appears here exactly once in the collection"
-    rows = pd.DataFrame(
+    delta_path = str(tmp_path / "delta.parquet")
+    pd.DataFrame(
         {
             "repo": ["r2"] * 3,
             "path": ["new1", "dup1", "new1b"],
@@ -510,21 +507,18 @@ def test_stream_to_index_integration(spark, tiny_corpus, tmp_path):
                 "datetime64[us]"
             ),
         }
-    )
-    rows.to_parquet(os.path.join(stream_dir, "b0.parquet"), index=False)
+    ).to_parquet(delta_path, index=False)
 
-    delta_dir = str(tmp_path / "delta")
-    run_to_parquet(
-        streaming_exact_dedup(read_document_stream(spark, stream_dir)),
-        delta_dir,
-        str(tmp_path / "ckpt"),
-    )
-
-    from ivory_spark.index.compact import append_delta, refresh_bounds
-
-    props = append_delta(spark, root, delta_dir)
-    # only the ONE genuinely-new document survived both dedup layers
+    props = append_delta(spark, root, delta_path)
     assert props["n_docs"] == n0 + 1
+    kept = (
+        open_index(spark, root).docmap.filter(F.col("docno") == n0 + 1).collect()
+    )
+    assert [(r["repo"], r["path"], r["commit"]) for r in kept] == [("r2", "new1", "c1")]
+    files = _data_files(docmap_dir)
+    assert len(files) > 1
+    assert {tuple(pq.read_schema(f).names) for f in files} == build_cols
+
     refresh_bounds(spark, root)
     idx = open_index(spark, root)
     hits = bm25_topk_wand(

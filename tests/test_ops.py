@@ -1,5 +1,5 @@
-"""Dedup suite, similarity search and text stats over the
-driver-generated documents / embeddings tables at sf0.001."""
+"""Dedup suite and similarity search over the driver-generated
+documents / embeddings tables at sf0.001."""
 
 import numpy as np
 import pytest
@@ -127,23 +127,6 @@ def test_lsh_ann_recall(spark, emb):
         assert cosines == sorted(cosines, reverse=True)
 
 
-def test_textstats(spark, docs):
-    from ivory_spark.ops.textstats import fingerprint, langid, quality_score, token_count
-
-    tc = token_count(docs.limit(20)).collect()
-    assert all(r["n_tokens"] >= r["n_distinct"] for r in tc)
-    qs = quality_score(docs.limit(20)).collect()
-    assert all(0.0 <= r["quality"] <= 1.0 for r in qs)
-    li = langid(docs.limit(20)).collect()
-    assert all(r["pred_lang"] in {"en", "es", "de", "fr", "zh"} for r in li)
-    fp = fingerprint(docs.limit(20)).collect()
-    assert all(len(r["fp16"]) == 16 for r in fp)
-    # fingerprint is content-determined
-    d = spark.createDataFrame([(1, "x y z"), (2, "x y z")], "doc_id long, text string")
-    fps = {r["fp16"] for r in fingerprint(d).collect()}
-    assert len(fps) == 1
-
-
 # --- round-2 scale-path tests: keyed joins, never all-pairs BNLJ ----------
 
 
@@ -243,60 +226,6 @@ def test_lsh_multiprobe_lifts_recall(spark, emb):
     tuned = {(r["qid"], r["vec_id"])
              for r in lsh_bucketed_topk(emb, q, k=5, n_planes=4, multiprobe=2).collect()}
     assert len(tuned & exact) / len(exact) >= 0.8
-
-
-def test_ivf_ann_recall(spark, emb):
-    """IVF-flat: nprobe monotonically lifts recall vs brute force, and
-    probing ALL cells recovers it exactly (the cells partition the
-    corpus, so a full probe is exhaustive)."""
-    from ivory_spark.ops.similarity import brute_force_topk, ivf_topk, query_vectors
-
-    q = query_vectors(spark, emb, n=10)
-    exact = {(r["qid"], r["vec_id"]) for r in brute_force_topk(emb, q, k=3).collect()}
-
-    def recall(nprobe):
-        got = {
-            (r["qid"], r["vec_id"])
-            for r in ivf_topk(emb, q, k=3, n_centroids=8, nprobe=nprobe).collect()
-        }
-        return len(exact & got) / len(exact)
-
-    r2, r8 = recall(2), recall(8)
-    assert r2 >= 0.1
-    assert r8 >= r2
-    assert r8 == 1.0  # all 8 cells probed == exhaustive search
-
-
-def test_ivf_lloyd_mode(spark, emb):
-    """Lloyd-refined centroids (ivf_centroids lloyd_iters>0): the
-    refinement is deterministic, keeps the centroid count, and a full
-    probe is still exhaustive (cells always partition the corpus);
-    recall at partial probe stays at a sane floor on the fixture."""
-    from ivory_spark.ops.similarity import (
-        brute_force_topk,
-        ivf_centroids,
-        ivf_topk,
-        query_vectors,
-    )
-
-    c1 = ivf_centroids(emb, n_centroids=8, lloyd_iters=2)
-    c2 = ivf_centroids(emb, n_centroids=8, lloyd_iters=2)
-    assert c1 == c2 and len(c1) == 8  # deterministic refinement
-    sampled = ivf_centroids(emb, n_centroids=8)
-    assert c1 != sampled  # the refinement actually moved the centroids
-
-    q = query_vectors(spark, emb, n=10)
-    exact = {(r["qid"], r["vec_id"]) for r in brute_force_topk(emb, q, k=3).collect()}
-    got8 = {
-        (r["qid"], r["vec_id"])
-        for r in ivf_topk(emb, q, k=3, n_centroids=8, nprobe=8, lloyd_iters=2).collect()
-    }
-    assert len(exact & got8) / len(exact) == 1.0  # full probe exhaustive
-    got2 = {
-        (r["qid"], r["vec_id"])
-        for r in ivf_topk(emb, q, k=3, n_centroids=8, nprobe=2, lloyd_iters=2).collect()
-    }
-    assert len(exact & got2) / len(exact) >= 0.1
 
 
 def test_dedup_clusters_connected_components(spark):

@@ -99,6 +99,22 @@ def test_sqe_rank_identity(spark, sq_index, sq_oracle):
     _assert_match(res, golden)
 
 
+def test_plan_construction_starts_no_job(spark, sq_index, sq_oracle, jobs_started):
+    """mrf_topk and sqe_topk resolve query terms with exact.resolve_terms
+    on the driver, so building either plan on a freshly opened index (an
+    empty term memo) starts no Spark job; the plans then rank as before."""
+    from ivory_spark.query.mrf import mrf_topk, oracle_mrf_topk
+
+    queries = [{"qid": "m1", "query": "public static void"}, {"qid": "m2", "query": "import"}]
+    idx = open_index(spark, sq_index.root)
+    mrf, jobs = jobs_started(lambda: mrf_topk(spark, idx, queries, with_docid=False))
+    assert jobs == []
+    sqe, jobs = jobs_started(lambda: sqe_topk(spark, idx, SQ, k=10))
+    assert jobs == []
+    _assert_match(sqe, oracle_sqe_topk(sq_oracle, SQ, k=10))
+    _assert_match(mrf, oracle_mrf_topk(sq_oracle, queries))
+
+
 def test_parse_vs_programmatic_rank_identity(spark, sq_index):
     """The judge criterion: JSON-parsed and dict-built queries retrieve
     identically."""

@@ -97,21 +97,6 @@ def main() -> None:
         sections.append((f"dedup plan: {name}",
                          f"BroadcastNestedLoopJoin present: {has}\n"))
 
-    # IVF ANN: the cell join must be a keyed join (no cartesian product
-    # on the corpus side — the whole point of the coarse quantizer)
-    from ivory_spark.ops.similarity import ivf_topk, query_vectors
-
-    emb_full = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    ivf_plan = captured_explain(
-        ivf_topk(emb_full, query_vectors(spark, emb_full, 5), k=3,
-                 n_centroids=8, nprobe=2)
-    )
-    ok_ivf = "CartesianProduct" not in ivf_plan
-    sections.append(("ANN IVF cell join", ivf_plan))
-    sections.append(
-        ("IVF checks", f"no CartesianProduct in IVF plan: {ok_ivf}\n")
-    )
-
     # PRF feedback-doc mining read: docno IN (...) must reach the tdf
     # parquet scan; tdf is range-clustered by docno at write so the
     # pushed filter prunes row groups instead of scanning the artifact
@@ -182,7 +167,6 @@ def main() -> None:
     print("PRUNING_OK" if ok_pruned else "PRUNING_MISSING")
     print("NO_BNLJ_OK" if ok_no_bnlj else "BNLJ_PRESENT")
     print("PRF_PUSHDOWN_OK" if ok_prf else "PRF_PUSHDOWN_MISSING")
-    print("IVF_KEYED_JOIN_OK" if ok_ivf else "IVF_CARTESIAN_PRESENT")
     print("BITEXT_NO_BNLJ_OK" if ok_bitext else "BITEXT_BNLJ_PRESENT")
     if ok_casc is not None:
         print("CASCADE_UNION_OK" if ok_casc else "CASCADE_UNION_MISSING")

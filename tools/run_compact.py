@@ -6,13 +6,13 @@ Usage:
   spark-submit ... tools/run_compact.py --index-root /path/index refresh-bounds
   spark-submit ... tools/run_compact.py --index-root /path/index repair
 
-append folds a document delta (e.g. a streaming ingest's parquet
-staging directory, see streaming/ingest.run_to_parquet) into the index
-as new docno-disjoint postings runs; refresh-bounds re-derives the WAND
-block-max bounds under the grown stats (required before WAND/serving
-resume); repair removes orphan rows left by a crashed append. The batch
-counterpart of the reference re-running its MapReduce build over the
-grown collection (app/PreprocessCollection.java).
+append folds a document delta (any parquet files in the corpus schema;
+extra columns are dropped) into the index as new docno-disjoint postings
+runs; refresh-bounds re-derives the WAND block-max bounds under the
+grown stats (required before the WAND path resumes); repair removes
+orphan rows left by a crashed append. The batch counterpart of the
+reference re-running its MapReduce build over the grown collection
+(app/PreprocessCollection.java).
 """
 
 from __future__ import annotations
