@@ -1005,11 +1005,12 @@ FROM top t JOIN edocmap d USING (docno) WHERE t.rank <= {k}
 
 
 def _engine_scored(spark: SparkSession, sf_dir: str, scorer: str) -> DataFrame:
-    """Engine-native non-BM25 retrieval (scored_topk) over the cached index."""
-    from ivory_spark.query.exact import scored_topk
+    """Engine-native non-BM25 retrieval (run_batch on the serve kernel)
+    over the cached index."""
+    from ivory_spark.query.batch import Model, run_batch
 
     index = _engine_index(spark, sf_dir)
-    return _round4(scored_topk(spark, index, IR.GATE_QUERIES, scorer=scorer, k=10))
+    return _round4(run_batch(spark, index, IR.GATE_QUERIES, Model(scorer=scorer, k=10)))
 
 
 # float32 contribution expressions for the non-BM25 engine scorers,
@@ -1039,9 +1040,9 @@ _F32_SCORER_CONTRIB = {
 
 
 def _sql_engine_scored_top10(scorer: str, k: int = 10) -> str:
-    """DuckDB float32 oracle for scored_topk: LM scorers use the full
-    candidate x query-term matrix (tf=0 background rows); tf-proportional
-    scorers use matching rows only."""
+    """DuckDB float32 oracle for the engine's non-BM25 scorers: LM
+    scorers use the full candidate x query-term matrix (tf=0 background
+    rows); tf-proportional scorers use matching rows only."""
     lm = scorer in ("dirichlet", "jm")
     if lm:
         matrix = """

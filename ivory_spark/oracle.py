@@ -149,7 +149,8 @@ def oracle_scored_topk(
     params: dict | None = None,
     k: int = 10,
 ) -> dict[str, list[dict]]:
-    """Golden twin of query/exact.scored_topk: candidates = docs matching
+    """Golden twin of run_batch's non-BM25 scorers (the serve kernel's
+    LocalSearcher.search(scorer=...)): candidates = docs matching
     >= 1 in-dictionary query term; LM scorers (dirichlet, jm) score every
     query term per candidate (tf=0 background, as
     DirichletScoringFunction.java:30-66 smoothes absent terms);

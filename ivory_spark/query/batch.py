@@ -23,7 +23,7 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.session import local_frame
 
@@ -232,23 +232,28 @@ def run_batch(
     model=None,  # Model | MrfModel | None
 ) -> DataFrame:
     """End-to-end batch retrieval with a model spec (RunQueryLocal
-    analogue). bm25 runs on the serve kernel (bm25_topk_serve, k1/b/idf
-    overrides included); other scorers use the exact relational plan;
-    MrfModel specs (SD/FD run files) route to the positional MRF kernel."""
+    analogue), every model on the serve kernel (serve_batch): bm25
+    through bm25_topk_serve (k1/b/idf overrides included); dirichlet,
+    jm, tfidf and f2exp (params mu, lambda, s, k) through
+    LocalSearcher.search; MrfModel specs (SD/FD run files) through
+    mrf_topk. Past the workers' memory budget a bm25 batch runs the
+    exact relational plan and any other model raises ValueError (see
+    serve_batch)."""
     model = model or Model()
+    from ivory_spark.functions.scoring import SCORERS
+    from ivory_spark.functions.tokenizer import get_tokenizer
     from ivory_spark.query.mrf import MrfModel, mrf_topk
 
     if isinstance(model, MrfModel):
         return mrf_topk(spark, index, queries, model=model)
     if model.scorer == "bm25":
         return bm25_topk_serve(spark, index, queries, k=model.k, params=model.params)
-    # dirichlet / jm / tfidf / f2exp: the generalized exact path.
-    # (Dirichlet/JM scores are negative so MaxScore bounds don't prune —
-    # no WAND variant; mirrors DirichletScoringFunction.java:30-66 etc.)
-    from ivory_spark.query.exact import scored_topk
-
-    return scored_topk(
-        spark, index, queries, scorer=model.scorer, params=model.params, k=model.k
+    if model.scorer not in SCORERS:
+        raise ValueError(f"unknown scorer: {model.scorer}")
+    tokenize = get_tokenizer(index.properties.get("tokenizer", "code_v1")).tokenize_py
+    return serve_batch(
+        spark, index, queries, "search", terms={t for q in queries for t in tokenize(q["query"])},
+        k=model.k, params=model.params, scorer=model.scorer,
     )
 
 
@@ -268,8 +273,8 @@ def _snapshot(index) -> tuple[tuple, int]:
     """The batch's snapshot key (index root, properties, sorted postings
     file names; pyarrow's discovery skips '.' and '_' files) and an
     upper bound on one searcher's resident bytes: the postings files
-    whole (termid and blob columns, plus position bytes BM25 never
-    reads), the dictionary and the docids."""
+    whole (termid and blob columns, plus the position bytes that only
+    SD/FD and sqe read), the dictionary and the docids."""
     names, nbytes = [], 0
     for e in os.scandir(os.path.join(index.root, "postings")):
         if e.is_file() and not e.name.startswith((".", "_")):
@@ -301,20 +306,109 @@ def _worker_searcher(key: tuple):
     return _WORKER["searcher"]
 
 
-def _serve_slice(key, k, with_docid, params, batches):
+def _serve_slice(key, method, kwargs, per_qid, batches):
     """mapInPandas body: every query of this slice through the worker's
-    searcher, rows in (qid, rank) order. An empty slice opens none."""
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
+    searcher, as searcher.<method>(query, **kwargs) plus the query's
+    per_qid arguments and, when the rows carry one, its `allow` array;
+    rows in (qid, rank) order. An empty slice opens none."""
+    cols = ["qid", "rank", "docno"] + (["docid"] if kwargs["with_docid"] else []) + ["score"]
     for pdf in batches:
-        searcher = _worker_searcher(key)
+        search = getattr(_worker_searcher(key), method)
+        qids = pdf["qid"].tolist()
+        args = [per_qid.get(qid, {}) for qid in qids]
+        if "allow" in pdf:
+            # a qid with no allow-list row has nothing to score
+            args = [dict(a, allow=np.asarray([] if al is None else al, dtype=np.int64))
+                    for a, al in zip(args, pdf["allow"])]
         hits = [
             {"qid": qid, **r}
-            for qid, text in zip(pdf["qid"].tolist(), pdf["query"].tolist())
-            for r in searcher.search(text, k, with_docid, params)
+            for qid, text, a in zip(qids, pdf["query"].tolist(), args)
+            for r in search(text, **kwargs, **a)
         ]
         yield pd.DataFrame(hits, columns=cols).astype(
             {"rank": np.int32, "docno": np.int64, "score": np.float32}
         )
+
+
+def serve_batch(
+    spark: SparkSession,
+    index,
+    queries: list[dict],
+    method: str,
+    terms: set[str] | None = None,
+    with_docid: bool = True,
+    allow: DataFrame | None = None,
+    per_qid: dict[str, dict] | None = None,
+    over_budget=None,
+    **kwargs,
+) -> DataFrame:
+    """A query batch on the serve kernel -> (qid, rank, docno[, docid],
+    score): each query [{'qid', 'query': text}] runs as
+    LocalSearcher.<method>(query, with_docid=..., **kwargs), `method`
+    being search, search_sd or search_sqe, plus per_qid[qid]'s
+    arguments.
+
+    Ivory's retrieval is a single-process engine over the MapReduce
+    build (BatchQueryRunner.java); here each Spark Python worker is that
+    engine. The driver pins a snapshot (index root, properties, postings
+    file list) and hands the qid-sorted queries to Spark as a
+    session.local_frame: a LocalTableScan in the JVM, which splits them
+    into min(len(queries), defaultParallelism) contiguous slices in
+    order, so no Python worker starts just to read them. A mapInPandas
+    task runs its slice in a searcher the worker process keeps across
+    batches, one per process, reopened when the pin changes. So the plan
+    has no shuffle, no block-max bounds (an appended index is served
+    before refresh_bounds), no docmap join and no sort: collect() returns
+    slices in order.
+
+    terms: the batch's query terms, when the caller knows them; if none
+    is in the dictionary (exact.resolve_terms, no Spark job) the result
+    is an empty local frame and nothing runs.
+    allow: a (qid, docno) DataFrame, the only docs each query may score
+    (a cascade stage's survivors). Each qid's docnos are gathered into
+    one list in the JVM (collect_list) and joined to its query row, so
+    they never pass through the driver; the kernel gets them as an
+    `allow` array. The join reorders rows, so this route alone ends in
+    orderBy("qid", "rank").
+
+    Memory budget: each worker process holds the postings termid and
+    blob columns (position bytes too for SD/FD and sqe), the dictionary
+    and every docid in memory. When the upper bound _snapshot computes
+    for that set exceeds build.BROADCAST_BUDGET_BYTES (256 MB), the
+    batch returns over_budget(): bm25_topk_serve passes the exact
+    relational plan (exact.bm25_topk). No other model has a route past
+    the budget, so without over_budget the call raises ValueError, naming
+    the budget and the estimate, before any Spark job. A memory-mapped
+    serve image would lift that limit (ROADMAP item 7)."""
+    from ivory_spark.index import build
+
+    key, resident = _snapshot(index)
+    if resident > build.BROADCAST_BUDGET_BYTES:
+        if over_budget is None:
+            raise ValueError(
+                f"a serve-kernel worker would hold about {resident:,} bytes of the index "
+                f"at {index.root}, over build.BROADCAST_BUDGET_BYTES = "
+                f"{build.BROADCAST_BUDGET_BYTES:,}; only bm25 runs past that budget"
+            )
+        return over_budget()
+    schema = "qid string, rank int, docno long, score float"
+    if with_docid:
+        schema = "qid string, rank int, docno long, docid string, score float"
+    if terms is not None:
+        from ivory_spark.query.exact import resolve_terms
+
+        if not resolve_terms(index, terms):
+            return local_frame(spark, [], schema)
+    rows = sorted(((q["qid"], q["query"]) for q in queries), key=lambda r: r[0])
+    qdf = local_frame(spark, rows, "qid string, query string")
+    if allow is not None:
+        lists = allow.groupBy("qid").agg(F.collect_list("docno").alias("allow"))
+        qdf = qdf.join(lists, "qid", "left")
+    out = qdf.mapInPandas(
+        partial(_serve_slice, key, method, dict(kwargs, with_docid=with_docid), per_qid or {}),
+        schema,
+    )
+    return out if allow is None else out.orderBy("qid", "rank")
 
 
 def bm25_topk_serve(
@@ -325,40 +419,18 @@ def bm25_topk_serve(
     with_docid: bool = True,
     params: dict | None = None,
 ) -> DataFrame:
-    """Batch BM25 on the serve kernel -> (qid, rank, docno[, docid],
-    score), rows in (qid, rank) order, bit-identical to exact.bm25_topk.
+    """Batch BM25 on the serve kernel (serve_batch over
+    LocalSearcher.search; params: k1/b/idf overrides, as bm25_topk reads
+    them) -> (qid, rank, docno[, docid], score), rows in (qid, rank)
+    order, bit-identical to exact.bm25_topk. The workers learn of OOV
+    terms themselves, so the driver reads no dictionary. Past the memory
+    budget the batch runs exact.bm25_topk."""
+    from ivory_spark.query.exact import bm25_topk
 
-    Ivory's retrieval is a single-process engine over the MapReduce
-    build (BatchQueryRunner.java); here each Spark Python worker is that
-    engine. The driver pins a snapshot (index root, properties, postings
-    file list) and hands the qid-sorted queries to Spark as a
-    session.local_frame: a LocalTableScan in the JVM, which splits them
-    into min(len(queries), defaultParallelism) contiguous slices in
-    order, so no Python worker starts just to read them. A
-    mapInPandas task runs its slice through LocalSearcher.search
-    (params: k1/b/idf overrides, as bm25_topk reads them) in a searcher
-    the worker process keeps across batches, one per process, reopened
-    when the pin changes. So the plan has no shuffle, no block-max
-    bounds (an appended index is served before refresh_bounds), no
-    docmap join and no sort: collect() returns slices in order.
-
-    Memory budget: each worker process holds the postings termid and
-    blob columns, the dictionary and every docid in memory. When the
-    upper bound _snapshot computes for that set exceeds
-    build.BROADCAST_BUDGET_BYTES (256 MB), the batch runs the exact
-    relational plan (exact.bm25_topk) instead.
-    """
-    from ivory_spark.index import build
-
-    key, resident = _snapshot(index)
-    if resident > build.BROADCAST_BUDGET_BYTES:
-        from ivory_spark.query.exact import bm25_topk
-
-        return bm25_topk(spark, index, queries, k=k, with_docid=with_docid, params=params)
-    schema = "qid string, rank int, docno long, score float"
-    if with_docid:
-        schema = "qid string, rank int, docno long, docid string, score float"
-    rows = sorted(((q["qid"], q["query"]) for q in queries), key=lambda r: r[0])
-    return local_frame(spark, rows, "qid string, query string").mapInPandas(
-        partial(_serve_slice, key, k, with_docid, params), schema
+    return serve_batch(
+        spark, index, queries, "search", with_docid=with_docid,
+        k=k, params=params,
+        over_budget=lambda: bm25_topk(
+            spark, index, queries, k=k, with_docid=with_docid, params=params
+        ),
     )

@@ -13,9 +13,10 @@ own k — the reference's staged-pruning shape (CascadeEval.java:1-896
 applies a per-stage pruner then the next, costlier scorer).
 
 Candidate flow between stages is a (qid, docno) DataFrame fed to
-mrf_topk's candidates_df path: the allow-list rides the next stage's
-(qid, shard) shuffle as tagged rows, so survivors NEVER pass through
-the driver — a 10^5-query batch cascades fully distributed. Without
+mrf_topk's candidates_df path: each query's survivors become one
+allow-list, gathered and joined to its query row in the JVM, and the
+next stage's serve kernel scores only those docs. Survivors NEVER pass
+through the driver — a 10^5-query batch cascades fully distributed. Without
 cost accounting the whole cascade is one lazy linear plan (a single
 action computes each stage once); with costs= the per-stage survivor
 frames are persisted and counted.

@@ -302,218 +302,3 @@ def _rank_topk(index: Index, scored: DataFrame, k: int, with_docid: bool) -> Dat
         topk = F.broadcast(topk).join(index.docid_expr(), "docno")
     cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
     return topk.select(*cols).orderBy("qid", "rank")
-
-
-def scored_topk(
-    spark: SparkSession,
-    index: Index,
-    queries: list[dict],
-    scorer: str = "dirichlet",
-    params: dict | None = None,
-    k: int = 10,
-    with_docid: bool = True,
-    lm_prune: bool = True,
-) -> DataFrame:
-    """Engine-native bag-of-words retrieval for the non-BM25 scoring
-    functions, over the same postings-blob index as the BM25 paths.
-
-    Semantics mirror the reference's scoring-function family
-    (ivory/smrf/model/score/DirichletScoringFunction.java:30-66 µ=2500,
-    JelinekMercerScoringFunction.java λ=0.5, TFIDFScoringFunction.java,
-    F2EXPScoringFunction.java) run doc-at-a-time over the candidate set
-    (docs matching >= 1 query term, MRFDocumentRanker.java:113-184):
-
-    - language-model scorers (dirichlet, jm) score every query term for
-      every candidate — an absent term contributes its nonzero background
-      (tf=0 smoothing), which is doclen-dependent and rank-relevant;
-    - tf-proportional scorers (tfidf, f2exp) score only matching terms
-      (their tf=0 contribution is exactly zero).
-
-    Accumulation is the canonical termid-ordered float32 fold, so scores
-    are bit-identical to the numpy oracle and reproducible by the
-    float32-emulating DuckDB gate oracles. Dirichlet/JM scores are
-    negative, so classic MaxScore/WAND bounds don't apply; instead
-    (lm_prune=True) a matrix-free double-precision prescore — exact via
-    the separable background sum — selects the per-query top-k plus a
-    margin dominating the float32 fold error, and only those survivors
-    get the full query-term matrix + canonical fold. Output is unchanged
-    (gate-verified); the candidates x terms blowup is gone.
-    """
-    from ivory_spark.functions.scoring import (
-        dirichlet_score,
-        f2exp_score,
-        jelinek_mercer_score,
-        tfidf_score,
-    )
-
-    if scorer == "bm25":
-        return bm25_topk(spark, index, queries, k=k, with_docid=with_docid)
-    params = params or {}
-    props = index.properties
-    n_docs, avgdl, clen = props["n_docs"], props["avgdl"], props["collection_length"]
-
-    rows, termids = query_term_rows(index, queries)
-    qt = local_frame(spark, rows, "qid string, termid long, qtf int, df int, cf long")
-    if not termids:
-        schema = "qid string, rank int, docno long, score float"
-        if with_docid:
-            schema = "qid string, rank int, docno long, docid string, score float"
-        return local_frame(spark, [], schema)
-
-    postings = _decode_runs(candidate_postings(index, termids))
-    if scorer in ("dirichlet", "jm"):
-        # the LM plan references `postings` twice (prescore `matched` join
-        # + survivor re-join) — persist so the mapInPandas blob decode runs
-        # once per partition, not twice. Lifetime: the previous call's
-        # cache is released here (one-deep registry) rather than after the
-        # caller's action, which this lazy API cannot observe.
-        prev = getattr(scored_topk, "_cached_postings", None)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                # the previous DataFrame's session may be stopped (new
-                # SparkSession in the same process) — nothing to release
-                pass
-        postings = postings.persist()
-        scored_topk._cached_postings = postings
-        matched = postings.join(F.broadcast(qt), "termid")
-        if lm_prune and k > 0:
-            # ---- matrix-free double prescore (the LM scale path) ----
-            # The background sum over ABSENT terms is analytically
-            # separable, so the exact score is computable from present
-            # rows alone:
-            #   dirichlet: score(d) = sum_present qtf*(ln(tf+bg_t)-ln(bg_t))
-            #                         + C_q - Q*ln(dl+mu)
-            #   jm:        score(d) = sum_present qtf*(ln((1-l)tf/dl+l*bg't)
-            #                         - ln(l*bg't)) + C_q
-            # (bg_t = mu*cf_t/clen, bg't = cf_t/clen, C_q/Q query consts).
-            # Candidates x query-terms materialization then happens only
-            # for the docs whose double prescore clears the per-qid k-th
-            # best minus a margin that dominates the float32 fold error —
-            # survivors are re-scored with the canonical float32 fold, so
-            # output is unchanged (gate-verified). This removes the
-            # |candidates| x |terms| blowup that made LM scoring the
-            # most expensive engine path at scale.
-            import math
-
-            mu = (params or {}).get("mu", 2500.0)
-            lam = (params or {}).get("lambda", 0.5)
-            qconst: dict[str, tuple[float, float]] = {}
-            for qid, termid, qtf, df, cf in rows:
-                bg = (mu * cf / clen) if scorer == "dirichlet" else (lam * cf / clen)
-                c, qsum = qconst.get(qid, (0.0, 0.0))
-                qconst[qid] = (c + qtf * math.log(bg), qsum + qtf)
-            qc = local_frame(
-                spark,
-                [(qid, c, qsum) for qid, (c, qsum) in qconst.items()],
-                "qid string, cq double, qsum double",
-            )
-            if scorer == "dirichlet":
-                bg_e = F.lit(mu) * F.col("cf").cast("double") / F.lit(float(clen))
-                delta = F.col("qtf").cast("double") * (
-                    F.log(F.col("tf").cast("double") + bg_e) - F.log(bg_e)
-                )
-            else:
-                bg_e = F.lit(lam) * F.col("cf").cast("double") / F.lit(float(clen))
-                delta = F.col("qtf").cast("double") * (
-                    F.log(
-                        F.lit(1.0 - lam) * F.col("tf").cast("double")
-                        / F.greatest(F.col("dl"), F.lit(1)).cast("double")
-                        + bg_e
-                    )
-                    - F.log(bg_e)
-                )
-            pre = (
-                matched.withColumn("_delta", delta)
-                .groupBy("qid", "docno")
-                .agg(F.sum("_delta").alias("pd"), F.max("dl").alias("dl"))
-                .join(F.broadcast(qc), "qid")
-            )
-            if scorer == "dirichlet":
-                score_dbl = (
-                    F.col("pd") + F.col("cq")
-                    - F.col("qsum") * F.log(F.col("dl").cast("double") + F.lit(mu))
-                )
-            else:
-                score_dbl = F.col("pd") + F.col("cq")
-            pre = pre.withColumn("_sd", score_dbl)
-            w = Window.partitionBy("qid").orderBy(F.desc("_sd"))
-            cutoff = (
-                pre.withColumn("_r", F.row_number().over(w))
-                .filter(F.col("_r") <= k)
-                .groupBy("qid")
-                .agg(F.min("_sd").alias("_cut"))
-            )
-            # margin >> float32 fold error (~n_terms * ulp(|score|))
-            cands = (
-                pre.join(F.broadcast(cutoff), "qid")
-                .filter(
-                    F.col("_sd")
-                    >= F.col("_cut") - (F.lit(1e-3) * (F.abs(F.col("_cut")) + F.lit(1.0)))
-                )
-                .select("qid", "docno")
-            )
-        else:
-            cands = matched.select("qid", "docno").distinct()
-        cand = (
-            cands.join(F.broadcast(qt), "qid")
-            .join(postings.select("termid", "docno", "tf"), ["termid", "docno"], "left")
-            .fillna({"tf": 0})
-            .join(index.doclens.withColumnRenamed("doclen", "dl"), "docno")
-        )
-        if scorer == "dirichlet":
-            mu = params.get("mu", 2500.0)
-
-            @F.pandas_udf("float")
-            def contrib_udf(tf: pd.Series, dl: pd.Series, cf: pd.Series, qtf: pd.Series) -> pd.Series:
-                base = dirichlet_score(tf.to_numpy(), dl.to_numpy(), cf.to_numpy(), clen, mu)
-                return pd.Series(qtf.to_numpy().astype(np.float32) * base)
-
-        else:
-            lam = params.get("lambda", 0.5)
-
-            @F.pandas_udf("float")
-            def contrib_udf(tf: pd.Series, dl: pd.Series, cf: pd.Series, qtf: pd.Series) -> pd.Series:
-                base = jelinek_mercer_score(tf.to_numpy(), dl.to_numpy(), cf.to_numpy(), clen, lam)
-                return pd.Series(qtf.to_numpy().astype(np.float32) * base)
-
-        cand = cand.withColumn("contrib", contrib_udf("tf", "dl", "cf", "qtf"))
-    elif scorer in ("tfidf", "f2exp"):
-        cand = postings.join(F.broadcast(qt), "termid")
-        if scorer == "tfidf":
-
-            @F.pandas_udf("float")
-            def contrib_udf(tf: pd.Series, dl: pd.Series, df: pd.Series, qtf: pd.Series) -> pd.Series:
-                base = tfidf_score(tf.to_numpy(), df.to_numpy(), n_docs)
-                return pd.Series(qtf.to_numpy().astype(np.float32) * base)
-
-        else:
-            s = params.get("s", 0.5)
-            k_exp = params.get("k", 1.0)
-
-            @F.pandas_udf("float")
-            def contrib_udf(tf: pd.Series, dl: pd.Series, df: pd.Series, qtf: pd.Series) -> pd.Series:
-                base = f2exp_score(tf.to_numpy(), dl.to_numpy(), df.to_numpy(), n_docs, avgdl, s, k_exp)
-                return pd.Series(qtf.to_numpy().astype(np.float32) * base)
-
-        cand = cand.withColumn("contrib", contrib_udf("tf", "dl", "df", "qtf"))
-    else:
-        raise ValueError(f"unknown scorer: {scorer}")
-
-    return _rank_topk(index, _fold_scores(cand), k, with_docid)
-
-
-def release_caches() -> None:
-    """Explicitly release the one-deep persisted-postings registry
-    (scored_topk LM path). The lazy API keeps the last call's postings
-    persisted because it cannot observe the caller's final action; call
-    this when done querying to return the executor memory early instead
-    of waiting for the next scored_topk call to rotate it out."""
-    prev = getattr(scored_topk, "_cached_postings", None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass  # session already stopped
-        scored_topk._cached_postings = None

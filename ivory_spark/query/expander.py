@@ -111,10 +111,10 @@ def expand_queries(
     (tested)."""
     import os
 
-    from ivory_spark.query.exact import bm25_topk
+    from ivory_spark.query.batch import bm25_topk_serve
 
     tokenize = get_tokenizer(index.properties.get("tokenizer", "code_v1")).tokenize_py
-    initial = bm25_topk(spark, index, queries, k=fb_docs, with_docid=False)
+    initial = bm25_topk_serve(spark, index, queries, k=fb_docs, with_docid=False)
     if flow == "joined":
         return _expand_joined(
             spark, index, queries, initial, fb_terms, alpha, method, tokenize
@@ -299,11 +299,11 @@ def mine_bigram_concepts(
     read prunes to the feedback docnos via range clustering)."""
     import os
 
-    from ivory_spark.query.exact import bm25_topk
+    from ivory_spark.query.batch import bm25_topk_serve
 
     if not index.properties.get("positional"):
         raise ValueError("bigram concept mining requires a positional index")
-    initial = bm25_topk(spark, index, queries, k=fb_docs, with_docid=False)
+    initial = bm25_topk_serve(spark, index, queries, k=fb_docs, with_docid=False)
     fb: dict[str, list] = {}
     for r in initial.collect():
         fb.setdefault(r["qid"], []).append((r["docno"], float(r["score"])))

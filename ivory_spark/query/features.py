@@ -17,9 +17,10 @@ Reference semantics reproduced:
 - aggregation operators sum / mean / max / min / variance /
   boolean_count / boolean_ratio (ltr/operator/*.java), default Sum.
 
-Spark-first shape: the same doc-sharded applyInPandas kernel as
-mrf_topk — postings runs of the query terms are joined to (qid, shard)
-groups, decoded once, and every judged doc in the shard gets its clique
+Spark-first shape: a doc-sharded grouped kernel over mrf.py's shard
+grid (this module is its only user; retrieval runs on the serve kernel)
+— postings runs of the query terms are joined to (qid, shard) groups,
+decoded once, and every judged doc in the shard gets its clique
 potentials from the batched CSR window kernels. Judged docs containing
 NO query term never meet a postings row, so their rows (background
 potentials: 0 for tf-proportional scorers, the doclen-dependent
@@ -381,9 +382,9 @@ def extract_features(
         scored = grouped_apply(
             runs, ["qid", "shard"], kernel, schema=feat_schema
         ).persist()  # coverage probe below + the final join reuse one run
-        # one-deep cache registry (the scored_topk pattern): release the
-        # PREVIOUS call's cache — this lazy API can't see the caller's
-        # final action, so per-call unpersist would force a recompute
+        # one-deep cache registry: release the PREVIOUS call's cache —
+        # this lazy API can't see the caller's final action, so per-call
+        # unpersist would force a recompute
         prev = getattr(extract_features, "_cached_scored", None)
         if prev is not None:
             try:
@@ -543,16 +544,3 @@ def features_to_instances(df: DataFrame, with_docid: bool = False):
         ).reshape(len(rows), len(feat_names)),
         feat_names,
     )
-
-
-def release_caches() -> None:
-    """Explicitly release the one-deep persisted feature-kernel registry
-    (see the _cached_scored note above): call when done extracting to
-    free executor memory without waiting for the next call."""
-    prev = getattr(extract_features, "_cached_scored", None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass  # session already stopped
-        extract_features._cached_scored = None

@@ -31,7 +31,8 @@ doclen-dependent), clamped to 0 only when the clique's cf heuristic
 degenerates to 0 on a sub-100-doc corpus.
 
 The MRF path is exact (no pruning); its golden oracle is oracle_mrf_topk
-below, which shares every kernel with the Spark path.
+below, which shares every kernel with the serve kernel that mrf_topk
+runs.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import (
     F32,
@@ -48,11 +49,9 @@ from ivory_spark.functions.scoring import (
     bm25_tf_part,
     dirichlet_score,
 )
-from ivory_spark.functions.tokenizer import MAX_TF, get_tokenizer
+from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
-from ivory_spark.query.exact import resolve_terms
-from ivory_spark.session import local_frame
 
 SHORT_MAX = 32767
 
@@ -586,12 +585,12 @@ def assemble_term_data(
     """Build per-term CSR TermData over the candidate-doc universe from
     decoded run entries (term, docnos, tfs, dls, flat_pos, indptr).
 
-    SHARED by the mrf_topk Spark kernel and serve.LocalSearcher.search_sd
-    — the float32 rank-identity invariant requires every scorer path to
-    assemble identically (see README: float32 rank identity). Salted
-    builds emit several
-    docno-disjoint runs per term: they are ordered by first docno and
-    concatenated into one CSR; docs outside `cand` are masked out.
+    SHARED by serve.LocalSearcher (search_sd, search_sqe) and
+    features.extract_features — the float32 rank-identity invariant
+    requires every scorer path to assemble identically (see README:
+    float32 rank identity). Salted builds emit several docno-disjoint
+    runs per term: they are ordered by first docno and concatenated
+    into one CSR; docs outside `cand` are masked out.
     Returns (term_data, dl_vec)."""
     m = len(cand)
     dl_vec = np.zeros(m, dtype=np.int64)
@@ -626,13 +625,10 @@ def assemble_term_data(
 
 
 # ---------------------------------------------------------------------------
-# doc-shard grid — THE shard invariant, shared by every sharded kernel
-# (mrf_topk, sqe.sqe_topk, features.extract_features): a docno d lands in
-# shard floor(d * n_shards / (n_docs + 1)), and shard s covers the
-# docno range returned by the bounds function (ceil-division inverse).
-# Keep these three definitions as the single source of truth — the
-# float32 rank-identity contract depends on every kernel agreeing on
-# shard membership at the boundaries.
+# doc-shard grid of features.extract_features, its one user: a docno d
+# lands in shard floor(d * n_shards / (n_docs + 1)), and shard s covers
+# the docno range returned by the bounds function (ceil-division
+# inverse); decode_shard_runs masks a group's runs to that range.
 # ---------------------------------------------------------------------------
 
 
@@ -680,7 +676,7 @@ def decode_shard_runs(pdf: pd.DataFrame, term_by_id: dict, lo: int, hi: int) -> 
 
 
 # ---------------------------------------------------------------------------
-# Spark path
+# Spark batch
 # ---------------------------------------------------------------------------
 
 
@@ -690,166 +686,43 @@ def mrf_topk(
     queries: list[dict],
     model: MrfModel | None = None,
     with_docid: bool = True,
-    candidates: dict[str, set[int]] | None = None,
     extra_cliques: dict[str, list[dict]] | None = None,
     candidates_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact SD/FD retrieval over a positional index: doc-sharded kernel
-    (same shard grid as WAND), per-doc clique scoring, global top-k with
-    the (score desc, docno desc) tie-break.
+    """Exact SD/FD retrieval over a positional index -> (qid, rank,
+    docno[, docid], score): each query runs LocalSearcher.search_sd on
+    the serve kernel (batch.serve_batch), the clique scoring of
+    score_docs_batch over every candidate doc, top-k with the (score
+    desc, docno desc) tie-break.
 
-    candidates: optional qid -> docno set; when given, only those docs
-    are scored (the cascade-ranking reranker contract — an expensive
-    stage applied to a cheap stage's survivors,
-    ivory/cascade/retrieval/CascadeEval.java).
-
-    candidates_df: the same restriction as a (qid, docno) DataFrame —
-    the allow-list never touches the driver: candidate rows are tagged
-    (termid = -1) into the same (qid, shard) groups as the postings
-    runs, so a 10^5-query cascade stays fully distributed. Mutually
-    exclusive with `candidates`; bit-identical results (tested).
+    candidates_df: an optional (qid, docno) DataFrame; when given, only
+    those docs are scored (the cascade-ranking reranker contract — an
+    expensive stage applied to a cheap stage's survivors,
+    ivory/cascade/retrieval/CascadeEval.java). Each qid's docnos reach
+    its query row as one allow-list, joined in the JVM, never through
+    the driver; a qid without rows scores nothing.
 
     extra_cliques: optional qid -> additional clique dicts appended after
     the query-derived ones (latent-concept expansion injects mined
     concept cliques here; their terms are fetched even when absent from
     the query text). Clique-ordered float32 accumulation keeps the score
     deterministic."""
+    from ivory_spark.query.batch import serve_batch
+
     model = model or MrfModel()
     props = index.properties
     if not props.get("positional"):
         raise ValueError("mrf_topk requires an index built with positional=True")
-    n_docs, avgdl, clen = props["n_docs"], props["avgdl"], props["collection_length"]
-    n_shards = props["n_shards"]
-    k = model.k
-
     tokenize = get_tokenizer(props.get("tokenizer", "code_v1")).tokenize_py
     extra = extra_cliques or {}
-    extra_terms = {
-        qid: sorted({t for c in cls for t in c["terms"]}) for qid, cls in extra.items()
-    }
-    all_terms = sorted(
-        {t for q in queries for t in tokenize(q["query"])}
-        | {t for ts in extra_terms.values() for t in ts}
+    terms = {t for q in queries for t in tokenize(q["query"])}
+    terms |= {t for cls in extra.values() for c in cls for t in c["terms"]}
+    return serve_batch(
+        spark, index, queries, "search_sd", terms=terms, with_docid=with_docid,
+        allow=candidates_df,
+        per_qid={qid: {"extra_cliques": list(cls)} for qid, cls in extra.items()},
+        k=model.k, model=model,
     )
-    lookup = resolve_terms(index, set(all_terms))
-    stats = {t: (df, cf) for t, (_, df, cf) in lookup.items()}
-    term_by_id = {tid: t for t, (tid, _, _) in lookup.items()}
-    termids = sorted(term_by_id)
-
-    q_cliques = {
-        q["qid"]: build_cliques(tokenize(q["query"]), model)
-        + list(extra.get(q["qid"], []))
-        for q in queries
-    }
-    q_terms = {
-        q["qid"]: sorted(
-            (set(tokenize(q["query"])) | set(extra_terms.get(q["qid"], ())))
-            & set(stats)
-        )
-        for q in queries
-    }
-
-    if not termids:
-        schema = "qid string, rank int, docno long, score float"
-        if with_docid:
-            schema = "qid string, rank int, docno long, docid string, score float"
-        return local_frame(spark, [], schema)
-
-    runs = index.postings.filter(F.col("termid").isin(termids)).select(
-        "termid", "n", "first_docno", "last_docno", "blob", "pos_blob"
-    )
-    qrows = [
-        (q["qid"], int(tid))
-        for q in queries
-        for tid in termids
-        if term_by_id[tid] in q_terms[q["qid"]]
-    ]
-    qdf = local_frame(spark, qrows, "qid string, termid long")
-    runs = runs.join(F.broadcast(qdf), "termid")
-    shard_of = shard_of_expr(n_shards, n_docs)
-    runs = runs.withColumn(
-        "shard",
-        F.explode(F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno")))),
-    )
-    if candidates_df is not None:
-        if candidates is not None:
-            raise ValueError("pass either candidates or candidates_df, not both")
-        # allow-list rows ride the SAME (qid, shard) shuffle as the runs
-        # (termid -1 marks them); no driver round-trip
-        cand_rows = candidates_df.select(
-            F.lit(-1).cast("long").alias("termid"),
-            F.lit(0).cast(runs.schema["n"].dataType).alias("n"),
-            F.col("docno").alias("first_docno"),
-            F.col("docno").alias("last_docno"),
-            F.lit(None).cast("binary").alias("blob"),
-            F.lit(None).cast("binary").alias("pos_blob"),
-            F.col("qid"),
-            shard_of(F.col("docno")).alias("shard"),
-        )
-        runs = runs.unionByName(cand_rows)
-
-    shard_bounds = make_shard_bounds(n_shards, n_docs)
-
-    cand_sorted = (
-        {q: np.array(sorted(s), dtype=np.int64) for q, s in candidates.items()}
-        if candidates is not None
-        else None
-    )
-
-    df_mode = candidates_df is not None
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard = key
-        lo, hi = shard_bounds(int(shard))
-        cliques = q_cliques[qid]
-        allow_rows = None
-        if df_mode:
-            is_cand = pdf["termid"].to_numpy() == -1
-            allow_rows = np.unique(pdf["first_docno"].to_numpy()[is_cand]).astype(
-                np.int64
-            )
-            pdf = pdf[~is_cand]
-        # pass 1: decode each term's run once, mask to the shard range
-        decoded = decode_shard_runs(pdf, term_by_id, lo, hi)
-        if not decoded:
-            return pd.DataFrame(columns=["qid", "docno", "score"]).astype(
-                {"qid": str, "docno": np.int64, "score": np.float32}
-            )
-        # candidate-doc universe = union of query-term docs in the shard
-        cand = np.unique(np.concatenate([d for _, d, _, _, _, _ in decoded]))
-        if cand_sorted is not None:
-            allow = cand_sorted.get(qid, np.empty(0, dtype=np.int64))
-            cand = cand[np.isin(cand, allow, assume_unique=True)]
-        if allow_rows is not None:
-            cand = cand[np.isin(cand, allow_rows, assume_unique=True)]
-        if len(cand) == 0:
-            return pd.DataFrame(columns=["qid", "docno", "score"]).astype(
-                {"qid": str, "docno": np.int64, "score": np.float32}
-            )
-        term_data, dl_vec = assemble_term_data(decoded, cand)
-        scores = score_docs_batch(
-            cliques, term_data, dl_vec, stats, n_docs, avgdl, clen
-        )
-        # local top-k before the global merge (score desc, docno desc)
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        return pd.DataFrame(
-            {"qid": qid, "docno": cand[sel], "score": scores[sel]}
-        )
-
-    from ivory_spark.functions.gmap import grouped_apply
-
-    # one Python dispatch per partition instead of per (qid, shard)
-    # group — the tiny-group Arrow round-trip tax dominates batched
-    # query kernels otherwise (see functions/gmap.py)
-    local = grouped_apply(
-        runs, ["qid", "shard"], kernel, schema="qid string, docno long, score float"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("docno"))
-    topk = local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if with_docid:
-        topk = topk.join(index.docid_expr(), "docno")
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
-    return topk.select(*cols).orderBy("qid", "rank")
 
 
 # ---------------------------------------------------------------------------

@@ -7,10 +7,10 @@ perfbench index (4-vCPU host, warm session) a 1-query run_batch takes
 about 0.35 ms for one query served here.
 This module is the serving tier: a long-lived process loads the
 dictionary and the docid of every docno once, and serves every query
-from memory. Batch BM25 runs the same replica inside Spark: each
-Python worker process keeps one searcher across batches and scores its
-slice of a batch's queries with it (query/batch.bm25_topk_serve, which
-run_batch calls).
+from memory. Every Spark batch runs the same replica: each Python
+worker process keeps one searcher across batches and scores its slice
+of a batch's queries with it (query/batch.serve_batch, which run_batch,
+mrf_topk and sqe_topk call for every model).
 
 Memory model of a serving replica (a driver-side process or one Spark
 Python worker):
@@ -50,10 +50,13 @@ with one stable docno sort. Then a cut to top-k with Ivory's tie-break.
 So served scores are bit-identical to the Spark exact path, the WAND
 path and the numpy oracle. It reads no block-max bounds and never the
 postings rows' df (append_delta leaves both stale), so an appended
-index serves before refresh_bounds. SD/FD (`search_sd`) and structured
-queries (`search_sqe`) run the MRF and sqe kernels (build_cliques +
-score_docs_batch; the sqe tree evaluator) over the same decoded entries
-with positions, bit-identical to their Spark paths.
+index serves before refresh_bounds. The dirichlet, jm, tfidf and f2exp
+scorers (`search(scorer=...)`) score the BM25 entries' tf and dl with
+the scoring.SCORERS kernels and the same fold. SD/FD (`search_sd`) and
+structured queries (`search_sqe`) run the MRF and sqe kernels
+(build_cliques + score_docs_batch; the sqe tree evaluator) over the
+decoded entries with positions. Every model is bit-identical to its
+numpy oracle.
 
 This is the analogue of Ivory's long-lived broker + retrieval-server
 deployment (docs/clue.html:164-180 — partition servers hold the index
@@ -72,7 +75,15 @@ from collections import Counter, OrderedDict
 import numpy as np
 import pandas as pd
 
-from ivory_spark.functions.scoring import F32, bm25_idf, bm25_tf_part, docno_fold_f32
+from ivory_spark.functions.scoring import (
+    F32,
+    LAMBDA_DEFAULT,
+    MU_DEFAULT,
+    SCORERS,
+    bm25_idf,
+    bm25_tf_part,
+    docno_fold_f32,
+)
 from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index import codec
 
@@ -276,11 +287,12 @@ class LocalSearcher:
         """docno -> 'repo/path@commit', from the in-memory docid array."""
         return {d: self._docid[d - 1] for d in map(int, docnos)}
 
-    def _term_data(self, terms):
+    def _term_data(self, terms, allow=None):
         """Positional entries of the query terms in the dictionary,
-        assembled over their candidate docs as the MRF and sqe Spark
-        kernels assemble them: (cand, term_data, dl_vec, stats) with
-        stats term -> (df, cf), or None when no term has postings."""
+        assembled over their candidate docs (the docs holding any of the
+        terms, cut to the docnos in `allow` when given) by
+        mrf.assemble_term_data: (cand, term_data, dl_vec, stats) with
+        stats term -> (df, cf), or None when no candidate is left."""
         from ivory_spark.query.mrf import assemble_term_data
 
         rows = {t: self._term_row[t] for t in terms if t in self._term_row}
@@ -294,6 +306,10 @@ class LocalSearcher:
         if not decoded:
             return None
         cand = np.unique(np.concatenate([e[1] for e in decoded]))
+        if allow is not None:
+            cand = cand[np.isin(cand, allow)]
+            if not len(cand):
+                return None
         stats = {t: (int(self._df[r]), int(self._cf[r])) for t, r in rows.items()}
         return (cand, *assemble_term_data(decoded, cand), stats)
 
@@ -316,13 +332,16 @@ class LocalSearcher:
         return [{"rank": r, "docno": d, "score": s, "docid": ids[d]} for r, d, s in ranked]
 
     def search_sd(
-        self, query: str, k: int = 10, with_docid: bool = True, model=None
+        self, query: str, k: int = 10, with_docid: bool = True, model=None,
+        extra_cliques: list[dict] | None = None, allow=None,
     ) -> list[dict]:
-        """Warm SD/FD MRF serving over a positional index — the same
-        clique construction and batched scoring kernel as mrf_topk
-        (build_cliques + score_docs_batch), run in-process over the
-        decoded candidate runs; scores are float32 bit-identical to
-        the Spark MRF path and the numpy oracle."""
+        """Warm SD/FD MRF serving over a positional index: build_cliques
+        and score_docs_batch over the decoded candidate runs; scores are
+        float32 bit-identical to the numpy oracle (oracle_mrf_topk).
+        extra_cliques are scored after the query's own (latent-concept
+        expansion's mined concepts; their terms are fetched too). allow:
+        an array of docnos, the only docs scored (a cascade stage's
+        survivors, CascadeEval.java)."""
         from ivory_spark.query.mrf import MrfModel, build_cliques, score_docs_batch
 
         p = self.props
@@ -330,8 +349,9 @@ class LocalSearcher:
             raise ValueError("search_sd requires a positional index")
         model = model or MrfModel()
         tokens = self._tokenize(query)
-        cliques = build_cliques(tokens, model)
-        assembled = self._term_data(set(tokens))
+        extra = list(extra_cliques or ())
+        cliques = build_cliques(tokens, model) + extra
+        assembled = self._term_data(set(tokens).union(*(c["terms"] for c in extra)), allow)
         if assembled is None:
             return []
         cand, term_data, dl_vec, stats = assembled
@@ -344,11 +364,11 @@ class LocalSearcher:
     def search_sqe(
         self, query, k: int = 10, with_docid: bool = True
     ) -> list[dict]:
-        """Warm structured-query (sqe) serving: the same tree evaluator
-        as sqe_topk (parse -> candidate mask -> float32 child-ordered
-        folds, TfDf blending) over the decoded runs — bit-identical to
-        the Spark path. `query` is a JSON operator tree (text or dict);
-        phrase leaves need a positional index."""
+        """Warm structured-query (sqe) serving: the sqe tree evaluator
+        (parse -> candidate mask -> float32 child-ordered folds, TfDf
+        blending) over the decoded runs — bit-identical to the numpy
+        oracle (oracle_sqe_topk). `query` is a JSON operator tree (text
+        or dict); phrase leaves need a positional index."""
         from ivory_spark.query.sqe import (
             _candidate_mask,
             _eval_node,
@@ -381,14 +401,18 @@ class LocalSearcher:
         return self._ranked(cand[mask], scores[mask], k, with_docid)
 
     def search(
-        self, query: str, k: int = 10, with_docid: bool = True, params: dict | None = None
+        self, query: str, k: int = 10, with_docid: bool = True, params: dict | None = None,
+        scorer: str = "bm25",
     ) -> list[dict]:
         """-> [{rank, docno[, docid], score}] — Ivory tie-break, scores
         bit-identical to bm25_topk / bm25_topk_wand. params: optional
         {'k1','b','idf'} overrides, read as bm25_topk reads them. The
         entries' cached impacts serve every query whose k1 and b equal
         the index's as float32 and whose idf mode is the index's, params
-        or not; any other query recomputes its impacts from tf and dl."""
+        or not; any other query recomputes its impacts from tf and dl.
+        scorer: any other scoring.SCORERS name (dirichlet, jm, tfidf,
+        f2exp) scores the same entries with that function (_scored),
+        params then holding its mu, lambda, s or k."""
         p = self.props
         q = params or {}
         k1, b, idf_mode = q.get("k1", p["k1"]), q.get("b", p["b"]), q.get("idf", p["idf_mode"])
@@ -405,6 +429,8 @@ class LocalSearcher:
         termids, qtfs, rows = zip(*sorted(zip(self._termid[rows].tolist(), qtfs, rows)))
         self._runs_for(list(termids))
         entries = [self._run_cache[t] for t in termids]
+        if scorer != "bm25":
+            return self._ranked(*self._scored(scorer, q, rows, qtfs, entries), k, with_docid)
         lens = [len(e[0]) for e in entries]
         # bm25_tf_part reads k1 and b as float32
         if (F32(k1), F32(b), idf_mode) == (F32(p["k1"]), F32(p["b"]), p["idf_mode"]):
@@ -423,3 +449,43 @@ class LocalSearcher:
             contrib = np.repeat(np.array(qtfs, dtype=np.float32), lens) * contrib
         d, s = docno_fold_f32(np.concatenate([e[0] for e in entries]), contrib)
         return self._ranked(d, s, k, with_docid)
+
+    def _scored(self, scorer: str, params: dict, rows, qtfs, entries):
+        """(docnos, float32 scores) of one query under a non-BM25 scorer,
+        with oracle.oracle_scored_topk's semantics over the BM25 entries'
+        tf and dl (entries in ascending termid order). The candidates are
+        the docs matching at least one query term. The language models
+        (dirichlet, jm) score every query term for every candidate, an
+        absent term at tf = 0 (its background, as
+        DirichletScoringFunction.java:30-66 smoothes it); tfidf and f2exp
+        score matching postings only. Each contribution is qtf times the
+        scoring.SCORERS function's float32 value, folded termid-major by
+        docno_fold_f32."""
+        p = self.props
+        fn = SCORERS[scorer]
+        rows = list(rows)
+        if scorer in ("dirichlet", "jm"):
+            cand = np.unique(np.concatenate([e[0] for e in entries]))
+            tf = np.zeros((len(entries), len(cand)), dtype=np.int64)
+            dl = np.zeros(len(cand), dtype=np.int64)
+            for i, e in enumerate(entries):
+                at = np.searchsorted(cand, e[0])
+                tf[i, at], dl[at] = e[1], e[2]
+            if scorer == "dirichlet":
+                smoothing = params.get("mu", MU_DEFAULT)
+            else:
+                smoothing = params.get("lambda", LAMBDA_DEFAULT)
+            base = fn(tf, dl[None, :], self._cf[rows][:, None], p["collection_length"], smoothing)
+            contrib = np.array(qtfs, dtype=np.float32)[:, None] * base
+            return docno_fold_f32(np.tile(cand, len(entries)), contrib.ravel())
+        lens = [len(e[0]) for e in entries]
+        tf = np.concatenate([e[1] for e in entries])
+        df = np.repeat(self._df[rows], lens)
+        if scorer == "tfidf":
+            base = fn(tf, df, p["n_docs"])
+        else:
+            dl = np.concatenate([e[2] for e in entries])
+            s, k = params.get("s", 0.5), params.get("k", 1.0)
+            base = fn(tf, dl, df, p["n_docs"], p["avgdl"], s, k)
+        contrib = np.repeat(np.array(qtfs, dtype=np.float32), lens) * base
+        return docno_fold_f32(np.concatenate([e[0] for e in entries]), contrib)

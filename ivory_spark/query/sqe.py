@@ -35,10 +35,10 @@ weights far above 1 can blend df beyond N, where the reference's
 ln((N-df+0.5)/(df+0.5)) returns NaN exactly as Java's Math.log would —
 reproduced, not guarded (fuzz-tested in tests/test_sqe.py).
 
-Spark-first shape: the same doc-sharded applyInPandas kernel as
-mrf_topk — one decode of each term's runs per (qid, shard), CSR
-position gathers, the whole tree evaluated vectorized over the shard's
-candidate docs, local top-k, then one global top-k window.
+Batch shape: sqe_topk runs each query through LocalSearcher.search_sqe
+on the serve kernel, as mrf_topk runs SD/FD — one decode of each
+term's runs, CSR position gathers, the whole tree evaluated vectorized
+over the query's candidate docs, then top-k.
 """
 
 from __future__ import annotations
@@ -47,23 +47,11 @@ import json
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ivory_spark.functions.tokenizer import get_tokenizer
 from ivory_spark.index.reader import Index
-from ivory_spark.query.exact import resolve_terms
-from ivory_spark.query.mrf import (
-    TermData,
-    _clique_window_counts,
-    assemble_term_data,
-    count_ordered_matches,
-    decode_shard_runs,
-    make_shard_bounds,
-    shard_of_expr,
-)
-from ivory_spark.session import local_frame
+from ivory_spark.query.mrf import TermData, _clique_window_counts, count_ordered_matches
 
 F32 = np.float32
 K1 = F32(0.5)  # TfDfWeight.java:23
@@ -274,93 +262,29 @@ def sqe_topk(
     with_docid: bool = True,
 ) -> DataFrame:
     """Structured-query retrieval: queries = [{'qid', 'query': json-text
-    or dict}]. Doc-sharded kernel, global (score desc, docno desc)
-    top-k — the QueryEngine/StructuredQueryRanker surface."""
-    props = index.properties
-    n_docs, clen = props["n_docs"], props["collection_length"]
-    avgdl_int = float(clen // n_docs)  # Java integer division, see header
-    n_shards = props["n_shards"]
-    tokenize = get_tokenizer(props.get("tokenizer", "code_v1")).tokenize_py
+    or dict}] -> (qid, rank, docno[, docid], score), global (score desc,
+    docno desc) top-k — the QueryEngine/StructuredQueryRanker surface.
+    The driver parses every query, so a malformed tree or a phrase leaf
+    on a non-positional index raises here; each query then runs
+    LocalSearcher.search_sqe on the serve kernel (batch.serve_batch),
+    dict queries sent as JSON text."""
+    from ivory_spark.query.batch import serve_batch
 
-    trees = {
-        q["qid"]: parse_structured_query(q["query"], tokenizer=tokenize)
-        for q in queries
-    }
-    needs_positions = any(
-        n.op == "phrase" for t in trees.values() for n in _walk(t)
-    )
+    props = index.properties
+    tokenize = get_tokenizer(props.get("tokenizer", "code_v1")).tokenize_py
+    trees = [parse_structured_query(q["query"], tokenizer=tokenize) for q in queries]
+    needs_positions = any(n.op == "phrase" for t in trees for n in _walk(t))
     if needs_positions and not props.get("positional"):
         raise ValueError("phrase leaves require an index built with positional=True")
-    all_terms = sorted({t for tree in trees.values() for t in query_terms(tree)})
-    lookup = resolve_terms(index, set(all_terms))
-    stats = {t: (df, cf) for t, (_, df, cf) in lookup.items()}
-    term_by_id = {tid: t for t, (tid, _, _) in lookup.items()}
-    termids = sorted(term_by_id)
-
-    out_schema = "qid string, rank int, docno long"
-    out_schema += (", docid string" if with_docid else "") + ", score float"
-    if not termids:
-        return local_frame(spark, [], out_schema)
-
-    cols = ["termid", "n", "first_docno", "last_docno", "blob"]
-    if props.get("positional"):
-        cols.append("pos_blob")
-    runs = index.postings.filter(F.col("termid").isin(termids)).select(*cols)
-    q_terms = {qid: query_terms(t) & set(stats) for qid, t in trees.items()}
-    qrows = [
-        (qid, int(tid))
-        for qid in trees
-        for tid in termids
-        if term_by_id[tid] in q_terms[qid]
+    texts = [
+        {"qid": q["qid"], "query": q["query"] if isinstance(q["query"], str)
+         else json.dumps(q["query"])}
+        for q in queries
     ]
-    qdf = local_frame(spark, qrows, "qid string, termid long")
-    runs = runs.join(F.broadcast(qdf), "termid")
-    shard_of = shard_of_expr(n_shards, n_docs)
-    runs = runs.withColumn(
-        "shard",
-        F.explode(F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno")))),
+    return serve_batch(
+        spark, index, texts, "search_sqe", terms=set().union(*map(query_terms, trees)),
+        with_docid=with_docid, k=k,
     )
-    shard_bounds = make_shard_bounds(n_shards, n_docs)
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard = key
-        lo, hi = shard_bounds(int(shard))
-        decoded = decode_shard_runs(pdf, term_by_id, lo, hi)
-        empty = pd.DataFrame({"qid": [], "docno": [], "score": []}).astype(
-            {"qid": str, "docno": np.int64, "score": np.float32}
-        )
-        if not decoded:
-            return empty
-        cand = np.unique(np.concatenate([d for _, d, _, _, _, _ in decoded]))
-        term_data, dl_vec = assemble_term_data(decoded, cand)
-        max_pos = 0
-        for td in term_data.values():
-            if td.flat_pos.size:
-                max_pos = max(max_pos, int(td.flat_pos.max()))
-        tree = trees[qid]
-        mask = _candidate_mask(tree, term_data, stats, len(cand), max_pos)
-        if not mask.any():
-            return empty
-        res = _eval_node(tree, term_data, dl_vec, stats, n_docs, avgdl_int, max_pos)
-        scores = _score_of(res, dl_vec, n_docs, avgdl_int)
-        cand, scores = cand[mask], scores[mask]
-        sel = np.lexsort((-cand, -scores.astype(np.float64)))[:k]
-        return pd.DataFrame({"qid": qid, "docno": cand[sel], "score": scores[sel]})
-
-    from ivory_spark.functions.gmap import grouped_apply
-
-    # one Python dispatch per partition instead of per (qid, shard)
-    # group — the tiny-group Arrow round-trip tax dominates batched
-    # query kernels otherwise (see functions/gmap.py)
-    local = grouped_apply(
-        runs, ["qid", "shard"], kernel, schema="qid string, docno long, score float"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("docno"))
-    topk = local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if with_docid:
-        topk = topk.join(index.docid_expr(), "docno")
-    cols = ["qid", "rank", "docno"] + (["docid"] if with_docid else []) + ["score"]
-    return topk.select(*cols).orderBy("qid", "rank")
 
 
 def _walk(node: SqeNode):

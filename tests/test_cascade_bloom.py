@@ -170,9 +170,11 @@ def test_three_stage_costs_accounting(spark, pos_idx):
 
 
 def test_candidates_df_matches_dict_path(spark, pos_idx, oi):
-    """mrf_topk's distributed allow-list (tagged rows through the shard
-    shuffle) is bit-identical to the driver-side dict restriction."""
-    from ivory_spark.query.mrf import mrf_topk
+    """mrf_topk's distributed allow-list (each qid's survivors joined to
+    its query row in the JVM) is bit-identical to the oracle's
+    driver-side dict restriction, including a query (c3) with an empty
+    allow-list."""
+    from ivory_spark.query.mrf import mrf_topk, oracle_mrf_topk
 
     model = MrfModel(dependence="sd", k=10)
     cand = {
@@ -180,17 +182,17 @@ def test_candidates_df_matches_dict_path(spark, pos_idx, oi):
         "c2": set(range(2, 200, 5)),
         "c3": set(),
     }
-    via_dict = mrf_topk(spark, pos_idx, QS, model, candidates=cand).collect()
+    golden = oracle_mrf_topk(oi, QS, model, candidates=cand)
     cdf = spark.createDataFrame(
         [(q, int(d)) for q, s in cand.items() for d in s], "qid string, docno long"
     )
     via_df = mrf_topk(spark, pos_idx, QS, model, candidates_df=cdf).collect()
+    want = [(q["qid"], i + 1, w["docno"], np.float32(w["score"]).view(np.uint32))
+            for q in QS for i, w in enumerate(golden[q["qid"]])]
     key = lambda rows: [(r["qid"], r["rank"], r["docno"],
                          np.float32(r["score"]).view(np.uint32)) for r in rows]
-    assert key(via_dict) == key(via_df)
-    assert len(via_dict) > 0
-    with pytest.raises(ValueError, match="not both"):
-        mrf_topk(spark, pos_idx, QS, model, candidates=cand, candidates_df=cdf)
+    assert key(via_df) == want
+    assert golden["c1"] and golden["c2"] and golden["c3"] == []
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ bit-identical to the exact path."""
 import os
 import shutil
 from collections import Counter
+from functools import partial
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -309,16 +310,57 @@ def test_serve_appended_index_matches_exact_before_refresh(spark, roots):
         assert got == exact[q["qid"]], q["qid"]
 
 
-def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path):
-    """On an appended, still-stale positional multi-run index, one
-    searcher with a 2-entry LRU serves interleaved BM25, SD and sqe
-    queries, so both LRUs and the resident postings rows are shared
-    across paths; each result equals its Spark path (bm25_topk, mrf_topk,
-    sqe_topk) bit for bit, for OOV tokens, qtf=2 and a df > N/2 term."""
+def remapped_oracle(root: str, corpus_paths: list[str]):
+    """The numpy oracle over the documents of the index at `root`, taken
+    from the corpora by the (repo, path, commit) identities of the
+    index's own docmap (so append's dedup decides which documents
+    count), with its docnos and termids renumbered onto the index's:
+    docnos matched by docid, termids by term. The renumbering makes tie
+    order and termid-ordered folds bit-comparable with the index."""
+    import dataclasses
+
+    import pandas as pd
     import pyarrow.dataset as pads
 
-    from ivory_spark.query.mrf import MrfModel, mrf_topk
-    from ivory_spark.query.sqe import sqe_topk
+    from ivory_spark.oracle import build_oracle_index
+
+    ident = ["repo", "path", "commit"]
+    dm = pads.dataset(f"{root}/docmap").to_table(columns=["docno", *ident]).to_pandas()
+    corpus = pd.concat([pd.read_parquet(p) for p in corpus_paths]).drop_duplicates(ident)
+    oi = build_oracle_index(corpus.merge(dm[ident], on=ident))
+    assert oi.n_docs == len(dm)
+    docno = {f"{r.repo}/{r.path}@{r.commit}": r.docno for r in dm.itertuples()}
+    to_ix = {d: docno[docid] for d, docid in oi.docids.items()}
+    dic = pads.dataset(f"{root}/dictionary").to_table(columns=["term", "termid", "df", "cf"])
+    stats = {t: (tid, df, cf) for t, tid, df, cf in zip(*(c.to_pylist() for c in dic.columns))}
+    termid = {t: v[0] for t, v in stats.items()}
+    dictionary = {t: (termid[t], df, cf) for t, (_, df, cf) in oi.dictionary.items()}
+    assert dictionary == stats
+    return dataclasses.replace(
+        oi,
+        docids={to_ix[d]: v for d, v in oi.docids.items()},
+        doclens={to_ix[d]: v for d, v in oi.doclens.items()},
+        dictionary=dictionary,
+        postings={t: sorted((to_ix[d], tf) for d, tf in pl) for t, pl in oi.postings.items()},
+        positions={t: {to_ix[d]: p for d, p in m.items()} for t, m in oi.positions.items()},
+    )
+
+
+def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path):
+    """On an appended, still-stale positional multi-run index, one
+    searcher with a 2-entry LRU serves interleaved BM25, SD, sqe and
+    dirichlet/jm/tfidf/f2exp queries, so both LRUs and the resident
+    postings rows are shared across paths. Each result equals its
+    independent reference bit for bit, for OOV tokens, qtf=2 and a
+    df > N/2 term: bm25_topk for BM25, and for the rest the numpy
+    oracle over the index's documents (remapped_oracle). run_batch
+    returns the same rows for the four LM/tf scorers."""
+    import pyarrow.dataset as pads
+
+    from ivory_spark.oracle import oracle_scored_topk
+    from ivory_spark.query.batch import Model, run_batch
+    from ivory_spark.query.mrf import MrfModel, oracle_mrf_topk
+    from ivory_spark.query.sqe import oracle_sqe_topk
 
     root = str(tmp_path / "appended_pos")
     cfg = IndexConfig(positional=True, salt_threshold=40, n_shards=5)
@@ -332,11 +374,14 @@ def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path
     runs = pads.dataset(f"{root}/postings").to_table(columns=["termid"]).to_pandas()
     assert runs["termid"].value_counts()[hi["termid"]] > 1  # several runs
     hi = hi["term"]
+    oi = remapped_oracle(root, [corpora["base"], corpora["delta"]])
 
     texts = [q["query"] for q in QUERY_SET[:8]]  # OOV (q005), qtf=2 (q004)
     texts += [hi, f"{hi} {hi} zzq_oov_token class", f"{hi} import import"]
     plain = [{"qid": f"b{i:02d}", "query": t} for i, t in enumerate(texts)]
     sd = [{"qid": f"m{i:02d}", "query": t} for i, t in enumerate(texts)]
+    scorers = ("dirichlet", "jm", "tfidf", "f2exp")
+    lm = {sc: [{"qid": f"{sc}{i:02d}", "query": t} for i, t in enumerate(texts)] for sc in scorers}
     trees = [
         '{"#combine": [{"#weight": [0.7, "import", 0.3, "class"]}, "return"]}',
         '{"#combine": ["public class", "import"]}',  # phrase leaf
@@ -355,17 +400,27 @@ def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path
             out[x["qid"]].append(bits(x))
         return out
 
+    def oracle(golden):
+        return {qid: [bits(r) for r in rows] for qid, rows in golden.items()}
+
     want = {
         **by_qid(bm25_topk(spark, idx, plain, k=10), plain),
-        **by_qid(mrf_topk(spark, idx, sd, MrfModel(dependence="sd")), sd),
-        **by_qid(sqe_topk(spark, idx, sqe, k=10), sqe),
+        **oracle(oracle_mrf_topk(oi, sd, MrfModel(dependence="sd"))),
+        **oracle(oracle_sqe_topk(oi, sqe, k=10)),
     }
+    for sc in scorers:
+        want.update(oracle(oracle_scored_topk(oi, lm[sc], scorer=sc, k=10)))
+        assert by_qid(run_batch(spark, idx, lm[sc], Model(scorer=sc, k=10)), lm[sc]) == {
+            q["qid"]: want[q["qid"]] for q in lm[sc]
+        }, sc
     assert any(want[q["qid"]] for q in sqe)
+    assert any(want[q["qid"]] for q in sd)
     searcher = LocalSearcher(root, cache_runs=2)
     for i in range(len(texts)):
         calls = [(plain[i], searcher.search), (sd[i], searcher.search_sd)]
         if i < len(sqe):
             calls.append((sqe[i], searcher.search_sqe))
+        calls += [(lm[sc][i], partial(searcher.search, scorer=sc)) for sc in scorers]
         for q, serve in calls:
             got = [bits(r) for r in serve(q["query"], k=10)]
             assert got == want[q["qid"]], q

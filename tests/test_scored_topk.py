@@ -1,7 +1,8 @@
-"""Engine-native non-BM25 retrieval (query/exact.scored_topk) vs the
-numpy golden (oracle.oracle_scored_topk): rank identity + bit-identical
-float32 scores for dirichlet / jm / tfidf / f2exp, mirroring the
-reference's scoring-function family (DirichletScoringFunction.java:30-66,
+"""Engine-native non-BM25 retrieval (run_batch on the serve kernel,
+LocalSearcher.search(scorer=...)) vs the numpy golden
+(oracle.oracle_scored_topk): rank identity + bit-identical float32
+scores for dirichlet / jm / tfidf / f2exp, mirroring the reference's
+scoring-function family (DirichletScoringFunction.java:30-66,
 JelinekMercerScoringFunction.java, TFIDFScoringFunction.java,
 F2EXPScoringFunction.java)."""
 
@@ -12,7 +13,6 @@ from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.reader import open_index
 from ivory_spark.oracle import build_oracle_index, oracle_scored_topk
 from ivory_spark.query.batch import Model, run_batch
-from ivory_spark.query.exact import scored_topk
 
 from test_rank_identity import assert_matches_oracle
 
@@ -34,7 +34,7 @@ def index(spark, tiny_corpus_path, tmp_path_factory):
 @pytest.mark.parametrize("scorer", ["dirichlet", "jm", "tfidf", "f2exp"])
 def test_scored_topk_rank_identity(spark, oracle_index, index, scorer):
     golden = oracle_scored_topk(oracle_index, QUERY_SET, scorer=scorer, k=K)
-    got = scored_topk(spark, index, QUERY_SET, scorer=scorer, k=K)
+    got = run_batch(spark, index, QUERY_SET, Model(scorer=scorer, k=K))
     assert_matches_oracle(got, golden)
 
 
@@ -47,29 +47,18 @@ def test_run_batch_dirichlet_wired(spark, oracle_index, index):
 
 def test_scored_topk_params_change_scores(spark, index):
     """mu is threaded through: different smoothing -> different scores."""
-    a = scored_topk(spark, index, QUERY_SET[:1], scorer="dirichlet", k=3).collect()
-    b = scored_topk(
-        spark, index, QUERY_SET[:1], scorer="dirichlet", params={"mu": 100.0}, k=3
+    a = run_batch(spark, index, QUERY_SET[:1], Model(scorer="dirichlet", k=3)).collect()
+    b = run_batch(
+        spark, index, QUERY_SET[:1], Model(scorer="dirichlet", params={"mu": 100.0}, k=3)
     ).collect()
     assert [r["score"] for r in a] != [r["score"] for r in b]
 
 
 def test_scored_topk_oov_only(spark, index):
     assert (
-        scored_topk(spark, index, [{"qid": "x", "query": "zzzqqq_nope"}], scorer="jm").count()
+        run_batch(spark, index, [{"qid": "x", "query": "zzzqqq_nope"}], Model(scorer="jm")).count()
         == 0
     )
-
-
-@pytest.mark.parametrize("scorer", ["dirichlet", "jm"])
-def test_lm_prune_output_identical(spark, index, scorer):
-    """The matrix-free prescore path returns exactly the full-matrix
-    result (selection margin dominates the float32 fold error)."""
-    a = scored_topk(spark, index, QUERY_SET, scorer=scorer, k=K, lm_prune=True).collect()
-    b = scored_topk(spark, index, QUERY_SET, scorer=scorer, k=K, lm_prune=False).collect()
-    assert [(r["qid"], r["docno"], r["score"]) for r in a] == [
-        (r["qid"], r["docno"], r["score"]) for r in b
-    ]
 
 
 def test_bm25_model_param_override(spark, oracle_index, index):

@@ -287,14 +287,12 @@ def served_pos(spark, tiny_corpus_path, tmp_path_factory):
     return root
 
 
-def test_serve_sd_matches_spark_and_oracle(spark, served_pos, tiny_corpus):
-    """Warm SD serving is float32 bit-identical to mrf_topk and the
-    numpy oracle (shared clique + score_docs_batch kernels)."""
-    from ivory_spark.index.reader import open_index
-    from ivory_spark.query.mrf import MrfModel, mrf_topk, oracle_mrf_topk
+def test_serve_sd_matches_oracle(served_pos, tiny_corpus):
+    """Warm SD serving is float32 bit-identical to the numpy oracle
+    (shared clique + score_docs_batch kernels)."""
+    from ivory_spark.query.mrf import MrfModel, oracle_mrf_topk
 
     searcher = LocalSearcher(served_pos)
-    idx = open_index(spark, served_pos)
     oi = build_oracle_index(tiny_corpus.drop(columns=["sha256"]))
     queries = [
         {"qid": "s1", "query": "import class"},
@@ -302,9 +300,6 @@ def test_serve_sd_matches_spark_and_oracle(spark, served_pos, tiny_corpus):
         {"qid": "s3", "query": "import"},
     ]
     golden = oracle_mrf_topk(oi, queries, MrfModel(dependence="sd"))
-    spark_res = {}
-    for r in mrf_topk(spark, idx, queries, MrfModel(dependence="sd")).collect():
-        spark_res.setdefault(r["qid"], []).append(r)
     for q in queries:
         got = searcher.search_sd(q["query"], k=10)
         want = golden[q["qid"]]
@@ -312,8 +307,6 @@ def test_serve_sd_matches_spark_and_oracle(spark, served_pos, tiny_corpus):
         gb = np.array([g["score"] for g in got], dtype=np.float32).view(np.uint32)
         wb = np.array([w["score"] for w in want], dtype=np.float32).view(np.uint32)
         assert np.array_equal(gb, wb), q["qid"]
-        sp = spark_res.get(q["qid"], [])
-        assert [g["docno"] for g in got] == [r["docno"] for r in sp], q["qid"]
 
 
 def test_serve_sd_requires_positional(served):

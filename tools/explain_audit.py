@@ -138,22 +138,31 @@ def main() -> None:
     sections.append(("bitext sentence-pair plan",
                      f"BroadcastNestedLoopJoin present: {not ok_bitext}\n"))
 
-    # cascade candidates_df flow: the stage-2 plan must contain the
-    # allow-list UNION feeding the same (qid, shard) groupBy — survivors
-    # ride the shuffle, they never detour through the driver
+    # cascade candidates_df flow: the stage-2 plan must join each
+    # query's allow-list (collect_list in the JVM) to the query rows
+    # feeding the serve kernel's MapInPandas, and building the cascade
+    # must start no Spark job — survivors never detour through the driver
     from ivory_spark.query.cascade import cascade_topk
     from ivory_spark.query.mrf import MrfModel
 
     if index.properties.get("positional"):
-        casc_plan = captured_explain(
-            cascade_topk(spark, index, QUERY_SET[:2], stage1_k=5,
-                         model=MrfModel(dependence="sd", k=3))
+        sc = spark.sparkContext
+        sc.setJobGroup("explain-audit-cascade", "cascade plan build")
+        casc = cascade_topk(spark, index, QUERY_SET[:2], stage1_k=5,
+                            model=MrfModel(dependence="sd", k=3))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        build_jobs = list(sc.statusTracker().getJobIdsForGroup("explain-audit-cascade"))
+        casc_plan = captured_explain(casc)
+        ok_casc = (
+            "MapInPandas" in casc_plan and "Join" in casc_plan
+            and "collect_list" in casc_plan and not build_jobs
         )
-        ok_casc = "Union" in casc_plan
         sections.append(("cascade stage-2 plan (candidates_df)", casc_plan[:3000]))
         sections.append(
             ("cascade checks",
-             f"allow-list union feeds the shard shuffle: {ok_casc}\n")
+             f"allow-list joined to the query rows feeding MapInPandas: {ok_casc}\n"
+             f"Spark jobs started while building the cascade: {len(build_jobs)}\n")
         )
     else:
         ok_casc = None
@@ -169,7 +178,7 @@ def main() -> None:
     print("PRF_PUSHDOWN_OK" if ok_prf else "PRF_PUSHDOWN_MISSING")
     print("BITEXT_NO_BNLJ_OK" if ok_bitext else "BITEXT_BNLJ_PRESENT")
     if ok_casc is not None:
-        print("CASCADE_UNION_OK" if ok_casc else "CASCADE_UNION_MISSING")
+        print("CASCADE_ALLOWLIST_JOIN_OK" if ok_casc else "CASCADE_ALLOWLIST_JOIN_MISSING")
 
 
 if __name__ == "__main__":

@@ -141,9 +141,9 @@ def main() -> None:
         model = parse_model_xml(args.model_xml, model_id=args.model_id)
         res = run_batch(spark, index, queries, model)
     elif args.model in ("dirichlet", "jm", "tfidf", "f2exp"):
-        from ivory_spark.query.exact import scored_topk
+        from ivory_spark.query.batch import Model, run_batch
 
-        res = scored_topk(spark, index, queries, scorer=args.model, k=args.k)
+        res = run_batch(spark, index, queries, Model(scorer=args.model, k=args.k))
     elif args.model == "bm25":
         if args.scorer == "wand":
             from ivory_spark.query.wand import bm25_topk_wand
