@@ -13,8 +13,12 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from urllib.parse import quote
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -78,6 +82,26 @@ def artifact_rows(path: str) -> int:
     footers on the driver: the count a Spark read of it would return,
     without a Spark job."""
     return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
+
+
+def pinned_rows(frame: DataFrame, key: str, values: list, columns: list[str]) -> list[tuple]:
+    """(key, *columns) rows of an Index artifact whose `key` is one of
+    `values` (non-empty), read on the driver from the files the Index
+    pinned at open: inputFiles() lists them without a Spark job, and
+    pyarrow reads each file's key and columns. An Index opened before an
+    append still names the files the append swapped out, so the read
+    raises; it never returns rows of the new snapshot."""
+    want = pa.array(values)
+    rows = []
+    for uri in frame.inputFiles():
+        # Spark leaves non-ASCII characters of a path unescaped in the
+        # URI, which pyarrow's parser refuses
+        filesystem, path = pafs.FileSystem.from_uri(quote(uri, safe=":/%@"))
+        with filesystem.open_input_file(path) as f:
+            for batch in pq.ParquetFile(f).iter_batches(columns=[key, *columns]):
+                hit = batch.filter(pc.is_in(batch.column(key), value_set=want))
+                rows.extend(zip(*(c.to_pylist() for c in hit.columns)))
+    return rows
 
 
 def open_index(spark: SparkSession, index_root: str) -> Index:

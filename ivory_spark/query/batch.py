@@ -306,12 +306,17 @@ def _worker_searcher(key: tuple):
     return _WORKER["searcher"]
 
 
-def _serve_slice(key, method, kwargs, per_qid, batches):
+# pandas dtypes of the serve kernel's fixed-width output columns
+_DTYPES = {"rank": np.int32, "docno": np.int64, "score": np.float32, "grade": np.float32}
+
+
+def _serve_slice(key, method, kwargs, per_qid, cols, batches):
     """mapInPandas body: every query of this slice through the worker's
     searcher, as searcher.<method>(query, **kwargs) plus the query's
     per_qid arguments and, when the rows carry one, its `allow` array;
-    rows in (qid, rank) order. An empty slice opens none."""
-    cols = ["qid", "rank", "docno"] + (["docid"] if kwargs["with_docid"] else []) + ["score"]
+    rows of columns `cols`, query by query in the slice's order. An
+    empty slice opens none."""
+    dtypes = {c: t for c, t in _DTYPES.items() if c in cols}
     for pdf in batches:
         search = getattr(_worker_searcher(key), method)
         qids = pdf["qid"].tolist()
@@ -325,9 +330,7 @@ def _serve_slice(key, method, kwargs, per_qid, batches):
             for qid, text, a in zip(qids, pdf["query"].tolist(), args)
             for r in search(text, **kwargs, **a)
         ]
-        yield pd.DataFrame(hits, columns=cols).astype(
-            {"rank": np.int32, "docno": np.int64, "score": np.float32}
-        )
+        yield pd.DataFrame(hits, columns=cols).astype(dtypes)
 
 
 def serve_batch(
@@ -340,13 +343,15 @@ def serve_batch(
     allow: DataFrame | None = None,
     per_qid: dict[str, dict] | None = None,
     over_budget=None,
+    schema: str | None = None,
     **kwargs,
 ) -> DataFrame:
     """A query batch on the serve kernel -> (qid, rank, docno[, docid],
     score): each query [{'qid', 'query': text}] runs as
     LocalSearcher.<method>(query, with_docid=..., **kwargs), `method`
     being search, search_sd or search_sqe, plus per_qid[qid]'s
-    arguments.
+    arguments. `features` (features.extract_features) passes its own
+    output `schema`, qid first; the method then gets no with_docid.
 
     Ivory's retrieval is a single-process engine over the MapReduce
     build (BatchQueryRunner.java); here each Spark Python worker is that
@@ -391,9 +396,11 @@ def serve_batch(
                 f"{build.BROADCAST_BUDGET_BYTES:,}; only bm25 runs past that budget"
             )
         return over_budget()
-    schema = "qid string, rank int, docno long, score float"
-    if with_docid:
-        schema = "qid string, rank int, docno long, docid string, score float"
+    if schema is None:
+        schema = "qid string, rank int, docno long, score float"
+        if with_docid:
+            schema = "qid string, rank int, docno long, docid string, score float"
+        kwargs["with_docid"] = with_docid
     if terms is not None:
         from ivory_spark.query.exact import resolve_terms
 
@@ -404,10 +411,8 @@ def serve_batch(
     if allow is not None:
         lists = allow.groupBy("qid").agg(F.collect_list("docno").alias("allow"))
         qdf = qdf.join(lists, "qid", "left")
-    out = qdf.mapInPandas(
-        partial(_serve_slice, key, method, dict(kwargs, with_docid=with_docid), per_qid or {}),
-        schema,
-    )
+    cols = [c.split()[0] for c in schema.split(",")]
+    out = qdf.mapInPandas(partial(_serve_slice, key, method, kwargs, per_qid or {}, cols), schema)
     return out if allow is None else out.orderBy("qid", "rank")
 
 

@@ -16,41 +16,15 @@ not the throughput path.
 from __future__ import annotations
 
 from collections import Counter
-from urllib.parse import quote
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.parquet as pq
-from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part, group_sum_f32
 from ivory_spark.index import codec
-from ivory_spark.index.reader import Index
+from ivory_spark.index.reader import Index, pinned_rows
 from ivory_spark.session import local_frame
-
-
-def _read_dictionary(index: Index, terms: list[str]) -> dict[str, tuple[int, int, int]]:
-    """{term: (termid, df, cf)} for those of `terms` the dictionary
-    holds, read on the driver from the dictionary files the Index pinned
-    at open: inputFiles() lists them without a Spark job, and pyarrow
-    reads each file's term, termid, df and cf columns. An Index opened
-    before an append still names the files the append swapped out, so
-    the read raises; it never returns the new dictionary's stats."""
-    want = pa.array(terms, pa.string())
-    found = {}
-    for uri in index.dictionary.inputFiles():
-        # Spark leaves non-ASCII characters of a path unescaped in the
-        # URI, which pyarrow's parser refuses
-        filesystem, path = pafs.FileSystem.from_uri(quote(uri, safe=":/%@"))
-        with filesystem.open_input_file(path) as f:
-            for batch in pq.ParquetFile(f).iter_batches(columns=["term", "termid", "df", "cf"]):
-                hit = batch.filter(pc.is_in(batch.column("term"), value_set=want))
-                for term, termid, df, cf in zip(*(c.to_pylist() for c in hit.columns)):
-                    found[term] = (termid, df, cf)
-    return found
 
 
 def resolve_terms(index: Index, terms: set[str]) -> dict[str, tuple[int, int, int]]:
@@ -67,7 +41,10 @@ def resolve_terms(index: Index, terms: set[str]) -> dict[str, tuple[int, int, in
         object.__setattr__(index, "_term_cache", cache)
     missing = sorted(t for t in terms if t not in cache)
     if missing:
-        found = _read_dictionary(index, missing)
+        found = {
+            t: (tid, df, cf)
+            for t, tid, df, cf in pinned_rows(index.dictionary, "term", missing, ["termid", "df", "cf"])
+        }
         for t in missing:
             cache[t] = found.get(t)  # None = OOV, cached too
     return {t: cache[t] for t in terms if cache[t] is not None}
@@ -78,7 +55,7 @@ def query_term_rows(
 ) -> tuple[list[tuple], list[int]]:
     """Driver-side query-term resolution: no Spark job. The terms no
     earlier batch on this Index asked for are read from the dictionary
-    files the Index pinned at open (_read_dictionary), the analogue of
+    files the Index pinned at open (reader.pinned_rows), the analogue of
     Ivory keeping the dictionary in RAM (RetrievalEnvironment.java:66-67);
     the rest come from the Index's memo (resolve_terms).
     Returns ([(qid, termid, qtf, df, cf), ...], sorted unique termids).

@@ -17,15 +17,19 @@ Reference semantics reproduced:
 - aggregation operators sum / mean / max / min / variance /
   boolean_count / boolean_ratio (ltr/operator/*.java), default Sum.
 
-Spark-first shape: a doc-sharded grouped kernel over mrf.py's shard
-grid (this module is its only user; retrieval runs on the serve kernel)
-— postings runs of the query terms are joined to (qid, shard) groups,
-decoded once, and every judged doc in the shard gets its clique
-potentials from the batched CSR window kernels. Judged docs containing
-NO query term never meet a postings row, so their rows (background
-potentials: 0 for tf-proportional scorers, the doclen-dependent
-Dirichlet background otherwise) are filled in driver-side from the
-doclens table — bounded by the judgment count, not the corpus.
+Spark shape: the serve kernel (batch.serve_batch), as for every
+retrieval model. The driver checks the models and operators, resolves
+the query terms (exact.resolve_terms) and builds each query's cliques;
+it reads the judged docs' lengths from the doclens files
+(reader.pinned_rows), so building the plan starts no Spark job. Each
+query's cliques, sorted judged docnos, doclens and grades reach a
+Spark Python worker, whose resident LocalSearcher.features assembles
+the query terms' postings over exactly those docs (a judged doc with
+no query term scores at tf = 0: 0 for tf-proportional scorers, the
+doclen-dependent Dirichlet background otherwise) and scores them with
+clique_potentials_batch. Rows arrive in (qid, docno) order. Past
+build.BROADCAST_BUDGET_BYTES the call raises serve_batch's ValueError
+before any Spark job.
 
 The default Sum aggregate is an ordered float32 fold in clique order —
 the same canonical accumulation as every scorer path (see
@@ -40,25 +44,20 @@ from __future__ import annotations
 import sys
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ivory_spark.functions.tokenizer import get_tokenizer
-from ivory_spark.index.reader import Index
+from ivory_spark.index.reader import Index, pinned_rows
+from ivory_spark.query.batch import Model, serve_batch
 from ivory_spark.query.exact import resolve_terms
-from ivory_spark.query.batch import Model
 from ivory_spark.query.mrf import (
     MrfModel,
     FeatureSpec,
     TermData,
     _clique_score_vec,
     _clique_window_counts,
-    assemble_term_data,
     build_cliques,
-    decode_shard_runs,
-    make_shard_bounds,
-    shard_of_expr,
 )
 from ivory_spark.session import local_frame
 
@@ -272,8 +271,6 @@ def extract_features(
     aggregation operator (default 'sum')."""
     props = index.properties
     positional = bool(props.get("positional"))
-    n_docs, avgdl, clen = props["n_docs"], props["avgdl"], props["collection_length"]
-    n_shards = props["n_shards"]
     tokenize = get_tokenizer(props.get("tokenizer", "code_v1")).tokenize_py
 
     mrfs = {name: _as_mrf(m) for name, m in models.items()}
@@ -287,7 +284,6 @@ def extract_features(
                 f"{index.root} is not positional"
             )
     col_names, mf_map, base_of = _columns_meta(models)
-    n_specs = len(col_names)
     op_by_name = operators or {}
     unknown = set(op_by_name) - set(col_names)
     if unknown:
@@ -296,14 +292,11 @@ def extract_features(
 
     all_tokens = sorted({t for q in queries for t in tokenize(q["query"])})
     lookup = resolve_terms(index, set(all_tokens))
-    stats = {t: (df, cf) for t, (_, df, cf) in lookup.items()}
-    term_by_id = {tid: t for t, (tid, _, _) in lookup.items()}
-    termids = sorted(term_by_id)
 
     # per-query cliques over the postings-backed token subsequence
-    # (ExtractFeatures.java:83-97), spec fids remapped to global columns
-    q_cliques: dict[str, list[dict]] = {}
-    q_terms: dict[str, list[str]] = {}
+    # (ExtractFeatures.java:83-97), spec fids remapped to global columns,
+    # with the query's judged docs as the kernel's per-query arguments
+    batch, per_qid = [], {}
     for q in queries:
         qid = q["qid"]
         if qid not in qrels or not qrels[qid]:
@@ -311,129 +304,44 @@ def extract_features(
             print(f"warning: no judgments for qid = {qid!r} -- skipping",
                   file=sys.stderr)
             continue
-        kept = [t for t in tokenize(q["query"]) if t in stats]
+        kept = [t for t in tokenize(q["query"]) if t in lookup]
         if not kept:
             print(f"warning: query {qid!r} fully out of vocabulary -- skipping",
                   file=sys.stderr)
             continue
-        q_cliques[qid] = _combined_cliques(mrfs, kept, mf_map)
-        q_terms[qid] = sorted(set(kept))
+        if qid not in per_qid:
+            batch.append(q)
+        docnos, grades = zip(*sorted(qrels[qid].items()))
+        per_qid[qid] = {
+            "cliques": _combined_cliques(mrfs, kept, mf_map),
+            "docnos": np.array(docnos, dtype=np.int64),
+            "grades": np.array(grades, dtype=np.float32),
+        }
 
-    feat_schema = "qid string, docno long, feats array<float>"
-    out_schema = "qid string, docno long, grade float, feats array<float>"
-    judged = {
-        qid: np.array(sorted(qrels[qid]), dtype=np.int64) for qid in q_cliques
-    }
-    if not judged:
-        empty = local_frame(spark, [], out_schema)
-        return _explode_feats(empty, col_names)
-
-    # authoritative doclens for every judged doc (postings rows only know
-    # lengths of docs that contain the term; a judged doc can contain none)
-    all_judged = sorted({int(d) for arr in judged.values() for d in arr})
-    dl_rows = index.doclens.filter(F.col("docno").isin(all_judged)).collect()
-    dl_by_docno = {r["docno"]: r["doclen"] for r in dl_rows}
-
-    shard_bounds = make_shard_bounds(n_shards, n_docs)
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard = key
-        lo, hi = shard_bounds(int(shard))
-        ja = judged[qid]
-        cand = ja[(ja >= lo) & (ja <= hi)]
-        if len(cand) == 0:
-            return pd.DataFrame({"qid": [], "docno": [], "feats": []}).astype(
-                {"qid": str, "docno": np.int64, "feats": object}
-            )
-        decoded = decode_shard_runs(pdf, term_by_id, lo, hi)
-        term_data, _ = assemble_term_data(decoded, cand) if decoded else ({}, None)
-        dl_vec = np.array([dl_by_docno.get(int(d), 0) for d in cand], dtype=np.int64)
-        feats = clique_potentials_batch(
-            q_cliques[qid], term_data, dl_vec, stats, n_docs, avgdl, clen,
-            n_specs, ops,
+    schema = "qid string, docno long, grade float, feats array<float>"
+    if not per_qid:
+        return _explode_feats(local_frame(spark, [], schema), col_names)
+    # authoritative doclens for every judged doc (postings only know the
+    # lengths of the docs holding a query term), read without a Spark job
+    judged = sorted({d for a in per_qid.values() for d in a["docnos"].tolist()})
+    dl_by_docno = dict(pinned_rows(index.doclens, "docno", judged, ["doclen"]))
+    for a in per_qid.values():
+        a["doclens"] = np.array(
+            [dl_by_docno.get(d, 0) for d in a["docnos"].tolist()], dtype=np.int64
         )
-        return pd.DataFrame(
-            {"qid": qid, "docno": cand, "feats": [r for r in feats]}
-        )
-
-    if termids:
-        cols = ["termid", "n", "first_docno", "last_docno", "blob"]
-        if positional:
-            cols.append("pos_blob")
-        runs = index.postings.filter(F.col("termid").isin(termids)).select(*cols)
-        qrows = [
-            (qid, int(tid))
-            for qid in q_cliques
-            for tid in termids
-            if term_by_id[tid] in q_terms[qid]
-        ]
-        qdf = local_frame(spark, qrows, "qid string, termid long")
-        runs = runs.join(F.broadcast(qdf), "termid")
-        shard_of = shard_of_expr(n_shards, n_docs)
-        runs = runs.withColumn(
-            "shard",
-            F.explode(
-                F.sequence(shard_of(F.col("first_docno")), shard_of(F.col("last_docno")))
-            ),
-        )
-        from ivory_spark.functions.gmap import grouped_apply
-
-        # per-partition dispatch, not per-(qid, shard) group (gmap.py)
-        scored = grouped_apply(
-            runs, ["qid", "shard"], kernel, schema=feat_schema
-        ).persist()  # coverage probe below + the final join reuse one run
-        # one-deep cache registry: release the PREVIOUS call's cache —
-        # this lazy API can't see the caller's final action, so per-call
-        # unpersist would force a recompute
-        prev = getattr(extract_features, "_cached_scored", None)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass  # stopped session from an earlier SparkSession
-        extract_features._cached_scored = scored
-    else:
-        scored = local_frame(spark, [], feat_schema)
-
-    grade_rows = [
-        (qid, int(d), float(g))
-        for qid, js in qrels.items()
-        if qid in q_cliques
-        for d, g in js.items()
-    ]
-    grades = local_frame(spark, grade_rows, "qid string, docno long, grade float")
-
-    # judged docs whose shard met no postings row: only the MISSING
-    # (qid, docno) pairs come to the driver (left-anti against the
-    # kernel output — normally a tiny minority of the judgment set),
-    # and their background potentials are computed locally
-    missing_rows = grades.join(
-        scored.select("qid", "docno"), ["qid", "docno"], "left_anti"
-    ).collect()
-    by_qid: dict[str, list[int]] = {}
-    for r in missing_rows:
-        by_qid.setdefault(r["qid"], []).append(int(r["docno"]))
-    bg_rows = []
-    for qid, docnos in by_qid.items():
-        missing = np.array(sorted(docnos), dtype=np.int64)
-        dl_vec = np.array([dl_by_docno.get(int(d), 0) for d in missing], dtype=np.int64)
-        feats = clique_potentials_batch(
-            q_cliques[qid], {}, dl_vec, stats, n_docs, avgdl, clen, n_specs, ops
-        )
-        for i, d in enumerate(missing):
-            bg_rows.append((qid, int(d), [float(x) for x in feats[i]]))
-    if bg_rows:
-        scored = scored.unionByName(local_frame(spark, bg_rows, feat_schema))
-
-    out = scored.join(F.broadcast(grades), ["qid", "docno"])
+    out = serve_batch(
+        spark, index, batch, "features", per_qid=per_qid, schema=schema, operators=ops
+    )
     return _explode_feats(out, col_names)
 
 
 def _explode_feats(df: DataFrame, col_names: list[str]) -> DataFrame:
+    """One column per feature; rows stay in (qid, docno) order, as the
+    serve kernel emits them."""
     cols = [F.col("qid"), F.col("docno"), F.col("grade")] + [
         F.col("feats")[i].alias(nm) for i, nm in enumerate(col_names)
     ]
-    return df.select(*cols).orderBy("qid", "docno")
+    return df.select(*cols)
 
 
 def extract_features_for_run(

@@ -40,8 +40,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ivory_spark.functions.scoring import (
     F32,
@@ -50,7 +49,6 @@ from ivory_spark.functions.scoring import (
     dirichlet_score,
 )
 from ivory_spark.functions.tokenizer import get_tokenizer
-from ivory_spark.index import codec
 from ivory_spark.index.reader import Index
 
 SHORT_MAX = 32767
@@ -585,12 +583,12 @@ def assemble_term_data(
     """Build per-term CSR TermData over the candidate-doc universe from
     decoded run entries (term, docnos, tfs, dls, flat_pos, indptr).
 
-    SHARED by serve.LocalSearcher (search_sd, search_sqe) and
-    features.extract_features — the float32 rank-identity invariant
-    requires every scorer path to assemble identically (see README:
-    float32 rank identity). Salted builds emit several docno-disjoint
-    runs per term: they are ordered by first docno and concatenated
-    into one CSR; docs outside `cand` are masked out.
+    Called only through serve.LocalSearcher._term_data, so SD/FD, sqe
+    and feature extraction (search_sd, search_sqe, features) assemble
+    identically — the float32 rank-identity invariant (see README:
+    float32 rank identity). Salted builds and appends emit several
+    docno-disjoint runs per term: they are ordered by first docno and
+    concatenated into one CSR; docs outside `cand` are masked out.
     Returns (term_data, dl_vec)."""
     m = len(cand)
     dl_vec = np.zeros(m, dtype=np.int64)
@@ -622,57 +620,6 @@ def assemble_term_data(
             iptr_k = np.concatenate(([0], np.cumsum(lens_k)))
         term_data[term] = TermData(tf_vec, doc_rows, iptr_k, flat_k)
     return term_data, dl_vec
-
-
-# ---------------------------------------------------------------------------
-# doc-shard grid of features.extract_features, its one user: a docno d
-# lands in shard floor(d * n_shards / (n_docs + 1)), and shard s covers
-# the docno range returned by the bounds function (ceil-division
-# inverse); decode_shard_runs masks a group's runs to that range.
-# ---------------------------------------------------------------------------
-
-
-def shard_of_expr(n_shards: int, n_docs: int):
-    """Column expr factory: docno column -> int shard id."""
-    return lambda c: F.floor(c * F.lit(n_shards) / F.lit(n_docs + 1)).cast("int")
-
-
-def make_shard_bounds(n_shards: int, n_docs: int):
-    """-> bounds(s) giving shard s's inclusive [lo, hi] docno range."""
-
-    def bounds(s: int) -> tuple[int, int]:
-        lo = -((-s * (n_docs + 1)) // n_shards)
-        hi = -((-(s + 1) * (n_docs + 1)) // n_shards) - 1
-        return max(lo, 1), min(hi, n_docs)
-
-    return bounds
-
-
-def decode_shard_runs(pdf: pd.DataFrame, term_by_id: dict, lo: int, hi: int) -> list:
-    """Decode the postings-run rows of one (qid, shard) group with one
-    codec.decode_frame, masked to the shard's [lo, hi] docno range ->
-    [(term, docnos int64, tfs, dls, flat_pos, indptr)] ready for
-    assemble_term_data. Rows without a pos_blob column (non-positional
-    index) decode empty positions."""
-    docnos, tfs_all, dls_all, rptr = codec.decode_frame(pdf["blob"].tolist())
-    d64_all = docnos.astype(np.int64)
-    pos_blobs = pdf["pos_blob"].tolist() if "pos_blob" in pdf else [None] * len(pdf)
-    decoded = []
-    for i, (termid, pos_blob) in enumerate(zip(pdf["termid"].tolist(), pos_blobs)):
-        term = term_by_id[int(termid)]
-        run = slice(rptr[i], rptr[i + 1])
-        d64, tfs = d64_all[run], tfs_all[run]
-        mask = (d64 >= lo) & (d64 <= hi)
-        if not mask.any():
-            continue
-        flat, indptr = codec.decode_positions_flat(
-            bytes(pos_blob) if pos_blob is not None else b"", tfs
-        )
-        rows = np.nonzero(mask)[0]
-        fvals, lens = _gather_csr(flat, indptr, rows)
-        iptr = np.concatenate(([0], np.cumsum(lens)))
-        decoded.append((term, d64[rows], tfs[rows], dls_all[run][rows], fvals, iptr))
-    return decoded
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,7 @@ dictionary and the docid of every docno once, and serves every query
 from memory. Every Spark batch runs the same replica: each Python
 worker process keeps one searcher across batches and scores its slice
 of a batch's queries with it (query/batch.serve_batch, which run_batch,
-mrf_topk and sqe_topk call for every model).
+mrf_topk, sqe_topk and features.extract_features call for every model).
 
 Memory model of a serving replica (a driver-side process or one Spark
 Python worker):
@@ -55,8 +55,10 @@ scorers (`search(scorer=...)`) score the BM25 entries' tf and dl with
 the scoring.SCORERS kernels and the same fold. SD/FD (`search_sd`) and
 structured queries (`search_sqe`) run the MRF and sqe kernels
 (build_cliques + score_docs_batch; the sqe tree evaluator) over the
-decoded entries with positions. Every model is bit-identical to its
-numpy oracle.
+decoded entries with positions, and feature extraction (`features`)
+scores a query's judged docs with features.clique_potentials_batch
+over the same entries. Every model is bit-identical to its numpy
+oracle.
 
 This is the analogue of Ivory's long-lived broker + retrieval-server
 deployment (docs/clue.html:164-180 — partition servers hold the index
@@ -287,10 +289,11 @@ class LocalSearcher:
         """docno -> 'repo/path@commit', from the in-memory docid array."""
         return {d: self._docid[d - 1] for d in map(int, docnos)}
 
-    def _term_data(self, terms, allow=None):
+    def _term_data(self, terms, allow=None, cand=None):
         """Positional entries of the query terms in the dictionary,
         assembled over their candidate docs (the docs holding any of the
-        terms, cut to the docnos in `allow` when given) by
+        terms, cut to the docnos in `allow` when given; or exactly the
+        sorted docnos `cand`, held terms or not) by
         mrf.assemble_term_data: (cand, term_data, dl_vec, stats) with
         stats term -> (df, cf), or None when no candidate is left."""
         from ivory_spark.query.mrf import assemble_term_data
@@ -303,13 +306,14 @@ class LocalSearcher:
             for tid in sorted(term_by_id)
             for run in self._run_cache_pos.get(tid, ())
         ]
-        if not decoded:
-            return None
-        cand = np.unique(np.concatenate([e[1] for e in decoded]))
-        if allow is not None:
-            cand = cand[np.isin(cand, allow)]
-            if not len(cand):
+        if cand is None:
+            if not decoded:
                 return None
+            cand = np.unique(np.concatenate([e[1] for e in decoded]))
+            if allow is not None:
+                cand = cand[np.isin(cand, allow)]
+                if not len(cand):
+                    return None
         stats = {t: (int(self._df[r]), int(self._cf[r])) for t, r in rows.items()}
         return (cand, *assemble_term_data(decoded, cand), stats)
 
@@ -360,6 +364,32 @@ class LocalSearcher:
             p["n_docs"], p["avgdl"], p["collection_length"],
         )
         return self._ranked(cand, scores, k, with_docid)
+
+    def features(
+        self, query: str, cliques: list[dict], docnos, doclens, grades, operators: list[str],
+    ) -> list[dict]:
+        """Feature rows of one query's judged docs (features.extract_features
+        on the serve kernel) -> [{docno, grade, feats}] in docno order.
+        `cliques` are the driver's cliques of `query`'s in-dictionary
+        tokens, fids on the feature columns; docnos (sorted), doclens and
+        grades are aligned arrays. Term data is assembled over exactly
+        those docnos, so a judged doc holding no query term scores at
+        tf = 0; features.clique_potentials_batch aggregates each column's
+        unweighted potentials with its operator."""
+        from ivory_spark.query.features import clique_potentials_batch
+
+        p = self.props
+        _, term_data, _, stats = self._term_data(
+            {t for c in cliques for t in c["terms"]}, cand=docnos
+        )
+        feats = clique_potentials_batch(
+            cliques, term_data, doclens, stats, p["n_docs"], p["avgdl"],
+            p["collection_length"], len(operators), operators,
+        )
+        return [
+            {"docno": d, "grade": g, "feats": f}
+            for d, g, f in zip(docnos.tolist(), grades.tolist(), feats)
+        ]
 
     def search_sqe(
         self, query, k: int = 10, with_docid: bool = True

@@ -348,17 +348,27 @@ def remapped_oracle(root: str, corpus_paths: list[str]):
 
 def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path):
     """On an appended, still-stale positional multi-run index, one
-    searcher with a 2-entry LRU serves interleaved BM25, SD, sqe and
-    dirichlet/jm/tfidf/f2exp queries, so both LRUs and the resident
-    postings rows are shared across paths. Each result equals its
-    independent reference bit for bit, for OOV tokens, qtf=2 and a
-    df > N/2 term: bm25_topk for BM25, and for the rest the numpy
-    oracle over the index's documents (remapped_oracle). run_batch
-    returns the same rows for the four LM/tf scorers."""
+    searcher with a 2-entry LRU serves interleaved BM25, SD, sqe,
+    dirichlet/jm/tfidf/f2exp queries and feature extraction, so both
+    LRUs and the resident postings rows are shared across paths. Each
+    result equals its independent reference bit for bit, for OOV tokens,
+    qtf=2 and a df > N/2 term: bm25_topk for BM25, and for the rest the
+    numpy oracle over the index's documents (remapped_oracle). run_batch
+    returns the same rows for the four LM/tf scorers, and
+    extract_features the same feature rows as the searcher, judged docs
+    holding no query term included."""
     import pyarrow.dataset as pads
 
+    from ivory_spark.functions.tokenizer import get_tokenizer
     from ivory_spark.oracle import oracle_scored_topk
     from ivory_spark.query.batch import Model, run_batch
+    from ivory_spark.query.features import (
+        _as_mrf,
+        _combined_cliques,
+        extract_features,
+        feature_columns,
+        oracle_extract_features,
+    )
     from ivory_spark.query.mrf import MrfModel, oracle_mrf_topk
     from ivory_spark.query.sqe import oracle_sqe_topk
 
@@ -415,6 +425,32 @@ def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path
         }, sc
     assert any(want[q["qid"]] for q in sqe)
     assert any(want[q["qid"]] for q in sd)
+
+    # every third doc judged, so judged docs without any query term too
+    fq = [{"qid": f"f{i:02d}", "query": t} for i, t in enumerate(texts)]
+    qrels = {q["qid"]: {d: float(d % 4) for d in range(1, oi.n_docs + 1, 3)} for q in fq}
+    models = {"bm25": Model(), "lm": Model(scorer="dirichlet"), "sd": MrfModel(dependence="sd")}
+    cols = feature_columns(models)
+
+    def feature_rows(rows):
+        out: dict = {}
+        for r in rows:
+            feats = r["feats"] if "feats" in r else np.array([r[c] for c in cols], dtype=np.float32)
+            out.setdefault(r["qid"], []).append(
+                (r["docno"], r["grade"], *np.float32(feats).view(np.uint32).tolist())
+            )
+        return out
+
+    want_feats = feature_rows(oracle_extract_features(oi, fq, qrels, models))
+    assert feature_rows(r.asDict() for r in extract_features(spark, idx, fq, qrels, models).collect()) == want_feats
+    tokenize = get_tokenizer(idx.properties["tokenizer"]).tokenize_py
+    no_term = [
+        d for q in fq for d in qrels[q["qid"]]
+        if not any(d in dict(oi.postings.get(t, ())) for t in tokenize(q["query"]))
+    ]
+    assert no_term and len(want_feats) == len(fq) - 1  # q005 is wholly OOV
+    mrfs = {name: _as_mrf(m) for name, m in models.items()}
+
     searcher = LocalSearcher(root, cache_runs=2)
     for i in range(len(texts)):
         calls = [(plain[i], searcher.search), (sd[i], searcher.search_sd)]
@@ -424,6 +460,17 @@ def test_serve_mixed_paths_on_appended_positional_index(spark, corpora, tmp_path
         for q, serve in calls:
             got = [bits(r) for r in serve(q["query"], k=10)]
             assert got == want[q["qid"]], q
+        kept = [t for t in tokenize(texts[i]) if t in oi.dictionary]
+        if kept:
+            docnos = np.array(sorted(qrels[fq[i]["qid"]]), dtype=np.int64)
+            got = searcher.features(
+                texts[i], _combined_cliques(mrfs, kept, {}), docnos,
+                np.array([oi.doclens[d] for d in docnos.tolist()], dtype=np.int64),
+                np.float32(docnos % 4), ["sum"] * len(cols),
+            )
+            assert feature_rows({"qid": fq[i]["qid"], **r} for r in got) == {
+                fq[i]["qid"]: want_feats[fq[i]["qid"]]
+            }, fq[i]
 
 
 def test_wand_refuses_stale_bounds_then_matches_after_refresh(spark, roots):

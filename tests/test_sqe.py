@@ -8,6 +8,8 @@ import pytest
 from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.reader import open_index
 from ivory_spark.oracle import build_oracle_index
+from ivory_spark.query.features import extract_features, feature_columns, oracle_extract_features
+from ivory_spark.query.mrf import MrfModel
 from ivory_spark.query.sqe import (
     oracle_sqe_topk,
     parse_structured_query,
@@ -99,10 +101,26 @@ def test_sqe_rank_identity(spark, sq_index, sq_oracle):
     _assert_match(res, golden)
 
 
+def _qrels(queries, n_docs):
+    """Every third doc judged for each query, grade docno % 4: judged
+    docs with and without the query terms."""
+    return {q["qid"]: {d: float(d % 4) for d in range(1, n_docs + 1, 3)} for q in queries}
+
+
+def _feature_bits(rows):
+    return [
+        (r["qid"], r["docno"], r["grade"],
+         *(np.float32(r[c]).view(np.uint32).item() for c in feature_columns({"sd": MrfModel()})))
+        for r in rows
+    ]
+
+
 def test_plan_construction_starts_no_job(spark, sq_index, sq_oracle, jobs_started):
-    """mrf_topk and sqe_topk resolve query terms with exact.resolve_terms
-    on the driver, so building either plan on a freshly opened index (an
-    empty term memo) starts no Spark job; the plans then rank as before."""
+    """mrf_topk, sqe_topk and extract_features resolve query terms with
+    exact.resolve_terms on the driver, and extract_features reads the
+    judged doc lengths with reader.pinned_rows, so building any of the
+    plans on a freshly opened index (an empty term memo) starts no Spark
+    job; the plans then return what their numpy oracles do."""
     from ivory_spark.query.mrf import mrf_topk, oracle_mrf_topk
 
     queries = [{"qid": "m1", "query": "public static void"}, {"qid": "m2", "query": "import"}]
@@ -113,32 +131,47 @@ def test_plan_construction_starts_no_job(spark, sq_index, sq_oracle, jobs_starte
     assert jobs == []
     _assert_match(sqe, oracle_sqe_topk(sq_oracle, SQ, k=10))
     _assert_match(mrf, oracle_mrf_topk(sq_oracle, queries))
+    qrels = _qrels(queries, sq_oracle.n_docs)
+    fresh = open_index(spark, sq_index.root)
+    feats, jobs = jobs_started(
+        lambda: extract_features(spark, fresh, queries, qrels, {"sd": MrfModel()})
+    )
+    assert jobs == []
+    want = oracle_extract_features(sq_oracle, queries, qrels, {"sd": MrfModel()})
+    assert _feature_bits(feats.collect()) == _feature_bits(want)
 
 
 def test_engine_batches_plan_one_map_in_pandas(spark, sq_index, jobs_started, monkeypatch):
-    """Within the workers' memory budget, SD, sqe and dirichlet batches
-    are one MapInPandas over the query rows' LocalTableScan, with no
-    postings scan, window or shuffle. Past it (a zero budget) each call
-    raises ValueError naming the budget and the estimate, before any
-    Spark job: only BM25 has a relational route there."""
+    """Within the workers' memory budget, SD, sqe, dirichlet and feature
+    extraction batches are one MapInPandas over the query rows'
+    LocalTableScan, with no postings scan, window or shuffle; feature
+    rows come back in (qid, docno) order with no sort. Past the budget
+    (a zero one) each call raises ValueError naming the budget and the
+    estimate, before any Spark job: only BM25 has a relational route
+    there."""
     import re
 
     from ivory_spark.index import build
     from ivory_spark.query.batch import Model, run_batch
     from ivory_spark.query.mrf import mrf_topk
 
-    queries = [{"qid": "m1", "query": "public static void"}, {"qid": "m2", "query": "import"}]
+    queries = [{"qid": "m2", "query": "import"}, {"qid": "m1", "query": "public static void"}]
+    qrels = _qrels(queries, sq_index.n_docs)
     calls = {
         "sd": lambda: mrf_topk(spark, sq_index, queries),
         "sqe": lambda: sqe_topk(spark, sq_index, SQ, k=10),
         "dirichlet": lambda: run_batch(spark, sq_index, queries, Model("dirichlet")),
+        "features": lambda: extract_features(spark, sq_index, queries, qrels, {"sd": MrfModel()}),
     }
     for name, call in calls.items():
         df = call()
-        assert df.collect(), name
+        rows = df.collect()
+        assert rows, name
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" in plan and "LocalTableScan" in plan, (name, plan)
         assert not re.search(r"\b(FileScan|Window|Exchange)\b", plan), (name, plan)
+    keys = [(r["qid"], r["docno"]) for r in rows]  # the features call's, the last
+    assert keys == sorted(keys) and len(keys) == sum(map(len, qrels.values()))
 
     monkeypatch.setattr(build, "BROADCAST_BUDGET_BYTES", 0)
 
@@ -151,6 +184,20 @@ def test_engine_batches_plan_one_map_in_pandas(spark, sq_index, jobs_started, mo
         msg, jobs = jobs_started(lambda: refused(call))
         assert jobs == [], name
         assert re.search(r"about [\d,]+ bytes .*BROADCAST_BUDGET_BYTES = 0;", msg), msg
+
+
+def test_repeated_feature_extraction_caches_nothing(spark, sq_index):
+    """Two identical extract_features calls return the same rows, and
+    each leaves Spark's cache manager empty: no call persists a frame
+    that a later call could reuse or release."""
+    queries = [{"qid": "m1", "query": "public static void"}, {"qid": "m2", "query": "import"}]
+    qrels = _qrels(queries, sq_index.n_docs)
+    spark.catalog.clearCache()
+    runs = []
+    for _ in range(2):
+        runs.append(extract_features(spark, sq_index, queries, qrels, {"sd": MrfModel()}).collect())
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert runs[0] and _feature_bits(runs[0]) == _feature_bits(runs[1])
 
 
 def test_parse_vs_programmatic_rank_identity(spark, sq_index):

@@ -5,7 +5,9 @@ the properties that matter at 100 TB:
    PushedFilters, and ReadSchema excludes pos_blob for BM25/WAND;
 2. relational BM25: whole-stage codegen spans over the scoring
    expressions, broadcast joins for the tiny query table;
-3. index build joins: dictionary join strategy.
+3. index build joins: dictionary join strategy;
+4. cascade and feature extraction: the serve kernel's MapInPandas, and
+   no Spark job started while building either plan.
 
 Usage: python tools/explain_audit.py <index_root> [out_md]
 """
@@ -25,6 +27,18 @@ def captured_explain(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def jobs_started(spark, group: str, fn):
+    """(fn(), count of the Spark jobs fn started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def main() -> None:
@@ -145,14 +159,13 @@ def main() -> None:
     from ivory_spark.query.cascade import cascade_topk
     from ivory_spark.query.mrf import MrfModel
 
-    if index.properties.get("positional"):
-        sc = spark.sparkContext
-        sc.setJobGroup("explain-audit-cascade", "cascade plan build")
-        casc = cascade_topk(spark, index, QUERY_SET[:2], stage1_k=5,
-                            model=MrfModel(dependence="sd", k=3))
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        build_jobs = list(sc.statusTracker().getJobIdsForGroup("explain-audit-cascade"))
+    positional = index.properties.get("positional")
+    if positional:
+        casc, build_jobs = jobs_started(
+            spark, "explain-audit-cascade",
+            lambda: cascade_topk(spark, index, QUERY_SET[:2], stage1_k=5,
+                                 model=MrfModel(dependence="sd", k=3)),
+        )
         casc_plan = captured_explain(casc)
         ok_casc = (
             "MapInPandas" in casc_plan and "Join" in casc_plan
@@ -162,10 +175,37 @@ def main() -> None:
         sections.append(
             ("cascade checks",
              f"allow-list joined to the query rows feeding MapInPandas: {ok_casc}\n"
-             f"Spark jobs started while building the cascade: {len(build_jobs)}\n")
+             f"Spark jobs started while building the cascade: {build_jobs}\n")
         )
     else:
         ok_casc = None
+
+    # feature extraction runs on the serve kernel: one MapInPandas over
+    # the query rows, no postings scan or shuffle, and building the plan
+    # (term lookup, judged doc lengths) starts no Spark job
+    from ivory_spark.query.batch import Model
+    from ivory_spark.query.features import extract_features
+
+    judged = range(1, index.properties["n_docs"] + 1, 7)
+    qrels = {q["qid"]: {d: float(d % 4) for d in judged} for q in QUERY_SET[:2]}
+    feats, feat_jobs = jobs_started(
+        spark, "explain-audit-features",
+        lambda: extract_features(
+            spark, index, QUERY_SET[:2], qrels,
+            {"m": MrfModel(dependence="sd") if positional else Model()},
+        ),
+    )
+    feat_plan = captured_explain(feats)
+    ok_feat = (
+        "MapInPandas" in feat_plan and "Scan parquet" not in feat_plan
+        and "Exchange" not in feat_plan and not feat_jobs
+    )
+    sections.append(("feature extraction plan", feat_plan[:3000]))
+    sections.append(
+        ("feature extraction checks",
+         f"one MapInPandas over the query rows, no scan or shuffle: {ok_feat}\n"
+         f"Spark jobs started while building the plan: {feat_jobs}\n")
+    )
 
     text = "\n".join(f"## {t}\n\n```\n{b}\n```\n" for t, b in sections)
     if out_md:
@@ -179,6 +219,7 @@ def main() -> None:
     print("BITEXT_NO_BNLJ_OK" if ok_bitext else "BITEXT_BNLJ_PRESENT")
     if ok_casc is not None:
         print("CASCADE_ALLOWLIST_JOIN_OK" if ok_casc else "CASCADE_ALLOWLIST_JOIN_MISSING")
+    print("FEATURES_KERNEL_OK" if ok_feat else "FEATURES_KERNEL_MISSING")
 
 
 if __name__ == "__main__":
