@@ -17,6 +17,10 @@ Stage map to the reference (see SURVEY.md §3.1):
                 mapInPandas over whole sorted batches, with docno-range
                 salts so a skewed term (e.g. "return" in ~every doc)
                 splits into bounded, independently-scorable runs.
+  serve_image <- no reference stage: the postings, dictionary and docids
+                as memory-mappable Arrow IPC files for the serving tier
+                (index/image.py), Ivory's forward index and in-RAM
+                dictionary (IntPostingsForwardIndex.java:68-110) as files.
 
 Scale notes (100 TB / 10^12 rows):
 - sequential id assignment (docno, termid) is two-phase — range
@@ -26,8 +30,8 @@ Scale notes (100 TB / 10^12 rows):
   otherwise); the salt count adapts per term (ceil(df / target_run));
 - postings rows are written range-clustered by termid so Parquet
   row-group min/max stats give termid predicate pushdown to the Spark
-  query paths (the LocalSearcher serving tier reads the termid and blob
-  columns whole, once, and slices them in memory);
+  query paths (the LocalSearcher serving tier maps the serve image
+  instead, written from them once per commit);
 - every stage writes an artifact + manifest and is skipped when valid
   (checkpoint-resume; BuildTermDocVectors.java:346-350 made auditable);
 - artifacts are read back under the schema in their parquet footers and
@@ -47,7 +51,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part
-from ivory_spark.index import codec
+from ivory_spark.index import codec, image
 from ivory_spark.index.reader import artifact_rows, read_artifact
 from ivory_spark.plans.manifest import StageRun, stage_is_valid
 from ivory_spark.session import local_frame
@@ -400,6 +404,7 @@ def build_index(
                 "n_terms": int(n_terms),
                 **asdict(cfg),
                 "format_version": codec.FORMAT_VERSION,
+                "generation": 0,
             }
             tmp = props_path + ".tmp"
             with open(tmp, "w") as f:
@@ -438,6 +443,22 @@ def build_index(
             run.metrics["n_runs"] = artifact_rows(postings_path)
             run.metrics["partitions"] = partitions
             run.record_artifact(postings_path)
+
+    # ---- stage: serve_image (what LocalSearcher maps; index/image.py) ----
+    if "generation" not in props:
+        # resumed over an index written before serve images: its
+        # artifacts are whole, so it gains generation 0 and its image
+        props["generation"] = 0
+        with open(props_path + ".tmp", "w") as f:
+            json.dump(props, f, indent=2)
+        os.replace(props_path + ".tmp", props_path)
+    img = image.image_dir(index_root, props["generation"])
+    img_files = [os.path.join(img, f"{n}.arrow") for n in image.FILES]
+    if not stage_is_valid(index_root, "serve_image", fp, img_files):
+        with StageRun(index_root, "serve_image", fp) as run:
+            image.write_image(index_root, props)
+            run.metrics["bytes"] = sum(os.path.getsize(f) for f in img_files)
+        image.prune(index_root, props["generation"])
 
     return props
 

@@ -12,8 +12,9 @@ its MapReduce build over the grown collection
 delta-only tokenize + stats, one postings encode over delta rows, and a
 dictionary/doclens merge. The writes run one after another: docmap,
 tdf, doclens and the new dictionary, then the postings encode, which
-needs the merged dictionary and stats; the properties file, the commit
-point, is written last. (Running the independent ones on concurrent
+needs the merged dictionary and stats; then the serve image of the new
+generation (index/image.py), and the properties file, the commit point,
+last. (Running the independent ones on concurrent
 driver threads cut the append's wall time on the 2,000-doc benchmark
 corpus by less than its run-to-run spread and left build_ingest's
 throughput unresolved, so they stay serial.)
@@ -55,7 +56,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ivory_spark.functions.scoring import bm25_idf, bm25_tf_part
-from ivory_spark.index import codec
+from ivory_spark.index import codec, image
 from ivory_spark.index.build import (
     IndexConfig,
     assign_sequential_ids,
@@ -94,7 +95,6 @@ def append_delta(
 def _append_delta_inner(
     spark: SparkSession, index_root: str, delta_corpus_path: str, props: dict, run
 ) -> dict:
-    props_path = os.path.join(index_root, "properties.json")
     if props.get("min_df", 1) != 1 or props.get("max_df") is not None:
         raise ValueError("append_delta requires min_df=1 and max_df=None")
     cfg = IndexConfig(
@@ -203,6 +203,7 @@ def _append_delta_inner(
         avgdl=float(clen0 + clen_d) / n_docs1,
         n_terms=int(n_terms0 + n_new_terms),
         bounds_stale=True,
+        generation=props.get("generation", 0) + 1,
         appended_deltas=props.get("appended_deltas", [])
         + [{"path": delta_corpus_path, "n_docs": int(n_new)}],
     )
@@ -213,8 +214,9 @@ def _append_delta_inner(
     postings = encode_postings(joined, cfg, props["n_docs"], props["avgdl"], partitions)
     postings.write.mode("append").parquet(os.path.join(index_root, "postings"))
 
-    # 7. swap the dictionary and persist properties (last: readers that
-    #    see the old properties read a consistent old index). The old
+    # 7. swap the dictionary, write the serve image of the new
+    #    generation and persist properties (last: readers that see the
+    #    old properties read a consistent old index and its image). The old
     #    dictionary is RENAMED aside, not deleted, until after the
     #    properties commit — every crash window leaves either the old or
     #    the new dictionary recoverable (repair_partial_append decides by
@@ -227,10 +229,8 @@ def _append_delta_inner(
         shutil.rmtree(old_dict)
     os.rename(dict_path, old_dict)
     os.rename(tmp_dict, dict_path)
-    tmp = props_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(props, f, indent=2)
-    os.replace(tmp, props_path)
+    image.write_image(index_root, props)
+    _commit(index_root, props)
     shutil.rmtree(old_dict)
     run.metrics.update(
         n_docs_added=int(n_new),
@@ -245,9 +245,11 @@ def repair_partial_append(spark: SparkSession, index_root: str) -> dict:
     """Remove artifact rows left behind by a crashed append_delta (rows
     beyond the last committed properties): docmap/tdf/doclens rows with
     docno > n_docs, postings runs whose first_docno > n_docs, and a
-    leftover dictionary_tmp. After repair, validate_index passes and the
-    append can simply be retried (the properties file is the commit
-    point, so the committed index was never touched)."""
+    leftover dictionary_tmp, and every serve image but the committed
+    one, which is rewritten from the repaired artifacts. After repair,
+    validate_index passes and the append can simply be retried (the
+    properties file is the commit point, so the committed index was
+    never touched)."""
     props_path = os.path.join(index_root, "properties.json")
     with open(props_path) as f:
         props = json.load(f)
@@ -296,6 +298,11 @@ def repair_partial_append(spark: SparkSession, index_root: str) -> dict:
         kept.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(path)
         os.rename(tmp, path)
+    # the committed image, rewritten from the repaired artifacts (a
+    # rewritten postings directory can order a term's runs differently),
+    # and no image of an uncommitted generation
+    image.write_image(index_root, props)
+    image.prune(index_root, props["generation"])
     return props
 
 
@@ -310,7 +317,8 @@ def refresh_bounds(spark: SparkSession, index_root: str) -> dict:
     build.encode_groups computes them, and it is re-encoded by one
     codec.encode_frame call. With stats unchanged since encode, the
     rows come out byte-identical to the build's. At cluster scale this
-    is embarrassingly parallel over parquet splits."""
+    is embarrassingly parallel over parquet splits. The new blobs reach
+    the serving tier as the serve image of the next generation."""
     props_path = os.path.join(index_root, "properties.json")
     with open(props_path) as f:
         props = json.load(f)
@@ -364,9 +372,18 @@ def refresh_bounds(spark: SparkSession, index_root: str) -> dict:
     os.rename(postings_path, old_path)
     os.rename(tmp_path, postings_path)
     shutil.rmtree(old_path)
-    props["bounds_stale"] = False
+    props.update(bounds_stale=False, generation=props.get("generation", 0) + 1)
+    image.write_image(index_root, props)
+    _commit(index_root, props)
+    return props
+
+
+def _commit(index_root: str, props: dict) -> None:
+    """Write properties.json, the commit point, then delete the serve
+    images it superseded."""
+    props_path = os.path.join(index_root, "properties.json")
     tmp = props_path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(props, f, indent=2)
     os.replace(tmp, props_path)
-    return props
+    image.prune(index_root, props["generation"])

@@ -4,13 +4,15 @@ Reference: the reducer hard-errors if the number of postings appended to
 a term's list differs from its df
 (ivory/core/index/BuildIPInvertedIndexDocSorted.java:155-161,200-208).
 Here the same invariant (sum of run lengths per termid == dictionary df)
-plus structural checks run as DataFrame assertions after the build.
+plus structural checks run as DataFrame assertions after the build, and
+the serve image is checked against the artifacts it is derived from.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from ivory_spark.index.image import image_differs
 from ivory_spark.index.reader import Index
 
 
@@ -64,6 +66,11 @@ def validate_index(spark: SparkSession, index: Index) -> dict:
     )
     if overlap:
         raise IndexValidationError(f"{overlap} overlapping salted runs")
+
+    # the committed serve image is the parquet artifacts' (index/image.py)
+    differs = image_differs(index.root, index.properties)
+    if differs:
+        raise IndexValidationError(f"serve image differs from the artifacts in: {differs}")
 
     checks["n_runs"] = index.postings.count()
     checks["n_docs"] = index.n_docs

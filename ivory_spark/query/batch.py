@@ -17,6 +17,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import pickle
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 from functools import partial
@@ -258,8 +259,7 @@ def run_batch(
 
 
 # Resident bytes of one dictionary term and of one docid in a
-# LocalSearcher, beyond its postings: the Python str and its dict or
-# list slot, plus the term's numpy termid/df/cf entries.
+# LocalSearcher, beyond its postings, as the memory budget counts them.
 _TERM_BYTES = 200
 _DOC_BYTES = 160
 
@@ -270,35 +270,32 @@ _WORKER = {"key": None, "searcher": None}
 
 
 def _snapshot(index) -> tuple[tuple, int]:
-    """The batch's snapshot key (index root, properties, sorted postings
-    file names; pyarrow's discovery skips '.' and '_' files) and an
-    upper bound on one searcher's resident bytes: the postings files
-    whole (termid and blob columns, plus the position bytes that only
-    SD/FD and sqe read), the dictionary and the docids."""
-    names, nbytes = [], 0
-    for e in os.scandir(os.path.join(index.root, "postings")):
-        if e.is_file() and not e.name.startswith((".", "_")):
-            names.append(e.name)
-            nbytes += e.stat().st_size
+    """The batch's snapshot key (index root, properties: their
+    generation names the serve image) and the memory budget's estimate
+    of one searcher's bytes: the postings files whole (pyarrow's
+    discovery skips '.' and '_' files), plus _TERM_BYTES per term and
+    _DOC_BYTES per doc."""
+    nbytes = sum(
+        e.stat().st_size for e in os.scandir(os.path.join(index.root, "postings"))
+        if e.is_file() and not e.name.startswith((".", "_"))
+    )
     props = index.properties
-    key = (index.root, json.dumps(props, sort_keys=True), tuple(sorted(names)))
+    key = (index.root, json.dumps(props, sort_keys=True))
     return key, nbytes + props["n_terms"] * _TERM_BYTES + props["n_docs"] * _DOC_BYTES
 
 
 def _worker_searcher(key: tuple):
     """This worker's LocalSearcher for the pinned snapshot `key`. The
-    searcher pins what it finds on disk, which must be what the driver
-    pinned: an append or refresh in between would mix two snapshots."""
+    searcher maps the image of the properties it finds on disk, which
+    must be the ones the driver pinned: an append or refresh in between
+    commits another generation, and the batch would mix two snapshots."""
     from ivory_spark.query.serve import LocalSearcher
 
     if _WORKER["key"] != key:
         _WORKER.update(key=None, searcher=None)  # free the old one first
-        root, props, files = key
+        root, props = key
         searcher = LocalSearcher(root)
-        if (
-            json.dumps(searcher.props, sort_keys=True) != props
-            or searcher.postings_files != files
-        ):
+        if json.dumps(searcher.props, sort_keys=True) != props:
             raise RuntimeError(
                 f"index at {root} changed after the batch pinned it; reopen the index"
             )
@@ -310,17 +307,17 @@ def _worker_searcher(key: tuple):
 _DTYPES = {"rank": np.int32, "docno": np.int64, "score": np.float32, "grade": np.float32}
 
 
-def _serve_slice(key, method, kwargs, per_qid, cols, batches):
+def _serve_slice(key, method, kwargs, cols, batches):
     """mapInPandas body: every query of this slice through the worker's
-    searcher, as searcher.<method>(query, **kwargs) plus the query's
-    per_qid arguments and, when the rows carry one, its `allow` array;
-    rows of columns `cols`, query by query in the slice's order. An
-    empty slice opens none."""
+    searcher, as searcher.<method>(query, **kwargs) plus the query's own
+    arguments, pickled in its row's `args` (null: none), and, when the
+    rows carry one, its `allow` array; rows of columns `cols`, query by
+    query in the slice's order. An empty slice opens none."""
     dtypes = {c: t for c, t in _DTYPES.items() if c in cols}
     for pdf in batches:
         search = getattr(_worker_searcher(key), method)
         qids = pdf["qid"].tolist()
-        args = [per_qid.get(qid, {}) for qid in qids]
+        args = [{} if a is None else pickle.loads(a) for a in pdf["args"].tolist()]
         if "allow" in pdf:
             # a qid with no allow-list row has nothing to score
             args = [dict(a, allow=np.asarray([] if al is None else al, dtype=np.int64))
@@ -350,16 +347,19 @@ def serve_batch(
     score): each query [{'qid', 'query': text}] runs as
     LocalSearcher.<method>(query, with_docid=..., **kwargs), `method`
     being search, search_sd or search_sqe, plus per_qid[qid]'s
-    arguments. `features` (features.extract_features) passes its own
-    output `schema`, qid first; the method then gets no with_docid.
+    arguments, pickled into the query's own row, so a task unpickles
+    only the arguments of its slice's queries. `features`
+    (features.extract_features) passes its own output `schema`, qid
+    first; the method then gets no with_docid.
 
     Ivory's retrieval is a single-process engine over the MapReduce
     build (BatchQueryRunner.java); here each Spark Python worker is that
-    engine. The driver pins a snapshot (index root, properties, postings
-    file list) and hands the qid-sorted queries to Spark as a
-    session.local_frame: a LocalTableScan in the JVM, which splits them
-    into min(len(queries), defaultParallelism) contiguous slices in
-    order, so no Python worker starts just to read them. A mapInPandas
+    engine. The driver pins a snapshot (index root and properties, whose
+    generation names the serve image the workers map) and hands the
+    qid-sorted queries to Spark as a session.local_frame: a
+    LocalTableScan in the JVM, which splits them into
+    min(len(queries), defaultParallelism) contiguous slices in order,
+    so no Python worker starts just to read them. A mapInPandas
     task runs its slice in a searcher the worker process keeps across
     batches, one per process, reopened when the pin changes. So the plan
     has no shuffle, no block-max bounds (an appended index is served
@@ -376,15 +376,16 @@ def serve_batch(
     `allow` array. The join reorders rows, so this route alone ends in
     orderBy("qid", "rank").
 
-    Memory budget: each worker process holds the postings termid and
-    blob columns (position bytes too for SD/FD and sqe), the dictionary
-    and every docid in memory. When the upper bound _snapshot computes
-    for that set exceeds build.BROADCAST_BUDGET_BYTES (256 MB), the
-    batch returns over_budget(): bm25_topk_serve passes the exact
-    relational plan (exact.bm25_topk). No other model has a route past
-    the budget, so without over_budget the call raises ValueError, naming
-    the budget and the estimate, before any Spark job. A memory-mapped
-    serve image would lift that limit (ROADMAP item 7)."""
+    Memory budget: each worker process maps the serve image, whose pages
+    the workers of a host share through the page cache, and holds its
+    own decoded LRU. The budget still counts what a searcher held before
+    the image: when _snapshot's estimate exceeds
+    build.BROADCAST_BUDGET_BYTES (256 MB), the batch returns
+    over_budget(): bm25_topk_serve passes the exact relational plan
+    (exact.bm25_topk). No other model has a route past the budget, so
+    without over_budget the call raises ValueError, naming the budget
+    and the estimate, before any Spark job. The route goes once large
+    workloads show that deleting it costs nothing (ROADMAP item 7)."""
     from ivory_spark.index import build
 
     key, resident = _snapshot(index)
@@ -406,13 +407,18 @@ def serve_batch(
 
         if not resolve_terms(index, terms):
             return local_frame(spark, [], schema)
-    rows = sorted(((q["qid"], q["query"]) for q in queries), key=lambda r: r[0])
-    qdf = local_frame(spark, rows, "qid string, query string")
+    per_qid = per_qid or {}
+    rows = sorted(
+        ((q["qid"], q["query"], pickle.dumps(per_qid[q["qid"]]) if q["qid"] in per_qid else None)
+         for q in queries),
+        key=lambda r: r[0],
+    )
+    qdf = local_frame(spark, rows, "qid string, query string, args binary")
     if allow is not None:
         lists = allow.groupBy("qid").agg(F.collect_list("docno").alias("allow"))
         qdf = qdf.join(lists, "qid", "left")
     cols = [c.split()[0] for c in schema.split(",")]
-    out = qdf.mapInPandas(partial(_serve_slice, key, method, kwargs, per_qid or {}, cols), schema)
+    out = qdf.mapInPandas(partial(_serve_slice, key, method, kwargs, cols), schema)
     return out if allow is None else out.orderBy("qid", "rank")
 
 

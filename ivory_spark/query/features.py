@@ -438,11 +438,12 @@ def oracle_extract_features(
 def features_to_instances(df: DataFrame, with_docid: bool = False):
     """Collect an extract_features frame into an ltr.Instances (rows
     ordered qid, docno — contiguous query blocks, TreeMap-sorted docs
-    like ExtractFeatures' output)."""
+    like ExtractFeatures' output). The rows are sorted on the driver,
+    whatever order the frame has: a Spark sort would add an exchange."""
     from ivory_spark.ltr import Instances
 
     feat_names = [c for c in df.columns if c not in ("qid", "docno", "docid", "grade")]
-    rows = df.orderBy("qid", "docno").collect()
+    rows = sorted(df.collect(), key=lambda r: (r["qid"], r["docno"]))
     return Instances(
         [r["qid"] for r in rows],
         [str(r["docid"] if with_docid else r["docno"]) for r in rows],

@@ -5,37 +5,44 @@ per query slice, and each task's Python worker setup. On the 2,000-doc
 perfbench index (4-vCPU host, warm session) a 1-query run_batch takes
 0.25-0.39 s and a 100-query one 0.32-0.48 s (BENCH_pr11.json), against
 about 0.35 ms for one query served here.
-This module is the serving tier: a long-lived process loads the
-dictionary and the docid of every docno once, and serves every query
-from memory. Every Spark batch runs the same replica: each Python
-worker process keeps one searcher across batches and scores its slice
-of a batch's queries with it (query/batch.serve_batch, which run_batch,
-mrf_topk, sqe_topk and features.extract_features call for every model).
+This module is the serving tier: a long-lived process maps the index's
+serve image once and serves every query from it. Every Spark batch runs
+the same replica: each Python worker process keeps one searcher across
+batches and scores its slice of a batch's queries with it
+(query/batch.serve_batch, which run_batch, mrf_topk, sqe_topk and
+features.extract_features call for every model).
 
 Memory model of a serving replica (a driver-side process or one Spark
 Python worker):
-- the dictionary (term -> termid, df, cf) and the docid of every docno;
-- the compressed postings column as one byte buffer plus int64 run byte
-  offsets, read whole at the first LRU miss and held sorted by termid (a
-  stable sort, since an appended index's delta runs are not
-  termid-clustered). Its bytes are Arrow's own buffer after that sort,
-  one copy. A term's runs are adjacent in that order, so a missed term
-  is one byte range of the buffer, found by searchsorted, not a parquet
-  scan, as Ivory reaches a term's postings with one seek through its
-  forward index (IntPostingsForwardIndex.java:68-110). Position blobs
-  join it, in the same order, at the first positional miss, so plain
-  BM25 serving never reads or pins position bytes;
+- the serve image of the committed generation (index/image.py), mapped
+  with pa.memory_map and read through numpy and Arrow views, never
+  copied: the postings termid, blob and pos_blob columns in termid
+  order, the dictionary as fixed-width term keys in byte order beside
+  termid, df and cf, and the docid of every docno. Its pages live in
+  the page cache, one copy per host however many processes map it, and
+  the OS evicts them under pressure. Opening reads no parquet file,
+  builds no term dict or docid list and sorts nothing: about 0.3 ms at
+  2,000 and at 49,000 docs, against 6 and 56-168 ms for the parquet
+  read it replaced (4-vCPU host, raw). A term's
+  runs are adjacent in the postings order, so a missed term is one byte
+  range of the blob column, found by searchsorted, as Ivory reaches a
+  term's postings with one seek through its forward index
+  (IntPostingsForwardIndex.java:68-110);
+- a memo of the terms looked up so far (term -> dictionary row, -1 when
+  absent), in front of one vectorized searchsorted per query over the
+  mapped keys for the terms it does not hold yet;
 - decoded postings of recently used terms in a termid-keyed LRU
   (`cache_runs` term entries). A query's misses are one decode: a single
-  codec.decode_runs call reads every missed run in place in the buffer,
-  with no per-run bytes object, and each term's entry is a copied slice
-  of its output. A BM25 entry holds each posting's docno, tf and dl and
-  its float32 impact idf * tf_part under the index's own k1, b and idf
-  (4 B more per posting), computed once when the entry is filled, from
-  a float32 idf-by-termid array built at the first BM25 miss.
-Construction reads no postings column: it pins the postings file list
-next to the dictionary and docmap it reads, so a later append is not
-seen.
+  codec.decode_runs call reads every missed run in place in the mapped
+  buffer, with no per-run bytes object, and each term's entry is a
+  copied slice of its output. A BM25 entry holds each posting's docno,
+  tf and dl and its float32 impact idf * tf_part under the index's own
+  k1, b and idf (4 B more per posting), computed once when the entry is
+  filled, from a float32 idf-by-termid array built at the first BM25
+  miss.
+A searcher pins the generation properties.json names when it opens: a
+later append or refresh commits another generation, which it does not
+see, and deleting the superseded image leaves its mapped files readable.
 
 BM25 (`search`) scores every decoded posting of the query terms in one
 vectorized pass: the contribution qtf * (idf * tf_part) of the exact
@@ -63,9 +70,8 @@ oracle.
 This is the analogue of Ivory's long-lived broker + retrieval-server
 deployment (docs/clue.html:164-180 — partition servers hold the index
 hot, the broker fans out and merges): at 100 TB the index stays in the
-lake, N serving replicas each hold the dictionary and their partition's
-compressed postings, and Spark remains the batch/analytics tier over the
-same artifacts.
+lake, N serving replicas each map the image of their partition, and
+Spark remains the batch/analytics tier over the same artifacts.
 """
 
 from __future__ import annotations
@@ -87,7 +93,7 @@ from ivory_spark.functions.scoring import (
     docno_fold_f32,
 )
 from ivory_spark.functions.tokenizer import get_tokenizer
-from ivory_spark.index import codec
+from ivory_spark.index import codec, image
 
 # Not called here: perfbench/trace.py patches query.serve._score_group by
 # name to time the WAND kernel, so the name must keep resolving.
@@ -96,6 +102,15 @@ from ivory_spark.query.wand import _score_group  # noqa: F401
 # what _runs_for returns when every term hit the LRU, built once: a
 # DataFrame costs about a third of a cached BM25 query to build (read-only)
 _NO_RUNS = pd.DataFrame({"termid": np.empty(0, dtype=np.int64), "blob": []})
+
+# a searcher's term memo is cleared when it holds more terms than this
+_MEMO_TERMS = 1 << 20
+
+
+def _one(column):
+    """The one chunk of a mapped image column (write_image writes one
+    record batch)."""
+    return column.chunk(0) if column.num_chunks == 1 else column.combine_chunks()
 
 
 class _DecodedRuns:
@@ -130,9 +145,6 @@ class LocalSearcher:
     """Serve top-k queries from an index_root without a SparkSession."""
 
     def __init__(self, index_root: str, cache_runs: int = 4096):
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
         with open(os.path.join(index_root, "properties.json")) as f:
             self.props = json.load(f)
         if self.props.get("format_version") != codec.FORMAT_VERSION:
@@ -143,89 +155,55 @@ class LocalSearcher:
         self._tokenize = get_tokenizer(
             self.props.get("tokenizer", "code_v1")
         ).tokenize_py
-        # in-RAM dictionary, as Ivory keeps it resident
-        # (RetrievalEnvironment.java:66-67): term -> row of the termid,
-        # df and cf columns
-        dtab = pads.dataset(os.path.join(index_root, "dictionary")).to_table(
-            columns=["term", "termid", "df", "cf"]
+        img = image.open_image(index_root, self.props)
+        # the dictionary, as Ivory keeps it resident
+        # (RetrievalEnvironment.java:66-67): fixed-width term keys in
+        # byte order beside the termid, df and cf of each row
+        dic = img["dictionary"]
+        terms = _one(dic["term"])
+        width = terms.type.byte_width
+        self._terms = np.frombuffer(
+            terms.buffers()[1], dtype=f"S{width}", count=len(terms), offset=terms.offset * width
         )
-        self._term_row = dict(
-            zip(dtab["term"].to_numpy(zero_copy_only=False).tolist(), range(dtab.num_rows))
-        )
-        self._termid, self._df, self._cf = (
-            dtab[c].to_numpy() for c in ("termid", "df", "cf")
-        )
-        # docid of docno d at row d-1: docnos must be dense 1..n_docs
-        # (validate_index enforces it; a crashed append leaves rows beyond)
-        dm = pads.dataset(os.path.join(index_root, "docmap")).to_table(
-            columns=["docno", "repo", "path", "commit"]
-        )
-        docnos = dm["docno"].to_numpy()
-        order = np.argsort(docnos)
-        if not np.array_equal(docnos[order], np.arange(1, self.props["n_docs"] + 1)):
-            raise ValueError(
-                f"docmap docnos are not 1..n_docs={self.props['n_docs']}; "
-                "run compact.repair_partial_append"
-            )
-        # 'repo/path@commit', nulls skipped as the Spark docid_expr does
-        self._docid = (
-            pc.binary_join_element_wise(
-                dm["repo"], "/", dm["path"], "@", dm["commit"], "", null_handling="skip"
-            )
-            .take(order)
-            .to_numpy(zero_copy_only=False)
-            .tolist()
-        )
-        # the postings file list, pinned here; its columns are read at
-        # the first miss (_resident, _resident_pos)
-        self._postings = pads.dataset(os.path.join(index_root, "postings"))
-        self._rows = None  # (sorted termids, blob buffer, run offsets, row order)
+        self._termid, self._df, self._cf = (_one(dic[c]).to_numpy() for c in ("termid", "df", "cf"))
+        self._memo: dict[str, int] = {}  # term -> dictionary row, -1 when absent
+        # the postings in termid order (a term's runs adjacent, in file
+        # order): run i is buf[off[i]:off[i+1]], termid rterm[i], and
+        # pos_blobs[i] its positions on a positional index
+        post = img["postings"]
+        self._rows = (_one(post["termid"]).to_numpy(), *image.byte_views(_one(post["blob"])))
+        self._pos_blobs = _one(post["pos_blob"]) if self.props.get("positional") else None
+        # memoryviews: indexing one yields a Python int, slicing one is
+        # cheaper than a numpy slice
+        docid = image.byte_views(_one(img["docids"]["docid"]))
+        self._docid_buf, self._docid_off = map(memoryview, docid)
         self._idf = None  # float32 idf by termid, built at the first BM25 miss
-        self._pos_blobs = None
         # two LRUs of decoded postings, keyed by termid. BM25 entries are
         # (docnos, tfs, dls, impacts) over all of a term's runs, the
         # impacts idf * tf_part under the index's own stats, so plain BM25
-        # serving never reads or pins position bytes (the largest
-        # column); SD/FD and sqe entries are per-run lists of
-        # (docnos, tfs, dls, flat positions, indptr)
+        # serving never reads position bytes (the largest column); SD/FD
+        # and sqe entries are per-run lists of (docnos, tfs, dls, flat
+        # positions, indptr)
         self._run_cache: OrderedDict[int, tuple] = OrderedDict()
         self._run_cache_pos: OrderedDict[int, list] = OrderedDict()
         self._cache_runs = cache_runs
 
-    @property
-    def postings_files(self) -> tuple[str, ...]:
-        """Sorted names of the postings files pinned at construction."""
-        return tuple(sorted(os.path.basename(f) for f in self._postings.files))
-
-    def _resident(self) -> tuple:
-        """The postings termid column and blob bytes, read whole on first
-        use and held sorted by termid; a stable sort keeps each term's
-        runs in file order. -> (termids, buf, off, order): run i is
-        buf[off[i]:off[i+1]] of one uint8 buffer. The blobs are cast to
-        large_binary before the take, so the offsets stay 64-bit past
-        2 GiB and the take makes the one copy of the bytes."""
-        if self._rows is None:
-            import pyarrow as pa
-
-            tab = self._postings.to_table(columns=["termid", "blob"])
-            termid = tab["termid"].to_numpy()
-            order = np.argsort(termid, kind="stable")
-            blob = tab["blob"].cast(pa.large_binary()).take(order).combine_chunks()
-            _, offsets, data = blob.buffers()
-            off = np.frombuffer(offsets, dtype=np.int64)[blob.offset : blob.offset + len(blob) + 1]
-            buf = np.frombuffer(data or b"", dtype=np.uint8)
-            self._rows = (termid[order], buf, off, order)
-        return self._rows
-
-    def _resident_pos(self):
-        """The pos_blob column in the resident rows' order, read whole on
-        the first positional miss. The pinned file list is scanned in the
-        same fragment order as the termid read, so the rows align."""
-        if self._pos_blobs is None:
-            order = self._resident()[3]
-            tab = self._postings.to_table(columns=["pos_blob"])
-            self._pos_blobs = tab["pos_blob"].take(order)
-        return self._pos_blobs
+    def _lookup(self, terms: list[str]) -> list[int]:
+        """The dictionary row of each of the distinct terms, -1 for a term
+        not in it. A memo answers the terms seen before; the others are
+        one searchsorted over the mapped fixed-width keys. A term longer
+        than the keys is in no row (the keys would truncate it)."""
+        memo = self._memo
+        if len(memo) > _MEMO_TERMS:
+            memo.clear()
+        new = [t for t in terms if t not in memo]
+        if new:
+            keys = [t.encode() for t in new]
+            at = np.searchsorted(self._terms, np.array(keys, dtype=self._terms.dtype)).tolist()
+            n, width = len(self._terms), self._terms.itemsize
+            for t, key, r in zip(new, keys, at):
+                memo[t] = r if r < n and len(key) <= width and self._terms[r] == key else -1
+        return [memo[t] for t in terms]
 
     def _runs_for(self, termids: list[int], positions: bool = False):
         """Put every termid's decoded postings in the LRU, decoding the
@@ -242,7 +220,7 @@ class LocalSearcher:
         missing = [t for t in termids if t not in cache]
         if not missing:
             return _NO_RUNS
-        rterm, buf, off, _ = self._resident()
+        rterm, buf, off = self._rows
         # a term's runs are adjacent in the resident order: rows lo..hi,
         # one byte range of buf, decoded in place by one decode_runs call
         lo = np.searchsorted(rterm, missing, side="left")
@@ -254,14 +232,14 @@ class LocalSearcher:
         d, tf, dl, indptr = codec.decode_runs(buf, off[idx])
         indptr, bounds = indptr.tolist(), bounds.tolist()
         if positions and self.props.get("positional"):
-            pos_blobs = self._resident_pos().take(idx).to_pylist()
+            pos_blobs = self._pos_blobs.take(idx).to_pylist()
         elif positions:
             pos_blobs = [b""] * len(idx)
         else:
             # impacts idf * tf_part under the index's own k1, b and idf
             p = self.props
             if self._idf is None:
-                self._idf = np.zeros(int(self._termid.max(initial=0)) + 1, dtype=np.float32)
+                self._idf = np.zeros(p["n_terms"] + 1, dtype=np.float32)
                 self._idf[self._termid] = bm25_idf(p["n_docs"], self._df, mode=p["idf_mode"])
             tf_part = bm25_tf_part(tf, dl, p["avgdl"], p["k1"], p["b"])
         # each entry copies its slices, so it never pins the whole frame
@@ -286,8 +264,9 @@ class LocalSearcher:
         return _DecodedRuns(rterm, buf, off, idx)
 
     def docids(self, docnos: list[int]) -> dict[int, str]:
-        """docno -> 'repo/path@commit', from the in-memory docid array."""
-        return {d: self._docid[d - 1] for d in map(int, docnos)}
+        """docno -> 'repo/path@commit', from the image's docid column."""
+        buf, off = self._docid_buf, self._docid_off
+        return {d: buf[off[d - 1] : off[d]].tobytes().decode() for d in map(int, docnos)}
 
     def _term_data(self, terms, allow=None, cand=None):
         """Positional entries of the query terms in the dictionary,
@@ -298,7 +277,8 @@ class LocalSearcher:
         stats term -> (df, cf), or None when no candidate is left."""
         from ivory_spark.query.mrf import assemble_term_data
 
-        rows = {t: self._term_row[t] for t in terms if t in self._term_row}
+        terms = list(terms)
+        rows = {t: r for t, r in zip(terms, self._lookup(terms)) if r >= 0}
         term_by_id = {int(self._termid[r]): t for t, r in rows.items()}
         self._runs_for(sorted(term_by_id), positions=True)
         decoded = [
@@ -446,10 +426,10 @@ class LocalSearcher:
         p = self.props
         q = params or {}
         k1, b, idf_mode = q.get("k1", p["k1"]), q.get("b", p["b"]), q.get("idf", p["idf_mode"])
+        counts = Counter(self._tokenize(query))
         rows, qtfs = [], []
-        for term, qtf in Counter(self._tokenize(query)).items():
-            r = self._term_row.get(term)
-            if r is not None:
+        for r, qtf in zip(self._lookup(list(counts)), counts.values()):
+            if r >= 0:
                 rows.append(r)
                 qtfs.append(qtf)
         if not rows:

@@ -135,10 +135,8 @@ def _warm_start(spark: SparkSession) -> None:
 def _import_batch_modules(batches):
     """mapInPandas body of the warm-up's Python step: import in this
     worker what a batch task imports (the serve chain pulls in wand,
-    exact, session and reader; LocalSearcher reads through
-    pyarrow.dataset), so the session's first batch does not."""
-    import pyarrow.dataset  # noqa: F401
-
+    exact, session, reader and index.image), so the session's first
+    batch does not."""
     import ivory_spark.query.batch  # noqa: F401
     import ivory_spark.query.serve  # noqa: F401
 

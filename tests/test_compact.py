@@ -559,8 +559,10 @@ def test_partial_append_detected_and_repaired(spark, tmp_path_factory):
 
     with pytest.raises(IndexValidationError):
         validate_index(spark, open_index(spark, root))
-    with pytest.raises(ValueError, match="1..n_docs"):
-        LocalSearcher(root)  # docmap is no longer 1..n_docs
+    # the committed serve image does not see the orphan rows
+    searcher = LocalSearcher(root)
+    assert {(q["qid"], r["docno"]) for q in QUERY_SET[:2]
+            for r in searcher.search(q["query"], k=5)} == before
 
     repair_partial_append(spark, root)
     repaired = open_index(spark, root)

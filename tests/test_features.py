@@ -197,3 +197,21 @@ def test_extract_features_for_run(spark, fpos_index):
     assert all(r["grade"] == 0.0 for r in rows)
     # retrieved docs contain query terms -> bm25 term feature nonzero
     assert any(r["bm25-term"] != 0.0 for r in rows)
+
+
+def test_instances_from_a_frame_in_any_order(spark, fpos_index, jobs_started):
+    """features_to_instances orders the rows (qid, docno) on the driver:
+    the extracted frame and its rows in reverse order give the same
+    Instances, and the collect is the call's only Spark job (no sort)."""
+    qrels = make_qrels(fpos_index.n_docs)
+    df = extract_features(spark, fpos_index, QUERIES[:3], qrels, MODELS)
+    rows = df.collect()
+    rev = spark.createDataFrame(rows[::-1], df.schema)
+    assert rev.collect() == rows[::-1] and rows != rows[::-1]
+    want, jobs = jobs_started(lambda: features_to_instances(df))
+    assert len(jobs) == 1
+    got = features_to_instances(rev)
+    assert list(want.qids) == sorted(want.qids)
+    for a in ("qids", "docids", "grades", "features"):
+        assert np.array_equal(getattr(got, a), getattr(want, a)), a
+    assert got.feature_names == want.feature_names

@@ -7,6 +7,7 @@ mirroring the reference's cs/ar tokenizer coverage
 
 import hashlib
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -19,6 +20,7 @@ from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.reader import open_index
 from ivory_spark.oracle import build_oracle_index, oracle_topk
 from ivory_spark.query.exact import bm25_topk
+from ivory_spark.query.serve import LocalSearcher
 
 from test_rank_identity import assert_matches_oracle
 
@@ -170,6 +172,35 @@ AR_DOCS = [
 ] * 3
 
 
+def assert_served_matches_oracle(root, oi, queries, tok):
+    """LocalSearcher.search equals the numpy oracle bit for bit, its
+    non-ASCII terms looked up by their UTF-8 bytes in the serve image;
+    each query once more with an OOV token and a term wider than the
+    image's fixed-width term keys (unless the chain cuts it, as
+    lucene_tr's stemmer does), which change nothing."""
+    searcher = LocalSearcher(root)
+    width = searcher._terms.itemsize
+    long_term = "x" * (width + 1)
+    assert searcher._lookup(["é" * width, long_term, "zzqoovtoken"]) == [-1, -1, -1]
+    if tok != "lucene_tr":  # its stemmer keeps five letters
+        assert any(len(t.encode()) > width for t in get_tokenizer(tok).tokenize_py(long_term))
+    noisy = [{"qid": q["qid"] + "+", "query": f"{q['query']} zzqoovtoken {long_term}"}
+             for q in queries]
+    golden = oracle_topk(oi, queries + noisy, k=10)
+    for q in queries + noisy:
+        got = searcher.search(q["query"], k=10)
+        want = golden[q["qid"]]
+        assert [(g["docno"], g["docid"]) for g in got] == [
+            (w["docno"], w["docid"]) for w in want
+        ], q
+        assert np.array_equal(
+            np.array([g["score"] for g in got], dtype=np.float32).view(np.uint32),
+            np.array([w["score"] for w in want], dtype=np.float32).view(np.uint32),
+        ), q
+    for q, n in zip(queries, noisy):
+        assert golden[n["qid"]] == golden[q["qid"]]
+
+
 @pytest.mark.parametrize(
     "tok,docs,queries",
     [
@@ -213,6 +244,7 @@ def test_e2e_rank_identity(spark, tmp_path_factory, tok, docs, queries):
     assert_matches_oracle(got, golden)
     # stemming unified at least one inflected query with the corpus
     assert any(len(v) > 0 for v in golden.values())
+    assert_served_matches_oracle(root, oi, queries, tok)
 
 
 def test_stemmers_never_crash_on_odd_input():
@@ -303,6 +335,7 @@ def test_zh_dict_e2e_rank_identity(spark, tmp_path_factory):
     got = bm25_topk(spark, index, queries, k=10)
     assert_matches_oracle(got, golden)
     assert all(len(v) > 0 for v in golden.values())
+    assert_served_matches_oracle(root, oi, queries, "zh_dict")
     # the dictionary chain indexes WORDS: the multi-char lexicon entries
     # appear as index terms (bigram chain would shatter them)
     terms = {r["term"] for r in index.dictionary.collect()}

@@ -49,7 +49,8 @@ def test_config_change_invalidates(spark, tiny_corpus_path, tmp_path):
 def test_manifest_lineage_metrics(spark, tiny_corpus_path, tmp_path):
     root = str(tmp_path / "idx3")
     build_index(spark, tiny_corpus_path, root, IndexConfig())
-    for stage in ["docmap", "tdf", "doclens", "dictionary", "properties", "postings"]:
+    for stage in ["docmap", "tdf", "doclens", "dictionary", "properties", "postings",
+                  "serve_image"]:
         m = load_manifest(root, stage)
         assert m["status"] == "complete", stage
         assert m["wall_time_sec"] >= 0
@@ -79,3 +80,35 @@ def test_open_index_refuses_foreign_format_version(spark, tiny_corpus_path, tmp_
         json.dump(props, f)
     with pytest.raises(ValueError, match="format_version"):
         open_index(spark, root)
+
+
+def test_build_killed_before_the_serve_image_reruns_only_that_stage(
+    spark, tiny_corpus_path, tmp_path
+):
+    """A build that died after postings, before its serve image, re-runs
+    only the serve_image stage; the searcher then serves the index. So
+    does a build resumed over an index written before serve images
+    (properties without a generation), which gains generation 0."""
+    from ivory_spark.query.serve import LocalSearcher
+
+    root = str(tmp_path / "idx")
+    build_index(spark, tiny_corpus_path, root, IndexConfig())
+    shutil.rmtree(os.path.join(root, "serve"))
+    os.remove(os.path.join(root, "_manifests", "serve_image.json"))
+    p = os.path.join(root, "properties.json")
+    with open(p) as f:
+        props = json.load(f)
+    del props["generation"]
+    with open(p, "w") as f:
+        json.dump(props, f)
+    stages = ["docmap", "tdf", "doclens", "dictionary", "properties", "postings"]
+    mtimes = {s: os.path.getmtime(os.path.join(root, "_manifests", f"{s}.json")) for s in stages}
+
+    build_index(spark, tiny_corpus_path, root, IndexConfig())
+    assert {s: os.path.getmtime(os.path.join(root, "_manifests", f"{s}.json"))
+            for s in stages} == mtimes
+    assert load_manifest(root, "serve_image")["status"] == "complete"
+    assert os.listdir(os.path.join(root, "serve")) == ["g0"]
+    searcher = LocalSearcher(root)
+    assert searcher.props["generation"] == 0
+    assert searcher.search(QUERY_SET[0]["query"], k=5)

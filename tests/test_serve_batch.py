@@ -227,3 +227,34 @@ def test_all_oov_batch_is_empty_and_its_result_starts_no_job(
     assert df.schema == run_batch(spark, idx, queries).schema
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_serve_batch_sends_each_querys_arguments_in_its_row(spark, appended, monkeypatch):
+    """A batch's per-query arguments travel in the query rows of its local
+    frame, so a task unpickles only its slice's: the closure Spark ships
+    to every task pickles to the same bytes whether each query judges one
+    doc or every doc, and each query's feature rows are its own."""
+    from pyspark import cloudpickle
+
+    from ivory_spark.query.features import extract_features
+
+    idx, queries = appended
+    closures = []
+    frame = type(idx.postings)
+    real = frame.mapInPandas
+
+    def spy(self, func, schema, *a, **kw):
+        closures.append(cloudpickle.dumps(func))
+        return real(self, func, schema, *a, **kw)
+
+    monkeypatch.setattr(frame, "mapInPandas", spy)
+    n = idx.n_docs
+    few = {q["qid"]: {1 + 7 * i % n: float(i % 3)} for i, q in enumerate(queries)}
+    every = {q["qid"]: {d: float(i % 3) for d in range(1, n + 1)} for i, q in enumerate(queries)}
+    got = {}
+    for qrels in (few, every):
+        df = extract_features(spark, idx, queries, qrels, {"bm25": Model()})
+        got[len(got)] = {(r["qid"], r["docno"]): r for r in df.collect()}
+    assert len(closures) == 2 and closures[0] == closures[1]
+    assert len(got[0]) > 1 and len(got[1]) > len(got[0])
+    assert all(got[1][k] == r for k, r in got[0].items())
