@@ -253,6 +253,11 @@ def repair_partial_append(spark: SparkSession, index_root: str) -> dict:
     props_path = os.path.join(index_root, "properties.json")
     with open(props_path) as f:
         props = json.load(f)
+    if "generation" not in props:
+        # written before serve images: no committed image to rewrite
+        raise ValueError(
+            f"index at {index_root} has no serve image generation; rebuild the index"
+        )
     n_docs = props["n_docs"]
     import shutil
 

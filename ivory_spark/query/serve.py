@@ -30,7 +30,8 @@ Python worker):
   (IntPostingsForwardIndex.java:68-110);
 - a memo of the terms looked up so far (term -> dictionary row, -1 when
   absent), in front of one vectorized searchsorted per query over the
-  mapped keys for the terms it does not hold yet;
+  mapped keys for the terms it does not hold yet. It is cleared past
+  n_terms entries, so it never outgrows the term dict it replaces;
 - decoded postings of recently used terms in a termid-keyed LRU
   (`cache_runs` term entries). A query's misses are one decode: a single
   codec.decode_runs call reads every missed run in place in the mapped
@@ -102,9 +103,6 @@ from ivory_spark.query.wand import _score_group  # noqa: F401
 # what _runs_for returns when every term hit the LRU, built once: a
 # DataFrame costs about a third of a cached BM25 query to build (read-only)
 _NO_RUNS = pd.DataFrame({"termid": np.empty(0, dtype=np.int64), "blob": []})
-
-# a searcher's term memo is cleared when it holds more terms than this
-_MEMO_TERMS = 1 << 20
 
 
 def _one(column):
@@ -192,9 +190,10 @@ class LocalSearcher:
         """The dictionary row of each of the distinct terms, -1 for a term
         not in it. A memo answers the terms seen before; the others are
         one searchsorted over the mapped fixed-width keys. A term longer
-        than the keys is in no row (the keys would truncate it)."""
+        than the keys is in no row (the keys would truncate it). The memo
+        is cleared past n_terms entries, whatever the queries send."""
         memo = self._memo
-        if len(memo) > _MEMO_TERMS:
+        if len(memo) > self.props["n_terms"]:
             memo.clear()
         new = [t for t in terms if t not in memo]
         if new:
@@ -263,10 +262,11 @@ class LocalSearcher:
             cache.popitem(last=False)
         return _DecodedRuns(rterm, buf, off, idx)
 
-    def docids(self, docnos: list[int]) -> dict[int, str]:
-        """docno -> 'repo/path@commit', from the image's docid column."""
+    def docids(self, docnos: list[int]) -> list[str]:
+        """The docid 'repo/path@commit' of each docno, in order, from the
+        image's docid column."""
         buf, off = self._docid_buf, self._docid_off
-        return {d: buf[off[d - 1] : off[d]].tobytes().decode() for d in map(int, docnos)}
+        return [buf[off[d - 1] : off[d]].tobytes().decode() for d in docnos]
 
     def _term_data(self, terms, allow=None, cand=None):
         """Positional entries of the query terms in the dictionary,
@@ -312,8 +312,10 @@ class LocalSearcher:
         ranked = zip(range(1, len(top) + 1), top, scores[sel].astype(np.float32).tolist())
         if not with_docid:
             return [{"rank": r, "docno": d, "score": s} for r, d, s in ranked]
-        ids = self.docids(top)
-        return [{"rank": r, "docno": d, "score": s, "docid": ids[d]} for r, d, s in ranked]
+        return [
+            {"rank": r, "docno": d, "score": s, "docid": i}
+            for (r, d, s), i in zip(ranked, self.docids(top))
+        ]
 
     def search_sd(
         self, query: str, k: int = 10, with_docid: bool = True, model=None,

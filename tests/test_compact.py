@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from codec_ref import decode_run
 from ivory_spark.corpus import QUERY_SET, generate_corpus
+from ivory_spark.index import image
 from ivory_spark.index.build import IndexConfig, build_index
 from ivory_spark.index.compact import append_delta, refresh_bounds
 from ivory_spark.index.reader import artifact_rows, open_index, read_artifact
@@ -559,6 +560,9 @@ def test_partial_append_detected_and_repaired(spark, tmp_path_factory):
 
     with pytest.raises(IndexValidationError):
         validate_index(spark, open_index(spark, root))
+    # the image writer refuses docnos that are not 1..n_docs
+    with pytest.raises(ValueError, match=r"1\.\.n_docs"):
+        image.image_tables(root, idx.properties)
     # the committed serve image does not see the orphan rows
     searcher = LocalSearcher(root)
     assert {(q["qid"], r["docno"]) for q in QUERY_SET[:2]

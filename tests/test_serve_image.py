@@ -130,6 +130,23 @@ def test_index_without_its_image_is_refused(pos_root, tmp_path):
         LocalSearcher(root)
 
 
+def test_repair_refuses_an_index_without_a_generation(spark, pos_root, tmp_path):
+    """repair_partial_append over properties written before serve images
+    (no generation) refuses before it rewrites any artifact."""
+    root = str(tmp_path / "idx")
+    shutil.copytree(pos_root, root)
+    props_path = os.path.join(root, "properties.json")
+    with open(props_path) as f:
+        props = json.load(f)
+    del props["generation"]
+    with open(props_path, "w") as f:
+        json.dump(props, f)
+    listing = sorted(os.walk(root))
+    with pytest.raises(ValueError, match="rebuild the index"):
+        compact.repair_partial_append(spark, root)
+    assert sorted(os.walk(root)) == listing
+
+
 def test_validate_flags_an_image_whose_blobs_differ(spark, pos_root, tmp_path):
     """An image whose postings blobs are not the parquet postings' (two
     runs' blobs swapped) fails validate_index, naming the postings file;
